@@ -32,6 +32,11 @@ object VoiceDataGen {
 
   val SampleRate = 22050
 
+  /** Phrases synthesized by [[generate]]'s UDF in this JVM — executors
+    * included only in local mode. A cheap hook that pins how often a
+    * pipeline pays for synthesis (VoicePipelineSpec). */
+  private[graft] val synthCalls = new java.util.concurrent.atomic.AtomicLong()
+
   private val loremWords: Array[String] =
     ("lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod " +
       "tempor incididunt ut labore et dolore magna aliqua enim ad minim " +
@@ -100,6 +105,7 @@ object VoiceDataGen {
       .withColumn("speaker",
         when(col("phrase_id") % 2 === 0, "Male").otherwise("Female"))
     val synth = udf { (phraseId: Long, speaker: String) =>
+      synthCalls.incrementAndGet()
       val text = loremText(seed, phraseId)
       val pcm = synthPcm(text, speaker == "Male")
       (text, pcm, pcm.length / 2)

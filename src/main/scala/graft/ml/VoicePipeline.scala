@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
+import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{IndexToString, PCA, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
@@ -27,6 +27,13 @@ import graft.gen.VoiceDataGen
   *  - I6: no Conv1D in MLlib — MLP [2, 50, 50, 2] over the same (Time, X)
   *    features (+ standardization standing in for BatchNorm); acceptance
   *    is held-out accuracy ≥ 0.80 (reference: 0.8731), per SURVEY §6.
+  *    The MLP is [[InTaskMlpClassifier]]: the training set is one
+  *    partition (generation's cumsum window is unpartitioned, and every
+  *    later stage is narrow), so the whole L-BFGS loop runs inside that
+  *    partition's task — one job per fit instead of one per cost
+  *    evaluation, with weights bitwise equal to the stock fit. A layout
+  *    that splits the training set falls back to the stock per-evaluation
+  *    `treeAggregate` (VoicePipelineSpec pins the one-partition layout).
   */
 object VoicePipeline {
 
@@ -40,7 +47,10 @@ object VoicePipeline {
     */
   private[graft] def pcaFramesAndSegments(spark: SparkSession,
       nPhrases: Int = NPhrases, seed: Long = Seed): (DataFrame, DataFrame) = {
-    val clips = VoiceDataGen.generate(spark, nPhrases, seed)
+    // persisted across its two readers, the segment collect below and the
+    // mel job: both need the synthesized PCM, which would otherwise be
+    // synthesized once for each
+    val clips = VoiceDataGen.generate(spark, nPhrases, seed).persist()
     // boundary table COLLECTED once (nPhrases rows of 3 scalars): its
     // lineage includes the waveform-synth UDF (durations derive from the
     // generated PCM length), so leaving it lazy would re-synthesize the
@@ -61,7 +71,12 @@ object VoicePipeline {
     val pca = new PCA().setK(4).setInputCol("mel_vec").setOutputCol("pca")
     val withVec = frames
       .withColumn("mel_vec", array_to_vector(col("mel_db")))
-    val pcaFrames = pca.fit(withVec).transform(withVec)
+    val pcaModel = pca.fit(withVec)
+    // PCA.fit scanned every frame, so the mel cache is loaded and no
+    // longer reads the clips; a loaded dependent cache survives this
+    // (CacheManager recompiles only dependents whose buffers are unbuilt)
+    clips.unpersist()
+    val pcaFrames = pcaModel.transform(withVec)
       .withColumn("c", vector_to_array(col("pca")))
       .select(col("frame_time").as("Time"),
         col("c").getItem(0).as("c0"), col("c").getItem(1).as("c1"),
@@ -118,23 +133,33 @@ object VoicePipeline {
   case class Result(predictions: DataFrame, confusion: DataFrame,
     accuracy: Double, logLoss: Double)
 
-  /** Stage 6-8: split, fit, predict, evaluate. */
-  def trainAndEvaluate(spark: SparkSession, nPhrases: Int = NPhrases,
-      seed: Long = Seed): Result = {
-    val ts = timeSeries(spark, nPhrases, seed) // already cached by tsCache
+  /** Stage 6: the seeded 80/20 holdout split. */
+  private[graft] def split(ts: DataFrame): (DataFrame, DataFrame) = {
     val Array(train, test) = ts.randomSplit(Array(0.8, 0.2), seed = 42)
+    (train, test)
+  }
+
+  /** Stage 7: index labels, assemble and standardize (Time, X), fit the
+    * MLP. */
+  private[graft] def fit(train: DataFrame): PipelineModel = {
     val indexer = new StringIndexer().setInputCol("speaker")
       .setOutputCol("label").setStringOrderType("alphabetAsc")
     val assembler = new VectorAssembler()
       .setInputCols(Array("Time", "X")).setOutputCol("rawFeatures")
     val scaler = new StandardScaler().setInputCol("rawFeatures")
       .setOutputCol("features").setWithMean(true).setWithStd(true)
-    val mlp = new MultilayerPerceptronClassifier()
+    val mlp = new InTaskMlpClassifier()
       .setLayers(Array(2, 50, 50, 2)).setSeed(42).setMaxIter(100)
       .setFeaturesCol("features").setLabelCol("label")
-    val pipeline = new org.apache.spark.ml.Pipeline()
-      .setStages(Array(indexer, assembler, scaler, mlp))
-    val model = pipeline.fit(train)
+    new Pipeline().setStages(Array(indexer, assembler, scaler, mlp)).fit(train)
+  }
+
+  /** Stage 6-8: split, fit, predict, evaluate. */
+  def trainAndEvaluate(spark: SparkSession, nPhrases: Int = NPhrases,
+      seed: Long = Seed): Result = {
+    val ts = timeSeries(spark, nPhrases, seed) // already cached by tsCache
+    val (train, test) = split(ts)
+    val model = fit(train)
     val labels = model.stages(0)
       .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel].labelsArray(0)
     val decoded = new IndexToString().setInputCol("prediction")

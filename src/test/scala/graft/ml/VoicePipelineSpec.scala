@@ -26,6 +26,23 @@ class VoicePipelineSpec extends SparkSpec {
     assert(r.confusion.count() == 2)
   }
 
+  test("voice training set is one partition and its fit launches at most 5 jobs") {
+    // the in-task MLP fit needs the one-partition layout; a layout change
+    // that brings back one L-BFGS job per cost evaluation (~100 per fit)
+    // fails here instead of silently costing seconds
+    val (train, _) = VoicePipeline.split(VoicePipeline.timeSeries(spark, nPhrases = 7))
+    assert(train.rdd.getNumPartitions == 1)
+    val (_, jobs) = countJobs(VoicePipeline.fit(train))
+    assert(jobs <= 5, s"voice pipeline fit launched $jobs jobs")
+  }
+
+  test("the voice corpus is synthesized once per pipeline") {
+    // a seed no other test uses, so no cache from another test answers
+    val before = graft.gen.VoiceDataGen.synthCalls.get()
+    VoicePipeline.labeledFrames(spark, nPhrases = 3, seed = 9001L).count()
+    assert(graft.gen.VoiceDataGen.synthCalls.get() - before == 3)
+  }
+
   test("classificationReport: never-predicted class gets 0.0 precision, not NaN") {
     // degenerate predictions: the model only ever says Male — sklearn's
     // classification_report (the E5 reference) reports precision 0.0 for
