@@ -34,7 +34,7 @@ object SparkEntry {
       sim.NswKnn.queries ++
       text.Scrub.queries ++ text.SubstrDedup.queries ++
       text.QualityRules.queries ++
-      sources.MultimodalStubs.queries ++ sources.ImageSource.queries ++
+      sources.ImageSource.queries ++
       sources.VideoSource.queries ++ text.Bpe.queries ++
       rel.Layout.queries ++ rel.KmvStore.queries ++ rel.Resample.queries ++
       rel.AggStore.queries ++ text.PrefixJoin.queries ++

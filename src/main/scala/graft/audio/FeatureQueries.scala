@@ -98,10 +98,10 @@ object FeatureQueries {
       val cl = clips(s).withColumnRenamed("phrase_id", "clip_id")
       StreamingOps.applyAudioFeatureBatch(
         cl.filter(pmod(col("clip_id"), lit(2)) === 0), 0L, store,
-        NFft, Hop)
+        NFft, Hop, lineage = "nq_audio_store")
       StreamingOps.applyAudioFeatureBatch(
         cl.filter(pmod(col("clip_id"), lit(2)) === 1), 1L, store,
-        NFft, Hop)
+        NFft, Hop, lineage = "nq_audio_store")
       StreamingOps.deleteFromFeatureStore(
         { import s.implicits._; Seq(DeletedClip).toDF("clip_id") },
         store, batchId = 0L)

@@ -211,17 +211,19 @@ object AggStore {
   /** Streaming ingest: each micro-batch reduced to partials and written
     * to its own batch_id partition via foreachBatch. At-least-once
     * redelivery replays composable batchIds, and the partition
-    * overwrite makes each replay byte-idempotent — no lineage fence
+    * overwrite makes each replay byte-idempotent — no high-water mark
     * needed (contrast the additive heavy-hitter store, whose APPEND
-    * sink must fence; here the batch's own partition IS the fence). */
+    * sink must fence; here the batch's own partition IS the fence).
+    * That fence covers one checkpoint lineage, so the store binds to
+    * its first ([[graft.streaming.StreamingOps.bindStoreLineage]]). */
   def aggIngestStream(stream: DataFrame, groupCols: Seq[String],
       valueCol: String, storePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.streaming.StreamingOps.bindLineageForTrigger(
-          batch.sparkSession, storePath, s"agg store at $storePath")
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"agg store at $storePath", lineage)
         applyBatch(batch, groupCols, valueCol, storePath, batchId)
     }
 

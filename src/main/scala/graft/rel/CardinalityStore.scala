@@ -284,15 +284,14 @@ object CardinalityStore {
       valueCol: String, storePath: String, lgK: Int = 12)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
         // lineage fence: register-max makes SAME-lineage redelivery a
         // no-op, but a fresh checkpoint's batch 0 would REPLACE the
         // original batch-0 partition (overwrite, not union) and lose
         // its registers
-        graft.streaming.StreamingOps.bindLineageForTrigger(
-          batch.sparkSession, storePath,
-          s"cardinality store at $storePath")
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"cardinality store at $storePath", lineage)
         applyBatch(batch, groupCols, valueCol, storePath, batchId, lgK)
     }
 

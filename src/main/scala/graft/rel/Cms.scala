@@ -166,10 +166,10 @@ object Cms {
       depth: Int = Depth, width: Int = Width, seed: Long = 42L)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.streaming.StreamingOps.bindLineageForTrigger(
-          batch.sparkSession, storePath, s"CMS store at $storePath")
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"CMS store at $storePath", lineage)
         applyBatch(batch, keyCol, storePath, batchId, depth, width, seed)
     }
 

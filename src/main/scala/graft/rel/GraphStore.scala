@@ -135,24 +135,12 @@ object GraphStore {
   def edgeIngestStream(stream: DataFrame, storePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyStreamEdgeBatch(batch, storePath, batchId,
-          graft.streaming.StreamingOps.streamingLineage(
-            batch.sparkSession))
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"edge store at $storePath", lineage)
+        applyEdgeBatch(batch, storePath, batchId)
     }
-
-  /** One streaming trigger, exposed for the lineage-fence spec. */
-  private[graft] def applyStreamEdgeBatch(batch: DataFrame,
-      storePath: String, batchId: Long, lineage: String): Unit = {
-    val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    graft.streaming.StreamingOps.bindStoreLineage(fs, root,
-      s"edge store at $storePath", lineage)
-    applyEdgeBatch(batch, storePath, batchId)
-  }
 
   // -------------------------------------------------------- compaction
   /** Horizontal compaction with tombstone fold-in: batches ≤ `through`

@@ -197,10 +197,10 @@ object KmvStore {
       storePath: String, k: Int)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.streaming.StreamingOps.bindLineageForTrigger(
-          batch.sparkSession, storePath, s"KMV store at $storePath")
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"KMV store at $storePath", lineage)
         applyBatch(batch, groupCols, hashCol, storePath, batchId, k)
     }
 

@@ -125,10 +125,10 @@ object QuantileStore {
       valueCol: String, storePath: String, k: Int)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        graft.streaming.StreamingOps.bindLineageForTrigger(
-          batch.sparkSession, storePath, s"KLL store at $storePath")
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"KLL store at $storePath", lineage)
         applyBatch(batch, groupCols, valueCol, storePath, batchId, k)
     }
 

@@ -6,9 +6,10 @@ import graft.Tables.documents
 
 /** REAL image multimodal path — decode, resize, and feature-extract via
   * the JDK's own codecs (`javax.imageio` ships PNG/JPEG/BMP/GIF/TIFF
-  * readers in java.desktop; zero external dependencies, headless-safe),
-  * upgrading what `MultimodalStubs.imageFeatures` fakes. The video path
-  * stays a stub — the JDK ships no video codec.
+  * readers in java.desktop; zero external dependencies, headless-safe).
+  * Video decodes in `VideoSource` (MJPEG-in-AVI); formats no JDK codec
+  * reads (e.g. WebP/AVIF) would swap their codec inside the same
+  * mapPartitions boundary, with schemas and shuffles unchanged.
   *
   * Contract (same as the audio path in MediaSource):
   *   image row = (image_id, content: binary)
@@ -222,9 +223,7 @@ object ImageSource {
     * feature schema a training pipeline joins on. Distinct from
     * `nq_image_decode`, the full decode dump (verdict flag + histogram
     * at 32): this is the narrow projection a 100 TB feature pass
-    * actually ships downstream. Backed by the REAL JDK decoder;
-    * `MultimodalStubs.imageFeatures` is now only the documented
-    * fallback for non-JDK codecs.
+    * actually ships downstream. Backed by the REAL JDK decoder.
     */
   def imageFeaturesQuery(s: SparkSession, d: String): DataFrame = {
     // one generation — see imageDecodeQuery (r18)

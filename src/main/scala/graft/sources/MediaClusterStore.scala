@@ -632,11 +632,10 @@ object MediaClusterStore {
       clusterStorePath: String, threshold: Int = 6)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
         applyClusterIngestBatch(batch, fpStorePath, clusterStorePath,
-          batchId, graft.streaming.StreamingOps.streamingLineage(
-            batch.sparkSession), threshold)
+          batchId, lineage, threshold)
     }
 
   /** One judge+merge+ingest trigger (see [[clusterIngestStream]]). */
@@ -644,10 +643,7 @@ object MediaClusterStore {
       fpStorePath: String, clusterStorePath: String, batchId: Long,
       lineage: String, threshold: Int = 6): Unit = {
     val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(fpStorePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    graft.streaming.StreamingOps.bindStoreLineage(fs, root,
+    graft.streaming.StreamingOps.bindStoreLineage(s, fpStorePath,
       s"media fingerprint store at $fpStorePath", lineage)
     // BOTH stores' replay-horizon guards BEFORE any write: a refusal
     // mid-sequence (cluster batch landed, fingerprint ingest refused)

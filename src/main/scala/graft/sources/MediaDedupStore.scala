@@ -267,26 +267,12 @@ object MediaDedupStore {
   def fingerprintIngestStream(stream: DataFrame, storePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyStreamFingerprintBatch(batch, storePath, batchId,
-          graft.streaming.StreamingOps.streamingLineage(
-            batch.sparkSession))
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"media fingerprint store at $storePath", lineage)
+        applyFingerprintBatch(batch, storePath, batchId)
     }
-
-  /** One streaming trigger, exposed so the exactly-once semantics are
-    * testable as they occur: same lineage + applied id = byte-
-    * idempotent partition overwrite; different lineage = loud fence. */
-  private[graft] def applyStreamFingerprintBatch(batch: DataFrame,
-      storePath: String, batchId: Long, lineage: String): Unit = {
-    val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    graft.streaming.StreamingOps.bindStoreLineage(fs, root,
-      s"media fingerprint store at $storePath", lineage)
-    applyFingerprintBatch(batch, storePath, batchId)
-  }
 
   /** Streaming judge-then-ingest — the crawl loop (the
     * `substrIngestStream` shape for media): each micro-batch is judged
@@ -302,11 +288,10 @@ object MediaDedupStore {
       verdictsPath: String, threshold: Int = 6)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+    graft.streaming.StreamingOps.lineageSink(stream) {
+      (batch, batchId, lineage) =>
         applyJudgeIngestBatch(batch, storePath, verdictsPath, batchId,
-          graft.streaming.StreamingOps.streamingLineage(
-            batch.sparkSession), threshold)
+          lineage, threshold)
     }
 
   /** One judge+ingest trigger (see [[judgeIngestStream]]). */
@@ -314,10 +299,7 @@ object MediaDedupStore {
       storePath: String, verdictsPath: String, batchId: Long,
       lineage: String, threshold: Int = 6): Unit = {
     val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    graft.streaming.StreamingOps.bindStoreLineage(fs, root,
+    graft.streaming.StreamingOps.bindStoreLineage(s, storePath,
       s"media fingerprint store at $storePath", lineage)
     // replay-horizon guard BEFORE the first write: a refusal after the
     // verdict write would leave verdicts standing for fingerprints
@@ -439,13 +421,6 @@ object MediaDedupStore {
     graft.rel.KeyedCompaction.compactThrough(s, dataDir(storePath),
       tombDir(storePath), tombNextDir(storePath),
       Seq("media_id", "modality"), through)
-
-  /** Delete the `batch_id < through` fingerprint partitions —
-    * compactThrough's prune phase and its idempotent crash recovery
-    * (lists what exists; sparse/time-based batch ids never loop). */
-  def pruneFingerprintsThrough(s: SparkSession, storePath: String,
-      through: Long): Unit =
-    graft.rel.KeyedCompaction.pruneThrough(s, dataDir(storePath), through)
 
   // ------------------------------------------------------ fingerprints
   /** The full planted multimodal corpus as (media_id, modality, h) —

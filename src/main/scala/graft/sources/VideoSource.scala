@@ -7,9 +7,10 @@ import graft.Tables.documents
 /** REAL video multimodal path — MJPEG-in-AVI, decoded with nothing but
   * the JDK: the AVI container is a RIFF tree (hand-walked ByteBuffer,
   * the same move as the WAV path in MediaSource), and every frame
-  * payload is a JPEG that `javax.imageio` decodes. This upgrades the
-  * last faked modality (`MultimodalStubs.sampleFrames`, now a
-  * documented fallback for containers/codecs the JDK cannot read).
+  * payload is a JPEG that `javax.imageio` decodes. Containers/codecs
+  * the JDK cannot read (e.g. H.264/VP9) would swap their decoder inside
+  * the same mapPartitions boundary, with schemas and shuffles
+  * unchanged.
   *
   * Generalizes the reference's A3 media-decode surface
   * (voice_classifier.py:80 loads media row-at-a-time on the driver) the

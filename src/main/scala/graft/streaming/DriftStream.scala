@@ -69,23 +69,20 @@ object DriftStream {
       frozen: FrozenReference, metricsPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyPsiBatch(batch, batchId, valueCol, frozen, metricsPath,
-          StreamingOps.streamingLineage(batch.sparkSession))
+    StreamingOps.lineageSink(rows) { (batch, batchId, lineage) =>
+      applyPsiBatch(batch, batchId, valueCol, frozen, metricsPath, lineage)
     }
 
   /** One trigger, exposed for replay-semantics tests / backfill. */
   private[graft] def applyPsiBatch(batch: DataFrame, batchId: Long,
       valueCol: String, frozen: FrozenReference, metricsPath: String,
-      lineage: String = "unknown"): Unit = {
+      lineage: String): Unit = {
     val s = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(metricsPath)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamingOps.requireAtomicRename(fs,
+    StreamingOps.requireAtomicRename(
+      new org.apache.hadoop.fs.Path(metricsPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"PSI drift metric store at $metricsPath")
-    fs.mkdirs(dir)
-    StreamingOps.bindStoreLineage(fs, dir,
+    StreamingOps.bindStoreLineage(s, metricsPath,
       s"PSI drift metric store at $metricsPath", lineage)
     StreamingOps.writeSingleFile(
       scoreBatch(batch, valueCol, frozen)

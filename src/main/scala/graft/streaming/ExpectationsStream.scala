@@ -53,11 +53,9 @@ object ExpectationsStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     requireAdditive(checks)
-    rows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyExpectationsBatch(batch, batchId, tableName, checks,
-          staticTables, metricsPath,
-          StreamingOps.streamingLineage(batch.sparkSession))
+    StreamingOps.lineageSink(rows) { (batch, batchId, lineage) =>
+      applyExpectationsBatch(batch, batchId, tableName, checks,
+        staticTables, metricsPath, lineage)
     }
   }
 
@@ -66,15 +64,14 @@ object ExpectationsStream {
   private[graft] def applyExpectationsBatch(batch: DataFrame,
       batchId: Long, tableName: String, checks: Seq[Check],
       staticTables: Map[String, DataFrame], metricsPath: String,
-      lineage: String = "unknown"): Unit = {
+      lineage: String): Unit = {
     requireAdditive(checks)
     val s = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(metricsPath)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamingOps.requireAtomicRename(fs,
+    StreamingOps.requireAtomicRename(
+      new org.apache.hadoop.fs.Path(metricsPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"expectations metric store at $metricsPath")
-    fs.mkdirs(dir)
-    StreamingOps.bindStoreLineage(fs, dir,
+    StreamingOps.bindStoreLineage(s, metricsPath,
       s"expectations metric store at $metricsPath", lineage)
     val raw = Expectations.metrics(
       staticTables + (tableName -> batch), checks)

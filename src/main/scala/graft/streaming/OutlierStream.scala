@@ -87,25 +87,22 @@ object OutlierStream {
       flaggedPath: String, threshold: Double = 3.5)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyOutlierBatch(batch, batchId, frozen, groupCol, idCol,
-          valueCol, flaggedPath, threshold,
-          StreamingOps.streamingLineage(batch.sparkSession))
+    StreamingOps.lineageSink(rows) { (batch, batchId, lineage) =>
+      applyOutlierBatch(batch, batchId, frozen, groupCol, idCol,
+        valueCol, flaggedPath, threshold, lineage)
     }
 
   /** One trigger, exposed for replay tests / backfill. */
   private[graft] def applyOutlierBatch(batch: DataFrame, batchId: Long,
       frozen: DataFrame, groupCol: String, idCol: String,
       valueCol: String, flaggedPath: String, threshold: Double = 3.5,
-      lineage: String = "unknown"): Unit = {
+      lineage: String): Unit = {
     val s = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(flaggedPath)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamingOps.requireAtomicRename(fs,
+    StreamingOps.requireAtomicRename(
+      new org.apache.hadoop.fs.Path(flaggedPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"outlier store at $flaggedPath")
-    fs.mkdirs(dir)
-    StreamingOps.bindStoreLineage(fs, dir,
+    StreamingOps.bindStoreLineage(s, flaggedPath,
       s"outlier store at $flaggedPath", lineage)
     // the batch feeds both writes; localCheckpoint so the scan (and
     // any upstream source read) runs once, not once per output

@@ -61,17 +61,6 @@ object StreamingOps {
         unix_micros(col("session_window.start")).as("session_start_us"),
         col("n_events"), col("sum_value"))
 
-  /** Watermarked streaming dedup on (keys, event time) — exact replay
-    * suppression: state = seen (key, ts) pairs inside the watermark
-    * horizon, so a re-delivered event (same key AND same timestamp) is
-    * dropped while a genuinely new event of the same key at a different
-    * time passes. For key-only dedup within the horizon use
-    * `dropDuplicatesWithinWatermark(keyCols)` instead.
-    */
-  def dedupStream(events: DataFrame, keyCols: Seq[String]): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .dropDuplicates(keyCols :+ "ts")
-
   /** Stream-stream interval join: signups joined to purchases of the
     * same user within 1 hour — watermarks bound the join state on both
     * sides. Batch form: q43_funnel (same expressions).
@@ -550,37 +539,24 @@ object StreamingOps {
           "transactional table format.")
   }
 
-  /** Bind a batch-id-file-named store to its FIRST streaming lineage
-    * via a `_lineage` marker, failing loudly on any other: the
-    * batch-N.parquet naming is only exactly-once WITHIN one streaming
-    * checkpoint lineage — a fresh checkpoint restarts ids at 0 and
-    * would silently overwrite batch-0 with different content (and
-    * re-judge docs against their own stored state). Marker commit is
-    * create-tmp + atomic rename; losing a concurrent race re-reads and
-    * enforces. Shared by the substring-dedup and semantic-dedup ingest
-    * stores. */
-  /** Bind a batch-partitioned parquet store to its first streaming
-    * lineage before a trigger's write — shared by the foreachBatch
-    * ingests whose replay fence is the batch's OWN partition: that
-    * fence covers same-lineage redelivery only, while a fresh
-    * checkpoint restarts ids at 0 and would silently
-    * dynamic-overwrite the original lineage's partitions with
-    * different data (idempotent-merge stores included — the overwrite
-    * REPLACES the original batch's registers/sketches/partials, it
-    * does not merge with them). The marker is an underscore file
-    * inside the store root, invisible to every parquet read. */
-  private[graft] def bindLineageForTrigger(s: SparkSession,
-      storePath: String, what: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    bindStoreLineage(fs, root, what, streamingLineage(s))
-  }
-
-  private[graft] def bindStoreLineage(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, what: String,
-      lineage: String): Unit = {
+  /** Bind a store to its FIRST streaming lineage via a `_lineage`
+    * marker inside the store root (an underscore file, invisible to
+    * every parquet read), creating the root if needed, and fail loudly
+    * on any other lineage. Batch-id-keyed stores (batch-N files, or
+    * batch_id partitions whose own overwrite is the replay fence) are
+    * only exactly-once WITHIN one streaming checkpoint lineage: a fresh
+    * checkpoint restarts ids at 0 and would silently overwrite the
+    * original lineage's batch 0 with different content (idempotent-
+    * merge stores included — the overwrite REPLACES the original
+    * batch's registers/sketches/partials, it does not merge with them)
+    * and re-judge docs against their own stored state. Marker commit
+    * is create-tmp + atomic rename; losing a concurrent race re-reads
+    * and enforces. */
+  private[graft] def bindStoreLineage(s: SparkSession, storePath: String,
+      what: String, lineage: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(storePath)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
     val marker = new org.apache.hadoop.fs.Path(dir, "_lineage")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -758,22 +734,35 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     require(k > 0, s"k must be positive, got $k")
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        // the stable query id: set by the stream-execution thread,
-        // recovered from checkpoint metadata on restart (runId changes
-        // per restart, this does not) — the lineage the store binds to
-        applyHeavyHitterBatch(batch, batchId,
-          streamingLineage(batch.sparkSession), storePath, k)
+    lineageSink(docs) { (batch, batchId, lineage) =>
+      applyHeavyHitterBatch(batch, batchId, lineage, storePath, k)
     }
   }
 
+  /** The ONE foreachBatch sink of the lineage-fenced stores: each
+    * trigger runs `trigger(batch, batchId, lineage)` with the query's
+    * [[streamingLineage]], read once per trigger. The fence policy
+    * itself (a `_lineage` marker via [[bindStoreLineage]], or a
+    * store's own lineage column) stays with the store. Returns the
+    * un-started writer so callers own trigger/checkpoint. */
+  private[graft] def lineageSink(stream: DataFrame)(
+      trigger: (DataFrame, Long, String) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] =
+    stream.writeStream.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        trigger(batch, batchId, streamingLineage(batch.sparkSession))
+    }
+
   /** The stable streaming query id from the execution thread — the
-    * lineage the exactly-once stores bind to. FAILS LOUDLY when the
-    * property is absent rather than falling back to a shared sentinel:
-    * two different fresh-checkpoint queries defaulting to the same
-    * "unknown" would both pass the lineage fence and re-enable the
-    * batch-0 overwrite hazard the fence exists to prevent. */
+    * lineage the exactly-once stores bind to: set by the
+    * stream-execution thread and recovered from checkpoint metadata
+    * on restart (runId changes per restart, this does not). FAILS
+    * LOUDLY when the property is absent rather than falling back to a
+    * shared sentinel: two different fresh-checkpoint queries defaulting
+    * to the same "unknown" would both pass the lineage fence and
+    * re-enable the batch-0 overwrite hazard the fence exists to
+    * prevent. */
   private[graft] def streamingLineage(s: SparkSession): String =
     Option(s.sparkContext.getLocalProperty("sql.streaming.queryId"))
       .getOrElse(throw new IllegalStateException(
@@ -977,31 +966,29 @@ object StreamingOps {
       verdictsPath: String, w: Int = 20, compactEvery: Int = 64)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applySubstrIngestBatch(batch, batchId, storePath, verdictsPath,
-          w, compactEvery, streamingLineage(batch.sparkSession))
+    lineageSink(docs) { (batch, batchId, lineage) =>
+      applySubstrIngestBatch(batch, batchId, storePath, verdictsPath,
+        w, compactEvery, lineage)
     }
 
   /** One trigger, exposed so replay/crash-window semantics are testable
     * exactly as they occur. */
   private[graft] def applySubstrIngestBatch(batch: DataFrame,
       batchId: Long, storePath: String, verdictsPath: String,
-      w: Int, compactEvery: Int, lineage: String = "unknown"): Unit = {
+      w: Int, compactEvery: Int, lineage: String): Unit = {
     val s = batch.sparkSession
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
     // the lineage-marker commit and writeSingleFile's tmp-dir promote
     // both assume atomic rename — same contract as the compaction swap
     requireAtomicRename(fs, s"substring-dedup gram store at $storePath")
-    fs.mkdirs(fsp)
     // the batch-id file naming is only exactly-once WITHIN one streaming
     // checkpoint lineage: a FRESH checkpoint restarts ids at 0 and would
     // silently overwrite batch-0.parquet with different content (and
     // re-judge docs against their own stored grams). Bind the store to
     // its first lineage and fail loudly on any other — same contract as
     // the heavy-hitter store's high-water fence.
-    bindStoreLineage(fs, fsp, s"substring-dedup store at $storePath",
+    bindStoreLineage(s, storePath, s"substring-dedup store at $storePath",
       lineage)
     val own = s"batch-$batchId.parquet"
     val storeFiles = fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
@@ -1057,28 +1044,26 @@ object StreamingOps {
       verdictsPath: String, w: Int = 20)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applySubstrIngestBatchCounted(batch, batchId, storePath,
-          verdictsPath, w, streamingLineage(batch.sparkSession))
+    lineageSink(docs) { (batch, batchId, lineage) =>
+      applySubstrIngestBatchCounted(batch, batchId, storePath,
+        verdictsPath, w, lineage)
     }
 
   /** One counted-ingest trigger, exposed for replay-semantics tests. */
   private[graft] def applySubstrIngestBatchCounted(batch: DataFrame,
       batchId: Long, storePath: String, verdictsPath: String,
-      w: Int, lineage: String = "unknown"): Unit = {
+      w: Int, lineage: String): Unit = {
     val s = batch.sparkSession
-    // BEFORE mkdirs: an interrupted compaction swap's recovery renames
-    // the old root back into place, which a just-created empty root
-    // would corrupt (rename into an existing dir nests instead of
-    // replacing)
+    // BEFORE the lineage bind's mkdirs: an interrupted compaction
+    // swap's recovery renames the old root back into place, which a
+    // just-created empty root would corrupt (rename into an existing
+    // dir nests instead of replacing)
     graft.text.SubstrDedup.recoverGramCompactSwap(s, storePath)
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
     requireAtomicRename(fs,
       s"counted substring-dedup gram store at $storePath")
-    fs.mkdirs(fsp)
-    bindStoreLineage(fs, fsp,
+    bindStoreLineage(s, storePath,
       s"counted substring-dedup gram store at $storePath", lineage)
     // a doc tombstoned BEFORE its content arrives must be neither
     // judged nor stored (the ingestDedupStream discipline): the store
@@ -1159,24 +1144,21 @@ object StreamingOps {
       storePath: String, verdictsPath: String, threshold: Double = 0.97)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applySemanticIngestBatch(batch, batchId, treePath, storePath,
-          verdictsPath, threshold, streamingLineage(batch.sparkSession))
+    lineageSink(vecs) { (batch, batchId, lineage) =>
+      applySemanticIngestBatch(batch, batchId, treePath, storePath,
+        verdictsPath, threshold, lineage)
     }
 
   /** One trigger of the semantic ingest — exposed so replay semantics
     * are testable exactly as they occur. */
   private[graft] def applySemanticIngestBatch(batch: DataFrame,
       batchId: Long, treePath: String, storePath: String,
-      verdictsPath: String, threshold: Double,
-      lineage: String = "unknown"): Unit = {
+      verdictsPath: String, threshold: Double, lineage: String): Unit = {
     val s = batch.sparkSession
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
     requireAtomicRename(fs, s"semantic-dedup assignment store at $storePath")
-    fs.mkdirs(fsp)
-    bindStoreLineage(fs, fsp,
+    bindStoreLineage(s, storePath,
       s"semantic-dedup assignment store at $storePath", lineage)
     val own = s"batch-$batchId.parquet"
     val storeFiles = fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
@@ -1344,23 +1326,22 @@ object StreamingOps {
       nFft: Int = 512, hop: Int = 256, idCol: String = "clip_id")
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    clips.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyAudioFeatureBatch(batch, batchId, storePath, nFft, hop,
-          idCol, streamingLineage(batch.sparkSession))
+    lineageSink(clips) { (batch, batchId, lineage) =>
+      applyAudioFeatureBatch(batch, batchId, storePath, nFft, hop,
+        idCol, lineage)
     }
 
   /** One trigger of the audio feature ingest — exposed so replay
     * semantics are testable exactly as they occur. */
   private[graft] def applyAudioFeatureBatch(batch: DataFrame,
       batchId: Long, storePath: String, nFft: Int, hop: Int,
-      idCol: String = "clip_id", lineage: String = "unknown"): Unit = {
+      idCol: String = "clip_id", lineage: String): Unit = {
     val s = batch.sparkSession
-    val fsp = new org.apache.hadoop.fs.Path(storePath)
-    val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    requireAtomicRename(fs, s"audio feature store at $storePath")
-    fs.mkdirs(fsp)
-    bindStoreLineage(fs, fsp, s"audio feature store at $storePath",
+    requireAtomicRename(
+      new org.apache.hadoop.fs.Path(storePath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration),
+      s"audio feature store at $storePath")
+    bindStoreLineage(s, storePath, s"audio feature store at $storePath",
       lineage)
     val own = s"batch-$batchId.parquet"
     // intra-batch redelivery + delete-before-arrival, both keyed on

@@ -157,24 +157,12 @@ object LmStore {
   def lmIngestStream(docs: DataFrame, storePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        applyStreamBatch(batch, storePath, batchId,
-          graft.streaming.StreamingOps.streamingLineage(
-            batch.sparkSession))
+    graft.streaming.StreamingOps.lineageSink(docs) {
+      (batch, batchId, lineage) =>
+        graft.streaming.StreamingOps.bindStoreLineage(batch.sparkSession,
+          storePath, s"LM count store at $storePath", lineage)
+        applyBatch(batch, storePath, batchId)
     }
-
-  /** One streaming trigger, exposed for the lineage-fence spec. */
-  private[graft] def applyStreamBatch(batch: DataFrame,
-      storePath: String, batchId: Long, lineage: String): Unit = {
-    val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    graft.streaming.StreamingOps.bindStoreLineage(fs, root,
-      s"LM count store at $storePath", lineage)
-    applyBatch(batch, storePath, batchId)
-  }
 
   // -------------------------------------------------------- contract
   private val storeMemo =

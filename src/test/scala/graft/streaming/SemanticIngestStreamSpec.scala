@@ -109,7 +109,8 @@ class SemanticIngestStreamSpec extends SparkSpec {
       def ingest(batchId: Long, rows: Seq[(Long, Array[Float])]): Unit =
         StreamingOps.applySemanticIngestBatch(
           rows.toDF("vec_id", "embedding"), batchId,
-          treePath, store, verdicts, threshold = 0.97)
+          treePath, store, verdicts, threshold = 0.97,
+          lineage = "L")
       def verdict(id: Long): Boolean = spark.read.parquet(verdicts)
         .filter($"vec_id" === id).select("is_dup")
         .as[Boolean].head()
@@ -175,7 +176,8 @@ class SemanticIngestStreamSpec extends SparkSpec {
       def ingest(batchId: Long, rows: Seq[(Long, Array[Float])]): Unit =
         StreamingOps.applySemanticIngestBatch(
           rows.toDF("vec_id", "embedding"), batchId,
-          treePath, store, verdicts, threshold = 0.97)
+          treePath, store, verdicts, threshold = 0.97,
+          lineage = "L")
       def verdict(id: Long): Boolean = spark.read.parquet(verdicts)
         .filter($"vec_id" === id).select("is_dup")
         .as[Boolean].head()

@@ -35,8 +35,8 @@ class SubstrIngestStreamSpec extends SparkSpec {
     try {
       val store = dir.resolve("store").toString
       val verd = dir.resolve("verdicts").toString
-      StreamingOps.applySubstrIngestBatch(corpus, 0L, store, verd, 20, 64)
-      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64)
+      StreamingOps.applySubstrIngestBatch(corpus, 0L, store, verd, 20, 64, "L")
+      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64, "L")
       val streamed = readVerdicts(verd, "batch-1.parquet")
       val direct = graft.text.SubstrDedup
         .substrDedupIncremental(batch, corpus)
@@ -55,15 +55,15 @@ class SubstrIngestStreamSpec extends SparkSpec {
     try {
       val store = dir.resolve("store").toString
       val verd = dir.resolve("verdicts").toString
-      StreamingOps.applySubstrIngestBatch(corpus, 0L, store, verd, 20, 64)
-      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64)
+      StreamingOps.applySubstrIngestBatch(corpus, 0L, store, verd, 20, 64, "L")
+      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64, "L")
       val first = readVerdicts(verd, "batch-1.parquet")
       // crash window: the gram file batch-1.parquet exists in the store,
       // the verdict file is gone, and the checkpoint re-delivers batch 1.
       // Own-batch exclusion must keep the re-judge blind to its own grams
       java.nio.file.Files.delete(
         java.nio.file.Paths.get(verd, "batch-1.parquet"))
-      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64)
+      StreamingOps.applySubstrIngestBatch(batch, 1L, store, verd, 20, 64, "L")
       val replayed = readVerdicts(verd, "batch-1.parquet")
       assert(replayed.nonEmpty && replayed.toSeq === first.toSeq,
         "replay after the gram append must not flip verdicts")
@@ -140,10 +140,10 @@ class SubstrIngestStreamSpec extends SparkSpec {
         corpus.filter($"doc_id" % 3 === i))
       thirds.zipWithIndex.foreach { case (b, i) =>
         StreamingOps.applySubstrIngestBatch(b, i.toLong, store, verd,
-          20, compactEvery = 1)
+          20, compactEvery = 1, lineage = "L")
       }
       StreamingOps.applySubstrIngestBatch(batch, 3L, store, verd,
-        20, compactEvery = 1)
+        20, compactEvery = 1, lineage = "L")
       val streamed = readVerdicts(verd, "batch-3.parquet")
       val direct = graft.text.SubstrDedup
         .substrDedupIncremental(batch, corpus)
@@ -165,8 +165,10 @@ class SubstrIngestStreamSpec extends SparkSpec {
     try {
       val store = dir.resolve("store").toString
       val verd = dir.resolve("verdicts").toString
-      StreamingOps.applySubstrIngestBatchCounted(corpus, 0L, store, verd, 20)
-      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd, 20)
+      StreamingOps.applySubstrIngestBatchCounted(corpus, 0L, store, verd,
+        20, "L")
+      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd,
+        20, "L")
       val streamed = readVerdicts(verd, "batch-1.parquet")
       val direct = graft.text.SubstrDedup
         .substrDedupIncremental(batch, corpus)
@@ -175,7 +177,8 @@ class SubstrIngestStreamSpec extends SparkSpec {
         "counted ingest must judge exactly like the plain path")
       // crash-window replay: own-partition exclusion keeps the re-judge
       // blind to its own grams; the partition overwrite is the fence
-      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd, 20)
+      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd,
+        20, "L")
       assert(readVerdicts(verd, "batch-1.parquet").toSeq === streamed.toSeq,
         "replayed counted trigger must not flip verdicts")
       // GDPR delete BETWEEN triggers (negative id: outside the
@@ -186,7 +189,8 @@ class SubstrIngestStreamSpec extends SparkSpec {
       graft.text.SubstrDedup.deleteFromGramStoreCounted(
         deleted, store, batchId = -1L)
       val resent = batch.withColumn("doc_id", $"doc_id" + 100000L)
-      StreamingOps.applySubstrIngestBatchCounted(resent, 2L, store, verd, 20)
+      StreamingOps.applySubstrIngestBatchCounted(resent, 2L, store, verd,
+        20, "L")
       val afterDelete = spark.read.parquet(s"$verd/batch-2.parquet")
         .withColumn("doc_id", $"doc_id" - 100000L)
         .orderBy("doc_id").collect().map(_.toSeq)
@@ -210,7 +214,8 @@ class SubstrIngestStreamSpec extends SparkSpec {
     try {
       val store = dir.resolve("store").toString
       val verd = dir.resolve("verdicts").toString
-      StreamingOps.applySubstrIngestBatchCounted(corpus, 0L, store, verd, 20)
+      StreamingOps.applySubstrIngestBatchCounted(corpus, 0L, store, verd,
+        20, "L")
       // GDPR request for a doc that has NOT arrived yet (it carries
       // text, as requests do) — bars the future arrival
       val preDeleted = batch.filter($"doc_id" === batch
@@ -219,7 +224,8 @@ class SubstrIngestStreamSpec extends SparkSpec {
         preDeleted, store, batchId = -1L)
       // the doc arrives in the next trigger: it must be absent from
       // BOTH the verdict file and the gram store
-      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd, 20)
+      StreamingOps.applySubstrIngestBatchCounted(batch, 1L, store, verd,
+        20, "L")
       val barredId = preDeleted.select("doc_id").head.getLong(0)
       val verdictIds = spark.read.parquet(s"$verd/batch-1.parquet")
         .select("doc_id").collect().map(_.getLong(0)).toSet

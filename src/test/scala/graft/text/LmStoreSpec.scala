@@ -85,30 +85,6 @@ class LmStoreSpec extends SparkSpec {
       KneserNey.trigramLm(docs((b1 ++ b2): _*)).collect().toSeq)
   }
 
-  test("the store binds to its first streaming lineage: a fresh " +
-      "checkpoint's batch 0 fails loudly instead of silently " +
-      "overwriting the original lineage's partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("lmlineage")
-    try {
-      val store = dir.resolve("counts").toString
-      LmStore.applyStreamBatch(docs(b1: _*), store, 0L, "lineage-A")
-      val before = LmStore.lmFromStore(spark, store).collect().toSeq
-      // same lineage redelivery: the partition is the fence, answers hold
-      LmStore.applyStreamBatch(docs(b1: _*), store, 0L, "lineage-A")
-      assert(LmStore.lmFromStore(spark, store).collect().toSeq == before)
-      // a DIFFERENT lineage's batch 0 carries different docs — without
-      // the fence it would dynamic-overwrite batch_id=0 silently
-      val e = intercept[IllegalStateException](
-        LmStore.applyStreamBatch(docs(b2: _*), store, 0L, "lineage-B"))
-      assert(e.getMessage.contains("lineage"), e.getMessage)
-      assert(LmStore.lmFromStore(spark, store).collect().toSeq == before)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   test("a delete-before-any-ingest leaves a READABLE empty store (the " +
       "file-less-dir rule): counts and the model read empty, the " +
       "barred id never enters, and the first real ingest lands") {
