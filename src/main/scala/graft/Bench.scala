@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR at local[N], prints ONE JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -214,17 +212,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     def runOne(name: String): Double = {
       // bypass cross-call memoization (DedupClusters/Curation checkpoint
@@ -327,21 +315,25 @@ object Bench {
     s"""{"metric":"total","value":${f3(totalOf(results))},"unit":"sec","queries":$qs,"sf":${jq(sfDir)}}"""
   }
 
-  /** The driver-facing summary: total + counts only, NO per-query map —
-    * its length does not grow with the headline set, so the driver's
-    * 2000-char stdout tail can never truncate it (BenchLineSpec pins
-    * the bound). Per-query values live in `queriesFile` — the RESOLVED
-    * output path (SPARK_GRAFT_BENCH_OUT may override the default, and
-    * the pointer must follow it). */
   /** One source of truth for the per-query output's default location —
     * run()'s env fallback and summaryLine's default must never drift. */
   private[graft] val DefaultBenchOut = "/root/repo/bench_out.json"
 
+  /** The summary line Bench prints last: total + counts only, NO
+    * per-query map — its length does not grow with the headline set, so
+    * a 2000-char stdout tail can never truncate it (BenchLineSpec pins
+    * the bound). `n_failed` counts the entries that failed every run:
+    * the total leaves them out, so a query that starts failing would
+    * otherwise read as a faster bench. Per-query values live in
+    * `queriesFile` — the RESOLVED output path (SPARK_GRAFT_BENCH_OUT
+    * may override the default, and the pointer must follow it). */
   private[graft] def summaryLine(results: Seq[(String, Double)],
       sfDir: String,
       queriesFile: String = DefaultBenchOut): String =
-    s"""{"metric":"total","value":${f3(totalOf(results))},"unit":"sec","n_queries":${results.size},"queries_file":${jq(queriesFile)},"sf":${jq(sfDir)}}"""
+    s"""{"metric":"total","value":${f3(totalOf(results))},"unit":"sec","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"queries_file":${jq(queriesFile)},"sf":${jq(sfDir)}}"""
 
+  /** Sum over the entries that produced a time; failed ones (−1) are
+    * counted by the summary's `n_failed` instead. */
   private[graft] def totalOf(results: Seq[(String, Double)]): Double =
     results.map(_._2).filter(_ >= 0).sum
 }

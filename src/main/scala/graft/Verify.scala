@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,7 @@ object Verify {
     // flag — Bench runs the same functions and must not pay the extra
     // materialization per timed run (see graft.OracleDump)
     System.setProperty(OracleDump.Enabled, "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet has shipped as TIMESTAMP(NANOS) and (MICROS)
-      // across testdata generations; see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     // builder-side tooling only (never set by the driver): restrict the
     // dump to a comma-separated subset while iterating on new entries —

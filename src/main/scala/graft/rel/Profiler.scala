@@ -216,7 +216,12 @@ object Profiler {
         var i = 0
         while (i < nN) {
           // a partial's min/max slot is live iff that partial saw a
-          // non-null value for the column — recoverable from cnt
+          // non-null value for the column — recoverable from cnt: the
+          // partial counts cnt off the hash column and ncnt off the cast
+          // column, and the two agree because a numeric→double cast
+          // never nulls a non-null value. A projection that could (a
+          // try_cast, a guarded cast) must carry ncnt in the partial
+          // row, or a stale 0.0 seed would merge as a real min/max
           if (rc(numIdx(i)) > 0L) {
             if (ncnt(i) == 0L) { mn(i) = rmn(i); mx(i) = rmx(i) }
             else {

@@ -628,20 +628,13 @@ object RelQueries {
   // each side + equi-join on the rank. Top-50 customers by balance zipped
   // with top-50 suppliers by balance.
   def q27ZipPosition(s: SparkSession, d: String): DataFrame = {
-    // top-50 via orderBy+limit (distributed TakeOrdered — per-partition
-    // top-50 then merge), NOT a global no-partition window (which would
-    // funnel the whole table through one partition at scale); the rank
-    // window then runs over just 50 rows.
-    val wc = Window.orderBy(col("c_acctbal").desc, col("c_custkey"))
-    val ws = Window.orderBy(col("s_acctbal").desc, col("s_suppkey"))
-    val c = customer(s, d)
-      .select(col("c_custkey"), col("c_acctbal"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey")).limit(50)
-      .withColumn("rn", row_number().over(wc))
-    val su = supplier(s, d)
-      .select(col("s_suppkey"), col("s_acctbal"))
-      .orderBy(col("s_acctbal").desc, col("s_suppkey")).limit(50)
-      .withColumn("rn", row_number().over(ws))
+    // top-50 per side via the bounded TopK.ranked (distributed
+    // TakeOrdered, then ranks over the 50 survivors), NOT a global
+    // no-partition window funneling the whole table through one task
+    val c = TopK.ranked(customer(s, d).select(col("c_custkey"), col("c_acctbal")),
+      50, "rn", col("c_acctbal").desc, col("c_custkey"))
+    val su = TopK.ranked(supplier(s, d).select(col("s_suppkey"), col("s_acctbal")),
+      50, "rn", col("s_acctbal").desc, col("s_suppkey"))
     c.join(su, "rn")
       .select(col("rn"), col("c_custkey"), col("c_acctbal"),
         col("s_suppkey"), col("s_acctbal"))

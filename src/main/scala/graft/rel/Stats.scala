@@ -192,20 +192,12 @@ object Stats {
           |  i -> concat_ws('>', element_at(types, i),
           |    element_at(types, i + 1), element_at(types, i + 2)))"""
           .stripMargin)).as("path"))
-    // top-k via orderBy + limit (TakeOrderedAndProject: per-partition
-    // top-k, merged) instead of an unpartitioned row_number window,
-    // which funneled EVERY distinct path's count into one reducer (the
-    // "No Partition Defined for Window" warning; at scale that single
-    // task holds the whole path vocabulary). The rank window now runs
-    // over the ≤ topK surviving rows only. (n_occurrences desc, path)
-    // is a total order, so limit(topK) keeps exactly the rank ≤ topK
-    // rows — output identical. (r19, guide §2.5: bounded top-k.)
-    paths.groupBy("path").agg(count(lit(1)).as("n_occurrences"))
-      .orderBy(col("n_occurrences").desc, col("path"))
-      .limit(topK)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("n_occurrences").desc, col("path"))))
+    // bounded top-k (TopK.ranked), never a row_number window over
+    // every distinct path's count in one reducer. (n_occurrences desc,
+    // path) is a total order, so the top topK rows are exactly the
+    // rank ≤ topK rows.
+    TopK.ranked(paths.groupBy("path").agg(count(lit(1)).as("n_occurrences")),
+        topK, "rank", col("n_occurrences").desc, col("path"))
       .orderBy("rank")
   }
 

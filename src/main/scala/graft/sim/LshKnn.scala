@@ -22,12 +22,13 @@ import org.apache.spark.sql.functions._
   * scale); each embedding crosses the verify attach once per pair side,
   * never once per table. Multiplicity (a pair colliding in several
   * tables) is removed AFTER the cheap cosine filter, so the dedup
-  * aggregate only sees true near-dups. Caveat measured on this corpus: at minCos = 0.4 against a
-  * 0.29 background p99 there is no parameter choice with sub-quadratic
-  * candidates (any LSH admits ~half of all pairs); the asymptotic win
-  * appears at realistic dedup thresholds (≥ 0.8) where band collisions
-  * are vanishingly rare for non-dups. Emitted pairs are exact, not
-  * estimates — recall vs the exact q31 pairs is asserted in the suite.
+  * aggregate only sees true near-dups. Caveat measured on this corpus:
+  * at minCos = 0.4 against a 0.29 background p99 there is no parameter
+  * choice with sub-quadratic candidates (any LSH admits ~half of all
+  * pairs); the asymptotic win appears at realistic dedup thresholds
+  * (≥ 0.8) where band collisions are vanishingly rare for non-dups.
+  * Emitted pairs are exact, not estimates — recall vs the exact q31
+  * pairs is asserted in the suite.
   */
 object LshKnn {
 
@@ -87,7 +88,11 @@ object LshKnn {
       }.toDF("vec_id", "band", "sig")
   }
 
-  /** lshNeardup over an arbitrary (vec_id, embedding, nrm) relation. */
+  /** lshNeardup over an arbitrary (vec_id, embedding, nrm) relation.
+    * `emb` must be deterministic: nothing caches it, so it is evaluated
+    * again for the oracle dump, for both sides of the band join and for
+    * both embedding attaches. A sampled or generated input would pair
+    * candidates from one evaluation with embeddings from another. */
   private[graft] def lshNeardupOn(emb: DataFrame, minCos: Double,
       rowsPerBand: Int, nTables: Int, seed: Long): DataFrame = {
     graft.functions.VecFunctions.register(emb.sparkSession)

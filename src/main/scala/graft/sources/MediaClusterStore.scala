@@ -88,7 +88,8 @@ object MediaClusterStore {
     * prunes the log — each label is remapped at most once, so the
     * ceiling is label-count (≈ member-count on a pathologically
     * chained corpus), not batch-sized. Measured growth: the
-    * `Scratch remapgrowth` adversarial probe (BASELINE.md) holds
+    * `Scratch remapgrowth` adversarial probe (BASELINE.md; its source
+    * is in tools/Scratch.scala at commit 15fbb0b) holds
     * merge latency flat through 2.2·10⁵ accumulated events while the
     * standing-read cost grows with the log and collapses 10× after
     * compaction. Within the bound, merges and reads collect the log
@@ -1746,7 +1747,7 @@ object MediaClusterStore {
     clPath
   }
 
-  /** Probe access to the memoized merge store (Scratch mergeprof). */
+  /** The merge store, memoized per immutable dir (nq_cluster_merge). */
   private[graft] def probeMergeStore(s: SparkSession, d: String): String =
     MediaDedupStore.memoStore(mergeClusterStoreFor, d)(
       buildMergeClusterStore(s, d))

@@ -482,11 +482,6 @@ object MediaDedupStore {
     if (graft.Tables.isImmutable(d)) cache.getOrElseUpdate(d, build)
     else build
 
-  /** Builder-side probe access to the memoized ingest store (the
-    * `Scratch mediajudge` serving-cost probe) — never a contract path. */
-  private[graft] def probeStore(s: SparkSession, d: String): String =
-    memoStore(storeFor, d)(buildStore(s, d))
-
   // --------------------------------------------------- contract entries
   /** nq_media_dedup_store: the full multimodal corpus arrives as 3
     * fingerprint batches (media_id mod 3); each batch is judged against
@@ -611,7 +606,7 @@ object MediaDedupStore {
     else derive
   }
 
-  /** Probe access to the memoized flip store (Scratch flipshuffle). */
+  /** The flip store, memoized per immutable dir (nq_media_dedup_flip). */
   private[graft] def flipStoreProbePath(s: SparkSession, d: String)
       : String =
     memoStore(flipStoreFor, d) {

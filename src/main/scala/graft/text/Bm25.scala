@@ -57,18 +57,14 @@ object Bm25 {
         (col("df") + lit(0.5)))
     val tfPart = (col("tf") * lit(K1 + 1.0)) /
       (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / avgdl))
-    tf.join(dfreq, "term")
+    val scored = tf.join(dfreq, "term")
       .join(lens, "doc_id")
       .crossJoin(broadcast(stats))
       .withColumn("contrib", idf * tfPart)
       .groupBy("doc_id")
       .agg(round(sum("contrib"), scoreDecimals).as("score"),
         count(lit(1)).as("n_terms_hit"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))))
+    graft.rel.TopK.ranked(scored, k, "rank", col("score").desc, col("doc_id"))
   }
 
   /** Driver entry: top-20 documents for the query "hash join filter". */

@@ -63,7 +63,8 @@ object Mixing {
     * positives, so the output is IDENTICAL to `contamination` (same
     * oracle SQL; pinned in MixingSpec).
     *
-    * Measured (`Scratch contam 50`, 225k docs): candidate shingle rows
+    * Measured (`Scratch contam 50`, tools/Scratch.scala at commit
+    * 15fbb0b; 225k docs): candidate shingle rows
     * admitted to the aggregation drop 11.7M → 262k (2.2%); actual
     * shuffle records written drop 1.39M → 65k (21× — the exact form's
     * partial aggregate already combines repeated shingles within

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Zipf-law fit over the corpus vocabulary — the standard sanity
   * diagnostic of a text corpus (Zipf 1949; Piantadosi 2014 review):
@@ -49,21 +48,20 @@ object Zipf {
     // funnel the ENTIRE vocabulary (easily 10⁹ types on web text)
     // through one sort task just to keep 10⁴ rows, where the heap
     // aggregate's exchange carries ≤ (k+1)·partitions rows (the q80
-    // shape, plan-guarded). The window that ASSIGNS ranks then runs
-    // over the ≤ topK survivors only — the q27 limit-before-ranking
-    // rule. Tie direction at the boundary differs from (c desc, w asc)
-    // — struct ordering keeps the LARGEST w among equal counts — but
+    // shape, plan-guarded). TopK.ranked then numbers the ≤ topK
+    // survivors (its own limit is a no-op here). Tie direction at the
+    // boundary differs from (c desc, w asc) — struct ordering keeps
+    // the LARGEST w among equal counts — but
     // every fit statistic is tie-invariant: boundary candidates share
     // c (identical y), and the rank SET 1..topK is fixed, so each
     // regression sum is unchanged term-for-term (the oracle keeps the
     // original order and round-4 absorbs FP summation order as ever).
     graft.functions.VecFunctions.register(docs.sparkSession)
-    val ranked = counts
-      .agg(expr(s"top_k(struct(c, w), $topK)").as("tk"))
-      .select(explode(col("tk")).as("s"))
-      .select(col("s.c").as("c"), col("s.w").as("w"))
-      .withColumn("r",
-        row_number().over(Window.orderBy(col("c").desc, col("w"))))
+    val ranked = graft.rel.TopK.ranked(counts
+        .agg(expr(s"top_k(struct(c, w), $topK)").as("tk"))
+        .select(explode(col("tk")).as("s"))
+        .select(col("s.c").as("c"), col("s.w").as("w")),
+      topK, "r", col("c").desc, col("w"))
     val lx = log(col("r").cast("double"))
     val ly = log(col("c").cast("double"))
     val m = ranked.agg(count(lit(1)).as("n_ranks"),

@@ -1,1610 +1,99 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Ad-hoc profiling main (not part of the driver contract). */
+/** Ad-hoc inspection main (not part of the Bench/Verify contract), run in the
+  * session Bench and Verify use (`GraftSession`, SPARK_GRAFT_CPUS) on
+  * SPARK_GRAFT_SF_DIR:
+  *
+  *   explain [out=<dir>] <name>…  formatted physical plans (one
+  *                                <name>.txt per entry under out=)
+  *   oraclesql <name>…            an entry's composed DuckDB oracle SQL
+  *   benchq <name>…               Bench's per-entry regime in isolation
+  *   warnhunt [all]               runtime warnings attributed per entry
+  *
+  * A correctness subset is `SPARK_GRAFT_VERIFY_ONLY=<names>` on
+  * graft.Verify. The round-specific probes this tool used to carry stay
+  * readable with `git show 15fbb0b:src/main/scala/graft/tools/Scratch.scala`.
+  */
 object Scratch {
+  private val Modes = Seq("explain", "oraclesql", "benchq", "warnhunt")
+
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    require(Modes.contains(mode),
+      s"usage: Scratch ${Modes.mkString("|")} [args…] (got '$mode')")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // "benchq" replicates Bench's EXACT session (extensions, timezone)
-    // so a per-query number here is comparable to BENCH_r{N}.json
-    val benchMode = args.headOption.contains("benchq")
-    // ad-hoc conf A/B: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (tooling only —
-    // the driver contract sessions in Bench/Verify never read this)
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder0 = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val builder = extraConf.foldLeft(builder0) {
-      case (b, (k, v)) => b.config(k, v) }
-    val spark = (if (benchMode)
-      builder.config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start()
+    try mode match {
+      case "explain" => explain(spark, d, args.drop(1))
+      case "oraclesql" => args.drop(1).foreach(n =>
+        println(graft.SparkEntry.oracleSql(n)))
+      case "benchq" => benchq(spark, d, args.drop(1))
+      case "warnhunt" => warnhunt(spark, d, args.lift(1).contains("all"))
+    } finally spark.stop()
+  }
 
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[scratch] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-    if (args.headOption.contains("explain")) {
-      // print the formatted physical plan of contract queries (multi-name;
-      // optional "out=<dir>" first arg writes one <name>.txt per query):
-      //   runMain graft.tools.Scratch explain [out=/tmp/plans] q73_substr_dedup …
-      val outDir = args.drop(1).headOption.filter(_.startsWith("out="))
-        .map(_.stripPrefix("out="))
-      outDir.foreach(p => new java.io.File(p).mkdirs())
-      for (name <- args.drop(1).filterNot(_.startsWith("out="))) {
-        val plan = graft.SparkEntry.queries(name)(spark, d)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        outDir match {
-          case Some(p) => java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$p/$name.txt"),
-            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          case None =>
-            println(s"\n=================== $name ===================")
-            println(plan)
-        }
+  /** Formatted physical plans of the named entries; a leading
+    * `out=<dir>` writes one `<name>.txt` per entry instead of printing. */
+  private def explain(spark: SparkSession, d: String,
+      args: Seq[String]): Unit = {
+    val outDir = args.headOption.filter(_.startsWith("out="))
+      .map(_.stripPrefix("out="))
+    outDir.foreach(p => new java.io.File(p).mkdirs())
+    for (name <- args.filterNot(_.startsWith("out="))) {
+      val plan = graft.SparkEntry.queries(name)(spark, d)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      outDir match {
+        case Some(p) => java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$p/$name.txt"),
+          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        case None =>
+          println(s"\n=================== $name ===================")
+          println(plan)
       }
-      spark.stop(); return
     }
+  }
 
-    if (args.headOption.contains("oraclesql")) {
-      // print a contract entry's composed oracle SQL (for composing /
-      // debugging shared CTE chains against DuckDB directly):
-      //   runMain graft.tools.Scratch oraclesql nq_pipeline_e2e
-      for (name <- args.drop(1))
-        println(graft.SparkEntry.oracleSql(name))
-      spark.stop(); return
-    }
+  private def noop(spark: SparkSession, d: String, name: String): Unit =
+    graft.SparkEntry.queries(name)(spark, d)
+      .write.format("noop").mode("overwrite").save()
 
-    if (args.headOption.contains("verifyq")) {
-      // subset Verify: run named contract queries with oracle dumps on,
-      // write results + oracle_sql.json for tools/check_oracle.py —
-      //   tools/runmain.sh graft.tools.Scratch verifyq /tmp/vq nq_mfcc …
-      System.setProperty(graft.OracleDump.Enabled, "true")
-      val outDir = args(1)
-      val names = args.drop(2)
-      new java.io.File(outDir).mkdirs()
-      names.foreach { name =>
-        try graft.SparkEntry.queries(name)(spark, d).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          println(s"[verifyq] $name FAILED: ${e.getMessage}")
-          e.printStackTrace()
-        }
-      }
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = graft.SparkEntry.oracleSql
-        .filter { case (k, _) => names.contains(k) }
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("graphskew")) {
-      // VERDICT r12 #6: the citation fixture is degree-regular (≈8);
-      // real host graphs are Zipfian. Generate a deterministic
-      // power-law graph — dst log-uniform over ids ("p(rank) ∝ 1/rank":
-      // node 0 alone receives ~1/ln(n) of ALL edges — a genuine hub),
-      // src uniform — and probe the graph family at two edge scales so
-      // superlinear blowups and hot-key funnels show up as a ratio.
-      //   runmain graft.tools.Scratch graphskew [n] [m] [mult]
-      val n = args.lift(1).map(_.toInt).getOrElse(50000)
-      val m0 = args.lift(2).map(_.toLong).getOrElse(400000L)
-      val mult = args.lift(3).map(_.toInt).getOrElse(4)
-      def zipfEdges(m: Long) = spark.range(m).select(
-          pmod(xxhash64(col("id"), lit(2)), lit(n.toLong)).as("src"),
-          (floor(exp(
-            (xxhash64(col("id"), lit(1)).bitwiseAND(lit((1L << 52) - 1))
-              .cast("double") / lit((1L << 52).toDouble)) *
-              lit(math.log(n.toDouble)))) - lit(1L)).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      for (m <- Seq(m0, m0 * mult)) {
-        val e = zipfEdges(m).localCheckpoint()
-        val hub = e.groupBy("dst").count()
-          .orderBy(col("count").desc).limit(1).collect()(0)
-        println(s"[scratch] m=$m edges, hottest in-degree node " +
-          s"${hub.getLong(0)}: ${hub.getLong(1)}")
-        time(s"pagerank(5) m=$m") {
-          noop(graft.rel.PageRank.pageRank(e, iters = 5)) }
-        time(s"labelprop(5) m=$m") {
-          noop(graft.rel.LabelProp.labelProp(e, iters = 5)) }
-        time(s"triangles m=$m") {
-          noop(graft.rel.Triangles.triangleStats(e)) }
-        time(s"kcore(k=8,rounds=10) m=$m") {
-          noop(graft.rel.KCore.kCore(e, k = 8, rounds = 10)) }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("storeread")) {
-      // VERDICT r12 #7: per-query store-read timings with the store
-      // build amortized — run each named entry 3×; with the sf dir
-      // marked immutable (SPARK_GRAFT_IMMUTABLE_DIRS), run 1 pays the
-      // one-time store build and runs 2-3 measure the READ path only —
-      // the store-family contract (build once / serve many).
-      //   SPARK_GRAFT_IMMUTABLE_DIRS=/tmp/sf1f SPARK_GRAFT_SF_DIR=/tmp/sf1f \
-      //     runmain graft.tools.Scratch storeread nq_agg_asof nq_graph_store
-      args.drop(1).foreach { name =>
-        for (r <- 1 to 3) time(s"$name run$r") {
-          graft.SparkEntry.queries(name)(spark, d)
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("mediajudge")) {
-      // the media store's SERVING cost: judge one incoming batch of
-      // PRECOMPUTED fingerprints against the standing store — the
-      // production ingest shape (fingerprints arrive with the batch;
-      // the nq_media_dedup_store entry's time is dominated by
-      // re-fingerprinting its whole corpus per call).
-      //   SPARK_GRAFT_IMMUTABLE_DIRS=/tmp/sf1f SPARK_GRAFT_SF_DIR=/tmp/sf1f \
-      //     runmain graft.tools.Scratch mediajudge [modFilter]
-      val modFilter = args.lift(1).map(_.toLong).getOrElse(1000L)
-      val store = graft.sources.MediaDedupStore.probeStore(spark, d)
-      val batch = graft.sources.MediaDedupStore.allFingerprints(spark, d)
-        .filter(pmod(col("media_id"), lit(modFilter)) === 0L)
-        .localCheckpoint()
-      println(s"[scratch] batch size: ${batch.count()} fingerprints")
-      for (r <- 1 to 3) time(s"judgeBatch run$r") {
-        graft.sources.MediaDedupStore
-          .judgeBatch(spark, batch, store, batchId = 99L)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("judgeprof")) {
-      // stage breakdown of the nq_media_judge bench entry: where do
-      // the warm seconds go? (store read / batch derive / judge body /
-      // guard count / orderBy tail)
-      val ms = graft.sources.MediaDedupStore
-      // warm the memoized store + codegen
-      ms.nqMediaJudge(spark, d).write.format("noop").mode("overwrite").save()
-      val store = ms.judgeBenchStore(spark, d)
-      for (r <- 1 to 2) {
-        val batch0 = time(s"run$r batch derive+ckpt")(
-          ms.syntheticFingerprints(spark, d)
-            .filter(pmod(col("media_id"), lit(20)) === 19).localCheckpoint())
-        time(s"run$r guard count")(batch0.count())
-        time(s"run$r judge noop (no orderBy)")(
-          ms.judgeBatch(spark, batch0, store, 19L)
-            .write.format("noop").mode("overwrite").save())
-        time(s"run$r cross only")(
-          ms.crossPairs(spark, batch0, store, 19L, 6)
-            .write.format("noop").mode("overwrite").save())
-        time(s"run$r full entry")(
-          ms.nqMediaJudge(spark, d).write.format("noop")
-            .mode("overwrite").save())
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("flipshuffle")) {
-      // does the flip entry's corpus-third judge want the broadcast or
-      // the shuffled path? Replicate nq_media_dedup_flip's judges with
-      // maxBroadcastBatchRows=0 (every batch "oversized" -> shuffle)
-      // and compare against the entry's broadcast default.
-      val ms = graft.sources.MediaDedupStore
-      ms.nqMediaDedupFlip(spark, d).write.format("noop")
-        .mode("overwrite").save() // warm store + fixtures
-      for (r <- 1 to 2) {
-        time(s"run$r flip BROADCAST judges")(
-          ms.nqMediaDedupFlip(spark, d).write.format("noop")
-            .mode("overwrite").save())
-        time(s"run$r flip SHUFFLED judges") {
-          val all = ms.flipFingerprints(spark, d).localCheckpoint()
-          val path = ms.flipStoreProbePath(spark, d)
-          (0 until 3).map { b =>
-            ms.judgeBatch(spark,
-              all.filter(pmod(col("media_id"), lit(3)) === b),
-              path, b.toLong, 6, maxBroadcastBatchRows = 0L)
-          }.reduce(_.union(_))
-            .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("remapgrowth")) {
-      // VERDICT r15 #1: adversarial remap-log growth — M chains whose
-      // members arrive in bridge-maximizing order (evens first as
-      // singletons, then each odd member bridges its two standing
-      // neighbors), so standing clusters keep merging and the merge-
-      // event log grows ~linearly in batches (each label remapped at
-      // most once; ceiling = label count ≈ member count). Records per
-      // batch: merge latency + log rows; then a read, compaction, and
-      // the post-compaction read/merge.
-      //   runmain graft.tools.Scratch remapgrowth [chains] [len]
-      val M = args.lift(1).map(_.toInt).getOrElse(20000)
-      val L = args.lift(2).map(_.toInt).getOrElse(24)
-      val store =
-        s"${graft.FixtureMemo.scratchDir("remapgrowth")}/cl"
-      val mcs = graft.sources.MediaClusterStore
-      val chains = spark.range(M).select(col("id").as("c"))
-        .localCheckpoint()
-      def member(i: Int) = chains.select(
-        (col("c") * 64 + i).as("media_id"), lit("m").as("modality"))
-      val order = (0 until L by 2) ++ (1 until L by 2)
-      order.zipWithIndex.foreach { case (i, b) =>
-        val nbrs = Seq(i - 1, i + 1)
-          .filter(j => j >= 0 && j < L && order.indexOf(j) < b)
-        val pairs = nbrs.map(j => chains.select(
-            lit("m").as("modality"),
-            (col("c") * 64 + math.min(i, j)).as("id_a"),
-            (col("c") * 64 + math.max(i, j)).as("id_b")))
-          .reduceOption(_ union _)
-          .getOrElse(member(i).select(col("modality"),
-            col("media_id").as("id_a"), col("media_id").as("id_b"))
-            .limit(0))
-        time(s"batch $b (member $i, ${nbrs.size} edges/chain) merge")(
-          mcs.applyClusterBatch(spark, member(i), pairs, store, b.toLong))
-        val rdir = new java.io.File(s"$store/_remaps")
-        val nRemap = if (rdir.exists)
-          spark.read.parquet(rdir.toString).count() else 0L
-        println(s"[scratch] after batch $b: remap log rows = $nRemap")
-      }
-      def readAll(label: String) = time(label)(
-        mcs.assignmentsFromStore(spark, store)
-          .write.format("noop").mode("overwrite").save())
-      for (r <- 1 to 2) readAll(s"pre-compaction read run$r")
-      // the over-bound regime: force the distributed pointer-doubled
-      // fallback and measure the same reads + one merge against it
-      spark.conf.set(mcs.MaxRemapRowsConf, "1000")
-      for (r <- 1 to 2) readAll(s"FALLBACK read run$r")
-      val pairsF = chains.select(lit("m").as("modality"),
-        (col("c") * 64 + (L - 1)).as("id_a"),
-        (col("c") * 64 + L + 1).as("id_b"))
-      time("FALLBACK merge (bridging batch)")(
-        mcs.applyClusterBatch(spark, member(L + 1), pairsF, store,
-          (L + 1).toLong))
-      spark.conf.unset(mcs.MaxRemapRowsConf)
-      val nClusters = mcs.assignmentsFromStore(spark, store)
-        .select("cluster_id").distinct().count()
-      println(s"[scratch] clusters = $nClusters (expect $M: every " +
-        "chain fully merged)")
-      time("compactThrough")(
-        mcs.compactThrough(spark, store, (L - 1).toLong))
-      val rdir = new java.io.File(s"$store/_remaps")
-      println(s"[scratch] post-compaction remap log rows = " +
-        s"${if (rdir.exists) spark.read.parquet(rdir.toString).count()
-            else 0L}")
-      for (r <- 1 to 2) readAll(s"post-compaction read run$r")
-      // one more bridge-heavy merge on the compacted store: latency
-      // must be back at the early-batch level (log collapsed)
-      val pairs = chains.select(lit("m").as("modality"),
-        (col("c") * 64 + (L - 2)).as("id_a"),
-        (col("c") * 64 + L).as("id_b"))
-      time("post-compaction merge")(
-        mcs.applyClusterBatch(spark, member(L), pairs, store, L.toLong))
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("sketchcompact")) {
-      // r17 sketch-store compaction probe: a KLL store ingests N
-      // batches (a year of hourly ingest ≈ 8.7k), reads pay listing +
-      // footer + per-partition explode costs that grow with the batch
-      // count; compactThrough folds them to one partition and the
-      // read must collapse while answering identically.
-      //   runmain graft.tools.Scratch sketchcompact [batches]
-      val N = args.lift(1).map(_.toInt).getOrElse(500)
-      val qs = graft.rel.QuantileStore
-      val ord = graft.Tables.orders(spark, d).localCheckpoint()
-      val store =
-        s"${graft.FixtureMemo.scratchDir("sketchcompact")}/kll"
-      val gc = Seq("o_orderstatus")
-      time(s"build $N KLL batches") {
-        (0 until N).foreach(b => qs.applyBatch(
-          ord.filter(pmod(col("o_orderkey"), lit(N)) === b),
-          gc, "o_totalprice", store, b.toLong, 256))
-      }
-      def readAll(label: String) = time(label)(
-        qs.quantilesOf(qs.sketchesFromStore(spark, store, gc, 256),
-            gc, Seq(("p50", 1, 2), ("p99", 99, 100)))
-          .write.format("noop").mode("overwrite").save())
-      def answers = qs.quantilesOf(
-          qs.sketchesFromStore(spark, store, gc, 256),
-          gc, Seq(("p50", 1, 2)))
-        .orderBy("o_orderstatus").collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
-      for (r <- 1 to 3) readAll(s"pre-compaction read run$r ($N parts)")
-      val before = answers
-      time(s"compactThrough($N-1)")(
-        qs.compactThrough(spark, store, gc, 256, (N - 1).toLong))
-      for (r <- 1 to 3) readAll(s"post-compaction read run$r (1 part)")
-      val after = answers
-      println(s"[scratch] p50 answers equal: ${before.map(_._1) ==
-        after.map(_._1)} / values ${before == after} " +
-        s"(KLL re-feed keeps the rank-error class; exact-equality is " +
-        "not the contract, total weight is)")
-      val w = spark.read.parquet(store)
-        .select(explode(col("sk")).as("it")).agg(sum("it.w")).first().getLong(0)
-      println(s"[scratch] total weight = $w (expect ${ord.count()})")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("remapdeep")) {
-      // VERDICT r16 #2: per-read cost in the OVER-BOUND regime with
-      // DEEP remap chains (depth L-1 ≥ 32 → pointer doubling needs
-      // ≥ 6 self-join rounds). Before the r17 memo every standing
-      // read re-ran the whole doubling; now the cold read pays it
-      // once per log state and warm reads reuse the checkpointed
-      // relation.  runmain graft.tools.Scratch remapdeep [chains] [depth]
-      val M = args.lift(1).map(_.toInt).getOrElse(20000)
-      val L = args.lift(2).map(_.toInt).getOrElse(40)
-      val store = s"${graft.FixtureMemo.scratchDir("remapdeep")}/cl"
-      val mcs = graft.sources.MediaClusterStore
-      val chains = spark.range(M).select(col("id").as("c"))
-        .localCheckpoint()
-      // batch b adds member (L-b) per chain, bridging the standing
-      // root (L-b+1): every merge remaps the old root to the new
-      // smaller member — remap chain depth L-1 per chain
-      (0 until L).foreach { b =>
-        val mem = chains.select(
-          (col("c") * 256 + (L - b)).as("media_id"),
-          lit("m").as("modality"))
-        val pairs =
-          if (b == 0) mem.select(col("modality"),
-            col("media_id").as("id_a"), col("media_id").as("id_b"))
-            .limit(0)
-          else chains.select(lit("m").as("modality"),
-            (col("c") * 256 + (L - b)).as("id_a"),
-            (col("c") * 256 + (L - b + 1)).as("id_b"))
-        time(s"build batch $b merge")(
-          mcs.applyClusterBatch(spark, mem, pairs, store, b.toLong))
-      }
-      val nRemap = spark.read.parquet(s"$store/_remaps").count()
-      println(s"[scratch] remap log rows = $nRemap (chains $M × " +
-        s"depth ${L - 1})")
-      def readAll(label: String) = time(label)(
-        mcs.assignmentsFromStore(spark, store)
-          .write.format("noop").mode("overwrite").save())
-      spark.conf.set(mcs.MaxRemapRowsConf, "1000")
-      try {
-        mcs.clearRemapMemo()
-        val r0 = mcs.remapResolveRuns.get()
-        readAll("FORCED-BOUND cold read (pays the doubling)")
-        println(s"[scratch] doubling runs so far: " +
-          s"${mcs.remapResolveRuns.get() - r0}")
-        for (r <- 1 to 3) readAll(s"FORCED-BOUND warm read run$r (memo)")
-        println(s"[scratch] doubling runs total: " +
-          s"${mcs.remapResolveRuns.get() - r0} (warm reads add none)")
-        mcs.clearRemapMemo()
-        readAll("FORCED-BOUND re-cold read (memo dropped)")
-        // a merge in the over-bound regime (fresh fence — pays one
-        // endpoint-restricted resolution of its own)
-        val mem = chains.select((col("c") * 256).as("media_id"),
-          lit("m").as("modality"))
-        val pairs = chains.select(lit("m").as("modality"),
-          (col("c") * 256).as("id_a"), (col("c") * 256 + 1).as("id_b"))
-        time("FORCED-BOUND merge (bridging batch)")(
-          mcs.applyClusterBatch(spark, mem, pairs, store, L.toLong))
-      } finally spark.conf.unset(mcs.MaxRemapRowsConf)
-      val nClusters = mcs.assignmentsFromStore(spark, store)
-        .select("cluster_id").distinct().count()
-      println(s"[scratch] clusters = $nClusters (expect $M)")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("affectedprobe")) {
-      // VERDICT r16 prep: affected-component vs full recluster on the
-      // remapgrowth-style chained corpus — time AND rewritten bytes
-      // (the scale-honest metric: targeted partition IO vs a corpus
-      // fold).  runmain graft.tools.Scratch affectedprobe [M] [L] [K]
-      val M = args.lift(1).map(_.toInt).getOrElse(20000)
-      val L = args.lift(2).map(_.toInt).getOrElse(12)
-      val K = args.lift(3).map(_.toInt).getOrElse(100)
-      val mcs = graft.sources.MediaClusterStore
-      val B = 12 // chain-keyed batches — the crawl-unit convention
-      // (an item's members arrive together, like video-keyed keyframe
-      // ingest), so an erasure's clusters concentrate in few
-      // partitions — the regime partition-targeting exists for
-      val chains = spark.range(M).select(col("id").as("c"))
-        .localCheckpoint()
-      def build(store: String): Unit =
-        (0 until B).foreach { b =>
-          val cs = chains.filter(pmod(col("c"), lit(B)) === b)
-          val mem = cs.withColumn("i",
-              explode(array((0 until L).map(lit): _*)))
-            .select((col("c") * 64 + col("i")).as("media_id"),
-              lit("m").as("modality"))
-          val pairs = cs.withColumn("i",
-              explode(array((1 until L).map(lit): _*)))
-            .select(lit("m").as("modality"),
-              (col("c") * 64 + col("i") - 1).as("id_a"),
-              (col("c") * 64 + col("i")).as("id_b"))
-          mcs.applyClusterBatch(spark, mem, pairs, store, b.toLong)
-        }
-      val root = graft.FixtureMemo.scratchDir("affectedprobe")
-      val main = s"$root/main"; val twin = s"$root/twin"
-      time(s"build main ($M chains × $L, $B chain-keyed batches)")(
-        build(main))
-      time("build twin")(build(twin))
-      // erase member 1 of K chains, ALL from batch group 0 -> the
-      // affected clusters live in ONE partition
-      val erased = spark.range(K)
-        .select((col("id") * B * 64 + 1).as("media_id"),
-          lit("m").as("modality"))
-      mcs.deleteMembers(erased, main, 0L)
-      mcs.deleteMembers(erased, twin, 0L)
-      // the full chain-edge evidence relation
-      val evidence = chains
-        .withColumn("i", explode(array((1 until L).map(lit): _*)))
-        .select(lit("m").as("modality"),
-          (col("c") * 64 + col("i") - 1).as("id_a"),
-          (col("c") * 64 + col("i")).as("id_b"))
-        .localCheckpoint()
-      def partState(store: String) = {
-        val d = new java.io.File(s"$store/assignments")
-        d.listFiles().filter(_.getName.startsWith("batch_id="))
-          .map(p => p.getName -> p.listFiles()
-            .map(f => (f.getName, f.length(), f.lastModified())).toSet)
-          .toMap
-      }
-      val before = partState(main)
-      time(s"reclusterAffected (K=$K of $M chains)")(
-        mcs.reclusterAffected(spark, main, evidence))
-      val after = partState(main)
-      val rewritten = after.filter { case (k, v) => before.get(k) != Some(v) }
-      val bytes = rewritten.values.flatten.map(_._2).sum
-      println(s"[scratch] affected rewrote ${rewritten.size}/" +
-        s"${after.size} partitions, $bytes bytes")
-      time("reclusterFromPairs (full fold)")(
-        mcs.reclusterFromPairs(spark, twin, evidence, (B - 1).toLong))
-      val fullBytes = partState(twin).values.flatten.map(_._2).sum
-      println(s"[scratch] full fold wrote $fullBytes bytes " +
-        "(whole corpus, one partition)")
-      // sanity: identical served views
-      val a = mcs.survivingAssignments(spark, main)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      val f = mcs.survivingAssignments(spark, twin)
-        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-      println(s"[scratch] views equal: ${a == f} (${a.size} rows)")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("mergeprof")) {
-      // stage breakdown of the nq_cluster_merge bench entry: fixture
-      // reads / merge (pair collect + endpoint semi-join + write) /
-      // standing-assignment read
-      val mcs = graft.sources.MediaClusterStore
-      val ms = graft.sources.MediaDedupStore
-      mcs.nqClusterMerge(spark, d).write.format("noop")
-        .mode("overwrite").save() // warm store + fixtures + codegen
-      for (r <- 1 to 2) {
-        val batch = time(s"run$r batch fixture")(
-          ms.judgeBenchBatch(spark, d).localCheckpoint())
-        val pairs = time(s"run$r pairs fixture")(
-          graft.FixtureMemo.parquet(spark, s"clustermergepairs:$d")(
-            sys.error("must be memoized")).localCheckpoint())
-        val store = mcs.probeMergeStore(spark, d)
-        time(s"run$r applyClusterBatch")(
-          mcs.applyClusterBatch(spark,
-            batch.select("media_id", "modality"),
-            pairs.select("modality", "id_a", "id_b"), store, 19L))
-        time(s"run$r assignments read")(
-          mcs.assignmentsFromStore(spark, store)
-            .write.format("noop").mode("overwrite").save())
-        time(s"run$r full entry")(
-          mcs.nqClusterMerge(spark, d).write.format("noop")
-            .mode("overwrite").save())
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("profexp")) {
-      // profiler cost split: is nq_profile's time the HLL updates, or
-      // ALL 47 aggregates running interpreted because one imperative
-      // aggregate (HLL) disables whole-stage codegen for the job?
-      val li = graft.Tables.lineitem(spark, d)
-      val numCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
-        "l_tax")
-      val allCols = li.columns.toSeq
-      def declOnly() = li.agg(count(lit(1)).as("n"),
-        (numCols.flatMap(c => Seq(min(col(c)).cast("double"),
-          max(col(c)).cast("double"), avg(col(c).cast("double")))) ++
-          allCols.map(c => count(col(c)))): _*)
-      def hllOnly() = li.agg(
-        approx_count_distinct(col(allCols.head), 0.02),
-        allCols.tail.map(c => approx_count_distinct(col(c), 0.02)): _*)
-      def current() = graft.rel.Profiler.nqProfile(spark, d)
-      for (_ <- 1 to 3) {
-        time("decl-only (codegen)") { declOnly().collect() }
-        time("hll-only (interpreted)") { hllOnly().collect() }
-        time("current nq_profile") { current().collect() }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q25prof")) {
-      // r20: stage breakdown + variant A/B for the q25 exact all-pairs
-      // backstop. Variants must produce identical output (checked by
-      // count + sum here; the oracle is the real gate).
-      import org.apache.spark.sql.DataFrame
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val docs = graft.Tables.documents(spark, d)
-      def variantB(): DataFrame = {
-        // sizes attached to tri rows BEFORE the self-join; group by
-        // (d1, d2, sa, sb) — no post-aggregate joins
-        val raw = graft.text.NearDup.hashedShinglesOf(docs)
-          .withColumnRenamed("h", "tri").cache()
-        val hot = raw.groupBy("tri").agg(count(lit(1)).as("df"))
-          .filter(col("df") > 100).select("tri")
-        val tri = raw.join(hot, Seq("tri"), "left_anti")
-        val sizes = tri.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-        val triS = tri.join(sizes, "doc_id")
-        val a = triS.as("a"); val b = triS.as("b")
-        a.join(b,
-            col("a.tri") === col("b.tri") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-            col("a.sz").as("sa"), col("b.sz").as("sb"))
-          .agg(count(lit(1)).as("n_inter"))
-          .select(col("d1"), col("d2"),
-            (col("n_inter").cast("double") /
-              (col("sa") + col("sb") - col("n_inter")).cast("double"))
-              .as("jaccard"))
-          .filter(col("jaccard") >= 0.1)
-          .orderBy("d1", "d2")
-      }
-      // warm
-      noop(graft.SparkEntry.queries("q25_neardup_jaccard")(spark, d))
-      for (r <- 1 to 3) {
-        spark.catalog.clearCache()
-        time(s"run$r A full (current)")(
-          noop(graft.SparkEntry.queries("q25_neardup_jaccard")(spark, d)))
-        spark.catalog.clearCache()
-        val raw = graft.text.NearDup.hashedShinglesOf(docs)
-          .withColumnRenamed("h", "tri").cache()
-        time(s"run$r raw materialize")(noop(raw))
-        val hot = raw.groupBy("tri").agg(count(lit(1)).as("df"))
-          .filter(col("df") > 100).select("tri")
-        val tri = raw.join(hot, Seq("tri"), "left_anti")
-        time(s"run$r join+count only")(
-          noop(tri.as("a").join(tri.as("b"),
-              col("a.tri") === col("b.tri") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("n_inter"))))
-        spark.catalog.clearCache()
-        time(s"run$r B full (sz pre-attached)")(noop(variantB()))
-        spark.catalog.clearCache()
-        val raw2 = graft.text.NearDup.hashedShinglesOf(docs)
-          .withColumnRenamed("h", "tri").cache()
-        val hot2 = raw2.groupBy("tri").agg(count(lit(1)).as("df"))
-          .filter(col("df") > 100).select("tri")
-        val tri2 = raw2.join(hot2, Seq("tri"), "left_anti")
-        time(s"run$r C join+count SHUFFLE_HASH")(
-          noop(tri2.as("a").hint("SHUFFLE_HASH").join(
-              tri2.as("b").hint("SHUFFLE_HASH"),
-              col("a.tri") === col("b.tri") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("n_inter"))))
-        time(s"run$r D join+count pairkey")(
-          noop(tri2.as("a").join(tri2.as("b"),
-              col("a.tri") === col("b.tri") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select((shiftleft(col("a.doc_id"), 32)
-              .bitwiseOR(col("b.doc_id"))).as("pk"))
-            .groupBy("pk").agg(count(lit(1)).as("n_inter"))))
-      }
+  /** Bench's measurement regime for the named entries only: the q06
+    * warm-up, then per run clearMemo + clearCache and a noop-sink write,
+    * three runs, median — reproduces one BENCH_r{N} number. */
+  private def benchq(spark: SparkSession, d: String,
+      names: Seq[String]): Unit = {
+    noop(spark, d, "q06_forecast_revenue")
+    def runOne(name: String): Double = {
+      graft.text.DedupClusters.clearMemo()
+      graft.text.Curation.clearMemo()
       spark.catalog.clearCache()
-      val aOut = graft.SparkEntry.queries("q25_neardup_jaccard")(spark, d)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-      spark.catalog.clearCache()
-      val bOut = variantB().collect().map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9))).toSet
-      println(s"[scratch] A rows=${aOut.size} B rows=${bOut.size} " +
-        s"equal=${aOut == bOut}")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q85prof")) {
-      // r20: fused one-exchange variant of the prefix join — one
-      // doc-keyed aggregate yields BOTH the prefix index and the
-      // sorted verify lists (was: window pass + separate lists agg).
-      import org.apache.spark.sql.DataFrame
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val docs = graft.Tables.documents(spark, d)
-      val (tNum, tDen) = (7, 10)
-      def variantF(): DataFrame = {
-        graft.functions.VecFunctions.register(spark)
-        val tri = graft.text.NearDup.hashedShinglesOf(docs).cache()
-        val dfreq = tri.groupBy("h").agg(count(lit(1)).as("df"))
-        val perDoc = tri.join(dfreq, "h")
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(struct(col("df"), col("h"))))
-            .as("dl"), count(lit(1)).cast("int").as("sz"))
-          .select(col("doc_id"),
-            expr(s"transform(slice(dl, 1, sz - ((($tNum * sz) + " +
-              s"${tDen - 1}) div $tDen) + 1), x -> x.h)").as("pre"),
-            sort_array(expr("transform(dl, x -> x.h)")).as("hs"),
-            col("sz"))
-          .cache()
-        val prefix = perDoc.select(col("doc_id"),
-          explode(col("pre")).as("h"), col("sz"))
-        val cand = prefix.as("a").join(prefix.as("b"),
-            col("a.h") === col("b.h") &&
-              col("a.doc_id") < col("b.doc_id") &&
-              col("a.sz") * tDen >= col("b.sz") * tNum &&
-              col("b.sz") * tDen >= col("a.sz") * tNum)
-          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .distinct()
-        cand
-          .join(perDoc.as("la"), col("d1") === col("la.doc_id"))
-          .join(perDoc.as("lb"), col("d2") === col("lb.doc_id"))
-          .withColumn("n_inter",
-            expr("sorted_intersect_count(la.hs, lb.hs)").cast("long"))
-          .filter(col("n_inter") * tDen >=
-            (col("la.sz") + col("lb.sz") - col("n_inter")) * tNum)
-          .select(col("d1"), col("d2"),
-            (col("n_inter").cast("double") /
-              (col("la.sz") + col("lb.sz") - col("n_inter")).cast("double"))
-              .as("jaccard"))
-          .orderBy("d1", "d2")
-      }
-      noop(graft.SparkEntry.queries("q85_prefix_join")(spark, d))
-      for (r <- 1 to 3) {
-        spark.catalog.clearCache()
-        time(s"run$r A q85 current")(
-          noop(graft.SparkEntry.queries("q85_prefix_join")(spark, d)))
-        spark.catalog.clearCache()
-        time(s"run$r F q85 fused perDoc")(noop(variantF()))
-      }
-      spark.catalog.clearCache()
-      val aOut = graft.SparkEntry.queries("q85_prefix_join")(spark, d)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-      spark.catalog.clearCache()
-      val fOut = variantF().collect().map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9))).toSet
-      println(s"[scratch] A rows=${aOut.size} F rows=${fOut.size} " +
-        s"equal=${aOut == fOut}")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("q73prof")) {
-      // r20: interleaved A/B — decimal-packed winner (current) vs the
-      // r19 min(struct) SortAggregate form, rebuilt here verbatim.
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.expressions.Window
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val docs = graft.Tables.documents(spark, d)
-      val w = 20
-      def structForm(): DataFrame = {
-        val toksCol = filter(split(col("text"), "\\s+"), t => length(t) > 0)
-        val toks = docs.select(col("doc_id"), toksCol.as("t"))
-        import spark.implicits._
-        val grams = toks.as[(Long, Array[String])]
-          .flatMap { case (id, t) =>
-            if (t == null || t.length < w) Iterator.empty
-            else {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val enc = t.map(_.getBytes(
-                java.nio.charset.StandardCharsets.UTF_8))
-              (0 to t.length - w).iterator.map { st =>
-                md.reset()
-                var j = st
-                while (j < st + w) {
-                  md.update(enc(j))
-                  if (j < st + w - 1) md.update(' '.toByte)
-                  j += 1
-                }
-                val dg = md.digest()
-                var h = 0L; var b = 0
-                while (b < 8) { h = (h << 8) | (dg(b) & 0xffL); b += 1 }
-                (id, (st + 1).toLong, h >>> 4)
-              }
-            }
-          }.toDF("doc_id", "start", "h").cache()
-        val winners = grams.groupBy("h")
-          .agg(min(struct(col("doc_id"), col("start"))).as("win"),
-            count(lit(1)).as("cnt"))
-          .filter(col("cnt") > 1).drop("cnt")
-        val redundant = grams.join(winners, "h")
-          .filter(col("doc_id") =!= col("win.doc_id") ||
-            col("start") =!= col("win.start"))
-          .select(col("doc_id"), col("start"),
-            (col("start") + lit((w - 1).toLong)).as("end"))
-        val byDoc = Window.partitionBy("doc_id").orderBy("start")
-        val spans = redundant
-          .withColumn("pm", max(col("end")).over(
-            byDoc.rowsBetween(Window.unboundedPreceding, -1)))
-          .withColumn("fresh", when(col("pm").isNull ||
-            col("start") > col("pm") + 1, 1L).otherwise(0L))
-          .withColumn("span", sum(col("fresh")).over(
-            byDoc.rowsBetween(Window.unboundedPreceding, 0)))
-          .groupBy(col("doc_id"), col("span"))
-          .agg(min("start").as("s"), max("end").as("e"))
-        val perDoc = spans.groupBy("doc_id")
-          .agg(count(lit(1)).as("n_dup_spans"),
-            sum(col("e") - col("s") + 1).as("n_dup_tokens"))
-        toks.select(col("doc_id"), size(col("t")).cast("long").as("n_tokens"))
-          .join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_tokens"),
-            coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
-            coalesce(col("n_dup_tokens"), lit(0L)).as("n_dup_tokens"),
-            when(col("n_tokens") > 0,
-              expr("10000 * coalesce(n_dup_tokens, 0L) DIV n_tokens"))
-              .otherwise(lit(0L)).as("dup_bp"))
-          .orderBy("doc_id")
-      }
-      noop(graft.SparkEntry.queries("q73_substr_dedup")(spark, d))
-      noop(structForm())
-      for (r <- 1 to 4) {
-        spark.catalog.clearCache()
-        time(s"run$r PACKED (current)")(
-          noop(graft.SparkEntry.queries("q73_substr_dedup")(spark, d)))
-        spark.catalog.clearCache()
-        time(s"run$r STRUCT (r19)")(noop(structForm()))
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("lshprof")) {
-      // r20: does deduping band-collision candidates BEFORE the
-      // embedding attach beat per-collision verification? (multiplicity
-      // ~1-3 collisions/pair at minCos 0.4 vs one extra pair exchange)
-      import org.apache.spark.sql.DataFrame
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      def variantD(): DataFrame = {
-        graft.functions.VecFunctions.register(spark)
-        val emb = graft.Tables.embeddings(spark, d)
-          .select(col("vec_id"), col("embedding"),
-            sqrt(expr("vec_dot(embedding, embedding)")).as("nrm"))
-        val bands = graft.sim.LshKnn.banded(emb, 4, 20, 42L)
-        val cand = bands.as("x").join(bands.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.sig") === col("y.sig") &&
-              col("x.vec_id") < col("y.vec_id"))
-          .select(col("x.vec_id").as("id1"), col("y.vec_id").as("id2"))
-          .distinct()
-        val e1 = emb.select(col("vec_id").as("id1"),
-          col("embedding").as("e1"), col("nrm").as("n1"))
-        val e2 = emb.select(col("vec_id").as("id2"),
-          col("embedding").as("e2"), col("nrm").as("n2"))
-        cand.join(e1, "id1").join(e2, "id2")
-          .select(col("id1"), col("id2"),
-            (expr("vec_dot(e1, e2)") / (col("n1") * col("n2"))).as("cos"))
-          .filter(col("cos") >= 0.4)
-          .select(col("id1"), col("id2"), round(col("cos"), 6).as("cosine"))
-          .orderBy("id1", "id2")
-      }
-      noop(graft.SparkEntry.queries("nq_lsh_neardup")(spark, d))
-      for (r <- 1 to 4) {
-        time(s"run$r CURRENT (verify-then-dedup)")(
-          noop(graft.SparkEntry.queries("nq_lsh_neardup")(spark, d)))
-        time(s"run$r DISTINCT-FIRST")(noop(variantD()))
-      }
-      val a = graft.SparkEntry.queries("nq_lsh_neardup")(spark, d)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      val b = variantD().collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      println(s"[scratch] rows ${a.size}/${b.size} equal=${a == b}")
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("rowcount")) {
-      // output-size probe: is a scale-up blowup output-bound?
-      //   runmain graft.tools.Scratch rowcount q25_neardup_jaccard
-      args.drop(1).foreach { name =>
-        time(s"$name rows") {
-          println(s"[scratch] $name rowcount: " +
-            graft.SparkEntry.queries(name)(spark, d).count())
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("kmvprof")) {
-      // VERDICT r10 #6: can the repo's own kmv_sketch beat the
-      // interpreted HLL updates inside nq_profile? Compare the current
-      // approx_count_distinct(0.02) pass against a KMV pass at
-      // comparable error (k=2048 → ~2.2% vs HLL's 2%), both one scan.
-      graft.functions.VecFunctions.register(spark)
-      val li = graft.Tables.lineitem(spark, d)
-      val allCols = li.columns.toSeq
-      val k = 2048
-      def kmvOnly() = li.agg(
-        expr(s"kmv_sketch(xxhash64(${allCols.head}), $k)"),
-        allCols.tail.map(c => expr(s"kmv_sketch(xxhash64($c), $k)")): _*)
-      def hllOnly() = li.agg(
-        approx_count_distinct(col(allCols.head), 0.02),
-        allCols.tail.map(c => approx_count_distinct(col(c), 0.02)): _*)
-      def current() = graft.rel.Profiler.nqProfile(spark, d)
-      for (_ <- 1 to 3) {
-        time("hll-only 0.02") { hllOnly().collect() }
-        time(s"kmv-only k=$k") { kmvOnly().collect() }
-        time("current nq_profile") { current().collect() }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("r10dscale")) {
-      // scale probe for the fourth-session round-10 additions: events
-      // and documents replicated Nx with shifted ids (fresh series /
-      // docs, constant group+category counts — the scale-out shape).
-      // Expected: ~linear in input for all six (each is one or two
-      // map-side-combined aggregates with bounded exchanges; TWA adds
-      // one series-key window whose per-series state is O(1)).
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val ev0 = graft.Tables.events(spark, d)
-      val evN = (0 until fac).map { r =>
-        ev0.withColumn("event_id", col("event_id") + lit(r * 10000000L))
-          .withColumn("user_id", col("user_id") + lit(r * 10000L))
-      }.reduce(_ unionAll _)
-      val doc0 = graft.Tables.documents(spark, d)
-      val docN = (0 until fac).map { r =>
-        doc0.withColumn("doc_id", col("doc_id") + lit(r * 10000000L))
-      }.reduce(_ unionAll _)
-      val ord0 = graft.Tables.orders(spark, d)
-      val ordN = (0 until fac).map { r =>
-        ord0.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionAll _)
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      for (round <- 1 to 2) {
-        time(s"x$fac priority_sample (r$round)") {
-          noop(graft.text.PrioritySample.prioritySample(
-            docN, "lang", "doc_id", "n_chars", 20))
-        }
-        time(s"x$fac cms_freq (r$round)") {
-          noop(graft.rel.Cms.estimate(
-            graft.rel.Cms.cmsOf(evN, "user_id"), evN, "user_id"))
-        }
-        time(s"x$fac trend_ols (r$round)") {
-          val pts = ordN
-            .join(broadcast(graft.Tables.customer(spark, d)),
-              col("o_custkey") === col("c_custkey"))
-            .join(broadcast(graft.Tables.nation(spark, d)),
-              col("c_nationkey") === col("n_nationkey"))
-            .groupBy(col("n_name").as("nation"),
-              (year(col("o_orderdate")) * lit(12) +
-                month(col("o_orderdate")) - lit(1)).cast("long").as("x"))
-            .agg(sum(floor(col("o_totalprice") * lit(100.0) + lit(0.5))
-              .cast("long")
-              .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-              .as("y_cents"))
-          noop(graft.rel.Trend.olsFit(pts, "nation"))
-        }
-        time(s"x$fac twa (r$round)") {
-          noop(graft.rel.Resample.twa(evN))
-        }
-        time(s"x$fac chi2_cells (r$round)") {
-          noop(graft.rel.Stats.chi2Cells(
-            evN.select(col("event_type"),
-              hour(col("ts")).cast("long").as("hr")),
-            "event_type", "hr"))
-        }
-        time(s"x$fac domain_kl (r$round)") {
-          noop(graft.text.Divergence.domainKl(docN, "source"))
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("r10cscale")) {
-      // scale probe for the third-session round-10 additions (exact
-      // aggregate store / KLL quantiles / prefix join): replicate the
-      // fact tables Nx (default 10). AggStore and the KLL pass must
-      // scale ~linearly (partials and sketches are group/k-bounded);
-      // the prefix join's candidate volume tracks TRUE near-dup pairs
-      // (each replica set is mutually ~identical), so its output grows
-      // ~fac²·originals while the INDEX stays prefix-sized.
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val li0 = graft.Tables.lineitem(spark, d)
-      val liN = (0 until fac).map { r =>
-        li0.withColumn("l_orderkey", col("l_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionAll _)
-      val or0 = graft.Tables.orders(spark, d)
-      val orN = (0 until fac).map { r =>
-        or0.withColumn("o_orderkey", col("o_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionAll _)
-      val docs0 = graft.Tables.documents(spark, d)
-      val docsN = (0 until fac).map { r =>
-        docs0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          concat(col("text"), lit(s" copymark$r")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("r10cscale").toString
-      liN.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-      orN.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-      docsN.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      println(s"[r10cscale] ${fac}x tables staged at $tmp")
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      noop(graft.rel.AggStore.nqAggStore(spark, d)) // warm codegen
-      time("agg store 1x") { noop(graft.rel.AggStore.nqAggStore(spark, d)) }
-      time(s"agg store ${fac}x") {
-        noop(graft.rel.AggStore.nqAggStore(spark, tmp))
-      }
-      time("kll quantiles 1x") {
-        noop(graft.rel.QuantileStore.nqKllQuantiles(spark, d))
-      }
-      time(s"kll quantiles ${fac}x") {
-        noop(graft.rel.QuantileStore.nqKllQuantiles(spark, tmp))
-      }
-      time("kll store (build+read) 1x") {
-        noop(graft.rel.QuantileStore.nqKllStore(spark, d))
-      }
-      time(s"kll store (build+read) ${fac}x") {
-        noop(graft.rel.QuantileStore.nqKllStore(spark, tmp))
-      }
-      time("prefix join 1x") {
-        val n = graft.text.PrefixJoin.q85PrefixJoin(spark, d).count()
-        println(s"  pairs=$n")
-      }
-      time(s"prefix join ${fac}x") {
-        val n = graft.text.PrefixJoin.q85PrefixJoin(spark, tmp).count()
-        println(s"  pairs=$n (replica sets pair mutually: expect ≈ " +
-          s"originals × C($fac,2) + 1x-pairs × $fac²-ish)")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("newscale")) {
-      // scale probe for the round-10 additions (KMV / BPE / z-order /
-      // KMV store): replicate documents and lineitem Nx (default 10)
-      // and compare against the 1x runs — all four must scale ~linearly
-      // (sketch state is k-bounded, BPE's driver work is type-table-
-      // bounded, z-order is one range shuffle).
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val docs0 = graft.Tables.documents(spark, d)
-      val docsN = (0 until fac).map { r =>
-        docs0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          concat(col("text"), lit(s" copymark$r")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val li0 = graft.Tables.lineitem(spark, d)
-      val liN = (0 until fac).map { r =>
-        li0.withColumn("l_orderkey", col("l_orderkey") + lit(r * 100000000L))
-      }.reduce(_ unionAll _)
-      val ev0 = graft.Tables.events(spark, d)
-      val evN = (0 until fac).map { r =>
-        ev0.withColumn("event_id", col("event_id") + lit(r * 100000000L))
-          .withColumn("user_id", col("user_id") + lit(r * 1000000L))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("newscale").toString
-      docsN.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      liN.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-      evN.write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      println(s"[newscale] ${fac}x corpus staged at $tmp")
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      // warm codegen on the 1x paths first, then time 1x vs Nx
-      noop(graft.rel.ApproxQueries.kmvDistinct(spark, d))
-      time("kmv distinct+intersect 1x") {
-        noop(graft.rel.ApproxQueries.kmvDistinct(spark, d))
-        noop(graft.rel.ApproxQueries.kmvIntersect(spark, d))
-      }
-      time(s"kmv distinct+intersect ${fac}x") {
-        noop(graft.rel.ApproxQueries.kmvDistinct(spark, tmp))
-        noop(graft.rel.ApproxQueries.kmvIntersect(spark, tmp))
-      }
-      time("bpe stats 1x") { noop(graft.text.Bpe.q82BpeStats(spark, d)) }
-      time(s"bpe stats ${fac}x") {
-        noop(graft.text.Bpe.q82BpeStats(spark, tmp))
-      }
-      time("zorder 1x") { noop(graft.rel.Layout.nqZorder(spark, d)) }
-      time(s"zorder ${fac}x") { noop(graft.rel.Layout.nqZorder(spark, tmp)) }
-      time("kmv store build+intersect 1x") {
-        noop(graft.rel.KmvStore.nqKmvStore(spark, d))
-      }
-      time(s"kmv store build+intersect ${fac}x") {
-        noop(graft.rel.KmvStore.nqKmvStore(spark, tmp))
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("curation")) {
-      // end-to-end curation probe on the 10x replicated corpus (50k docs
-      // with 9 strong near-dups per original): exact dedup -> near-dup
-      // clusters -> quality gates, with per-stage accounting.
-      val docs0 = graft.Tables.documents(spark, d)
-      val n = docs0.count()
-      val docs10 = (0 until 10).map { r =>
-        docs0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          concat(col("text"), lit(s" copymark$r")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("docs10c").toString
-      docs10.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      println(s"[curation] corpus: ${n * 10} docs")
-      time("full curation on 10x corpus") {
-        val cur = graft.text.Curation.curate(spark, tmp)
-        graft.text.Curation.curationStats(cur).collect()
-          .foreach(r => println(s"  ${r.getString(0)}: ${r.getLong(1)}"))
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("scaletext")) {
-      // 10x near-dup scale probe: replicate documents with a per-copy
-      // marker token appended — every original gains 9 strong near-dups
-      // (cross-copy), so the candidate volume grows with TRUE dups (the
-      // property the banded MinHash relies on at 100 TB).
-      val docs0 = graft.Tables.documents(spark, d)
-      val n = docs0.count()
-      val docs10 = (0 until 10).map { r =>
-        docs0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          concat(col("text"), lit(s" copymark$r")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("docs10").toString
-      docs10.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      println(s"[scaletext] corpus: ${n * 10} docs")
-      time("minhash near-dup on 10x corpus") {
-        val pairs = graft.text.NearDup.minhashNeardupFast(spark, tmp).count()
-        println(s"  pairs=$pairs (expect ≈ ${n} originals × C(10,2)=45)")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("substr")) {
-      // substring-dedup scale probe: replicate the corpus Nx (default
-      // 10; `substr 50` = 50x ≈ sf1-scale gram volume) WITHOUT a
-      // per-copy marker (replica docs are verbatim, so every replica's
-      // full text is one duplicated span against the original). The
-      // gram volume grows Nx linearly; the winners aggregate and the
-      // redundancy join must scale with it, not quadratically.
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val docs0 = graft.Tables.documents(spark, d)
-      val n = docs0.count()
-      val docsN = (0 until fac).map { r =>
-        docs0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("docsNs").toString
-      docsN.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      // only docs wide enough to gram (≥ 20 tokens) can be marked
-      val grammable = docs0.filter(
-        size(filter(split(col("text"), "\\s+"), t => length(t) > 0)) >= 20)
-        .count()
-      println(s"[substr] corpus: ${n * fac} docs ($grammable/$n grammable)")
-      // warm the session AND this plan's whole-stage codegen: the first
-      // execution pays multi-second JIT that would otherwise be billed
-      // to the 1x run and make Nx look absurdly cheaper than 1x
-      graft.text.SubstrDedup.q73SubstrDedup(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      time("q73 substr dedup on 1x corpus (warm)") {
-        graft.text.SubstrDedup.q73SubstrDedup(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val outN = graft.text.SubstrDedup.q73SubstrDedup(spark, tmp)
-      time(s"q73 substr dedup on ${fac}x corpus") {
-        val full = outN.filter(col("dup_bp") === 10000L).count()
-        println(s"  fully-duplicated docs=$full (expect ≥ " +
-          s"${grammable * (fac - 1)} verbatim replicas of grammable docs)")
-      }
-      // whether AQE kept the winners join broadcast or fell back to
-      // sort-merge at this scale — the branch the plan assertion in
-      // SubstrDedupSpec pins semantically; here we observe which one a
-      // real Nx corpus takes (executedPlan AFTER the action = the
-      // AQE-final plan, not the static estimate)
-      val plan = outN.queryExecution.executedPlan.toString
-      val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
-      val smj = "SortMergeJoin".r.findAllIn(plan).size
-      println(s"[substr] ${fac}x AQE-final joins: broadcast=$bhj sortmerge=$smj")
-      time(s"q76 substr cut on ${fac}x corpus") {
-        graft.text.SubstrDedup.q76SubstrCut(spark, tmp)
-          .write.format("noop").mode("overwrite").save()
-      }
-      time(s"q79 substr incremental on ${fac}x corpus") {
-        graft.text.SubstrDedup.q79SubstrIncremental(spark, tmp)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("cc")) {
-      // adversarial connected-components probe: a 20k-node CHAIN is the
-      // worst case for min-label propagation (diameter = n, so it would
-      // need 20k rounds); large-star/small-star must collapse it in
-      // O(log n) alternations. Also a 200k-edge random graph (the
-      // realistic near-clique dup-graph shape) through the automatic
-      // two-phase entry point.
-      val n = 20000L
-      val nodes = spark.range(n).toDF("doc_id")
-      val chain = spark.range(n - 1)
-        .select(col("id").as("d1"), (col("id") + 1).as("d2"))
-      time(s"star CC on a $n-node chain") {
-        val cc = graft.text.DedupClusters.connectedComponentsStar(nodes, chain)
-        println("  components=" +
-          cc.select("cluster_id").distinct().count() + " (expect 1)")
-      }
-      val m = 200000L
-      val rand = spark.range(m).select(
-        pmod(hash(col("id")), lit(n)).cast("long").as("d1"),
-        pmod(hash(col("id") * 7 + 3), lit(n)).cast("long").as("d2"))
-      time(s"two-phase CC on a $m-edge random graph (distributed path forced)") {
-        // smallGraphEdges = 0: this probe exists to exercise the
-        // DISTRIBUTED rounds; the adaptive fast path would solve 200k
-        // edges driver-side otherwise
-        val cc = graft.text.DedupClusters
-          .connectedComponents(nodes, rand, smallGraphEdges = 0L)
-        println("  components=" +
-          cc.select("cluster_id").distinct().count())
-      }
-      time(s"union-find fast path on the same $m-edge graph") {
-        val cc = graft.text.DedupClusters.connectedComponents(nodes, rand)
-        println("  components=" +
-          cc.select("cluster_id").distinct().count())
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("ingest")) {
-      // streaming ingest probe: the 20x corpus (100k docs) arrives in 20
-      // micro-batches through ingestDedupStream. Per-batch wall time
-      // should stay near-flat: each batch re-shingles ONLY itself; the
-      // store side of the band join grows linearly but is signatures,
-      // not text (the claim the signature store exists to make). The
-      // store's FILE count must also stay bounded — compaction
-      // (maxStoreFiles) rewrites it when the per-trigger appends pile
-      // up, otherwise listing + footer costs grow per batch and the
-      // flat-cost claim erodes at real ingest rates.
-      import spark.implicits._
-      val docs0 = graft.Tables.documents(spark, d)
-      val base = docs0.select("doc_id", "text").as[(Long, String)].collect()
-      val tmp = java.nio.file.Files.createTempDirectory("ingest20").toString
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](spark)
-      val q = graft.streaming.StreamingOps
-        .ingestDedupStream(stream.toDF.toDF("doc_id", "text"),
-          // low bound so the compaction path visibly engages within the
-          // 20-trigger probe (each trigger appends ~2 files)
-          s"$tmp/signatures", s"$tmp/pairs", maxStoreFiles = 16)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      def storeFiles(): Int = {
-        val p = java.nio.file.Paths.get(s"$tmp/signatures")
-        if (!java.nio.file.Files.isDirectory(p)) 0
-        else {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.list(p).iterator().asScala
-            .count(_.getFileName.toString.startsWith("part-"))
-        }
-      }
-      for (r <- 0 until 20) {
-        val batch = base.map { case (id, text) =>
-          (id + r * 1000000L, text + s" copymark$r")
-        }
-        time(s"ingest batch $r (${batch.length} docs, " +
-          s"store files=${storeFiles()})") {
-          stream.addData(batch.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      }
-      q.stop()
-      println("  store rows=" +
-        spark.read.parquet(s"$tmp/signatures").count())
-      println("  store files=" + storeFiles())
-      println("  pairs=" + spark.read.parquet(s"$tmp/pairs").count())
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("voice")) {
-      // end-to-end voice pipeline timing vs BASELINE.md (reference:
-      // ~35 s train for 30 epochs on ~17.6k frames, accuracy 0.8731)
       val t0 = System.nanoTime()
-      val ts = graft.ml.VoicePipeline.timeSeries(spark)
-      val nFrames = ts.count()
-      val tFeat = (System.nanoTime() - t0) / 1e9
-      println(f"[voice] features: $nFrames frames in $tFeat%.1f s " +
-        "(gen + mel + dB + PCA + interval join + MI select)")
-      val t1 = System.nanoTime()
-      val r = graft.ml.VoicePipeline.trainAndEvaluate(spark)
-      val tTrain = (System.nanoTime() - t1) / 1e9
-      println(f"[voice] train+eval: $tTrain%.1f s, accuracy ${r.accuracy}%.4f, " +
-        f"logLoss ${r.logLoss}%.4f (reference: ~35 s train, acc 0.8731)")
-      spark.stop(); return
+      noop(spark, d, name)
+      (System.nanoTime() - t0) / 1e9
     }
-
-    if (args.headOption.contains("scale")) {
-      // 10x scale probe: replicate the sf0.1 fact tables with shifted
-      // keys (6M lineitem rows) and time the spine plans — evidence that
-      // agg/join/window scale ~linearly (no quadratic/driver behavior).
-      val reps = 10
-      val li0 = graft.Tables.lineitem(spark, d)
-      val o0 = graft.Tables.orders(spark, d)
-      def rep(df: org.apache.spark.sql.DataFrame, keys: Seq[String]) =
-        (0 until reps).map { r =>
-          keys.foldLeft(df)((acc, k) =>
-            acc.withColumn(k, col(k) + lit(r * 100000000L)))
-        }.reduce(_ unionAll _)
-      val li = rep(li0, Seq("l_orderkey")).cache()
-      val o = rep(o0, Seq("o_orderkey", "o_custkey")).cache()
-      println(s"[scale] lineitem rows=${li.count()}, orders rows=${o.count()}")
-      time("scale q01-shape agg") {
-        li.filter(col("l_shipdate") <= lit("2000-12-01").cast("timestamp"))
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(sum("l_quantity"), sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), count(lit(1)))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("scale join+agg (6M x 1.5M SMJ)") {
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_orderpriority")
-          .agg(sum("l_quantity"), count(lit(1)))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("scale window running total") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        o.withColumn("run", sum("o_totalprice").over(w))
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
+    for (q <- names) {
+      val runs = Seq(runOne(q), runOne(q), runOne(q)).sorted
+      println(f"[scratch] $q: runs=${runs.map(r => f"$r%.2f").mkString(",")} " +
+        f"median=${runs(1)}%.2f s")
     }
+  }
 
-    if (args.headOption.contains("contam")) {
-      // Decontamination scale probe: the Bloom prefilter's win is a
-      // SCALE property (it shrinks the corpus-sized distinct+join
-      // shuffle, paying two fixed jobs on the tiny benchmark side), so
-      // at sf0.1 the exact form is faster. Here the corpus's DISTINCT
-      // shingle volume grows 10× (every token of copies 1..9 is
-      // rewritten, so their shingles are all new), the benchmark stays
-      // fixed — the regime where the prefilter is designed to win.
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val docs0 = graft.Tables.documents(spark, d)
-      val corpus0 = docs0.filter(col("doc_id") % 10 =!= 0)
-      val bench = docs0.filter(col("doc_id") % 10 === 0)
-      val corpusN = (0 until fac).map { r =>
-        if (r == 0) corpus0
-        else corpus0.select((col("doc_id") + lit(r * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"c$r$$1").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionAll _)
-      val tmpPath = java.nio.file.Files.createTempDirectory("contamN")
-      val tmp = tmpPath.toString
-      try {
-        corpusN.write.mode("overwrite").parquet(s"$tmp/corpus.parquet")
-        val corpus = spark.read.parquet(s"$tmp/corpus.parquet")
-        println(s"[contam] corpus: ${corpus.count()} docs, bench: ${bench.count()}")
-        // candidate-volume metric: raw corpus shingle rows the prefilter
-        // admits into the aggregation pipeline (the partial aggregate
-        // then combines within partitions, so this bounds — not equals —
-        // the exchange row reduction; the honest exchange numbers come
-        // from the listener below)
-        val total = graft.text.NearDup.hashedShinglesOf(corpus).count()
-        val benchH = graft.text.NearDup.hashedShinglesOf(bench)
-          .select("h").distinct()
-        val bloom = benchH.stat.bloomFilter("h",
-          math.max(benchH.count(), 1L), 0.01)
-        val bcb = spark.sparkContext.broadcast(bloom)
-        val mm = udf((h: Long) => bcb.value.mightContainLong(h))
-        val kept = graft.text.NearDup.hashedShinglesOf(corpus)
-          .filter(mm(col("h"))).count()
-        println(f"[contam] candidate shingle rows (pre-combine): " +
-          f"exact=$total%,d bloom=$kept%,d (${100.0 * kept / total}%.1f%%)")
-        // the load-independent scale metric: records actually written to
-        // shuffle per query (network/disk volume at cluster scale) —
-        // measured, not inferred from row counts
-        val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val m = e.stageInfo.taskMetrics
-              if (m != null)
-                shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-            }
-          })
-        // the listener bus is async with no public flush — poll until
-        // the counter stabilizes so late stage events from the previous
-        // query can't be attributed to the next one
-        def drained(): Long = {
-          var prev = -1L; var cur = shuffleRecords.get; var waited = 0
-          while (cur != prev && waited < 15000) {
-            Thread.sleep(500); waited += 500
-            prev = cur; cur = shuffleRecords.get
-          }
-          cur
-        }
-        def measured(label: String)(body: => Unit): Unit = {
-          drained(); shuffleRecords.set(0L)
-          time(label)(body)
-          println(f"[contam] $label shuffle records written: " +
-            f"${drained()}%,d")
-        }
-        for (round <- 1 to 2) { // best-of-2, mirrors Bench methodology
-          measured(s"exact contamination ${fac}x (run $round)") {
-            graft.text.Mixing.contamination(corpus, bench)
-              .write.format("noop").mode("overwrite").save()
-          }
-          measured(s"bloom contamination ${fac}x (run $round)") {
-            graft.text.Mixing.contaminationBloom(corpus, bench)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      } finally { // a fac-times corpus copy must not outlive the probe
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(tmpPath)
-        val paths = try walk.iterator().asScala.toSeq finally walk.close()
-        paths.sortBy(-_.getNameCount).foreach { p =>
-          try {
-            if (!java.nio.file.Files.deleteIfExists(p))
-              println(s"[contam] WARN: could not delete $p")
-          } catch { case e: java.io.IOException =>
-            println(s"[contam] WARN: could not delete $p: ${e.getMessage}")
-          }
-        }
-      }
-      spark.stop(); return
+  /** Runs every headline entry (every contract entry with `all`) behind
+    * a stderr marker, so runtime warnings (single-partition windows,
+    * broadcast sizes, …) can be attributed to the entry that raised them. */
+  private def warnhunt(spark: SparkSession, d: String, all: Boolean): Unit = {
+    val names =
+      if (all) graft.SparkEntry.queries.keys.toSeq.sorted
+      else graft.Bench.headline
+    for (q <- names) {
+      System.err.println(s"===MARK=== $q")
+      Console.err.flush()
+      try noop(spark, d, q)
+      catch { case e: Throwable =>
+        System.err.println(s"===MARK=== $q FAILED: ${e.getMessage}") }
     }
-
-    if (args.headOption.contains("explain")) {
-      for (q <- args.drop(1)) {
-        println(s"\n=================== $q ===================")
-        println(graft.SparkEntry.queries(q)(spark, d)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      }
-      spark.stop(); return
-    }
-
-    if (benchMode) {
-      // Bench's exact measurement regime (q06 warmup, then per query:
-      // clearMemo + clearCache, noop sink, 3 runs, median) for the
-      // named queries only — reproduces a BENCH_r{N} number in isolation:
-      //   runMain graft.tools.Scratch benchq nq_ivfpq_knn
-      graft.SparkEntry.queries("q06_forecast_revenue")(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      def runOne(name: String): Double = {
-        graft.text.DedupClusters.clearMemo()
-        graft.text.Curation.clearMemo()
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, d)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      for (q <- args.drop(1)) {
-        val runs = Seq(runOne(q), runOne(q), runOne(q)).sorted
-        println(f"[scratch] $q: runs=${runs.map(r => f"$r%.2f").mkString(",")} " +
-          f"median=${runs(1)}%.2f s")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("timeq")) {
-      // 5 timed noop-sink runs per named query (same un-memoized regime
-      // as Bench): runMain graft.tools.Scratch timeq nq_approx_distinct
-      for (q <- args.drop(1)) {
-        graft.SparkEntry.queries(q)(spark, d)
-          .write.format("noop").mode("overwrite").save() // warm codegen
-        for (i <- 1 to 5) {
-          graft.text.DedupClusters.clearMemo()
-          graft.text.Curation.clearMemo()
-          spark.catalog.clearCache()
-          time(s"$q run$i") {
-            graft.SparkEntry.queries(q)(spark, d)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("ivfprofile")) {
-      // stage breakdown of the in-query IVF-PQ composite (2 passes:
-      // cold then warm) — where do the seconds go?
-      import org.apache.spark.ml.clustering.KMeans
-      for (pass <- Seq("cold", "warm")) {
-        graft.functions.VecFunctions.register(spark)
-        val e = time(s"[$pass] embeddingFeatures plan")(
-          graft.Tables.embeddings(spark, d)
-            .select(col("vec_id"), col("embedding"),
-              org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("v"),
-              sqrt(expr("vec_dot(embedding, embedding)")).as("nrm")))
-        val coarse = time(s"[$pass] kmeans fit")(
-          new KMeans().setK(16).setSeed(42).setFeaturesCol("v")
-            .setInitMode("random").setPredictionCol("cell").fit(e))
-        val assigned = time(s"[$pass] checkpoint assigned") {
-          import spark.implicits._
-          graft.Checkpointing.truncate(
-            e.select(col("vec_id"), col("embedding"), col("v"))
-              .transform(coarse.transform(_))
-              .select(col("vec_id"), col("embedding"), col("cell"))
-              .as[(Long, Array[Float], Int)])
-        }
-        time(s"[$pass] sample collect") {
-          import spark.implicits._
-          assigned.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-            .limit(2000).collect()
-        }
-        time(s"[$pass] query collect")(
-          assigned.filter(col("vec_id") < 10).collect())
-        time(s"[$pass] full composite (end-to-end)")(
-          graft.sim.IvfPq.ivfPqKnn(spark, d)
-            .write.format("noop").mode("overwrite").save())
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("annscale")) {
-      // ANN-family scale probe: replicate the embeddings table Nx with
-      // shifted ids and DETERMINISTIC per-replica perturbation (replica
-      // r of vector v flips sign on dimension r mod dim — unit-norm
-      // preserved, no replica is an exact twin of another, so the dup
-      // structure stays realistic instead of degenerate identical
-      // groups). Evidence that index build (one scan), probed search
-      // (pruned scan), and the semantic-dedup tree stay ~linear.
-      val fac = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      val emb0 = graft.Tables.embeddings(spark, d)
-      val n = emb0.count()
-      val embN = (0 until fac).map { r =>
-        if (r == 0) emb0
-        else emb0.select((col("vec_id") + lit(r * 10000000L)).as("vec_id"),
-          transform(col("embedding"),
-            (x, i) => when(i === lit(r % 64), -x).otherwise(x))
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionAll _)
-      val tmp = java.nio.file.Files.createTempDirectory("embN").toString
-      embN.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      println(s"[annscale] corpus: ${n * fac} vectors")
-      // warm codegen on the 1x corpus first
-      graft.sim.IvfPq.ivfPqKnn(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      time("ivfpq build+search on 1x (warm)") {
-        graft.sim.IvfPq.ivfPqKnn(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-      time(s"ivfpq build+search on ${fac}x") {
-        graft.sim.IvfPq.ivfPqKnn(spark, tmp)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val idx = java.nio.file.Files.createTempDirectory("ivfpq-scale").toString
-      time(s"ivfpq store BUILD on ${fac}x") {
-        graft.sim.IvfPqStore.buildIndex(spark, tmp, idx)
-      }
-      val src = graft.Tables.embeddings(spark, tmp)
-        .select(col("vec_id"), col("embedding"))
-      for (i <- 1 to 3) time(s"ivfpq store SEARCH on ${fac}x run$i") {
-        graft.sim.IvfPqStore.searchIndex(spark, idx, src, 0L until 10L)
-          .write.format("noop").mode("overwrite").save()
-      }
-      time(s"semantic dedup on ${fac}x") {
-        graft.sim.SemDedup.semanticDedup(
-          graft.Tables.embeddings(spark, tmp), "vec_id", "embedding")
-          .write.format("noop").mode("overwrite").save()
-      }
-      // SQ8 flat scan: model-free, so the whole cost is the code scan —
-      // should track the corpus size ~linearly with a 4x-smaller
-      // byte-kernel inner loop
-      time("sq8 knn on 1x") {
-        graft.sim.Sq8Knn.sq8Knn(spark, d)
-          .write.format("noop").mode("overwrite").save()
-      }
-      time(s"sq8 knn on ${fac}x") {
-        graft.sim.Sq8Knn.sq8Knn(spark, tmp)
-          .write.format("noop").mode("overwrite").save()
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("semprofile")) {
-      // where does nq_semantic_dedup's time go: tree fit vs scoring?
-      for (pass <- Seq("cold", "warm")) {
-        val emb = graft.Tables.embeddings(spark, d)
-        val t0 = System.nanoTime()
-        val tree = graft.sim.SemDedup.fitCorpus(emb, "vec_id", "embedding")
-        println(f"[sem] $pass fitCorpus: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        time(s"[$pass] full nq_semantic_dedup")(
-          graft.sim.SemDedup.semanticDedupQuery(spark, d)
-            .write.format("noop").mode("overwrite").save())
-        time(s"[$pass] full nq_semantic_dedup_inc")(
-          graft.sim.SemDedup.semanticDedupIncrementalQuery(spark, d)
-            .write.format("noop").mode("overwrite").save())
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("ivfstore")) {
-      // persisted-index cost split: one-time build vs per-search cost
-      val dir = java.nio.file.Files.createTempDirectory("ivfpq-probe")
-      try {
-        time("buildIndex (train + encode + persist)") {
-          graft.sim.IvfPqStore.buildIndex(spark, d, dir.toString)
-        }
-        val src = graft.Tables.embeddings(spark, d)
-          .select(col("vec_id"), col("embedding"))
-        for (i <- 1 to 5) time(s"searchIndex run$i") {
-          graft.sim.IvfPqStore
-            .searchIndex(spark, dir.toString, src, 0L until 10L)
-            .write.format("noop").mode("overwrite").save()
-        }
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("warnhunt")) {
-      // run every bench-headline query (or, with "all", every contract
-      // query) with a stderr marker so runtime warnings (WindowExec
-      // single-partition, broadcast size, …) can be attributed to the
-      // query that raised them
-      val names =
-        if (args.lift(1).contains("all")) graft.SparkEntry.queries.keys.toSeq.sorted
-        else graft.Bench.headline
-      for (q <- names) {
-        System.err.println(s"===MARK=== $q")
-        Console.err.flush()
-        try graft.SparkEntry.queries(q)(spark, d)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"===MARK=== $q FAILED: ${e.getMessage}") }
-      }
-      spark.stop(); return
-    }
-
-    val docs = graft.Tables.documents(spark, d)
-    time("read docs")(println("  docs=" + docs.count()))
-    time("split only")(println("  toks=" + docs
-      .select(split(col("text"), "\\s+").as("t")).selectExpr("sum(size(t))")
-      .first().getLong(0)))
-    time("shingle arrays")(println("  docs=" + graft.text.NearDup
-      .shingles(spark, d).selectExpr("sum(size(shingles))").first().getLong(0)))
-    time("explode no cache")(println("  rows=" + graft.text.NearDup
-      .shingles(spark, d)
-      .select(col("doc_id"), explode(col("shingles")).as("sh")).count()))
-    import spark.implicits._
-    val typed = graft.Tables.documents(spark, d).select("doc_id", "text")
-      .as[(Long, String)].flatMap { case (id, text) =>
-        val t = text.split("\\s+")
-        if (t.length < 3) Iterator.empty
-        else t.indices.dropRight(2).iterator
-          .map(i => t(i) + " " + t(i + 1) + " " + t(i + 2)).toSet.iterator
-          .map((sh: String) => (id, sh))
-      }.toDF("doc_id", "sh")
-    time("typed shingles no cache")(println("  rows=" + typed.count()))
-    val sh = typed.cache()
-    time("typed shingles cached")(println("  rows=" + sh.count()))
-    val sigCols = (0 until 32).map(k => min(xxhash64(col("sh"), lit(k))).as(s"m$k"))
-    val mh = time("minhash agg")(sh.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*).cache())
-    time("minhash materialize")(println("  docs=" + mh.count()))
-    val bands = mh.select(col("doc_id"),
-      posexplode(array((0 until 32).map(k => col(s"m$k")): _*)).as(Seq("band", "sig")))
-    val cands = bands.as("ba").join(bands.as("bb"),
-        col("ba.band") === col("bb.band") && col("ba.sig") === col("bb.sig") &&
-          col("ba.doc_id") < col("bb.doc_id"))
-      .select(col("ba.doc_id").as("d1"), col("bb.doc_id").as("d2")).distinct().cache()
-    time("candidates")(println("  cands=" + cands.count()))
-    val full = time("full query")(
-      graft.text.NearDup.minhashNeardupFast(spark, d).count())
-    println("  pairs=" + full)
-    spark.stop()
   }
 }

@@ -52,6 +52,21 @@ class BenchLineSpec extends AnyFunSuite {
       s"summary grew with the set: $now -> $tripled chars")
   }
 
+  test("summary line counts failed entries and leaves them out of the total") {
+    // a failed entry reports -1; the total drops it, so n_failed is
+    // what tells a newly failing query apart from a faster bench
+    val withFailure = results.updated(0, results.head._1 -> -1.0)
+    val line = Bench.summaryLine(withFailure, sf)
+    assert(line.length < 300, s"summary line too long (${line.length}): $line")
+    val node = mapper.readTree(line)
+    assert(node.get("n_failed").asInt() === 1)
+    assert(node.get("n_queries").asInt() === Bench.headline.size)
+    assert(math.abs(node.get("value").asDouble() -
+      1.234 * (Bench.headline.size - 1)) < 1e-6)
+    assert(mapper.readTree(Bench.summaryLine(results, sf))
+      .get("n_failed").asInt() === 0)
+  }
+
   test("full line carries every per-query value and parses") {
     val node = mapper.readTree(Bench.fullLine(results, sf))
     val qs = node.get("queries")

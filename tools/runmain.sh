@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main class directly with java (no sbt lock): mirrors
 # build.sbt's fork settings (add-opens, -Xmx, spark jars on classpath).
-# Usage: tools/runmain.sh graft.tools.Scratch benchq nq_ivfpq_knn
+# Usage: tools/runmain.sh graft.tools.Scratch explain|oraclesql|benchq|warnhunt [args…]
+#        SPARK_GRAFT_VERIFY_ONLY=q86_bm25 tools/runmain.sh graft.Verify <sf> <out>
 set -euo pipefail
 CLS="$1"; shift
 OPENS=""
