@@ -84,7 +84,7 @@ object AudioDedup {
   def generateDedupClips(s: SparkSession, nClips: Int = 40): DataFrame =
     // pure function of nClips (no source dir) → always memoizable:
     // probes must measure the fingerprint join, not the synth
-    graft.FixtureMemo.parquet(s, s"audiodedup:$nClips")(
+    graft.FixtureMemo.parquet(s, s"audiodedup$nClips")(
       buildDedupClips(s, nClips))
 
   /** Corpus-keyed clip count: one clip per ~12 documents rows (floor

@@ -470,37 +470,21 @@ object AggStore {
       groupCols)
   }
 
-  // one store build per immutable driver dir (the q81 memo policy):
-  // nq_agg_asof then measures the snapshot READ, not 5 batch writes
-  private val asofStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private val AsofGroupCols = Seq("l_returnflag", "l_linestatus")
 
   /** The shared 5-batch lineitem store behind nq_agg_asof and
-    * nq_agg_diff: ONE builder, memoized per immutable driver dir. On a
-    * mutable (non-memoized) dir each entry builds exactly one throwaway
-    * store — never two (the r12 shape had nqAggDiff call nqAggAsof's
-    * builder AND a fallback of its own, doubling the ingest work and
-    * leaking a second temp dir + shutdown hook per call). */
-  private def asofStore(s: SparkSession, d: String): String = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("aggasof")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/agg_store"
+    * nq_agg_diff: ONE builder, memoized per immutable driver dir
+    * (nq_agg_asof then measures the snapshot READ, not 5 batch writes).
+    * On a mutable dir each entry builds exactly one throwaway store. */
+  private def asofStore(s: SparkSession, d: String): String =
+    graft.FixtureMemo.store("aggasof", d) { root =>
+      val path = s"$root/agg_store"
       val li = lineitem(s, d)
       (0 until 5).foreach(b => applyBatch(
         li.filter(pmod(col("l_orderkey"), lit(5)) === b),
         AsofGroupCols, "l_extendedprice", path, b.toLong))
       path
     }
-    if (graft.Tables.isImmutable(d)) asofStoreFor.getOrElseUpdate(d, build())
-    else build()
-  }
 
   /** Driver entry (as-of): 5 fenced insert batches (l_orderkey mod 5),
     * then a snapshot read AS OF batch 2. The oracle re-aggregates the

@@ -217,11 +217,6 @@ object CardinalityStore {
       .orderBy("event_type", "slot")
   }
 
-  // one compacted store build per immutable driver dir (the
-  // nq_join_view_compact memo policy)
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry (compacted twin): nq_card_store's exact 5-batch
     * ingest history PERSISTED through [[applyBatch]], then
     * [[compactThrough]](2) folds batches 0-2 into one partition, and
@@ -245,23 +240,14 @@ object CardinalityStore {
         .select(col("event_type"), col("batch_id"),
           col("p._1").as("slot"), col("p._2").as("reg")),
       CardDumpDir)
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("cardcompact")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/card_store"
+    val store = graft.FixtureMemo.store("cardcompact", d) { root =>
+      val path = s"$root/card_store"
       (0 until 5).foreach(b => applyBatch(
         ev.filter(pmod(col("event_id"), lit(5)) === b),
         Seq("event_type"), "user_id", path, b.toLong))
       compactThrough(s, path, Seq("event_type"), through = 2L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      compactStoreFor.getOrElseUpdate(d, build())
-    else build()
     s.read.parquet(store)
       .groupBy("event_type")
       .agg(hll_union_agg(col("sketch"), lit(false)).as("msk"))

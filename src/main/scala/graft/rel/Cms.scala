@@ -191,9 +191,6 @@ object Cms {
       .orderBy("user_id")
   }
 
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry (COMPACTED store, r18): the q89 question answered
     * from a PERSISTED five-batch store whose batches 0..2 were
     * horizontally folded into one partition. CMS cell sums are
@@ -204,14 +201,8 @@ object Cms {
     * double-count or cell loss — the additive store's crash-window
     * stakes — hash-fails through the exact counters. */
   def nqCmsStoreCompact(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("cmsstorecmp")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/cms.parquet"
+    val store = graft.FixtureMemo.store("cmsstorecmp", d) { root =>
+      val path = s"$root/cms.parquet"
       val ev = events(s, d)
       (0 until 5).foreach(b => applyBatch(
         ev.filter(pmod(col("event_id"), lit(5)) === b),
@@ -219,9 +210,6 @@ object Cms {
       compactThrough(s, path, through = 2L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      compactStoreFor.getOrElseUpdate(d, build())
-    else build()
     val ev = events(s, d)
     val truth = ev.groupBy("user_id").agg(count(lit(1)).as("n_events"))
     truth.join(estimateFromStore(s, store, ev, "user_id"), Seq("user_id"))

@@ -1,7 +1,6 @@
 package graft.rel
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Population Stability Index — the standard production drift monitor
@@ -21,11 +20,11 @@ import org.apache.spark.sql.functions._
   * and a fixed bin order sidesteps unordered-double-sum divergence
   * between engines (each term is ONE shared-order tree, round 6).
   *
-  * Scale shape: three scans (reference stats; reference counts;
-  * current counts — the current TOTAL is summed from the binned
-  * frame, never a fourth scan) — each a codegen'd map-side-combined
-  * aggregate over `nBins` keys; the stats broadcast is built once and
-  * reused by every consumer. Nothing shuffles more than nBins rows.
+  * Scale shape: three scans (reference range; reference counts;
+  * current counts — both TOTALS are summed from the binned counts'
+  * exchanges, never a fourth scan) — each a codegen'd map-side-combined
+  * aggregate over `nBins` keys; the range broadcast is built once and
+  * reused by both binning passes. Nothing shuffles more than nBins rows.
   * Empty bins are kept (the bin frame is generated, not observed) and
   * proportions clamp at `eps` — the standard PSI convention so a
   * vanished bin contributes a large finite term, not ∞; an entirely
@@ -38,12 +37,10 @@ object Drift {
       nBins: Int = 10, eps: Double = 1e-6): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
     val v = col(valueCol)
-    // ONE broadcast of the reference stats, shared by both binning
-    // passes AND the final proportion columns (identical subtree →
-    // one BroadcastExchange, reused — not three reference scans)
+    // ONE broadcast of the reference range, shared by both binning
+    // passes (identical subtree → one BroadcastExchange, reused)
     val stats = broadcast(ref.filter(v.isNotNull)
-      .agg(min(v).as("vmin"), max(v).as("vmax"),
-        count(lit(1)).as("ref_tot")))
+      .agg(min(v).as("vmin"), max(v).as("vmax")))
     // shared-order bin tree: floor((v - vmin) / ((vmax - vmin) / B)),
     // clamped to [0, B-1]; a degenerate reference (vmin = vmax) puts
     // everything in bin 0 rather than dividing by zero
@@ -52,16 +49,24 @@ object Drift {
         floor((v - col("vmin")) /
           ((col("vmax") - col("vmin")) / lit(nBins.toDouble))),
         lit(0.0)), lit(nBins - 1.0)).cast("int"))
+    // the explicit non-null bin filter is the one the bin join below
+    // infers anyway; stating it keeps both references to each binned
+    // count one plan, so its total reuses the counts' exchange
     def counted(df: DataFrame, as: String): DataFrame =
       df.filter(v.isNotNull).crossJoin(stats)
         .groupBy(binOf.as("bin")).agg(count(lit(1)).as(as))
+        .filter(col("bin").isNotNull)
+    // the edge-bin clamp guarantees every non-null value lands in
+    // exactly one bin, so a window's total is the SUM of its binned
+    // counts — a global aggregate over ≤ nBins rows cross-joined back,
+    // not another scan (and not a window: a literal partition key is
+    // dropped, leaving one unpartitioned window); empty sums to 0
+    def total(counts: DataFrame, n: String, as: String): DataFrame =
+      counts.agg(coalesce(sum(n), lit(0L)).as(as))
     val bins = ref.sparkSession.range(nBins)
       .select(col("id").cast("int").as("bin"))
-    // the edge-bin clamp guarantees every non-null current value lands
-    // in exactly one bin, so cur_tot is the SUM of the binned counts —
-    // a 10-row window, not a second scan of the current snapshot
-    val curTotW = sum("cur_n").over(Window.partitionBy(lit(1))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val refCounts = counted(ref, "ref_n")
+    val curCounts = counted(cur, "cur_n")
     // an EMPTY window (tot = 0) must clamp to eps, not divide: Spark 4
     // runs ANSI mode by default, where a non-null 0/0 double division
     // throws — and a drift monitor erroring out on the anomalous
@@ -71,11 +76,11 @@ object Drift {
     val q = when(col("cur_tot") === 0, lit(eps)).otherwise(
       greatest(col("cur_n").cast("double") / col("cur_tot"), lit(eps)))
     bins
-      .join(counted(ref, "ref_n"), Seq("bin"), "left")
-      .join(counted(cur, "cur_n"), Seq("bin"), "left")
+      .join(refCounts, Seq("bin"), "left")
+      .join(curCounts, Seq("bin"), "left")
       .na.fill(0L, Seq("ref_n", "cur_n"))
-      .withColumn("cur_tot", curTotW)
-      .crossJoin(stats)
+      .crossJoin(total(refCounts, "ref_n", "ref_tot"))
+      .crossJoin(total(curCounts, "cur_n", "cur_tot"))
       .withColumn("psi_term", round((p - q) * log(p / q), 6))
       .select(col("bin"), col("ref_n"), col("cur_n"), col("psi_term"))
       .orderBy("bin")

@@ -218,10 +218,6 @@ object GraphStore {
     KeyedCompaction.pruneThrough(s, dataDir(storePath), through)
 
   // ----------------------------------------------------- nq_graph_store
-  // one store build per immutable driver dir (the q81 memo policy)
-  private val storeFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry: the citation graph arrives as 3 ingest batches
     * (src mod 3), then ONE edge-deletion batch removes every edge with
     * (src + dst) ≡ 5 (mod 31) (~3%), and PageRank runs off the store
@@ -230,8 +226,8 @@ object GraphStore {
     * tombstone miss, a batch leak, or a surviving deleted edge all
     * hash-fail through the rank vector. */
   def nqGraphStore(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val path = s"${graft.FixtureMemo.scratchDir("graphstore")}/graph"
+    val store = graft.FixtureMemo.store("graphstore", d) { root =>
+      val path = s"$root/graph"
       val e = PageRank.citationEdges(s, d)
       (0 until 3).foreach(b => applyEdgeBatch(
         e.filter(pmod(col("src"), lit(3)) === b), path, b.toLong))
@@ -239,9 +235,6 @@ object GraphStore {
         e.filter(pmod(col("src") + col("dst"), lit(31)) === 5), path, 0L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      storeFor.getOrElseUpdate(d, build())
-    else build()
     val docs = graft.Tables.documents(s, d)
     PageRank.pageRank(edgesFromStore(s, store), iters = 5,
         nodes = Some(docs.select(col("doc_id"))))
@@ -276,10 +269,6 @@ object GraphStore {
        |ORDER BY doc_id""".stripMargin
   }
 
-  // one compacted store build per immutable driver dir
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry (compacted twin — the q81 shared-SQL pattern): the
     * SAME ingest history as nq_graph_store (3 edge batches + the keyed
     * deletion), then [[compactThrough]](2) folds everything into one
@@ -289,8 +278,8 @@ object GraphStore {
     * the whole rank vector, so a lost edge, a resurrected deleted
     * pair, or a kept-tombstone bug all hash-fail. */
   def nqGraphCompact(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val path = s"${graft.FixtureMemo.scratchDir("graphcompact")}/graph"
+    val store = graft.FixtureMemo.store("graphcompact", d) { root =>
+      val path = s"$root/graph"
       val e = PageRank.citationEdges(s, d)
       (0 until 3).foreach(b => applyEdgeBatch(
         e.filter(pmod(col("src"), lit(3)) === b), path, b.toLong))
@@ -299,9 +288,6 @@ object GraphStore {
       compactThrough(s, path, through = 2L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      compactStoreFor.getOrElseUpdate(d, build())
-    else build()
     val docs = graft.Tables.documents(s, d)
     PageRank.pageRank(edgesFromStore(s, store), iters = 5,
         nodes = Some(docs.select(col("doc_id"))))

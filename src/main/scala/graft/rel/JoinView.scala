@@ -193,9 +193,6 @@ object JoinView {
   }
 
   // ---------------------------------------------------- nq_join_view
-  private val storeFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry: revenue per nation from orders ⋈ customer,
     * maintained as 3 fact batches (o_orderkey mod 3) + ONE dimension
     * move (customers ≡ 1 mod 20 shift to (nation+1) mod 25). The
@@ -203,14 +200,8 @@ object JoinView {
     * scratch — a stale enriched row, a missed move, or a double-count
     * hash-fails through the exact cents sums. */
   def nqJoinView(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("joinview")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/view"
+    val store = graft.FixtureMemo.store("joinview", d) { root =>
+      val path = s"$root/view"
       val ord = orders(s, d)
       val cust = customer(s, d)
       (0 until 3).foreach(b => applyFactBatch(
@@ -224,9 +215,6 @@ object JoinView {
       applyDimMove(s, moves, "c_custkey", "c_nationkey", path, 3L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      storeFor.getOrElseUpdate(d, build())
-    else build()
     viewAtGrain(s, store, "c_nationkey")
       .orderBy("c_nationkey")
   }
@@ -251,10 +239,6 @@ object JoinView {
       |GROUP BY c_nationkey
       |ORDER BY c_nationkey""".stripMargin
 
-  // one compacted view build per immutable driver dir
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry (compacted twin): nq_join_view's ingest history —
     * 3 fact batches + the dimension move — then [[compactThrough]](3)
     * folds all four partitions into one, and the report reads the
@@ -262,14 +246,8 @@ object JoinView {
     * shared-SQL pattern): compaction must be invisible through the
     * exact cents sums. */
   def nqJoinViewCompact(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("joinviewcompact")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/view"
+    val store = graft.FixtureMemo.store("joinviewcompact", d) { root =>
+      val path = s"$root/view"
       val ord = orders(s, d)
       val cust = customer(s, d)
       (0 until 3).foreach(b => applyFactBatch(
@@ -284,9 +262,6 @@ object JoinView {
       compactThrough(s, path, "c_custkey", "c_nationkey", through = 3L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      compactStoreFor.getOrElseUpdate(d, build())
-    else build()
     viewAtGrain(s, store, "c_nationkey")
       .orderBy("c_nationkey")
   }

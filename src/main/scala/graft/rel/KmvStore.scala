@@ -104,20 +104,11 @@ object KmvStore {
         storePath),
       groupCols, k)
 
-  // one persisted store per source dir, process lifetime — the store
-  // contract is sketch-once / query-many (q81's memo policy: only
-  // immutable driver dirs are memoized)
-  private val storeFor = scala.collection.concurrent.TrieMap[String, String]()
-
-  private def eventStore(s: SparkSession, d: String, k: Int): String = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("kmvstore")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/kmv.parquet"
+  // one persisted store per immutable source dir, process lifetime —
+  // the store contract is sketch-once / query-many (q81's memo policy)
+  private def eventStore(s: SparkSession, d: String, k: Int): String =
+    graft.FixtureMemo.store("kmvstore", d) { root =>
+      val path = s"$root/kmv.parquet"
       val ev = events(s, d).select(col("event_id"), col("event_type"),
         xxhash64(col("user_id"), lit(42L)).as("h"))
       (0 until 5).foreach { b =>
@@ -126,9 +117,6 @@ object KmvStore {
       }
       path
     }
-    if (graft.Tables.isImmutable(d)) storeFor.getOrElseUpdate(d, build())
-    else build()
-  }
 
   /** Driver entry: events ingested as 5 batches (event_id mod 5) into a
     * persisted per-type KMV store; the answer — distinct users SHARED

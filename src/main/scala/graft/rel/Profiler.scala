@@ -191,9 +191,10 @@ object Profiler {
         sks.toSeq.map(_.sortedAsc.toSeq)))
     }(Encoders.row(partialSchema))
     // one-row final merge: the exchange carries one k-bounded row per
-    // scan partition; merging in pid order pins the double-sum order
-    val one = partials.repartition(1).mapPartitions { it =>
-      val rows = it.toArray.sortBy(_.getInt(0))
+    // scan partition; a spillable sort streams them in pid order, which
+    // pins the double-sum order, into one accumulator set
+    val one = partials.repartition(1).sortWithinPartitions("pid")
+        .mapPartitions { it =>
       var n = 0L
       val cnt = new Array[Long](nC)
       val ncnt = new Array[Long](nN)
@@ -201,7 +202,8 @@ object Profiler {
       val mx = new Array[Double](nN)
       val sm = new Array[Double](nN)
       val sks = Array.fill(nC)(new graft.functions.KmvSketch.MinSet(k))
-      for (r <- rows) {
+      while (it.hasNext) {
+        val r = it.next()
         n += r.getLong(1)
         val rc = r.getSeq[Long](2)
         val rmn = r.getSeq[Double](3); val rmx = r.getSeq[Double](4)

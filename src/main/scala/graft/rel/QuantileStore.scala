@@ -214,19 +214,11 @@ object QuantileStore {
     s"$DumpDir/nq_kll_quantiles.parquet", "l_returnflag", Q,
     "SELECT l_returnflag, count(*) AS n_raw FROM lineitem GROUP BY 1")
 
-  // one persisted store per source dir, process lifetime (the q81/
-  // KmvStore memo policy: only immutable driver dirs are memoized)
-  private val storeFor = scala.collection.concurrent.TrieMap[String, String]()
-
-  private def orderStore(s: SparkSession, d: String, k: Int): String = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("kllstore")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/kll.parquet"
+  // one persisted store per immutable source dir, process lifetime
+  // (the q81/KmvStore memo policy)
+  private def orderStore(s: SparkSession, d: String, k: Int): String =
+    graft.FixtureMemo.store("kllstore", d) { root =>
+      val path = s"$root/kll.parquet"
       val o = orders(s, d)
       (0 until 5).foreach { b =>
         applyBatch(o.filter(pmod(col("o_orderkey"), lit(5)) === b),
@@ -234,9 +226,6 @@ object QuantileStore {
       }
       path
     }
-    if (graft.Tables.isImmutable(d)) storeFor.getOrElseUpdate(d, build())
-    else build()
-  }
 
   /** Driver entry (store): orders ingested as 5 batches into a
     * persisted per-status KLL store; order-price quantiles come from
@@ -259,9 +248,6 @@ object QuantileStore {
     s"$DumpDir/nq_kll_store.parquet", "o_orderstatus", Q,
     "SELECT o_orderstatus, count(*) AS n_raw FROM orders GROUP BY 1")
 
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry (COMPACTED store, r18): the same five-batch ingest
     * with batches 0..2 horizontally folded into one partition — then
     * the identical store question. The oracle is [[nqKllStoreSql]]'s
@@ -276,14 +262,8 @@ object QuantileStore {
     * dumped items verbatim. */
   def nqKllStoreCompact(s: SparkSession, d: String,
       k: Int = 256): DataFrame = {
-    def build(): String = {
-      val p = java.nio.file.Files.createTempDirectory("kllstorecmp")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      val path = s"$p/kll.parquet"
+    val store = graft.FixtureMemo.store("kllstorecmp", d) { root =>
+      val path = s"$root/kll.parquet"
       val o = orders(s, d)
       (0 until 5).foreach { b =>
         applyBatch(o.filter(pmod(col("o_orderkey"), lit(5)) === b),
@@ -292,9 +272,6 @@ object QuantileStore {
       compactThrough(s, path, Seq("o_orderstatus"), k, through = 2L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      compactStoreFor.getOrElseUpdate(d, build())
-    else build()
     val sk = pinned(sketchesFromStore(s, store, Seq("o_orderstatus"), k))
     graft.OracleDump.dump(
       sk.select(col("o_orderstatus"), explode(col("sk")).as("it"))

@@ -248,13 +248,6 @@ object IvfPqStore {
     }
   }
 
-  // one built index per source dir, living for the process lifetime —
-  // the operator's contract IS build once / search many, so repeated
-  // invocations (Verify + Bench's median-of-3) measure what a user
-  // pays per search against a standing index; the build is charged to
-  // the first invocation only. Deleted on JVM exit.
-  private val indexFor = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Streaming ingest of the index: each micro-batch of
     * (vec_id, embedding) rows is assigned + PQ-encoded under the
     * FROZEN model and appended to the cell-partitioned codes relation
@@ -278,36 +271,18 @@ object IvfPqStore {
         encodeBatch(batch.sparkSession, indexPath, batch, kCells, m, k)
     }
 
-  /** Driver entry: build the index once per source dir (amortized
-    * across invocations — see [[indexFor]]), search it for the same
-    * queries as `nq_ivfpq_knn` — the contract row that proves the
+  /** Driver entry: build the index once per immutable source dir —
+    * the operator's contract IS build once / search many, so repeated
+    * invocations (Verify + Bench's median-of-3) measure what a user
+    * pays per search against a standing index — and search it for the
+    * same queries as `nq_ivfpq_knn`: the contract row that proves the
     * persisted path end-to-end inside Verify/Bench (identical output to
     * the in-query composite by construction; rows-only check since PQ
     * codes are not SQL-expressible). */
-  // mutable-dir rebuilds reuse ONE scratch root per source (deleted and
-  // rebuilt in place) — a fresh temp dir + shutdown hook per invocation
-  // would leak disk and hooks for the process lifetime under repeated
-  // runs (Bench's median-of-3)
-  private val mutableIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def nqIvfPqStore(s: SparkSession, d: String): DataFrame = {
-    def build(at: String): String = {
-      buildIndex(s, d, at)
-      at
-    }
-    def freshScratch(): String =
-      graft.FixtureMemo.scratchDir("ivfpq-index").toString
-    // amortize only over immutable driver data — a mutable fixture dir
-    // rewritten in place must never serve a stale index (same policy
-    // as Tables.t / Curation's memo)
-    val dir = if (graft.Tables.isImmutable(d))
-      indexFor.getOrElseUpdate(d, build(freshScratch()))
-    else {
-      val at = mutableIndexFor.getOrElseUpdate(d, freshScratch())
-      val p = new org.apache.hadoop.fs.Path(at)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      build(at)
+    val dir = graft.FixtureMemo.store("ivfpq-index", d) { root =>
+      buildIndex(s, d, root.toString)
+      root.toString
     }
     val src = VecPrep.embeddingFeatures(s, d)
       .select(col("vec_id"), col("embedding"))

@@ -384,33 +384,14 @@ object NswKnn {
       applyGraphStage(s, storePath)
   }
 
-  // one persisted graph per source dir, process lifetime (q81's memo
-  // policy: only immutable driver dirs amortize)
-  private val graphFor = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Driver entry for the stored path: graph built and persisted once,
-    * every invocation pays only the beam search. */
-  // mutable-dir rebuilds reuse ONE scratch root per source (the
-  // IvfPqStore policy: a fresh temp dir + shutdown hook per invocation
-  // leaks disk and hooks under repeated runs)
-  private val mutableGraphFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+  /** Driver entry for the stored path: graph built and persisted once
+    * per immutable source dir (q81's memo policy), every invocation pays
+    * only the beam search. */
   def nqNswStore(s: SparkSession, d: String): DataFrame = {
-    def build(at: String): String = {
-      val path = s"$at/graph.parquet"
+    val store = graft.FixtureMemo.store("nswstore", d) { root =>
+      val path = s"$root/graph.parquet"
       writeGraph(s, d, path)
       path
-    }
-    val store = if (graft.Tables.isImmutable(d))
-      graphFor.getOrElseUpdate(d,
-        build(graft.FixtureMemo.scratchDir("nswstore").toString))
-    else {
-      val at = mutableGraphFor.getOrElseUpdate(d,
-        graft.FixtureMemo.scratchDir("nswstore").toString)
-      val p = new org.apache.hadoop.fs.Path(at)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      build(at)
     }
     nswKnnStored(s, d, store)
   }

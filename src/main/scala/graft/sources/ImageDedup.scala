@@ -85,12 +85,9 @@ object ImageDedup {
     * construction, bytes entirely different) and doc_id ≡ 5 (mod 10)
     * a one-block edit (id + 2·10⁶; a few flipped bits). */
   def generateDedupImages(s: SparkSession, d: String): DataFrame =
-    // fixture memo (immutable dirs only): probes must measure the
-    // dedup operator, not the per-run PNG encode of its test corpus
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"imagededup:$d")(
-        buildDedupImages(s, d))
-    else buildDedupImages(s, d)
+    // fixture memo: probes must measure the dedup operator, not the
+    // per-run PNG encode of its test corpus
+    graft.FixtureMemo.parquet(s, "imagededup", d)(buildDedupImages(s, d))
 
   /** Planted-variant ids live at base + 1000000/2000000: guard
     * max(doc_id), not count (sparse id spaces hit the boundary early —
@@ -163,9 +160,7 @@ object ImageDedup {
     * (a mirror flips ~half the gradient signs of a block-noise image);
     * the canonical hash must recover them. */
   def generateFlipImages(s: SparkSession, d: String): DataFrame =
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"imageflip:$d")(buildFlipImages(s, d))
-    else buildFlipImages(s, d)
+    graft.FixtureMemo.parquet(s, "imageflip", d)(buildFlipImages(s, d))
 
   private def buildFlipImages(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

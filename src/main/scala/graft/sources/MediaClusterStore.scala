@@ -1237,9 +1237,6 @@ object MediaClusterStore {
   }
 
   // --------------------------------------------------- contract entry
-  private val clusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_inc: the planted image corpus (exactly
     * [[ImageDedup.nqImageDedupClusters]]'s) arrives as 3 fingerprint
     * batches; each batch is judged against the fingerprint store-so-far
@@ -1252,9 +1249,8 @@ object MediaClusterStore {
   /** The shared 3-batch ingest history (judge → cluster-merge →
     * fingerprint ingest per batch — the crawl loop) over the planted
     * image corpus; returns the cluster-store path. */
-  private def buildClusterHistory(s: SparkSession, images: DataFrame)
-      : String = {
-    val root = graft.FixtureMemo.scratchDir("mediaclusters").toString
+  private def buildClusterHistory(s: SparkSession, images: DataFrame,
+      root: java.nio.file.Path): String = {
     val fpPath = s"$root/fp"
     val clPath = s"$root/cl"
     val fps = ImageDedup.dhashes(images)
@@ -1274,8 +1270,8 @@ object MediaClusterStore {
   def nqMediaClustersInc(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
     ImageSource.dumpPixels(s, images, resizeTo = 9, tag = "dedup9")
-    val store = MediaDedupStore.memoStore(clusterStoreFor, d)(
-      buildClusterHistory(s, images))
+    val store = graft.FixtureMemo.store("mediaclusters", d)(
+      buildClusterHistory(s, images, _))
     assignmentsFromStore(s, store)
       .select(col("media_id").as("image_id"), col("cluster_id"),
         (col("media_id") === col("cluster_id")).as("is_keeper"))
@@ -1283,9 +1279,6 @@ object MediaClusterStore {
   }
 
   // ------------------------------------------------- erasure entry
-  private val delClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_delete: the same 3-batch history, then ALL
     * brightness-pair BASE images (media_id ≡ 0 mod 10 — each one the
     * MIN of its cluster) erase, and the store is read through
@@ -1298,8 +1291,8 @@ object MediaClusterStore {
   def nqMediaClustersDelete(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
     ImageSource.dumpPixels(s, images, resizeTo = 9, tag = "dedup9")
-    val store = MediaDedupStore.memoStore(delClusterStoreFor, d) {
-      val cl = buildClusterHistory(s, images)
+    val store = graft.FixtureMemo.store("mediaclustersdel", d) { root =>
+      val cl = buildClusterHistory(s, images, root)
       deleteMembers(
         graft.Tables.documents(s, d)
           .select(col("doc_id").as("media_id"))
@@ -1330,9 +1323,6 @@ object MediaClusterStore {
        |ORDER BY image_id""".stripMargin
 
   // ----------------------------------------------- compaction entry
-  private val compactClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_compact: the delete entry's exact history —
     * 3 merged batches + the base-image erasure — then
     * [[compactThrough]](1) folds batches 0-1 (remap closure baked in,
@@ -1346,8 +1336,8 @@ object MediaClusterStore {
   def nqMediaClustersCompact(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
     ImageSource.dumpPixels(s, images, resizeTo = 9, tag = "dedup9")
-    val store = MediaDedupStore.memoStore(compactClusterStoreFor, d) {
-      val cl = buildClusterHistory(s, images)
+    val store = graft.FixtureMemo.store("mediaclusterscompact", d) { root =>
+      val cl = buildClusterHistory(s, images, root)
       deleteMembers(
         graft.Tables.documents(s, d)
           .select(col("doc_id").as("media_id"))
@@ -1364,9 +1354,6 @@ object MediaClusterStore {
   }
 
   // -------------------------------------------- strict-tier entry
-  private val strictClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_strict: the STRICT erasure tier end-to-end —
     * the delete entry's exact history (3 merged batches + the
     * base-image erasure), then [[reclusterFromPairs]] recomputes every
@@ -1384,8 +1371,8 @@ object MediaClusterStore {
   def nqMediaClustersStrict(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
     ImageSource.dumpPixels(s, images, resizeTo = 9, tag = "dedup9")
-    val store = MediaDedupStore.memoStore(strictClusterStoreFor, d) {
-      val cl = buildClusterHistory(s, images)
+    val store = graft.FixtureMemo.store("mediaclustersstrict", d) { root =>
+      val cl = buildClusterHistory(s, images, root)
       deleteMembers(
         graft.Tables.documents(s, d)
           .select(col("doc_id").as("media_id"))
@@ -1431,9 +1418,6 @@ object MediaClusterStore {
        |FROM reach GROUP BY doc_id ORDER BY image_id""".stripMargin
 
   // ------------------------------------ affected-recluster entry
-  private val affectedClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_affected: [[reclusterAffected]] end-to-end on
     * the delete history — same semantics as the strict entry, at
     * erasure-neighborhood cost, so the oracle is
@@ -1445,8 +1429,8 @@ object MediaClusterStore {
   def nqMediaClustersAffected(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
     ImageSource.dumpPixels(s, images, resizeTo = 9, tag = "dedup9")
-    val store = MediaDedupStore.memoStore(affectedClusterStoreFor, d) {
-      val cl = buildClusterHistory(s, images)
+    val store = graft.FixtureMemo.store("mediaclustersaffected", d) { root =>
+      val cl = buildClusterHistory(s, images, root)
       deleteMembers(
         graft.Tables.documents(s, d)
           .select(col("doc_id").as("media_id"))
@@ -1467,9 +1451,6 @@ object MediaClusterStore {
   }
 
   // ------------------------------------------------ text genericity
-  private val textClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_text_clusters_inc: the cluster store is MODALITY-GENERIC — the
     * text dedup member plugs in unchanged. The documents corpus
     * arrives as 3 batches; each batch's near-dup pairs come from the
@@ -1483,9 +1464,8 @@ object MediaClusterStore {
     * reach) — one cluster store serves text AND media. */
   def nqTextClustersInc(s: SparkSession, d: String): DataFrame = {
     val docs = graft.Tables.documents(s, d)
-    val store = MediaDedupStore.memoStore(textClusterStoreFor, d) {
-      val clPath =
-        s"${graft.FixtureMemo.scratchDir("textclusters")}/cl"
+    val store = graft.FixtureMemo.store("textclusters", d) { root =>
+      val clPath = s"$root/cl"
       (0 until 3).foreach { b =>
         val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
         val earlier = docs.filter(pmod(col("doc_id"), lit(3)) < b)
@@ -1507,11 +1487,6 @@ object MediaClusterStore {
   }
 
   // --------------------------------------- audio/video modality proof
-  private val audioClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val videoClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_audio_clusters_inc: the planted clip corpus (exactly
     * [[graft.audio.AudioDedup.nqAudioNeardup]]'s) arrives as 3
     * fingerprint batches through the SAME judge → cluster-merge →
@@ -1525,8 +1500,7 @@ object MediaClusterStore {
   def nqAudioClustersInc(s: SparkSession, d: String): DataFrame = {
     val clips = graft.audio.AudioDedup.generateDedupClips(s, d)
     graft.audio.AudioDedup.dumpGrids(s, clips)
-    val store = MediaDedupStore.memoStore(audioClusterStoreFor, d) {
-      val root = graft.FixtureMemo.scratchDir("audioclusters").toString
+    val store = graft.FixtureMemo.store("audioclusters", d) { root =>
       val fpPath = s"$root/fp"
       val clPath = s"$root/cl"
       val fps = graft.audio.AudioDedup.fingerprints(clips)
@@ -1580,8 +1554,7 @@ object MediaClusterStore {
     ImageSource.dumpPixels(s, VideoDedup.frames(vids), resizeTo = 9,
       tag = "vkf9")
     def batchOf = pmod(expr("media_id DIV 100"), lit(3))
-    val store = MediaDedupStore.memoStore(videoClusterStoreFor, d) {
-      val root = graft.FixtureMemo.scratchDir("videoclusters").toString
+    val store = graft.FixtureMemo.store("videoclusters", d) { root =>
       val fpPath = s"$root/fp"
       val clPath = s"$root/cl"
       val fps = VideoDedup.keyframeFingerprints(s, d).localCheckpoint()
@@ -1619,9 +1592,6 @@ object MediaClusterStore {
        |FROM reach GROUP BY frame_id ORDER BY frame_id""".stripMargin
 
   // ------------------------------------------ joint-modality entry
-  private val jointClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_media_clusters_joint: ONE batch carries image AND audio AND
     * video fingerprints through ONE judge → merge → ingest pass —
     * proof at the contract tier that the crawl loop needs no
@@ -1645,8 +1615,7 @@ object MediaClusterStore {
     val vids = VideoDedup.generateSceneVideos(s, d)
     ImageSource.dumpPixels(s, VideoDedup.frames(vids), resizeTo = 9,
       tag = "vkf9")
-    val store = MediaDedupStore.memoStore(jointClusterStoreFor, d) {
-      val root = graft.FixtureMemo.scratchDir("jointclusters").toString
+    val store = graft.FixtureMemo.store("jointclusters", d) { root =>
       val fpPath = s"$root/fp"
       val clPath = s"$root/cl"
       val batch = ImageDedup.dhashes(images)
@@ -1723,17 +1692,15 @@ object MediaClusterStore {
        |ORDER BY modality, media_id""".stripMargin
 
   // ------------------------------------- benched merge serving path
-  private val mergeClusterStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The standing cluster state over the synthetic bench corpus'
     * 19 store residues: the judge-bench store's three fenced batches
     * ([[MediaDedupStore.judgeBenchStore]] — already grouped exactly as
     * ingested) each judged with its own fence and merged. Built once
     * per immutable dir (the store-family bench amortization). */
-  private def buildMergeClusterStore(s: SparkSession, d: String): String = {
+  private def buildMergeClusterStore(s: SparkSession, d: String,
+      root: java.nio.file.Path): String = {
     val fpStore = MediaDedupStore.judgeBenchStore(s, d)
-    val clPath = s"${graft.FixtureMemo.scratchDir("clustermerge")}/cl"
+    val clPath = s"$root/cl"
     val all = MediaDedupStore.syntheticFingerprints(s, d)
       .filter(pmod(col("media_id"), lit(20)) =!= 19)
       .localCheckpoint()
@@ -1749,8 +1716,8 @@ object MediaClusterStore {
 
   /** The merge store, memoized per immutable dir (nq_cluster_merge). */
   private[graft] def probeMergeStore(s: SparkSession, d: String): String =
-    MediaDedupStore.memoStore(mergeClusterStoreFor, d)(
-      buildMergeClusterStore(s, d))
+    graft.FixtureMemo.store("clustermerge", d)(
+      buildMergeClusterStore(s, d, _))
 
   /** nq_cluster_merge: the cluster analogue of nq_media_judge — the
     * MERGE serving path, benched. The standing assignments over the
@@ -1770,12 +1737,9 @@ object MediaClusterStore {
   def nqClusterMerge(s: SparkSession, d: String): DataFrame = {
     val store = probeMergeStore(s, d)
     val batch = MediaDedupStore.judgeBenchBatch(s, d)
-    def derivePairs = MediaDedupStore.judgeBatch(s, batch,
-      MediaDedupStore.judgeBenchStore(s, d), 19L)
-    val pairs =
-      if (graft.Tables.isImmutable(d))
-        graft.FixtureMemo.parquet(s, s"clustermergepairs:$d")(derivePairs)
-      else derivePairs
+    val pairs = graft.FixtureMemo.parquet(s, "clustermergepairs", d)(
+      MediaDedupStore.judgeBatch(s, batch,
+        MediaDedupStore.judgeBenchStore(s, d), 19L))
     applyClusterBatch(s, batch.select("media_id", "modality"),
       pairs.select("modality", "id_a", "id_b"), store, 19L)
     assignmentsFromStore(s, store)

@@ -456,19 +456,11 @@ object MediaDedupStore {
       graft.audio.AudioDedup.generateDedupClips(s, d))
   }
 
-  // one store build per immutable driver dir (the q81 memo policy)
-  private val storeFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val delStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val compactStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def tempStore(prefix: String): String =
-    s"${graft.FixtureMemo.scratchDir(prefix)}/media"
-
-  private def buildStore(s: SparkSession, d: String): String = {
-    val path = tempStore("mediadedup")
+  // every store below is built once per immutable driver dir
+  // (graft.FixtureMemo.store, the q81 memo policy)
+  private def buildStore(s: SparkSession, d: String,
+      root: java.nio.file.Path): String = {
+    val path = s"$root/media"
     // materialize the fingerprints ONCE before the batch fan-out —
     // three partition writes off one decode pass, not three decodes
     val all = allFingerprints(s, d).localCheckpoint()
@@ -476,11 +468,6 @@ object MediaDedupStore {
       all.filter(pmod(col("media_id"), lit(3)) === b), path, b.toLong))
     path
   }
-
-  private[graft] def memoStore(cache: scala.collection.concurrent
-        .TrieMap[String, String], d: String)(build: => String): String =
-    if (graft.Tables.isImmutable(d)) cache.getOrElseUpdate(d, build)
-    else build
 
   // --------------------------------------------------- contract entries
   /** nq_media_dedup_store: the full multimodal corpus arrives as 3
@@ -491,7 +478,8 @@ object MediaDedupStore {
     * tags. A batch leak, a fence miss, or a judge recall hole all
     * hash-fail. Video keeps the cross-video convention. */
   def nqMediaDedupStore(s: SparkSession, d: String): DataFrame = {
-    val store = memoStore(storeFor, d)(buildStore(s, d))
+    val store =
+      graft.FixtureMemo.store("mediadedup", d)(buildStore(s, d, _))
     dumpOracleInputs(s, d)
     // one decode pass feeds all three judges (each judge references its
     // batch twice: the broadcast probe side and the within-batch join)
@@ -514,8 +502,8 @@ object MediaDedupStore {
     * and video untouched — a deletion that ignores the modality key, or
     * one that leaks into reads, hash-fails. */
   def nqMediaDedupDelete(s: SparkSession, d: String): DataFrame = {
-    val store = memoStore(delStoreFor, d) {
-      val path = buildStore(s, d)
+    val store = graft.FixtureMemo.store("mediadedupdel", d) { root =>
+      val path = buildStore(s, d, root)
       deleteMedia(
         allFingerprints(s, d)
           .filter(col("modality") === "image" &&
@@ -550,8 +538,8 @@ object MediaDedupStore {
     * and keep suppressing — while the rest fold out and their
     * tombstones age away: both kept-set paths are exercised.) */
   def nqMediaDedupCompact(s: SparkSession, d: String): DataFrame = {
-    val store = memoStore(compactStoreFor, d) {
-      val path = buildStore(s, d)
+    val store = graft.FixtureMemo.store("mediadedupcompact", d) { root =>
+      val path = buildStore(s, d, root)
       deleteMedia(
         allFingerprints(s, d)
           .filter(col("modality") === "image" &&
@@ -575,9 +563,6 @@ object MediaDedupStore {
   }
 
   // ------------------------------------------- flip-invariant store
-  private val flipStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Dihedral MULTI-PROBE fingerprints of the reoriented corpus — 8
     * rows per image ([[ImageDedup.dihedralHashes]]): the store-side
     * representation of flip/rotation invariance. The store machinery
@@ -593,24 +578,21 @@ object MediaDedupStore {
     * (ImageDedup.dihedralMin's documented 1% miss). */
   private[graft] def flipFingerprints(s: SparkSession, d: String)
       : DataFrame = {
-    def derive = ImageDedup.dihedralHashes(
-        ImageDedup.generateFlipImages(s, d))
-      .select(col("image_id").as("media_id"),
-        lit("image").as("modality"), col("h"))
     // fingerprints are a pure derivation of the (memoized) corpus, so
     // the relation itself memoizes too — probes of the store entries
     // measure the JUDGE, not a 60k-image re-decode per run (the
     // production serving shape: fingerprints arrive with the batch)
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"flipfp:$d")(derive)
-    else derive
+    graft.FixtureMemo.parquet(s, "flipfp", d)(
+      ImageDedup.dihedralHashes(ImageDedup.generateFlipImages(s, d))
+        .select(col("image_id").as("media_id"),
+          lit("image").as("modality"), col("h")))
   }
 
   /** The flip store, memoized per immutable dir (nq_media_dedup_flip). */
   private[graft] def flipStoreProbePath(s: SparkSession, d: String)
       : String =
-    memoStore(flipStoreFor, d) {
-      val path = tempStore("mediaflip")
+    graft.FixtureMemo.store("mediaflip", d) { root =>
+      val path = s"$root/media"
       val all = flipFingerprints(s, d).localCheckpoint()
       (0 until 3).foreach(b => applyFingerprintBatch(
         all.filter(pmod(col("media_id"), lit(3)) === b), path, b.toLong))
@@ -644,9 +626,6 @@ object MediaDedupStore {
   }
 
   // --------------------------------------------- keyframe store entry
-  private val kfStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** nq_video_keyframes_store: the scene-structured corpus (exactly
     * [[VideoDedup.nqVideoKeyframes]]'s — re-timed partial copies) is
     * keyframe-sampled and fingerprinted ONCE
@@ -666,8 +645,8 @@ object MediaDedupStore {
     def fps = VideoDedup.keyframeFingerprints(s, d)
     // batch key = the VIDEO id inside the packed frame id
     def batchOf = pmod(expr("media_id DIV 100"), lit(3))
-    val store = memoStore(kfStoreFor, d) {
-      val path = tempStore("mediakfstore")
+    val store = graft.FixtureMemo.store("mediakfstore", d) { root =>
+      val path = s"$root/media"
       val all = fps.localCheckpoint()
       (0 until 3).foreach(b => applyFingerprintBatch(
         all.filter(batchOf === b), path, b.toLong))
@@ -691,9 +670,6 @@ object MediaDedupStore {
   }
 
   // ------------------------------------------- benched serving probe
-  private val judgeStoreFor =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Synthetic PRECOMPUTED fingerprints keyed off the documents table —
     * the judge's BENCH corpus: h = xxhash64(media_id, 42) (the
     * DuckDB-replicated hash, so the oracle re-derives every bit with
@@ -751,8 +727,8 @@ object MediaDedupStore {
     * ALL pairs with a side in batch 19 — a store-store pair leak, a
     * fence miss, or a banding recall hole all hash-fail. */
   private[graft] def judgeBenchStore(s: SparkSession, d: String): String =
-    memoStore(judgeStoreFor, d) {
-      val path = tempStore("mediajudgebench")
+    graft.FixtureMemo.store("mediajudgebench", d) { root =>
+      val path = s"$root/media"
       val all = syntheticFingerprints(s, d).localCheckpoint()
       // the 19 store residues land under THREE fenced partitions (a
       // compacted store's layout — compactThrough folds history the
@@ -772,12 +748,9 @@ object MediaDedupStore {
     * ([[MediaClusterStore.nqClusterMerge]]). */
   private[graft] def judgeBenchBatch(s: SparkSession, d: String)
       : DataFrame =
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"mediajudgebatch:$d")(
-        syntheticFingerprints(s, d)
-          .filter(pmod(col("media_id"), lit(20)) === 19))
-    else syntheticFingerprints(s, d)
-      .filter(pmod(col("media_id"), lit(20)) === 19)
+    graft.FixtureMemo.parquet(s, "mediajudgebatch", d)(
+      syntheticFingerprints(s, d)
+        .filter(pmod(col("media_id"), lit(20)) === 19))
 
   def nqMediaJudge(s: SparkSession, d: String): DataFrame = {
     // a serving batch ARRIVES as data (judgeBenchBatch), so the timed

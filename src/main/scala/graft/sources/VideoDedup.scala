@@ -82,12 +82,9 @@ object VideoDedup {
     * frames are byte-identical to the base video's LAST 3, followed by
     * 3 fresh frames — no two FILES share bytes, the reused frames do. */
   def generateDedupVideos(s: SparkSession, d: String): DataFrame =
-    // fixture memo (immutable dirs only): the round-13 sf1f probe's
-    // 250 s was ~90% MJPEG ENCODE of this corpus, re-paid per run
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"videodedup:$d")(
-        buildDedupVideos(s, d))
-    else buildDedupVideos(s, d)
+    // fixture memo: the round-13 sf1f probe's 250 s was ~90% MJPEG
+    // ENCODE of this corpus, re-paid per run
+    graft.FixtureMemo.parquet(s, "videodedup", d)(buildDedupVideos(s, d))
 
   private def buildDedupVideos(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -230,9 +227,7 @@ object VideoDedup {
     * every frame offset misaligned — exactly what stride sampling
     * cannot survive) followed by two fresh 3-frame scenes. */
   def generateSceneVideos(s: SparkSession, d: String): DataFrame =
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"videokf:$d")(buildSceneVideos(s, d))
-    else buildSceneVideos(s, d)
+    graft.FixtureMemo.parquet(s, "videokf", d)(buildSceneVideos(s, d))
 
   private def buildSceneVideos(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -341,12 +336,10 @@ object VideoDedup {
     * and the video cluster entry ([[MediaClusterStore]]). */
   private[sources] def keyframeFingerprints(s: SparkSession, d: String)
       : DataFrame = {
-    def derive = keyframeHashes(generateSceneVideos(s, d))
-      .select(col("image_id").as("media_id"),
-        lit("video").as("modality"), col("h"))
-    if (graft.Tables.isImmutable(d))
-      graft.FixtureMemo.parquet(s, s"kffp:$d")(derive)
-    else derive
+    graft.FixtureMemo.parquet(s, "kffp", d)(
+      keyframeHashes(generateSceneVideos(s, d))
+        .select(col("image_id").as("media_id"),
+          lit("video").as("modality"), col("h")))
   }
 
   /** The selection + pair CTE chain over the dumped all-frame grids

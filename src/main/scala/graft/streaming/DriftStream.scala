@@ -97,17 +97,20 @@ object DriftStream {
       frozen: FrozenReference): DataFrame = {
     val s = batch.sparkSession
     val v = col(valueCol)
+    // the non-null bin filter is the one the bin join infers: stating it
+    // keeps both references to `counted` one plan (one exchange, reused)
     val counted = batch.filter(v.isNotNull)
       .groupBy(binExpr(v, frozen.vmin, frozen.vmax, frozen.nBins)
         .as("bin"))
       .agg(count(lit(1)).as("cur_n"))
+      .filter(col("bin").isNotNull)
     val refRows = frozen.binCounts.zipWithIndex
       .map { case (n, b) => (b, n) }.toSeq
     import s.implicits._
     val frame = refRows.toDF("bin", "ref_n")
-    val curTot = sum("cur_n").over(
-      org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-        .rowsBetween(Long.MinValue, Long.MaxValue))
+    // one global sum over the ≤ nBins binned rows, cross-joined back
+    // (a literal-keyed window is an unpartitioned one); empty batch → 0
+    val curTot = counted.agg(coalesce(sum("cur_n"), lit(0L)).as("cur_tot"))
     val eps = frozen.eps
     val p = greatest(col("ref_n").cast("double") / lit(frozen.refTot),
       lit(eps))
@@ -115,7 +118,7 @@ object DriftStream {
       greatest(col("cur_n").cast("double") / col("cur_tot"), lit(eps)))
     frame.join(counted, Seq("bin"), "left")
       .na.fill(0L, Seq("cur_n"))
-      .withColumn("cur_tot", curTot)
+      .crossJoin(curTot)
       .withColumn("psi_term", round((p - q) * log(p / q), 6))
       .select(col("bin"), col("ref_n"), col("cur_n"), col("psi_term"))
       .orderBy("bin")

@@ -165,9 +165,6 @@ object LmStore {
     }
 
   // -------------------------------------------------------- contract
-  private val storeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Driver entry: the q98 training slice (doc_id % 5 ∈ {1,2,3,4})
     * arrives as 4 disjoint ingest batches keyed by that residue; the
     * model served FROM THE STORE must hash-match q98's monolithic
@@ -176,8 +173,7 @@ object LmStore {
     * on top of q100's in-memory merge algebra. Store build memoized
     * per immutable driver dir (the q81 policy). */
   def nqLmStore(s: SparkSession, d: String): DataFrame = {
-    def build(): String = {
-      val p = graft.FixtureMemo.scratchDir("graft_lm_store")
+    val store = graft.FixtureMemo.store("graft_lm_store", d) { p =>
       val path = s"$p/counts.parquet"
       val train = graft.Tables.documents(s, d)
         .filter(col("doc_id") % 5 =!= 0)
@@ -186,9 +182,6 @@ object LmStore {
           path, b.toLong))
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      storeMemo.getOrElseUpdate(d, build())
-    else build()
     lmFromStore(s, store)
   }
 

@@ -357,11 +357,6 @@ object QuantileNorm {
        |ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------------ nq_qnorm_store
-  // one store build (collected item tables) per immutable driver dir
-  private val storeFor = scala.collection.concurrent.TrieMap
-    .empty[String, (Map[String, Array[(Double, Long)]],
-      Array[(Double, Long)])]
-
   /** Driver entry: the corpus splits into standing history (doc_id %
     * 7 ≠ 3, ingested as 3 fenced KLL-store batches per lang + 3 for
     * the global sketch) and an incoming batch (doc_id % 7 = 3)
@@ -372,14 +367,8 @@ object QuantileNorm {
     * hash-fail. */
   def nqQnormStore(s: SparkSession, d: String, k: Int = 256): DataFrame = {
     import s.implicits._
-    def build(): (Map[String, Array[(Double, Long)]],
-        Array[(Double, Long)]) = {
-      val p = java.nio.file.Files.createTempDirectory("qnormstore")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+    // one store build (collected item tables) per immutable driver dir
+    val (byLang, glob) = graft.FixtureMemo.store("qnormstore", d) { p =>
       val history = graft.Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(7)) =!= 3)
       val langPath = s"$p/lang.parquet"
@@ -407,9 +396,6 @@ object QuantileNorm {
         .as[(Double, Long)].collect().sortBy(r => (r._1, r._2))
       (byLang, glob)
     }
-    val (byLang, glob) = if (graft.Tables.isImmutable(d))
-      storeFor.getOrElseUpdate(d, build())
-    else build()
     graft.OracleDump.dump(
       byLang.toSeq.flatMap { case (g, it) =>
         it.map(x => (g, x._1, x._2)) }.toDF("lang", "v", "w"),

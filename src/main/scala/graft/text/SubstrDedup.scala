@@ -573,13 +573,6 @@ object SubstrDedup {
       docs.filter(col("doc_id") >= cut), docs.filter(col("doc_id") < cut))
   }
 
-  // one persisted gram store per source dir, process lifetime — the
-  // store's contract is fingerprint-once / judge-many, so repeated
-  // invocations (Verify + Bench's median-of-3) measure the per-batch
-  // judge cost against a standing store; the one-time corpus
-  // fingerprinting is charged to the first invocation only.
-  private val gramStoreFor = scala.collection.concurrent.TrieMap[String, String]()
-
   /** q79's semantics through the PERSISTED gram store — the real ingest
     * path ([[substrDedupIncrementalStored]]): corpus text fingerprinted
     * once into the store, each batch then judged with batch-sized gram
@@ -589,18 +582,16 @@ object SubstrDedup {
   def q81SubstrStored(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val cut = docs.count() * 4 / 5
-    def build(): String = {
-      val p = graft.FixtureMemo.scratchDir("gramstore")
+    // one persisted gram store per immutable source dir, process
+    // lifetime — the store's contract is fingerprint-once / judge-many,
+    // so repeated invocations (Verify + Bench's median-of-3) measure the
+    // per-batch judge cost against a standing store; the one-time
+    // corpus fingerprinting is charged to the first invocation only.
+    val store = graft.FixtureMemo.store("gramstore", d) { p =>
       val path = s"$p/grams.parquet"
       writeGramStore(docs.filter(col("doc_id") < cut), path)
       path
     }
-    // amortize only over immutable driver data — a mutable fixture dir
-    // rewritten in place must never serve a stale store (same policy
-    // as Tables.t / Curation's memo)
-    val store = if (graft.Tables.isImmutable(d))
-      gramStoreFor.getOrElseUpdate(d, build())
-    else build()
     substrDedupIncrementalStored(docs.filter(col("doc_id") >= cut), store)
   }
 
@@ -754,17 +745,12 @@ object SubstrDedup {
   // counted store + delete built once per immutable source dir (q81's
   // memo policy): the construction is deterministic and the delete is
   // ledger-fenced, so repeated invocations (Verify + any timing run)
-  // measure the per-batch judge, and temp dirs/shutdown hooks don't
-  // accumulate per call.
-  private val countedStoreFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
+  // measure the per-batch judge.
   def nqGramDelete(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val cut = docs.count() * 4 / 5
-    def build(): String = {
+    val store = graft.FixtureMemo.store("gramcounted", d) { p =>
       val corpus = docs.filter(col("doc_id") < cut)
-      val p = graft.FixtureMemo.scratchDir("gramcounted")
       val path = s"$p/grams.parquet"
       writeGramStoreCounted(corpus, path, batchId = 0L)
       deleteFromGramStoreCounted(
@@ -772,9 +758,6 @@ object SubstrDedup {
         batchId = -1L)
       path
     }
-    val store = if (graft.Tables.isImmutable(d))
-      countedStoreFor.getOrElseUpdate(d, build())
-    else build()
     substrDedupIncrementalStoredCounted(docs.filter(col("doc_id") >= cut),
       store)
   }

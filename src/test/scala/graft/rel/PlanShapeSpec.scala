@@ -364,10 +364,12 @@ class PlanShapeSpec extends SparkSpec {
   test("bounded top-k ranks plan no Window without a partition spec") {
     // a no-partition window is one task over its whole input, and Spark
     // warns for every one; TopK.ranked numbers its ≤ k survivors without
-    // a window, so any such node here is a regression
+    // a window, and nq_psi totals its bins with a global aggregate, so
+    // any such node here is a regression
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     for ((q, rankCol) <- Seq("q27_zip_position" -> "rn", "q86_bm25" -> "rank",
-        "q96_session_paths" -> "rank", "nq_zipf" -> "n_ranks")) {
+        "q96_session_paths" -> "rank", "nq_zipf" -> "n_ranks",
+        "nq_psi" -> "psi_term")) {
       val df = graft.SparkEntry.queries(q)(spark, sf0001)
       assert(df.collect().nonEmpty && df.columns.contains(rankCol), q) // non-vacuity
       val unpartitioned = df.queryExecution.optimizedPlan.collect {
