@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage-truncation point shared by the iterative / multi-action
-  * operators (connected-components label propagation, IVF-PQ's
-  * four-action assignment relation).
+/** The one materialization point: every materialization in `src/main`
+  * (lineage truncation, compute-once reuse, pre-commit pinning) goes
+  * through [[truncate]].
   *
   * The mode is decided by the session's checkpoint dir — one deployment
   * flag, no per-operator API change:
@@ -29,14 +30,10 @@ import org.apache.spark.sql.Dataset
   *    iterative job leaves one file-set per truncation in the dir, so
   *    the deployment either sets that conf or manages the dir's
   *    lifecycle (both standard cluster practice).
+  *
+  * Both arms are eager.
   */
 object Checkpointing {
-  /** PRECONDITION (r18 review): pass a FRESH (un-persisted) dataset.
-    * The reliable-checkpoint arm persists around the write and then
-    * unpersists `ds` itself, so a caller's own cache on the same
-    * Dataset object would be dropped here — and only in that arm,
-    * invisibly at the call site. Every current caller passes a fresh
-    * plan; keep it that way or persist a separate reference. */
   def truncate[T](ds: Dataset[T]): Dataset[T] =
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       // persist around the reliable checkpoint: Dataset.checkpoint()'s
@@ -44,8 +41,10 @@ object Checkpointing {
       // then AGAIN inside the checkpoint-file write job — without a
       // persist every truncation pays ~2× the upstream compute (per CC
       // iteration, per index build). The blocks are dropped as soon as
-      // the files are written; afterwards reads come from the dir.
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try ds.checkpoint() finally ds.unpersist()
+      // the files are written; afterwards reads come from the dir. A
+      // dataset the caller already cached keeps its cache.
+      val fresh = ds.storageLevel == StorageLevel.NONE
+      if (fresh) ds.persist(StorageLevel.MEMORY_AND_DISK)
+      try ds.checkpoint() finally if (fresh) ds.unpersist()
     } else ds.localCheckpoint()
 }

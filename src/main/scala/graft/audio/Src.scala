@@ -147,7 +147,9 @@ object Src {
     // dump mode runs TWO actions over the windowed-sinc UDF (dump +
     // the returned aggregate) — pin ONE materialization (r18 review);
     // without the flag the single action keeps the lazy plan
-    val ys = if (graft.OracleDump.enabled) ys0.localCheckpoint() else ys0
+    val ys =
+      if (graft.OracleDump.enabled) graft.Checkpointing.truncate(ys0)
+      else ys0
     if (graft.OracleDump.enabled) {
       graft.OracleDump.dump(
         ys.select(col("phrase_id"), explode(col("y6")).as("y6")),

@@ -402,16 +402,16 @@ object AggStore {
     val old = store.filter(col("batch_id") <= through)
     // fold: counts/sums re-add, extrema re-extremize — output has the
     // exact partialBatch schema, so reads can't tell it from an ingest.
-    // localCheckpoint pins the fold RESULT before the overwrite below
+    // truncate pins the fold RESULT before the overwrite below
     // rewrites one of its input partitions (self-referential write)
-    val folded = old.groupBy(groupCols.map(col): _*)
+    val folded = graft.Checkpointing.truncate(old
+      .groupBy(groupCols.map(col): _*)
       .agg(
         sum("cnt").as("cnt"),
         sum("sum_cents").cast(DecimalType(38, 0)).as("sum_cents"),
         sum("sum_sq_cents2").cast(DecimalType(38, 0)).as("sum_sq_cents2"),
         min("min_val").as("min_val"),
-        max("max_val").as("max_val"))
-      .localCheckpoint()
+        max("max_val").as("max_val")))
     // atomic publish (r19): stage + in-stage marker + one rename —
     // no window where the fold stands without its commit evidence
     FoldWatermark.publishFold(fs, storePath, through) { stage =>

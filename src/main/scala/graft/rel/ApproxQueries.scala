@@ -133,9 +133,8 @@ object ApproxQueries {
     // materialized once (group-count-sized): `agg` feeds both the
     // broadcast into the rank-count scan and the final join — without
     // this each reference re-runs the whole percentile aggregate
-    val agg = base.groupBy("o_orderstatus")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .localCheckpoint()
+    val agg = graft.Checkpointing.truncate(base.groupBy("o_orderstatus")
+      .agg(aggCols.head, aggCols.tail: _*))
     // rank of each estimate within its own group: one scan, broadcast
     // group-count-sized estimates, map-side-combined counts
     val cntCols = pcts.map(_._1).flatMap { nm => Seq(

@@ -167,10 +167,11 @@ object GraphStore {
     *
     * Crash safety (the AggStore.compactThrough discipline): the folded
     * edge set and the surviving tombstone set BOTH materialize
-    * (localCheckpoint) before any store file moves; then (1) the folded
-    * partition writes under dynamic overwrite, (2) the folded originals
-    * prune, (3) the tombstone log swaps through a staged sibling. A
-    * crash between (1) and (2) double-counts batches < through —
+    * (`Checkpointing.truncate`) before any store file moves; then (1)
+    * the folded partition writes under dynamic overwrite, (2) the
+    * folded originals prune, (3) the tombstone log swaps through a
+    * staged sibling. A crash between (1) and (2) double-counts
+    * batches < through —
     * recovery is [[pruneEdgesThrough]] (idempotent), NOT a re-run. A
     * crash before or during (3) leaves either the old log (unshrunk —
     * every read tolerates it: anti-joining an already-removed pair is a

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * groupBy-sum, plus a single-row normalizer aggregate joined back by
   * broadcast — two exchanges per half step, never |E|-sized state
   * outside the cached edge table. Same contract as [[PageRank]]: the
-  * returned frame is materialized (localCheckpoint) and the edge
-  * cache released before returning. As with PageRank, a
+  * returned frame is materialized (`Checkpointing.truncate`) and the
+  * edge cache released before returning. As with PageRank, a
   * caller-supplied `nodes` must be a superset of the edge endpoints
   * or score mass silently drains through the left joins.
   */
@@ -83,7 +83,7 @@ object Hits {
     val joined = auth.toDF("id", "auth")
       .join(hub.toDF("hid", "hub"), col("id") === col("hid"))
       .select(col("id"), col("auth"), col("hub"))
-    val out = joined.localCheckpoint()
+    val out = graft.Checkpointing.truncate(joined)
     e.unpersist(false)
     univ.unpersist(false)
     out

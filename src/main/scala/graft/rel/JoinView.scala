@@ -133,7 +133,7 @@ object JoinView {
     // store it is about to append a partition to. coalesce(1): a move
     // batch is moves-sized (two rows per moved key), a keyed exception
     // like the graph store's tombstones — never dimension-sized.
-    val delta = retract.unionAll(insert).localCheckpoint()
+    val delta = graft.Checkpointing.truncate(retract.unionAll(insert))
     // fold-watermark interaction, move-specific: a REPLAYED folded
     // move recomputes an EMPTY delta (the compacted store already
     // reflects it — spec-pinned no-op), so an empty delta simply skips

@@ -62,12 +62,11 @@ object KCore {
           .agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k))
     }
-    val out = univ
+    val out = graft.Checkpointing.truncate(univ
       .join(alive.select(col("id").as("cid"), col("deg")),
         col("id") === col("cid"), "left")
       .select(col("id"), col("cid").isNotNull.as("in_core"),
-        coalesce(col("deg"), lit(0L)).as("core_degree"))
-      .localCheckpoint()
+        coalesce(col("deg"), lit(0L)).as("core_degree")))
     sym.unpersist(false)
     out
   }

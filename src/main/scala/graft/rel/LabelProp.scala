@@ -62,8 +62,8 @@ object LabelProp {
         labels.join(votes, col("id") === col("vid"), "left")
           .select(col("id"), coalesce(col("win"), col("lab")).as("lab")))
     }
-    val out = labels.select(col("id"), col("lab").as("community"))
-      .localCheckpoint()
+    val out = graft.Checkpointing.truncate(
+      labels.select(col("id"), col("lab").as("community")))
     sym.unpersist(false)
     out
   }

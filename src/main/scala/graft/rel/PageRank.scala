@@ -37,11 +37,11 @@ import org.apache.spark.sql.functions._
   * analyzer cannot survive past ~7 iterations. RDD lineage, by
   * contrast, is a dag BY REFERENCE (linear in k, shuffle outputs
   * reused across the two consumers within one action), and the
-  * boundary pins no storage — unlike a per-iteration localCheckpoint,
+  * boundary pins no storage — unlike a per-iteration checkpoint,
   * which would leave k × |V| rows in executor block storage per call.
   * For iteration counts deep enough that even the RDD dag's scheduler
   * walk matters (~50+), `checkpointEvery` additionally truncates RDD
-  * lineage with localCheckpoint.
+  * lineage with `Checkpointing.truncate`.
   */
 object PageRank {
 
@@ -86,7 +86,7 @@ object PageRank {
     * Exact doubles — callers round for cross-engine comparison
     * (partial-sum order varies by partitioning, the q93 convention).
     *
-    * The returned frame is materialized (localCheckpoint) so the
+    * The returned frame is materialized (`Checkpointing.truncate`) so the
     * |E|-sized cached edge+outdegree table can be unpersisted before
     * returning — callers get a computed rank vector, not a lazy
     * 5-join-deep plan holding executor storage.
@@ -169,12 +169,12 @@ object PageRank {
               col("dmass") * col("p"))).as("r"))
       ranks = planLeaf(ranks)
       if (checkpointEvery > 0 && k % checkpointEvery == 0 && k < iters)
-        ranks = ranks.localCheckpoint()
+        ranks = graft.Checkpointing.truncate(ranks)
     }
     // eager materialization: runs the whole chain (populating and
     // reusing the ed/tele caches across all iterations in one job),
     // then releases both — no session-lifetime storage leak
-    val out = ranks.localCheckpoint()
+    val out = graft.Checkpointing.truncate(ranks)
     ed.unpersist(false)
     dangIds.unpersist(false)
     ssCached.foreach(_.unpersist(false))

@@ -189,19 +189,17 @@ object QuantileStore {
   private val DumpDir = "/tmp/graft_quantile_oracle"
   private val Q = Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
 
-  /** Pin ONE materialization of a sketch relation: the dump and the
-    * reported quantiles must read the SAME retained items (partial-
-    * merge order varies run to run, so two lazy evaluations of the
-    * same plan may retain different — equally valid — items). */
-  private def pinned(sk: DataFrame): DataFrame = sk.localCheckpoint(true)
-
   /** Driver entry (one-shot): per-returnflag revenue quantiles via a
     * single KLL sketch pass, k=256. n_rows is EXACT (weight
     * conservation); the quantile tail re-runs in DuckDB over the
     * dumped sketch. */
   def nqKllQuantiles(s: SparkSession, d: String, k: Int = 256): DataFrame = {
-    val sk = pinned(sketchBatch(lineitem(s, d), Seq("l_returnflag"),
-      "l_extendedprice", k))
+    // pin ONE materialization of each sketch relation: the dump and
+    // the reported quantiles must read the SAME retained items
+    // (partial-merge order varies run to run, so two lazy evaluations
+    // of the same plan may retain different — equally valid — items)
+    val sk = graft.Checkpointing.truncate(sketchBatch(lineitem(s, d),
+      Seq("l_returnflag"), "l_extendedprice", k))
     graft.OracleDump.dump(
       sk.select(col("l_returnflag"), explode(col("sk")).as("it"))
         .select(col("l_returnflag"), col("it.v").as("v"),
@@ -235,7 +233,8 @@ object QuantileStore {
     * over the dumped merged sketch. */
   def nqKllStore(s: SparkSession, d: String, k: Int = 256): DataFrame = {
     val store = orderStore(s, d, k)
-    val sk = pinned(sketchesFromStore(s, store, Seq("o_orderstatus"), k))
+    val sk = graft.Checkpointing.truncate(
+      sketchesFromStore(s, store, Seq("o_orderstatus"), k))
     graft.OracleDump.dump(
       sk.select(col("o_orderstatus"), explode(col("sk")).as("it"))
         .select(col("o_orderstatus"), col("it.v").as("v"),
@@ -272,7 +271,8 @@ object QuantileStore {
       compactThrough(s, path, Seq("o_orderstatus"), k, through = 2L)
       path
     }
-    val sk = pinned(sketchesFromStore(s, store, Seq("o_orderstatus"), k))
+    val sk = graft.Checkpointing.truncate(
+      sketchesFromStore(s, store, Seq("o_orderstatus"), k))
     graft.OracleDump.dump(
       sk.select(col("o_orderstatus"), explode(col("sk")).as("it"))
         .select(col("o_orderstatus"), col("it.v").as("v"),

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * hand rows different salts than the copies a completed reducer
   * already aggregated (the SPARK-23207 class — rows double-counted or
   * dropped with no error). Callers salting a shuffled relation must
-  * materialize it first (`localCheckpoint`); the contract entry reads
+  * materialize it first (`Checkpointing.truncate`); the contract entry reads
   * straight from parquet and is inside the contract.
   */
 object Skew {

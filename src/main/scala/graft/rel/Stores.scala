@@ -145,7 +145,7 @@ object Stores {
       s.read.parquet(storePath), wm)
     val region = store.filter(col("batch_id").cast("long") <= through)
       .drop("batch_id")
-    val folded = fold(region).localCheckpoint()
+    val folded = graft.Checkpointing.truncate(fold(region))
     // an empty region (no batches at or below `through`) is a no-op —
     // writing a watermark for a fold that never happened would
     // pointlessly refuse true-empty pre-history as-of reads

@@ -183,15 +183,14 @@ private[graft] object KeyedCompaction {
     // fold: the region's surviving rows (tombstones applied) — output
     // re-enters the store in the exact ingest schema. Materialized
     // BEFORE the overwrite below rewrites one of its input partitions.
-    val folded = (if (!hasTombs) old
+    val folded = graft.Checkpointing.truncate(if (!hasTombs) old
       else old.join(
           broadcast(s.read.parquet(logPath)
             .select(renamedKeys(keyCols, "__t_"): _*).distinct()),
           keyCond(keyCols, "__t_"), "left_anti")
-        .select(payload.map(col): _*)).localCheckpoint()
-    val kept = if (hasTombs)
-        keptTombstones(s, dataPath, logPath, keyCols, through)
-          .localCheckpoint()
+        .select(payload.map(col): _*))
+    val kept = if (hasTombs) graft.Checkpointing.truncate(
+        keptTombstones(s, dataPath, logPath, keyCols, through))
       else null
     if (folded.isEmpty) {
       // the watermark records the fold BEFORE any partition is pruned

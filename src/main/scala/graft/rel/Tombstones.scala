@@ -203,10 +203,10 @@ object Tombstones {
         coalesce(col("kind"), lit("gate")) === "gate" &&
           coalesce(expr("try_cast(key AS BIGINT)") === lit(batchId),
             lit(false))
-      val rest = logRows(s, storePath).get
+      // materialize before overwriting the source
+      val rest = graft.Checkpointing.truncate(logRows(s, storePath).get
         .select(col("key"), col("kind")).distinct()
-        .filter(!isLifted)
-        .localCheckpoint() // materialize before overwriting the source
+        .filter(!isLifted))
       if (rest.isEmpty) fs.delete(p, true)
       else rest.withColumn("batch_id", lit(-1L))
         .coalesce(1).write

@@ -73,7 +73,7 @@ object Triangles {
     // eager materialization, then release both cached relations — the
     // PageRank convention: callers get a computed frame, not a lazy
     // plan pinning executor storage
-    val computed = out.localCheckpoint()
+    val computed = graft.Checkpointing.truncate(out)
     oriented.unpersist(false)
     deg.unpersist(false)
     und.unpersist(false)
@@ -157,7 +157,7 @@ object Triangles {
         col("triangles_sampled"),
         (col("triangles_sampled") * lit(den.toLong * den * den))
           .as("triangles_est"))
-    val computed = out.localCheckpoint()
+    val computed = graft.Checkpointing.truncate(out)
     oriented.unpersist(false)
     deg.unpersist(false)
     samp.unpersist(false)

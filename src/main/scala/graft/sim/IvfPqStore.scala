@@ -229,9 +229,9 @@ object IvfPqStore {
           if (f.name == "cell")
             f.copy(dataType = org.apache.spark.sql.types.IntegerType)
           else f))
-      val survivors = graft.rel.Tombstones.filterDeleted(
-          full, "vec_id", codesPath)
-        .localCheckpoint() // one computation: emptiness probe + write
+      // one computation: emptiness probe + write
+      val survivors = graft.Checkpointing.truncate(
+        graft.rel.Tombstones.filterDeleted(full, "vec_id", codesPath))
       if (survivors.isEmpty)
         s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -355,10 +355,10 @@ object NswKnn {
         val st = new org.apache.hadoop.fs.Path(stageDir(storePath))
         fs.delete(tmp, true)
         fs.delete(st, true)
-        val survivors = store
+        // computed once: rebuild + stage write
+        val survivors = graft.Checkpointing.truncate(store
           .filter(col("shard").isin(affected.toSeq: _*))
-          .join(victims, Seq("vec_id"), "left_anti")
-          .localCheckpoint() // computed once: rebuild + stage write
+          .join(victims, Seq("vec_id"), "left_anti"))
         graphOf(survivors, affected.size, m, efC)
           .write.partitionBy("shard").parquet(s"$tmp/data")
         affected.toSeq.toDF("shard")

@@ -141,9 +141,9 @@ object SemDedup {
       // materialization each reference re-runs the node's k×dim
       // assignment UDF over the node's whole input (Spark has no
       // common-subplan reuse), and the callers multiply the tree
-      // again; localCheckpoint (not persist) because the tree is
+      // again; truncate (not persist) because the tree is
       // built once per fit and the blocks free with the reference
-      val assigned = assigned0.localCheckpoint()
+      val assigned = graft.Checkpointing.truncate(assigned0)
       val splitKeys = tree.children.keys.toSeq
       val flat = assigned.filter(!col("cluster").isInCollection(splitKeys))
         .withColumn("cluster", col("cluster").cast("string"))

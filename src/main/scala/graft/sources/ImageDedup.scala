@@ -486,7 +486,7 @@ object ImageDedup {
     // materialized once: the hash relation feeds the pair join, the CC
     // edge-count gate, and the node seed — without this each consumer
     // re-decodes the whole corpus (measured 3× at the sf1f probe)
-    val hashes = dhashes(images).localCheckpoint()
+    val hashes = graft.Checkpointing.truncate(dhashes(images))
     val pairs = nearDupPairs(hashes)
       .select(col("img_a").as("d1"), col("img_b").as("d2"))
     graft.text.DedupClusters.connectedComponents(

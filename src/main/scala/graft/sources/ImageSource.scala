@@ -208,7 +208,7 @@ object ImageSource {
     // times per Verify run; under dump mode pin one materialization
     // (a no-op cost without the flag — single action, lazy plan)
     val imgs = if (graft.OracleDump.enabled)
-      generateImages(s, d).localCheckpoint()
+      graft.Checkpointing.truncate(generateImages(s, d))
     else generateImages(s, d)
     dumpPixels(s, imgs, resizeTo = 32, tag = "32")
     decodeImageFeatures(imgs)
@@ -228,7 +228,7 @@ object ImageSource {
   def imageFeaturesQuery(s: SparkSession, d: String): DataFrame = {
     // one generation — see imageDecodeQuery (r18)
     val imgs = if (graft.OracleDump.enabled)
-      generateImages(s, d).localCheckpoint()
+      graft.Checkpointing.truncate(generateImages(s, d))
     else generateImages(s, d)
     dumpPixels(s, imgs, resizeTo = 64, tag = "64")
     decodeImageFeatures(imgs, resizeTo = 64)

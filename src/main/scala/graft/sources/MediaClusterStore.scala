@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Standing CLUSTER ASSIGNMENTS for the perceptual-dedup family — the
@@ -178,7 +178,7 @@ object MediaClusterStore {
     new BoundedMemo[(String, Option[Long], Long, String),
       Option[Map[(String, Long), Long]]](8)
   // the relation memo is SESSION-SCOPED (applicationId in the key): a
-  // localCheckpoint-backed DataFrame is bound to the context that
+  // checkpoint-backed DataFrame is bound to the context that
   // materialized it, and serving one from a stopped session would
   // throw on every read until the log happened to mutate. Evicted
   // entries' checkpoint blocks free through the ContextCleaner once
@@ -309,8 +309,8 @@ object MediaClusterStore {
     * k rounds; labels strictly decrease, so 64 rounds cover any
     * feasible chain and the fixpoint check (no row hopped) terminates
     * the loop early — log-sized distributed work per round, nothing
-    * ever driver-materialized. localCheckpoint per round truncates
-    * the self-join lineage. */
+    * ever driver-materialized. A truncate per round cuts the
+    * self-join lineage. */
   private def resolvedRemapsRelation(s: SparkSession, storePath: String,
       beforeBatch: Option[Long]): Option[DataFrame] =
     remapLog(s, storePath, beforeBatch).map(fenced =>
@@ -331,14 +331,14 @@ object MediaClusterStore {
         (s.sparkContext.applicationId, storePath, beforeBatch,
           stateKey(state))) {
       remapResolveRuns.incrementAndGet()
-      var r = fenced.localCheckpoint()
+      var r = graft.Checkpointing.truncate(fenced)
       var rounds = 0
       var hopped = 1L
       while (hopped > 0) {
         require(rounds < 64,
           "remap-closure pointer doubling exceeded 64 rounds — the " +
             "strictly-decreasing-label invariant is broken")
-        val step = r.as("a").join(
+        val step = graft.Checkpointing.truncate(r.as("a").join(
             r.select(col("modality").as("b_m"),
               col("old_label").as("b_old"),
               col("new_label").as("b_new")),
@@ -347,8 +347,7 @@ object MediaClusterStore {
           .select(col("a.modality").as("modality"),
             col("a.old_label").as("old_label"),
             coalesce(col("b_new"), col("a.new_label")).as("new_label"),
-            col("b_old").isNotNull.as("hop"))
-          .localCheckpoint()
+            col("b_old").isNotNull.as("hop")))
         hopped = step.filter(col("hop")).count()
         r = step.drop("hop")
         rounds += 1
@@ -654,9 +653,9 @@ object MediaClusterStore {
     graft.rel.FoldWatermark.requireIngestAbove(s,
       assignDir(clusterStorePath), batchId)
     // erased keys neither judge, nor join clusters, nor re-ingest
-    val b = MediaDedupStore.minusTombstones(s, fpStorePath,
-      batch.select(col("media_id"), col("modality"), col("h")))
-      .localCheckpoint()
+    val b = graft.Checkpointing.truncate(
+      MediaDedupStore.minusTombstones(s, fpStorePath,
+        batch.select(col("media_id"), col("modality"), col("h"))))
     // keepReArrivals: the judge's equal-id matches are the "id
     // re-arrived under a NEW batch id" contract violation, and the
     // merge below collects its pairs anyway — applyClusterBatch fails
@@ -756,12 +755,11 @@ object MediaClusterStore {
     if (!hasBatches(s, aDir)) return
     // surviving members = assignment keys minus tombstones (labels
     // irrelevant — they are being recomputed)
-    val members = minusTombstones(s, storePath,
-        s.read.parquet(aDir).select("media_id", "modality"))
-      .distinct().localCheckpoint()
-    val cleanPairs = minusTombstonePairs(s, storePath,
-      pairs.select(col("modality"), col("id_a"), col("id_b")))
-      .localCheckpoint()
+    val members = graft.Checkpointing.truncate(minusTombstones(s,
+      storePath, s.read.parquet(aDir).select("media_id", "modality"))
+      .distinct())
+    val cleanPairs = graft.Checkpointing.truncate(minusTombstonePairs(s,
+      storePath, pairs.select(col("modality"), col("id_a"), col("id_b"))))
     // per-modality connected components (modalities are an enum-sized
     // driver list; the CC itself is the shared size-adaptive family
     // member). Node-induced: pair endpoints not in the surviving
@@ -990,7 +988,8 @@ object MediaClusterStore {
       .getOrElse(s.range(0)
         .select(col("id").as("ti"), lit("").as("tm"))))
     // one resolved read, reused for detection + membership
-    val resolved = assignmentsFromStore(s, storePath).localCheckpoint()
+    val resolved =
+      graft.Checkpointing.truncate(assignmentsFromStore(s, storePath))
     // seed (a): the erased keys' clusters — erasure-sized collect
     val tombSeeded = resolved.join(tombs,
         col("media_id") === col("ti") && col("modality") === col("tm"),
@@ -1005,21 +1004,19 @@ object MediaClusterStore {
     // the resolved read against the evidence's endpoint set
     // (endpoint-sized output), then two endpoint-keyed joins back
     // onto the pairs — never a corpus shuffle of the evidence.
-    val scrubbed = minusTombstonePairs(s, storePath,
-        pairs.select(col("modality"), col("id_a"), col("id_b")))
-      .localCheckpoint()
+    val scrubbed = graft.Checkpointing.truncate(minusTombstonePairs(s,
+      storePath, pairs.select(col("modality"), col("id_a"), col("id_b"))))
     val eps = scrubbed.select(col("modality").as("e_m"),
         col("id_a").as("e_id"))
       .union(scrubbed.select(col("modality").as("e_m"),
         col("id_b").as("e_id")))
       .distinct()
-    val epCids = resolved.join(eps,
+    val epCids = graft.Checkpointing.truncate(resolved.join(eps,
         col("modality") === col("e_m") && col("media_id") === col("e_id"),
         "left_semi")
       .select(col("modality").as("p_m"), col("media_id").as("p_id"),
-        col("cluster_id").as("p_cid"))
-      .localCheckpoint()
-    val withCids = scrubbed
+        col("cluster_id").as("p_cid")))
+    val withCids = graft.Checkpointing.truncate(scrubbed
       .join(epCids.select(col("p_m").as("am"), col("p_id").as("ai"),
           col("p_cid").as("cid_a")),
         col("modality") === col("am") && col("id_a") === col("ai"), "left")
@@ -1027,8 +1024,7 @@ object MediaClusterStore {
           col("p_cid").as("cid_b")),
         col("modality") === col("bm") && col("id_b") === col("bi"), "left")
       .select(col("modality"), col("id_a"), col("id_b"),
-        col("cid_a"), col("cid_b"))
-      .localCheckpoint()
+        col("cid_a"), col("cid_b")))
     // evidence naming members ABSENT from the store is the one class
     // this op cannot repair (nothing to relabel) — ignored, warned,
     // and surfaced in the stats so drivers can escalate
@@ -1062,23 +1058,23 @@ object MediaClusterStore {
       return ReclusterStats(staged = false, 0L, crossing, unknown,
         divergenceChecked = true)
     val affIds = broadcast(affectedIds.toSeq.toDF("a_m", "a_cid"))
-    val affectedKeys = resolved.join(affIds,
+    val affectedKeys = graft.Checkpointing.truncate(resolved.join(affIds,
         col("modality") === col("a_m") &&
           col("cluster_id") === col("a_cid"), "left_semi")
-      .select("media_id", "modality").localCheckpoint()
+      .select("media_id", "modality"))
     // fresh labels: min-label CC over surviving affected members and
     // the scrubbed, affected-restricted evidence (crossing pairs have
     // BOTH endpoints affected by seeding (b), so the restriction only
     // drops within-unaffected and unknown-endpoint evidence)
-    val survivors = minusTombstones(s, storePath, affectedKeys)
-      .localCheckpoint()
+    val survivors = graft.Checkpointing.truncate(
+      minusTombstones(s, storePath, affectedKeys))
     def onlyAffected(p: DataFrame, idCol: String) = p.join(
       affectedKeys.select(col("media_id").as(s"k_$idCol"),
         col("modality").as(s"km_$idCol")),
       col(idCol) === col(s"k_$idCol") &&
         col("modality") === col(s"km_$idCol"), "left_semi")
-    val cleanPairs = onlyAffected(onlyAffected(scrubbed, "id_a"), "id_b")
-      .localCheckpoint()
+    val cleanPairs = graft.Checkpointing.truncate(
+      onlyAffected(onlyAffected(scrubbed, "id_a"), "id_b"))
     val mods = survivors.select("modality").distinct()
       .collect().map(_.getString(0))
     val labels = mods.map { m =>
@@ -1246,26 +1242,32 @@ object MediaClusterStore {
     * nq_image_dedup_clusters' recursive-CTE SQL VERBATIM over the full
     * pair history — a merge miss, a remap-chain break, or a fence leak
     * all hash-fail through the full assignment. */
-  /** The shared 3-batch ingest history (judge → cluster-merge →
-    * fingerprint ingest per batch — the crawl loop) over the planted
-    * image corpus; returns the cluster-store path. */
-  private def buildClusterHistory(s: SparkSession, images: DataFrame,
-      root: java.nio.file.Path): String = {
+  /** The crawl loop: each of 3 replayed fingerprint batches is judged
+    * against the fingerprint store-so-far, its verdicts (through the
+    * modality's `verdictPolicy`) MERGE into the standing assignments,
+    * then the batch ingests. Returns the cluster-store path. */
+  private def crawlHistory(s: SparkSession, fps: DataFrame,
+      batchOf: Column, root: java.nio.file.Path,
+      verdictPolicy: DataFrame => DataFrame): String = {
     val fpPath = s"$root/fp"
     val clPath = s"$root/cl"
-    val fps = ImageDedup.dhashes(images)
-      .select(col("image_id").as("media_id"),
-        lit("image").as("modality"), col("h"))
-      .localCheckpoint()
-    (0 until 3).foreach { b =>
-      val batch = fps.filter(pmod(col("media_id"), lit(3)) === b)
-      val prs = MediaDedupStore.judgeBatch(s, batch, fpPath, b.toLong)
+    MediaDedupStore.replayBatches(fps, batchOf) { (batch, b) =>
+      val prs = verdictPolicy(
+        MediaDedupStore.judgeBatch(s, batch, fpPath, b))
       applyClusterBatch(s, batch.select("media_id", "modality"),
-        prs.select("modality", "id_a", "id_b"), clPath, b.toLong)
-      MediaDedupStore.applyFingerprintBatch(batch, fpPath, b.toLong)
+        prs.select("modality", "id_a", "id_b"), clPath, b)
+      MediaDedupStore.applyFingerprintBatch(batch, fpPath, b)
     }
     clPath
   }
+
+  /** The shared 3-batch crawl history over the planted image corpus. */
+  private def buildClusterHistory(s: SparkSession, images: DataFrame,
+      root: java.nio.file.Path): String =
+    crawlHistory(s, ImageDedup.dhashes(images)
+        .select(col("image_id").as("media_id"),
+          lit("image").as("modality"), col("h")),
+      MediaDedupStore.byMediaId, root, identity)
 
   def nqMediaClustersInc(s: SparkSession, d: String): DataFrame = {
     val images = ImageDedup.generateDedupImages(s, d)
@@ -1500,22 +1502,11 @@ object MediaClusterStore {
   def nqAudioClustersInc(s: SparkSession, d: String): DataFrame = {
     val clips = graft.audio.AudioDedup.generateDedupClips(s, d)
     graft.audio.AudioDedup.dumpGrids(s, clips)
-    val store = graft.FixtureMemo.store("audioclusters", d) { root =>
-      val fpPath = s"$root/fp"
-      val clPath = s"$root/cl"
-      val fps = graft.audio.AudioDedup.fingerprints(clips)
-        .select(col("clip_id").as("media_id"),
-          lit("audio").as("modality"), col("h"))
-        .localCheckpoint()
-      (0 until 3).foreach { b =>
-        val batch = fps.filter(pmod(col("media_id"), lit(3)) === b)
-        val prs = MediaDedupStore.judgeBatch(s, batch, fpPath, b.toLong)
-        applyClusterBatch(s, batch.select("media_id", "modality"),
-          prs.select("modality", "id_a", "id_b"), clPath, b.toLong)
-        MediaDedupStore.applyFingerprintBatch(batch, fpPath, b.toLong)
-      }
-      clPath
-    }
+    val store = graft.FixtureMemo.store("audioclusters", d)(
+      crawlHistory(s, graft.audio.AudioDedup.fingerprints(clips)
+          .select(col("clip_id").as("media_id"),
+            lit("audio").as("modality"), col("h")),
+        MediaDedupStore.byMediaId, _, identity))
     assignmentsFromStore(s, store)
       .select(col("media_id").as("clip_id"), col("cluster_id"),
         (col("media_id") === col("cluster_id")).as("is_keeper"))
@@ -1553,21 +1544,11 @@ object MediaClusterStore {
     val vids = VideoDedup.generateSceneVideos(s, d)
     ImageSource.dumpPixels(s, VideoDedup.frames(vids), resizeTo = 9,
       tag = "vkf9")
-    def batchOf = pmod(expr("media_id DIV 100"), lit(3))
-    val store = graft.FixtureMemo.store("videoclusters", d) { root =>
-      val fpPath = s"$root/fp"
-      val clPath = s"$root/cl"
-      val fps = VideoDedup.keyframeFingerprints(s, d).localCheckpoint()
-      (0 until 3).foreach { b =>
-        val batch = fps.filter(batchOf === b)
-        val prs = MediaDedupStore.judgeBatch(s, batch, fpPath, b.toLong)
-          .filter(expr("id_a DIV 100") =!= expr("id_b DIV 100"))
-        applyClusterBatch(s, batch.select("media_id", "modality"),
-          prs.select("modality", "id_a", "id_b"), clPath, b.toLong)
-        MediaDedupStore.applyFingerprintBatch(batch, fpPath, b.toLong)
-      }
-      clPath
-    }
+    // verdicts keep the cross-video pairs only
+    val store = graft.FixtureMemo.store("videoclusters", d)(
+      crawlHistory(s, VideoDedup.keyframeFingerprints(s, d),
+        MediaDedupStore.byVideoId, _,
+        _.filter(expr("id_a DIV 100") =!= expr("id_b DIV 100"))))
     assignmentsFromStore(s, store)
       .select(col("media_id").as("frame_id"), col("cluster_id"),
         (col("media_id") === col("cluster_id")).as("is_keeper"))
@@ -1618,14 +1599,13 @@ object MediaClusterStore {
     val store = graft.FixtureMemo.store("jointclusters", d) { root =>
       val fpPath = s"$root/fp"
       val clPath = s"$root/cl"
-      val batch = ImageDedup.dhashes(images)
+      val batch = graft.Checkpointing.truncate(ImageDedup.dhashes(images)
           .select(col("image_id").as("media_id"),
             lit("image").as("modality"), col("h"))
         .unionAll(graft.audio.AudioDedup.fingerprints(clips)
           .select(col("clip_id").as("media_id"),
             lit("audio").as("modality"), col("h")))
-        .unionAll(VideoDedup.keyframeFingerprints(s, d))
-        .localCheckpoint()
+        .unionAll(VideoDedup.keyframeFingerprints(s, d)))
       val prs = MediaDedupStore.judgeBatch(s, batch, fpPath, 0L)
         // the video verdict policy, one line over the joint pairs
         .filter(col("modality") =!= "video" ||
@@ -1701,15 +1681,11 @@ object MediaClusterStore {
       root: java.nio.file.Path): String = {
     val fpStore = MediaDedupStore.judgeBenchStore(s, d)
     val clPath = s"$root/cl"
-    val all = MediaDedupStore.syntheticFingerprints(s, d)
-      .filter(pmod(col("media_id"), lit(20)) =!= 19)
-      .localCheckpoint()
-    (0 until 3).foreach { b =>
-      val batch = all.filter(
-        pmod(pmod(col("media_id"), lit(20)), lit(3)) === b)
-      val prs = MediaDedupStore.judgeBatch(s, batch, fpStore, b.toLong)
+    MediaDedupStore.replayBatches(MediaDedupStore.judgeBenchHistory(s, d),
+        MediaDedupStore.byBenchResidue) { (batch, b) =>
+      val prs = MediaDedupStore.judgeBatch(s, batch, fpStore, b)
       applyClusterBatch(s, batch.select("media_id", "modality"),
-        prs.select("modality", "id_a", "id_b"), clPath, b.toLong)
+        prs.select("modality", "id_a", "id_b"), clPath, b)
     }
     clPath
   }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted perceptual-fingerprint store — the build-once/serve-many
@@ -231,7 +231,7 @@ object MediaDedupStore {
     * backfill pushed through the serving path) falls back to a
     * shuffled join instead of an oversized driver broadcast. The one
     * count this costs is batch-sized. Callers pass MATERIALIZED
-    * batches (the entries and the streaming path localCheckpoint
+    * batches (the entries and the streaming path truncate
     * upstream): the guard count and the two joins each walk the batch
     * lineage, and judgeBatch deliberately does not checkpoint
     * internally — that would double-materialize the streaming path's
@@ -308,10 +308,10 @@ object MediaDedupStore {
     // erased keys neither judge nor re-ingest: a batch re-delivering an
     // erased (media_id, modality) would otherwise write a fingerprint
     // every read suppresses (judgeBatch re-filters its own input —
-    // harmless second anti-join over this already-clean checkpoint)
-    val b = minusTombstones(s, storePath,
-      batch.select(col("media_id"), col("modality"), col("h")))
-      .localCheckpoint() // judged AND ingested — compute once
+    // harmless second anti-join over this already-clean checkpoint);
+    // judged AND ingested — compute once
+    val b = graft.Checkpointing.truncate(minusTombstones(s, storePath,
+      batch.select(col("media_id"), col("modality"), col("h"))))
     // coalesce(1): a batch's verdicts are match-output-sized (the
     // banded join's collision tail), not corpus-sized — one file per
     // batch keeps the verdict store's file count = batch count (the
@@ -363,10 +363,10 @@ object MediaDedupStore {
         .join(tombs, hitsTomb("id_a") || hitsTomb("id_b"), "left_semi")
         .select("batch_id").distinct().collect().map(_.get(0)).toSeq
       if (hitParts.nonEmpty) {
-        val kept = v.filter(col("batch_id").isInCollection(hitParts))
-          .join(tombs, hitsTomb("id_a"), "left_anti")
-          .join(tombs, hitsTomb("id_b"), "left_anti")
-          .localCheckpoint()
+        val kept = graft.Checkpointing.truncate(
+          v.filter(col("batch_id").isInCollection(hitParts))
+            .join(tombs, hitsTomb("id_a"), "left_anti")
+            .join(tombs, hitsTomb("id_b"), "left_anti"))
         val after = kept.select("batch_id").distinct().collect()
           .map(r => s"batch_id=${r.get(0)}").toSet
         if (!kept.isEmpty)
@@ -456,18 +456,44 @@ object MediaDedupStore {
       graft.audio.AudioDedup.generateDedupClips(s, d))
   }
 
+  /** The batch-replay loop of every media store: materialize `fps`
+    * ONCE (one decode pass feeds all three batches, not three decodes),
+    * split it by the `batchOf` residue and apply `f` to each
+    * `(batch, batchId)` in id order. */
+  private[sources] def replayBatches[T](fps: DataFrame, batchOf: Column)(
+      f: (DataFrame, Long) => T): Seq[T] = {
+    val all = graft.Checkpointing.truncate(fps)
+    (0 until 3).map(b => f(all.filter(batchOf === b), b.toLong))
+  }
+
+  /** The default batch key: media_id mod 3. */
+  private[sources] def byMediaId: Column = pmod(col("media_id"), lit(3))
+
+  /** The keyframe batch key: the VIDEO id inside the packed frame id
+    * mod 3 (all of a video's keyframes travel together). */
+  private[sources] def byVideoId: Column =
+    pmod(expr("media_id DIV 100"), lit(3))
+
+  /** Judge each replayed batch against the store-so-far; the union of
+    * the per-batch verdicts. */
+  private def judgeReplay(s: SparkSession, fps: DataFrame,
+      batchOf: Column, store: String): DataFrame =
+    replayBatches(fps, batchOf)(judgeBatch(s, _, store, _))
+      .reduce(_.union(_))
+
+  /** Ingest `fps` into a fresh store under `root` as three batches. */
+  private def ingestReplay(fps: DataFrame, batchOf: Column,
+      root: java.nio.file.Path): String = {
+    val path = s"$root/media"
+    replayBatches(fps, batchOf)(applyFingerprintBatch(_, path, _))
+    path
+  }
+
   // every store below is built once per immutable driver dir
   // (graft.FixtureMemo.store, the q81 memo policy)
   private def buildStore(s: SparkSession, d: String,
-      root: java.nio.file.Path): String = {
-    val path = s"$root/media"
-    // materialize the fingerprints ONCE before the batch fan-out —
-    // three partition writes off one decode pass, not three decodes
-    val all = allFingerprints(s, d).localCheckpoint()
-    (0 until 3).foreach(b => applyFingerprintBatch(
-      all.filter(pmod(col("media_id"), lit(3)) === b), path, b.toLong))
-    path
-  }
+      root: java.nio.file.Path): String =
+    ingestReplay(allFingerprints(s, d), byMediaId, root)
 
   // --------------------------------------------------- contract entries
   /** nq_media_dedup_store: the full multimodal corpus arrives as 3
@@ -483,16 +509,16 @@ object MediaDedupStore {
     dumpOracleInputs(s, d)
     // one decode pass feeds all three judges (each judge references its
     // batch twice: the broadcast probe side and the within-batch join)
-    val all = allFingerprints(s, d).localCheckpoint()
-    val verdicts = (0 until 3).map { b =>
-      judgeBatch(s,
-        all.filter(pmod(col("media_id"), lit(3)) === b), store, b.toLong)
-    }.reduce(_.union(_))
-    verdicts
+    crossVideo(judgeReplay(s, allFingerprints(s, d), byMediaId, store))
+  }
+
+  /** The video verdict policy (within-video keyframe similarity is
+    * static-scene detection, not duplication), in pair order. */
+  private def crossVideo(pairs: DataFrame): DataFrame =
+    pairs
       .filter(col("modality") =!= "video" ||
         expr("id_a DIV 100") =!= expr("id_b DIV 100"))
       .orderBy("modality", "id_a", "id_b")
-  }
 
   /** nq_media_dedup_delete: the same store plus one erasure batch — all
     * IMAGE "edit" variants (media_id ≥ 2·10⁶, modality = 'image') are
@@ -501,28 +527,34 @@ object MediaDedupStore {
     * and leaves audio (whose muted copies ALSO live at ids ≥ 2·10⁶!)
     * and video untouched — a deletion that ignores the modality key, or
     * one that leaks into reads, hash-fails. */
-  def nqMediaDedupDelete(s: SparkSession, d: String): DataFrame = {
-    val store = graft.FixtureMemo.store("mediadedupdel", d) { root =>
-      val path = buildStore(s, d, root)
-      deleteMedia(
-        allFingerprints(s, d)
-          .filter(col("modality") === "image" &&
-            col("media_id") >= 2000000L)
-          .select("media_id", "modality"),
-        path, 0L)
-      path
-    }
+  def nqMediaDedupDelete(s: SparkSession, d: String): DataFrame =
+    storePairs(s, d, graft.FixtureMemo.store("mediadedupdel", d)(
+      buildErasedStore(s, d, _)))
+
+  /** The full store plus the image-variant erasure batch. */
+  private def buildErasedStore(s: SparkSession, d: String,
+      root: java.nio.file.Path): String = {
+    val path = buildStore(s, d, root)
+    deleteMedia(
+      allFingerprints(s, d)
+        .filter(col("modality") === "image" &&
+          col("media_id") >= 2000000L)
+        .select("media_id", "modality"),
+      path, 0L)
+    path
+  }
+
+  /** The full pair set recomputed off a store READ. */
+  private def storePairs(s: SparkSession, d: String, store: String)
+      : DataFrame = {
     dumpOracleInputs(s, d)
     val fps = fingerprintsFromStore(s, store)
-    ImageDedup.nearDupPairs(
+    crossVideo(ImageDedup.nearDupPairs(
         fps.select(col("modality"), col("media_id").as("image_id"),
           col("h")),
         keyCols = Seq("modality"))
       .select(col("modality"), col("img_a").as("id_a"),
-        col("img_b").as("id_b"), col("hamming"))
-      .filter(col("modality") =!= "video" ||
-        expr("id_a DIV 100") =!= expr("id_b DIV 100"))
-      .orderBy("modality", "id_a", "id_b")
+        col("img_b").as("id_b"), col("hamming")))
   }
 
   /** nq_media_dedup_compact: the delete store's exact history —
@@ -537,30 +569,13 @@ object MediaDedupStore {
     * batch 2 > the watermark — their tombstones must SURVIVE the fold
     * and keep suppressing — while the rest fold out and their
     * tombstones age away: both kept-set paths are exercised.) */
-  def nqMediaDedupCompact(s: SparkSession, d: String): DataFrame = {
-    val store = graft.FixtureMemo.store("mediadedupcompact", d) { root =>
-      val path = buildStore(s, d, root)
-      deleteMedia(
-        allFingerprints(s, d)
-          .filter(col("modality") === "image" &&
-            col("media_id") >= 2000000L)
-          .select("media_id", "modality"),
-        path, 0L)
-      compactThrough(s, path, through = 1L)
-      path
-    }
-    dumpOracleInputs(s, d)
-    val fps = fingerprintsFromStore(s, store)
-    ImageDedup.nearDupPairs(
-        fps.select(col("modality"), col("media_id").as("image_id"),
-          col("h")),
-        keyCols = Seq("modality"))
-      .select(col("modality"), col("img_a").as("id_a"),
-        col("img_b").as("id_b"), col("hamming"))
-      .filter(col("modality") =!= "video" ||
-        expr("id_a DIV 100") =!= expr("id_b DIV 100"))
-      .orderBy("modality", "id_a", "id_b")
-  }
+  def nqMediaDedupCompact(s: SparkSession, d: String): DataFrame =
+    storePairs(s, d, graft.FixtureMemo.store("mediadedupcompact", d) {
+      root =>
+        val path = buildErasedStore(s, d, root)
+        compactThrough(s, path, through = 1L)
+        path
+    })
 
   // ------------------------------------------- flip-invariant store
   /** Dihedral MULTI-PROBE fingerprints of the reoriented corpus — 8
@@ -591,13 +606,8 @@ object MediaDedupStore {
   /** The flip store, memoized per immutable dir (nq_media_dedup_flip). */
   private[graft] def flipStoreProbePath(s: SparkSession, d: String)
       : String =
-    graft.FixtureMemo.store("mediaflip", d) { root =>
-      val path = s"$root/media"
-      val all = flipFingerprints(s, d).localCheckpoint()
-      (0 until 3).foreach(b => applyFingerprintBatch(
-        all.filter(pmod(col("media_id"), lit(3)) === b), path, b.toLong))
-      path
-    }
+    graft.FixtureMemo.store("mediaflip", d)(
+      ingestReplay(flipFingerprints(s, d), byMediaId, _))
 
   /** nq_media_dedup_flip: the reoriented corpus (exactly
     * [[ImageDedup.nqImageNeardupFlip]]'s — planted lossless mirrors and
@@ -613,12 +623,8 @@ object MediaDedupStore {
     val store = flipStoreProbePath(s, d)
     ImageSource.dumpPixels(s, ImageDedup.generateFlipImages(s, d),
       resizeTo = 9, tag = "flip9")
-    val all = flipFingerprints(s, d).localCheckpoint()
-    val verdicts = (0 until 3).map { b =>
-      judgeBatch(s, all.filter(pmod(col("media_id"), lit(3)) === b),
-        store, b.toLong)
-    }.reduce(_.union(_))
-    verdicts.groupBy("id_a", "id_b")
+    judgeReplay(s, flipFingerprints(s, d), byMediaId, store)
+      .groupBy("id_a", "id_b")
       .agg(min(col("hamming")).as("hamming"))
       .select(col("id_a").as("img_a"), col("id_b").as("img_b"),
         col("hamming"))
@@ -643,22 +649,11 @@ object MediaDedupStore {
     // memoized like flipFingerprints: keyframe selection + hash is a
     // pure derivation of the memoized corpus — probes measure judging
     def fps = VideoDedup.keyframeFingerprints(s, d)
-    // batch key = the VIDEO id inside the packed frame id
-    def batchOf = pmod(expr("media_id DIV 100"), lit(3))
-    val store = graft.FixtureMemo.store("mediakfstore", d) { root =>
-      val path = s"$root/media"
-      val all = fps.localCheckpoint()
-      (0 until 3).foreach(b => applyFingerprintBatch(
-        all.filter(batchOf === b), path, b.toLong))
-      path
-    }
+    val store = graft.FixtureMemo.store("mediakfstore", d)(
+      ingestReplay(fps, byVideoId, _))
     ImageSource.dumpPixels(s, VideoDedup.frames(vids), resizeTo = 9,
       tag = "vkf9")
-    val all = fps.localCheckpoint()
-    val verdicts = (0 until 3).map { b =>
-      judgeBatch(s, all.filter(batchOf === b), store, b.toLong)
-    }.reduce(_.union(_))
-    verdicts
+    judgeReplay(s, fps, byVideoId, store)
       .filter(expr("id_a DIV 100") =!= expr("id_b DIV 100"))
       .select(
         expr("id_a DIV 100").as("vid_a"),
@@ -727,19 +722,21 @@ object MediaDedupStore {
     * ALL pairs with a side in batch 19 — a store-store pair leak, a
     * fence miss, or a banding recall hole all hash-fail. */
   private[graft] def judgeBenchStore(s: SparkSession, d: String): String =
-    graft.FixtureMemo.store("mediajudgebench", d) { root =>
-      val path = s"$root/media"
-      val all = syntheticFingerprints(s, d).localCheckpoint()
-      // the 19 store residues land under THREE fenced partitions (a
-      // compacted store's layout — compactThrough folds history the
-      // same way): multi-partition reads stay exercised without 19
-      // directory listings taxing every serving probe
-      (0 until 3).foreach(b => applyFingerprintBatch(
-        all.filter(pmod(col("media_id"), lit(20)) =!= 19 &&
-          pmod(pmod(col("media_id"), lit(20)), lit(3)) === b),
-        path, b.toLong))
-      path
-    }
+    // the 19 store residues land under THREE fenced partitions (a
+    // compacted store's layout — compactThrough folds history the
+    // same way): multi-partition reads stay exercised without 19
+    // directory listings taxing every serving probe
+    graft.FixtureMemo.store("mediajudgebench", d)(
+      ingestReplay(judgeBenchHistory(s, d), byBenchResidue, _))
+
+  /** The synthetic corpus' 19 store residues (media_id ≢ 19 mod 20). */
+  private[sources] def judgeBenchHistory(s: SparkSession, d: String)
+      : DataFrame =
+    syntheticFingerprints(s, d).filter(pmod(col("media_id"), lit(20)) =!= 19)
+
+  /** The judge-bench store's batch key: the residue mod 20, mod 3. */
+  private[sources] def byBenchResidue: Column =
+    pmod(pmod(col("media_id"), lit(20)), lit(3))
 
   /** The serving batch (media_id ≡ 19 mod 20) as ARRIVING data — a
     * memoized parquet fixture per immutable dir, so timed probes pay

@@ -104,9 +104,9 @@ object OutlierStream {
       s"outlier store at $flaggedPath")
     StreamingOps.bindStoreLineage(s, flaggedPath,
       s"outlier store at $flaggedPath", lineage)
-    // the batch feeds both writes; localCheckpoint so the scan (and
-    // any upstream source read) runs once, not once per output
-    val b = batch.localCheckpoint()
+    // the batch feeds both writes; materialize so the scan (and any
+    // upstream source read) runs once, not once per output
+    val b = graft.Checkpointing.truncate(batch)
     StreamingOps.writeSingleFile(
       scoreBatch(b, frozen, groupCol, idCol, valueCol, threshold)
         .withColumn("batch_id", lit(batchId)),

@@ -306,7 +306,7 @@ object StreamingOps {
     * doc at ingest" contract. Per micro-batch, in one foreachBatch
     * transaction scope:
     *
-    *   1. compute the batch's MinHash signatures ONCE (localCheckpoint
+    *   1. compute the batch's MinHash signatures ONCE (truncate
     *      — reused by steps 2 and 3 without recomputation);
     *   2. emit exact-verified near-dup pairs touching the batch —
     *      (batch × store) ∪ (batch × batch), never store × store, via
@@ -432,11 +432,11 @@ object StreamingOps {
           // filter it would be stored and paired post-deletion
           .transform(df => graft.rel.Tombstones.filterDeleted(
             df, "doc_id", storePath))
-        val sigs =
-          (if (sigC == null) sigsAll
-           else sigsAll.join(sigC.select("doc_id"), Seq("doc_id"),
-             "left_anti"))
-            .localCheckpoint() // computed once, reused by pairs + append
+        // computed once, reused by pairs + append
+        val sigs = graft.Checkpointing.truncate(
+          if (sigC == null) sigsAll
+          else sigsAll.join(sigC.select("doc_id"), Seq("doc_id"),
+            "left_anti"))
         graft.text.NearDup
           .incrementalFromSignatures(
             if (sigC == null) sigs.limit(0)
@@ -451,8 +451,8 @@ object StreamingOps {
         // maxStoreFiles and trip a full O(store) rewrite on EVERY
         // trigger, the exact unbounded per-batch cost the small-file
         // bound exists to prevent. One file per trigger is the unit the
-        // amortization math assumes; the data is already localCheckpoint
-        // blocks, so this is a merge-on-write, not a recompute.
+        // amortization math assumes; the data is already materialized,
+        // so this is a merge-on-write, not a recompute.
         sigs.coalesce(1).write.mode("append").parquet(storePath)
         // one listStatus per trigger — metadata-only, cheap next to the
         // joins above; the rewrite itself runs only when the bound trips.
@@ -818,13 +818,13 @@ object StreamingOps {
       // separate per-batch count would plan a second full exchange)
       val raw = graft.text.TextQueries.tokenTerms(batch)
         .select(col("term"), lit(1L).as("cnt"))
-      val merged =
+      // one computation: threshold + survivors
+      val merged = graft.Checkpointing.truncate(
         (if (prev == null) raw
          else raw.unionAll(
            prev.filter(col("term").isNotNull)
              .select(col("term"), col("cnt"))))
-          .groupBy("term").agg(sum("cnt").as("cnt"))
-          .localCheckpoint() // one computation: threshold + survivors
+          .groupBy("term").agg(sum("cnt").as("cnt")))
       val top = merged.orderBy(col("cnt").desc, col("term")).limit(k + 1)
         .select("cnt").collect().map(_.getLong(0))
       val d = if (top.length <= k) 0L else top.last
@@ -884,7 +884,7 @@ object StreamingOps {
     val storeP = new org.apache.hadoop.fs.Path(storePath)
     recoverCompactionSwap(
       storeP.getFileSystem(s.sparkContext.hadoopConfiguration), storeP)
-    val stored = s.read.parquet(storePath).localCheckpoint()
+    val stored = graft.Checkpointing.truncate(s.read.parquet(storePath))
     // the MG floor is a property of the summary's BUILD k (persisted
     // on the sentinel row), not the caller's claim — a reader passing
     // a larger k would satisfy the require while the summary had
@@ -999,8 +999,8 @@ object StreamingOps {
       if (storeFiles.isEmpty)
         s.range(0).select(col("id").as("h")) // empty bootstrap store
       else s.read.parquet(storeFiles.map(_.getPath.toString): _*)
-    val b = batch.dropDuplicates("doc_id") // intra-batch redelivery
-      .localCheckpoint() // judged AND grammed below — compute once
+    // intra-batch redelivery; judged AND grammed below — compute once
+    val b = graft.Checkpointing.truncate(batch.dropDuplicates("doc_id"))
     writeSingleFile(graft.text.SubstrDedup.judgeAgainst(b, storeH, w),
       verdictsPath, own)
     writeSingleFile(graft.text.SubstrDedup.batchGrams(b, w),
@@ -1076,8 +1076,8 @@ object StreamingOps {
         "left_anti")
       case None => batch
     }
-    val b = clean.dropDuplicates("doc_id") // intra-batch redelivery
-      .localCheckpoint() // judged AND grammed below — compute once
+    // intra-batch redelivery; judged AND grammed below — compute once
+    val b = graft.Checkpointing.truncate(clean.dropDuplicates("doc_id"))
     // prior live grams: net-positive refcounts over every partition
     // EXCEPT this trigger's own (own-batch exclusion, see scaladoc)
     val hasData = graft.rel.Tombstones.populated(fs, storePath)
@@ -1165,8 +1165,8 @@ object StreamingOps {
       st.getPath.getName.startsWith("batch-") &&
       st.getPath.getName != own)
     val tree = graft.sim.SemDedup.readTree(s, treePath)
-    val b = batch.dropDuplicates("vec_id") // intra-batch redelivery
-      .localCheckpoint() // assigned AND judged below — compute once
+    // intra-batch redelivery; assigned AND judged below — compute once
+    val b = graft.Checkpointing.truncate(batch.dropDuplicates("vec_id"))
     // delete-before-arrival: an id tombstoned before its vector ever
     // landed must be neither judged nor stored (assign's output is
     // keyed `id`, the store's key)
@@ -1272,13 +1272,14 @@ object StreamingOps {
         // folded-source arrivals, materialized BEFORE the sources
         // delete — the shrink below needs them to tell an applied
         // tombstone from a delete-before-arrival fence
-        val foldedKeys = keysOf(foldSet.map(_.getPath.toString))
-          .localCheckpoint()
-        val survivors = graft.rel.Tombstones.filterDeleted(
+        val foldedKeys = graft.Checkpointing.truncate(
+          keysOf(foldSet.map(_.getPath.toString)))
+        // materialize before any file moves; dropDuplicates heals a
+        // re-run over the crash window
+        val survivors = graft.Checkpointing.truncate(
+          graft.rel.Tombstones.filterDeleted(
             s.read.parquet(foldSet.map(_.getPath.toString): _*), keyCol,
-            storePath)
-          .dropDuplicates() // heals a re-run over the crash window
-          .localCheckpoint() // materialize before any file moves
+            storePath).dropDuplicates())
         val gen = "batch-compacted-(\\d+)\\.parquet".r
         val nextGen = files.map(_.getPath.getName).foldLeft(0L) {
           case (m, gen(g)) => m max g.toLong
@@ -1295,8 +1296,8 @@ object StreamingOps {
             foldedKeys.join(keysOf(Seq(st.getPath.toString)),
               Seq("key"), "left_anti"))
           .getOrElse(foldedKeys)
-        val kept = log.join(applied, Seq("key"), "left_anti")
-          .localCheckpoint()
+        val kept = graft.Checkpointing.truncate(
+          log.join(applied, Seq("key"), "left_anti"))
         graft.rel.TombstoneLog.swapIn(kept, fs, logP, logP + "_next")
       }
       // nothing folded (≤ 1 batch file): no tombstone was applied, so

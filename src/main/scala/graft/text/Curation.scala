@@ -50,8 +50,8 @@ object Curation {
       // lifetime, and can never be served again anyway
       memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
       memo.getOrElseUpdate((s, d, minTokens, minDistinctRatio, maxRepRatio),
-        curateUncached(s, d, minTokens, minDistinctRatio, maxRepRatio)
-          .localCheckpoint())
+        graft.Checkpointing.truncate(curateUncached(s, d, minTokens,
+          minDistinctRatio, maxRepRatio)))
     } else curateUncached(s, d, minTokens, minDistinctRatio, maxRepRatio)
 
   private def curateUncached(s: SparkSession, d: String, minTokens: Int,

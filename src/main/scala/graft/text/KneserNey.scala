@@ -97,7 +97,7 @@ object KneserNey {
     // ever unpersist a cache() — each q98/q99/q100 call pinned a
     // CacheManager entry for the session's lifetime. The type table
     // is vocab-bounded (KB-to-MB however big the corpus), so the
-    // eager localCheckpoint is cheap and its blocks die with the plan
+    // eager truncate is cheap and its blocks die with the plan
     // references instead of the session.
     val tri = graft.Checkpointing.truncate(tri0)
     val cont2 = tri.groupBy("w2", "w3").agg(count(lit(1)).as("m"))

@@ -69,11 +69,13 @@ object LmStore {
       s"ingest batch ids are non-negative (got $batchId); negative " +
         "ids are reserved for deletions")
     val s = docs.sparkSession
-    val clean = (graft.rel.Tombstones.deletedKeys(s, storePath) match {
+    // counted AND recorded below — compute once
+    val clean = graft.Checkpointing.truncate(
+        graft.rel.Tombstones.deletedKeys(s, storePath) match {
       case Some(prior) => docs.join(
         prior.withColumnRenamed("key", idCol), Seq(idCol), "left_anti")
       case None => docs
-    }).localCheckpoint() // counted AND recorded below — compute once
+    })
     writeCounts(KneserNey.trigramCounts(clean, textCol), storePath,
       batchId)
     clean.select(col(idCol).as("key")).distinct()
@@ -101,11 +103,13 @@ object LmStore {
       s"deletion mutation ids are negative (got $mutationId); the " +
         "non-negative space belongs to the ingest checkpoint")
     val s = deletedDocs.sparkSession
-    val fresh = (graft.rel.Tombstones.deletedKeys(s, storePath) match {
+    // negated AND recorded below — compute once
+    val fresh = graft.Checkpointing.truncate(
+        graft.rel.Tombstones.deletedKeys(s, storePath) match {
       case Some(prior) => deletedDocs.join(
         prior.withColumnRenamed("key", idCol), Seq(idCol), "left_anti")
       case None => deletedDocs
-    }).localCheckpoint() // negated AND recorded below — compute once
+    })
     // subtract ONLY docs that actually contributed counts (the
     // membership ledger): a delete-before-arrival request must
     // tombstone the id — barring the future arrival — WITHOUT

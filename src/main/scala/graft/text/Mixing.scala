@@ -96,15 +96,15 @@ object Mixing {
     val bc = s.sparkContext.broadcast(bloom)
     try {
       val mightMatch = udf((h: Long) => bc.value.mightContainLong(h))
-      // localCheckpoint is EAGER: the corpus scan (the only consumer of
+      // truncate is EAGER: the corpus scan (the only consumer of
       // the broadcast) runs here, materializing just the prefiltered
       // distinct hashes (~overlap + fpp·corpus rows) — so the filter's
       // executor copies can be dropped immediately below instead of
       // lingering until the ContextCleaner happens to GC the UDF, which
       // in a long-lived driver accumulates broadcast blocks per call
-      val corpusSh = NearDup.hashedShinglesOf(corpus)
-        .filter(mightMatch(col("h"))).select("h").distinct()
-        .localCheckpoint()
+      val corpusSh = graft.Checkpointing.truncate(
+        NearDup.hashedShinglesOf(corpus)
+          .filter(mightMatch(col("h"))).select("h").distinct())
       verdicts(benchmark, benchSh, corpusSh, flagAt)
     } finally bc.unpersist() // not destroy(): refetchable if ever replayed
   }

@@ -320,13 +320,13 @@ object SubstrDedup {
     require(batchId >= 0,
       s"ingest batch ids are non-negative (got $batchId); negative " +
         "ids are reserved for deletions")
-    val admitted = (graft.rel.Tombstones
+    val admitted = graft.Checkpointing.truncate(graft.rel.Tombstones
       .deletedKeys(corpus.sparkSession, path) match {
       case Some(prior) => corpus.join(
         prior.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
         "left_anti")
       case None => corpus
-    }).localCheckpoint() // grammed AND recorded below — compute once
+    }) // grammed AND recorded below — compute once
     writeCountedBatch(gramRefcounts(admitted, w), path, batchId)
     // membership ledger: the (h, c) aggregates cannot answer "did this
     // doc ever contribute?", and the delete path must not subtract
@@ -377,12 +377,13 @@ object SubstrDedup {
         "dynamic-overwrite the negation partition and silently " +
         "resurrect the deleted docs' grams (the LmStore rule)")
     val s = deleted.sparkSession
-    val fresh = (graft.rel.Tombstones.deletedKeys(s, path) match {
+    val fresh = graft.Checkpointing.truncate(
+        graft.rel.Tombstones.deletedKeys(s, path) match {
       case Some(prior) => deleted.join(
         prior.withColumnRenamed("key", "doc_id"), Seq("doc_id"),
         "left_anti")
       case None => deleted
-    }).localCheckpoint() // negated AND recorded below — compute once
+    }) // negated AND recorded below — compute once
     // DELETE-BEFORE-ARRIVAL GUARD: subtract only docs on the
     // membership ledger — a doc tombstoned before it ever landed
     // contributed NO counts, and negating its grams anyway would net
@@ -480,9 +481,9 @@ object SubstrDedup {
         n.stripPrefix("batch_id=").toLong).toOption)
       .filter(_ >= 0)
       .reduceOption(_ max _)
-    val net = s.read.parquet(path).groupBy("h")
-      .agg(sum(col("c")).as("c")).filter(col("c") > 0)
-      .localCheckpoint() // materialize before any file moves
+    // materialize before any file moves
+    val net = graft.Checkpointing.truncate(s.read.parquet(path)
+      .groupBy("h").agg(sum(col("c")).as("c")).filter(col("c") > 0))
     val tmp = new org.apache.hadoop.fs.Path(gramCompactTmp(path))
     val old = new org.apache.hadoop.fs.Path(gramCompactOld(path))
     fs.delete(tmp, true)
