@@ -68,41 +68,17 @@ object AggStore {
         max(col(valueCol)).as("max_val"))
   }
 
-  /** The ONE fenced store write every mutation goes through (insert,
-    * retraction, re-score): the batch's own `batch_id=N` partition
-    * under dynamic overwrite. singleFile (the default): the output is
-    * group-count rows of a few scalars — one file per batch keeps
-    * store files = batches, not batches × shuffle partitions. Callers
-    * whose grain is DATA-sized (JoinView's (dim key, attr) partials —
-    * a billion-row dimension) pass false and keep natural
-    * partitioning with a per-file cap. */
-  private[rel] def writeFencedPartials(partials: DataFrame,
-      storePath: String, batchId: Long,
-      singleFile: Boolean = true,
-      compactionFold: Boolean = false): Unit = {
-    // the replay-horizon guard: an ingest at or below the fold
-    // watermark would resurrect a pruned partition (or clobber the
-    // fold at ==); only compaction's own fold write legitimately
-    // lands AT the watermark
-    if (!compactionFold)
-      FoldWatermark.requireIngestAbove(partials.sparkSession, storePath,
-        batchId)
-    (if (singleFile) partials.withColumn("batch_id", lit(batchId))
-        .coalesce(1)
-     else partials.withColumn("batch_id", lit(batchId)))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", 10000000L)
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
-  }
-
   /** Reduce a batch and write it under its own `batch_id=N` store
-    * partition — see the replay paragraph in the object doc. */
+    * partition — see the replay paragraph in the object doc. Every
+    * mutation (insert, retraction, re-score) passes the replay-horizon
+    * guard first: an ingest at or below the fold watermark would
+    * resurrect a pruned partition (or clobber the fold at ==). */
   def applyBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
-      storePath: String, batchId: Long): Unit =
-    writeFencedPartials(partialBatch(batch, groupCols, valueCol),
-      storePath, batchId)
+      storePath: String, batchId: Long): Unit = {
+    FoldWatermark.requireIngestAbove(batch.sparkSession, storePath, batchId)
+    Stores.writeBatch(partialBatch(batch, groupCols, valueCol), storePath,
+      batchId)
+  }
 
   /** Merge any relation of partials into final per-group answers —
     * count/sum re-add (exact: decimal cents), min/max re-extremize.
@@ -141,12 +117,7 @@ object AggStore {
     * input (groups × batches rows), never the raw history. */
   def aggFromStore(s: SparkSession, storePath: String,
       groupCols: Seq[String]): DataFrame =
-    // leftover fence (r18): sub-watermark partials are a crashed
-    // compaction's pre-fold leftovers, already counted in the fold —
-    // merging them would double-count until the re-entry recovery runs
-    mergePartials(FoldWatermark.excludeFoldedLeftovers(
-      s.read.parquet(storePath),
-      FoldWatermark.read(s, storePath)), groupCols)
+    mergePartials(Stores.readBatches(s, storePath), groupCols)
 
   // ------------------------------------------------------- retraction
   // Keyed delete/re-score for the ADDITIVE (invertible) store — the
@@ -180,9 +151,11 @@ object AggStore {
   /** Write a retraction under its own batch partition — redelivered
     * retractions are no-ops exactly like redelivered inserts. */
   def applyRetraction(batch: DataFrame, groupCols: Seq[String],
-      valueCol: String, storePath: String, batchId: Long): Unit =
-    writeFencedPartials(retractBatch(batch, groupCols, valueCol),
-      storePath, batchId)
+      valueCol: String, storePath: String, batchId: Long): Unit = {
+    FoldWatermark.requireIngestAbove(batch.sparkSession, storePath, batchId)
+    Stores.writeBatch(retractBatch(batch, groupCols, valueCol), storePath,
+      batchId)
+  }
 
   /** Merge under retraction: the invertible moments only (no
     * min/max — see the retraction note), groups netted to zero rows
@@ -202,11 +175,14 @@ object AggStore {
     * insertion (two separate batches would expose that window). */
   def applyRescore(oldRows: DataFrame, newRows: DataFrame,
       groupCols: Seq[String], valueCol: String, storePath: String,
-      batchId: Long): Unit =
-    writeFencedPartials(
+      batchId: Long): Unit = {
+    FoldWatermark.requireIngestAbove(newRows.sparkSession, storePath,
+      batchId)
+    Stores.writeBatch(
       retractBatch(oldRows, groupCols, valueCol)
         .unionAll(partialBatch(newRows, groupCols, valueCol)),
       storePath, batchId)
+  }
 
   /** Streaming ingest: each micro-batch reduced to partials and written
     * to its own batch_id partition via foreachBatch. At-least-once
@@ -329,17 +305,9 @@ object AggStore {
     * ([[FoldWatermark]]): its distinguishing partials were folded away
     * and the `batch_id <=` filter would silently serve an empty view. */
   def aggFromStoreAsOf(s: SparkSession, storePath: String,
-      groupCols: Seq[String], asOfBatch: Long): DataFrame = {
-    // one marker probe: the as-of guard plus the r18 leftover fence
-    // (sub-watermark partials are already inside the fold partition)
-    val w = FoldWatermark.read(s, storePath)
-    FoldWatermark.requireAtOrAbove(storePath, asOfBatch, w)
-    mergePartials(
-      FoldWatermark.excludeFoldedLeftovers(
-          s.read.parquet(storePath), w)
-        .filter(col("batch_id") <= asOfBatch),
+      groupCols: Seq[String], asOfBatch: Long): DataFrame =
+    mergePartials(Stores.readBatches(s, storePath, Some(asOfBatch)),
       groupCols)
-  }
 
   // -------------------------------------------------------- compaction
   /** Horizontal store compaction: re-partialize batches 0..through
@@ -360,93 +328,23 @@ object AggStore {
     * fold persists a [[FoldWatermark]] marker and every as-of read
     * below it fails loudly instead of serving an empty history.
     *
-    * Crash safety (re-entrant since r18): the fold MATERIALIZES
-    * (collect of groups-sized partials) before touching the store,
-    * writes the `batch_id=through` partition under dynamic overwrite,
-    * marks it committed, records the [[FoldWatermark]], then prunes
-    * the folded partitions. A crash between write and prune used to
-    * leave a store whose natural retry double-counted (re-folding the
-    * fold together with the surviving originals); now re-entry reads
-    * the fold evidence ([[FoldWatermark.resumeAfterFold]]) and runs
-    * the prune-only recovery, so re-calling compactThrough IS the
-    * crash response. Re-running after a SUCCESSFUL compaction is a
-    * no-op either way, and compacting below the watermark refuses
-    * loudly. */
+    * Crash safety, the gate refusal and the empty-region no-op are
+    * the shared fold's ([[Stores.compactThrough]]): re-calling
+    * compactThrough after any crash IS the recovery. */
   def compactThrough(s: SparkSession, storePath: String,
       groupCols: Seq[String], through: Long,
-      singleFile: Boolean = true): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // a crashed ATOMIC fold publish recovers first (r19): a complete
-    // stage finishes its swap/watermark/prune tail, an incomplete one
-    // discards — so the decision below always reads a known state
-    FoldWatermark.recoverFoldStages(fs, storePath)
-    // re-entry after a crash between fold and prune (r18): the fold
-    // already landed (watermark == through, or the fold-commit marker
-    // stands), so re-running it over fold + surviving originals would
-    // double-count every pre-fold batch's partials — the retry IS the
-    // recovery: raise the watermark if the crash preceded it, prune,
-    // done. A watermark ABOVE `through` refuses loudly inside
-    // resumeAfterFold (compacting below the fold is never meaningful).
-    val wm = FoldWatermark.read(fs, storePath)
-    if (FoldWatermark.resumeAfterFold(fs, storePath, through, wm)) {
-      FoldWatermark.write(fs, storePath, through)
-      pruneThrough(s, storePath, through)
-      return
-    }
-    // fold region leftover-fenced (r18 review): a fresh fold at a
-    // HIGHER through than a crashed compaction must not re-fold that
-    // crash's sub-watermark leftovers with the fold containing them
-    val store = FoldWatermark.excludeFoldedLeftovers(
-      s.read.parquet(storePath), wm)
-    val old = store.filter(col("batch_id") <= through)
-    // fold: counts/sums re-add, extrema re-extremize — output has the
-    // exact partialBatch schema, so reads can't tell it from an ingest.
-    // truncate pins the fold RESULT before the overwrite below
-    // rewrites one of its input partitions (self-referential write)
-    val folded = graft.Checkpointing.truncate(old
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        sum("cnt").as("cnt"),
-        sum("sum_cents").cast(DecimalType(38, 0)).as("sum_cents"),
-        sum("sum_sq_cents2").cast(DecimalType(38, 0)).as("sum_sq_cents2"),
-        min("min_val").as("min_val"),
-        max("max_val").as("max_val")))
-    // atomic publish (r19): stage + in-stage marker + one rename —
-    // no window where the fold stands without its commit evidence
-    FoldWatermark.publishFold(fs, storePath, through) { stage =>
-      (if (singleFile) folded.coalesce(1) else folded)
-        .write.option("maxRecordsPerFile", 10000000L)
-        .mode("overwrite").parquet(stage)
-    }
-    // watermark, then prune: every crash window resumes as fold-done
-    // on re-entry (the swapped-in partition carries the marker) or
-    // refuses a still-derivable snapshot (conservative) — never
-    // serves a partial answer and never re-folds on retry
-    FoldWatermark.write(fs, storePath, through)
-    pruneThrough(s, storePath, through)
-  }
-
-  /** Delete the `batch_id < through` partitions — compactThrough's
-    * second phase and its crash recovery (idempotent: a missing
-    * partition is a no-op). */
-  def pruneThrough(s: SparkSession, storePath: String,
-      through: Long): Unit = {
-    // list-then-delete, never iterate candidate ids: applyBatch accepts
-    // ARBITRARY Long batch ids (epoch millis are a natural scheme), and
-    // a `(0L until through)` loop over a sparse id space would issue
-    // billions of no-op deletes — an effective hang. Listing touches
-    // only partitions that exist (and is cheaper for dense ids too).
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch_id=") &&
-          scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-            .exists(_ < through))
-        fs.delete(st.getPath, true)
-    }
-  }
+      singleFile: Boolean = true): Unit =
+    // counts/sums re-add, extrema re-extremize — output has the exact
+    // partialBatch schema, so reads can't tell it from an ingest
+    Stores.compactThrough(s, storePath, through, singleFile)(
+      _.groupBy(groupCols.map(col): _*)
+        .agg(
+          sum("cnt").as("cnt"),
+          sum("sum_cents").cast(DecimalType(38, 0)).as("sum_cents"),
+          sum("sum_sq_cents2").cast(DecimalType(38, 0))
+            .as("sum_sq_cents2"),
+          min("min_val").as("min_val"),
+          max("max_val").as("max_val")))
 
   /** DIFF read: merged answers over batches in (fromBatch, toBatch]
     * alone — "what did the last ingest window add", the delta
@@ -458,15 +356,13 @@ object AggStore {
       groupCols: Seq[String], fromBatch: Long, toBatch: Long): DataFrame = {
     require(fromBatch <= toBatch,
       s"aggFromStoreBetween: fromBatch $fromBatch > toBatch $toBatch")
-    // the LOWER bound carries the watermark obligation: a window
-    // opening below the fold would include the batch_id=watermark fold
-    // partition, leaking every folded batch's contribution into the
-    // diff (fromBatch == watermark is fine — `batch_id >` excludes the
-    // fold partition exactly)
-    FoldWatermark.requireAtOrAbove(s, storePath, fromBatch)
+    // (from, to] is the inclusive range [from + 1, to], whose guard
+    // requires from + 1 above the fold watermark: a window opening below
+    // the fold would leak every folded batch's contribution into the
+    // diff (fromBatch == watermark is fine — the fold partition sits
+    // exactly outside the window)
     mergePartials(
-      s.read.parquet(storePath)
-        .filter(col("batch_id") > fromBatch && col("batch_id") <= toBatch),
+      Stores.readBatchRange(s, storePath, fromBatch + 1, toBatch),
       groupCols)
   }
 

@@ -43,9 +43,7 @@ object CardinalityStore {
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
 
   /** Sketch a batch and write it to the store under its own
-    * `batch_id=N` partition. `coalesce(1)`: the output is group-count
-    * rows of KB-sized sketches — one file per batch keeps the store's
-    * file count = batch count, not batch × shuffle partitions.
+    * `batch_id=N` partition ([[Stores.writeBatch]]: one file per batch).
     * Dynamic partition overwrite (not append): register-max already
     * makes a redelivered batch a no-op on every ESTIMATE, but an append
     * would still add a duplicate file per replay — growing the store's
@@ -58,27 +56,15 @@ object CardinalityStore {
     * fold already unions — answer-invariant), but a same-lineage
     * redelivery AT the watermark would dynamic-OVERWRITE the
     * `batch_id=through` fold partition with one batch's registers,
-    * silently dropping all folded history from every estimate. The
-    * QuantileStore pattern applies family-wide: refuse at or below
-    * the watermark, with the one exception of the gated-fold REBUILD
-    * at == (re-sketch the fold's retained raw input minus deleted
-    * keys, then ungate — [[rebuildBatch]] must overwrite in place). */
+    * silently dropping all folded history from every estimate — hence
+    * [[Stores.requireIngestOrRebuild]], whose one exception is the
+    * gated-fold REBUILD at == ([[rebuildBatch]] must overwrite in
+    * place). */
   def applyBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
       storePath: String, batchId: Long, lgK: Int = 12): Unit = {
-    val s = batch.sparkSession
-    // ONE marker read decides both the rebuild exception and the
-    // strictly-above refusal (the marker is a metadata RPC per ingest)
-    val wm = FoldWatermark.read(s, storePath)
-    val gatedFoldRebuild = wm.contains(batchId) &&
-      Tombstones.gatedBatches(s, storePath).contains(batchId)
-    if (!gatedFoldRebuild)
-      FoldWatermark.requireIngestAbove(storePath, batchId, wm)
-    sketchBatch(batch, groupCols, valueCol, lgK)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.requireIngestOrRebuild(batch.sparkSession, storePath, batchId)
+    Stores.writeBatch(sketchBatch(batch, groupCols, valueCol, lgK),
+      storePath, batchId)
   }
 
   /** Merged distinct estimate per group across every batch in the
@@ -87,43 +73,17 @@ object CardinalityStore {
     * ([[Tombstones.gateBatches]] — HLL registers cannot subtract a
     * key) are excluded until [[rebuildBatch]] re-sketches them clean.
     *
-    * `asOfBatch`: AS-OF snapshot — merge only batches ≤ k
-    * (partition-pruned on the store's `batch_id` partition column,
-    * the [[AggStore.aggFromStoreAsOf]] contract). The CURRENT gate
-    * set still applies: a gate marks data containing deleted keys,
+    * `asOfBatch`: AS-OF snapshot — merge only batches ≤ k (the
+    * guarded, partition-pruned [[Stores.readBatches]]). The CURRENT
+    * gate set still applies: a gate marks data containing deleted keys,
     * and historical reads must not resurrect them — as-of rewinds
     * the DATA timeline, never an erasure. */
   def estimateFromStore(s: SparkSession, storePath: String,
       groupCols: Seq[String], asOfBatch: Option[Long] = None): DataFrame =
     mergeSketches(
-      Tombstones.filterGated(asOfRead(s, storePath, asOfBatch),
+      Tombstones.filterGated(Stores.readBatches(s, storePath, asOfBatch),
         storePath),
       groupCols)
-
-  /** `batch_id <= k` when an as-of bound is given — shared by every
-    * sketch store's read path (partition-pruned; see above). */
-  private[graft] def asOf(store: DataFrame, asOfBatch: Option[Long])
-      : DataFrame =
-    asOfBatch.fold(store)(k => store.filter(col("batch_id") <= k))
-
-  /** The GUARDED as-of read every path-reading store routes through:
-    * an as-of below the compaction fold watermark fails loudly
-    * ([[FoldWatermark]]) instead of silently serving the empty/partial
-    * history the `batch_id <= k` filter would leave after the fold
-    * partition dropped out. Stores that never compacted carry no
-    * marker — the guard costs one existence probe and passes. */
-  private[graft] def asOfRead(s: SparkSession, path: String,
-      asOfBatch: Option[Long]): DataFrame = {
-    // ONE marker probe serves both the as-of guard and the r18
-    // leftover fence: sub-watermark rows are pre-fold leftovers of a
-    // compaction that crashed between fold and prune (their content
-    // is inside the fold partition), so excluding them keeps even the
-    // un-recovered crash window answer-invisible
-    val w = FoldWatermark.read(s, path)
-    asOfBatch.foreach(k => FoldWatermark.requireAtOrAbove(path, k, w))
-    asOf(FoldWatermark.excludeFoldedLeftovers(s.read.parquet(path), w),
-      asOfBatch)
-  }
 
   /** Re-sketch a gated batch from its RETAINED raw input minus the
     * deleted keys, overwrite its partition, and lift its gate — the
@@ -150,15 +110,13 @@ object CardinalityStore {
     * (the union's updatable binary is itself a sketch, so the fold
     * re-enters the store in ingest schema) — estimates are IDENTICAL
     * before and after (same registers → same estimate; spec-pinned).
-    * Shared choreography: [[Stores.compactSketchesThrough]] (gate
-    * refusal, fold watermark, idempotent prune). Ingest below the
-    * watermark is refused by [[applyBatch]] (r18): idempotence covers
-    * a sub-watermark replay's ANSWERS, but a redelivery AT the
-    * watermark would overwrite the fold partition itself — the
-    * gated-fold rebuild at == stays the one permitted exception. */
+    * The fold is [[Stores.compactThrough]] (gate refusal, fold
+    * watermark, idempotent prune). Ingest at or below the watermark is
+    * refused by [[applyBatch]] through [[Stores.requireIngestOrRebuild]]
+    * — the gated-fold rebuild at == is the one permitted exception. */
   def compactThrough(s: SparkSession, storePath: String,
       groupCols: Seq[String], through: Long): Unit =
-    Stores.compactSketchesThrough(s, storePath, through)(
+    Stores.compactThrough(s, storePath, through)(
       _.groupBy(groupCols.map(col): _*)
         .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch")))
 

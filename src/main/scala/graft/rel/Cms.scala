@@ -78,13 +78,13 @@ object Cms {
   /** Horizontal compaction: batches ≤ `through` fold into ONE
     * partition via the cell-wise counter sum — estimates IDENTICAL
     * before and after bit-for-bit (counters are exactly additive;
-    * netted retraction batches fold with their signs). Shared
-    * choreography: [[Stores.compactSketchesThrough]] (fold watermark,
-    * idempotent prune; CMS deletes by retraction, not gates, so the
-    * gate refusal is inert here). */
+    * netted retraction batches fold with their signs). The fold is
+    * [[Stores.compactThrough]] (fold watermark, idempotent prune; CMS
+    * deletes by retraction, not gates, so the gate refusal is inert
+    * here). */
   def compactThrough(s: SparkSession, storePath: String,
       through: Long): Unit =
-    Stores.compactSketchesThrough(s, storePath, through)(merge(_))
+    Stores.compactThrough(s, storePath, through)(merge(_))
 
   /** Point-frequency estimates for each distinct key in `probes`:
     * min over rows d of the probed counter. The sketch side is
@@ -113,12 +113,8 @@ object Cms {
     // clobber the fold)
     FoldWatermark.requireIngestAbove(batch.sparkSession, storePath,
       batchId)
-    cmsOf(batch, keyCol, depth, width, seed)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.writeBatch(cmsOf(batch, keyCol, depth, width, seed), storePath,
+      batchId)
   }
 
   /** Retraction (DESIGN_upsert.md's by-negation class): the sketch of
@@ -139,13 +135,9 @@ object Cms {
     // SUBTRACTS just as silently
     FoldWatermark.requireIngestAbove(deleted.sparkSession, storePath,
       batchId)
-    cmsOf(deleted, keyCol, depth, width, seed)
-      .select(col("d"), col("bucket"), (-col("cnt")).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.writeBatch(cmsOf(deleted, keyCol, depth, width, seed)
+        .select(col("d"), col("bucket"), (-col("cnt")).as("cnt")),
+      storePath, batchId)
   }
 
   /** Read path: estimates from the store alone — cell-wise merge of
@@ -156,8 +148,7 @@ object Cms {
       width: Int = Width, seed: Long = 42L,
       asOfBatch: Option[Long] = None): DataFrame =
     estimate(merge(
-        CardinalityStore.asOfRead(s, storePath, asOfBatch)
-          .drop("batch_id")),
+        Stores.readBatches(s, storePath, asOfBatch).drop("batch_id")),
       probes, keyCol, depth, width, seed)
 
   /** Streaming ingest: one sketch per micro-batch via foreachBatch —

@@ -43,27 +43,23 @@ object GraphStore {
 
   /** Ingest one edge batch under its own fenced partition.
     *
-    * NO coalesce(1) here, deliberately: unlike the sketch stores (whose
-    * per-batch output is group-count rows of scalars — AggStore.scala's
-    * documented convention), an edge batch's payload IS the data — a
-    * crawl delta at 100 TB scale is billions of rows, and funneling it
-    * through one write task serializes the whole ingest. The write
-    * keeps the batch's natural partitioning (one file per task, capped
-    * by maxRecordsPerFile so a giant coalesced upstream can't produce
-    * multi-GB files); the `batch_id` fence semantics are unchanged. */
+    * NOT single-file, deliberately: unlike the sketch stores (whose
+    * per-batch output is group-count rows of scalars —
+    * [[Stores.writeBatch]]'s default), an edge batch's payload IS the
+    * data — a crawl delta at 100 TB scale is billions of rows, and
+    * funneling it through one write task serializes the whole ingest.
+    * The write keeps the batch's natural partitioning (one file per
+    * task, capped by maxRecordsPerFile so a giant coalesced upstream
+    * can't produce multi-GB files); the `batch_id` fence semantics
+    * are unchanged. */
   def applyEdgeBatch(edges: DataFrame, storePath: String,
       batchId: Long): Unit = {
     // the replay-horizon guard: re-ingesting at or below the fold
     // watermark would resurrect a pruned partition
     FoldWatermark.requireIngestAbove(edges.sparkSession,
       dataDir(storePath), batchId)
-    edges.select(col("src"), col("dst"))
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", 10000000L)
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(dataDir(storePath))
+    Stores.writeBatch(edges.select(col("src"), col("dst")),
+      dataDir(storePath), batchId, singleFile = false)
   }
 
   /** Keyed edge deletion: (src, dst) pairs land in the tombstone log
@@ -90,12 +86,8 @@ object GraphStore {
     // and every tombstone in it would silently stop applying
     TombstoneLog.recoverSwap(fsOf(pairs.sparkSession, storePath),
       tombDir(storePath), tombNextDir(storePath))
-    pairs.select(col("src"), col("dst"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(tombDir(storePath))
+    Stores.writeBatch(pairs.select(col("src"), col("dst")),
+      tombDir(storePath), batchId)
   }
 
   /** The current (or as-of) edge set: batches ≤ k minus tombstones.
@@ -109,7 +101,7 @@ object GraphStore {
     // as empty (the TombstoneLog.readDir rule)
     if (!Tombstones.populated(s, dataDir(storePath)))
       return s.range(0).select(col("id").as("src"), col("id").as("dst"))
-    val data = CardinalityStore.asOfRead(s, dataDir(storePath), asOfBatch)
+    val data = Stores.readBatches(s, dataDir(storePath), asOfBatch)
     tombReadDir(s, storePath) match {
       case None => data.select("src", "dst")
       case Some(dir) => data.join(
@@ -216,7 +208,7 @@ object GraphStore {
     * so sparse/time-based batch ids never loop). */
   def pruneEdgesThrough(s: SparkSession, storePath: String,
       through: Long): Unit =
-    KeyedCompaction.pruneThrough(s, dataDir(storePath), through)
+    Stores.pruneThrough(fsOf(s, storePath), dataDir(storePath), through)
 
   // ----------------------------------------------------- nq_graph_store
   /** Driver entry: the citation graph arrives as 3 ingest batches

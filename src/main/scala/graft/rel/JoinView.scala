@@ -60,7 +60,7 @@ object JoinView {
         lit(null).cast("double").as("max_val"))
   }
 
-  /** Ingest one fact batch under its fenced partition. NO coalesce(1):
+  /** Ingest one fact batch under its fenced partition, not single-file:
     * the partials are (dim key, attr)-grain — |dim|-sized, not
     * group-count-sized like the report-grain sketch stores — and a
     * billion-row dimension would funnel through one write task. The
@@ -75,13 +75,9 @@ object JoinView {
     // documentation
     FoldWatermark.requireIngestAbove(facts.sparkSession, storePath,
       batchId)
-    factBatchPartials(facts, dim, factKey, dimKey, dimAttr, valueCol)
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", 10000000L)
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.writeBatch(
+      factBatchPartials(facts, dim, factKey, dimKey, dimAttr, valueCol),
+      storePath, batchId, singleFile = false)
   }
 
   /** Dimension move: `moves` = (dimKey, old dimAttr → new dimAttr)
@@ -102,8 +98,7 @@ object JoinView {
     // store holds fold + pre-fold originals; deriving the delta from
     // both would MOVE TWICE the standing mass — a write-side error,
     // not just a read artifact
-    val cur = FoldWatermark.excludeFoldedLeftovers(
-        s.read.parquet(storePath), FoldWatermark.read(s, storePath))
+    val cur = Stores.readBatches(s, storePath)
       .filter(col("batch_id") =!= batchId)
       .join(broadcast(moves.select(col(dimKey).as("mk"),
         col(s"old_$dimAttr"), col(s"new_$dimAttr"))),
@@ -142,12 +137,7 @@ object JoinView {
     // would dynamic-overwrite the fold partition itself — refuse loudly
     if (!delta.isEmpty) {
       FoldWatermark.requireIngestAbove(s, storePath, batchId)
-      delta
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1).write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .mode("overwrite").parquet(storePath)
+      Stores.writeBatch(delta, storePath, batchId)
     }
   }
 
@@ -155,7 +145,7 @@ object JoinView {
     * (dim key, dim attr) grain, so folding batches ≤ `through` into one
     * partition delegates to [[AggStore.compactThrough]] with that
     * grain — the same associativity argument, crash discipline
-    * (recovery = [[AggStore.pruneThrough]]), and as-of retention trade.
+    * ([[Stores.compactThrough]]), and as-of retention trade.
     * Interaction with the store's two batch kinds after compaction:
     *   - a REPLAYED dim move whose partition was folded recomputes its
     *     delta from the compacted store, which already reflects the
@@ -183,8 +173,7 @@ object JoinView {
     val n = sum("cnt").cast("double")
     val cs = sum("sum_cents").cast("double")
     // leftover fence (r18): see applyDimMove
-    FoldWatermark.excludeFoldedLeftovers(
-        s.read.parquet(storePath), FoldWatermark.read(s, storePath))
+    Stores.readBatches(s, storePath)
       .groupBy(col(grainCol))
       .agg(sum("cnt").as("n_rows"),
         (cs / lit(100.0)).as("sum_val"),

@@ -43,23 +43,13 @@ object KmvStore {
     * Replay-horizon guard (r18): min-k idempotence covers replays
     * strictly BELOW the fold watermark, but a redelivery AT it would
     * dynamic-overwrite the fold partition with one batch's k-mins,
-    * dropping all folded history — the CardinalityStore hazard. Same
-    * pattern: refuse `batchId <=` watermark except the gated-fold
-    * rebuild at == (which must overwrite the fold in place). */
+    * dropping all folded history — the CardinalityStore hazard, closed
+    * by the same [[Stores.requireIngestOrRebuild]]. */
   def applyBatch(batch: DataFrame, groupCols: Seq[String], hashCol: String,
       storePath: String, batchId: Long, k: Int): Unit = {
-    val s = batch.sparkSession
-    val wm = FoldWatermark.read(s, storePath)
-    val gatedFoldRebuild = wm.contains(batchId) &&
-      Tombstones.gatedBatches(s, storePath).contains(batchId)
-    if (!gatedFoldRebuild)
-      FoldWatermark.requireIngestAbove(storePath, batchId, wm)
-    sketchBatch(batch, groupCols, hashCol, k)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.requireIngestOrRebuild(batch.sparkSession, storePath, batchId)
+    Stores.writeBatch(sketchBatch(batch, groupCols, hashCol, k), storePath,
+      batchId)
   }
 
   /** Merge a (groupCols..., sk) relation across batches: explode the
@@ -78,16 +68,14 @@ object KmvStore {
     * partition via the store's own union-truncate merge — EXACTLY
     * answer-invariant (the k smallest distinct hashes of a union are
     * a pure function of the inputs, whatever the fold structure;
-    * spec-pinned as set equality). Shared choreography:
-    * [[Stores.compactSketchesThrough]] (gate refusal, fold watermark,
-    * idempotent prune). Ingest at or below the watermark is refused
-    * by [[applyBatch]] (r18) — idempotence covers sub-watermark
-    * replays' answers, but a redelivery AT the watermark would
-    * overwrite the fold itself; the gated-fold rebuild at == stays
-    * the one permitted exception, family-wide. */
+    * spec-pinned as set equality). The fold is
+    * [[Stores.compactThrough]] (gate refusal, fold watermark,
+    * idempotent prune). Ingest at or below the watermark is refused by
+    * [[applyBatch]] through [[Stores.requireIngestOrRebuild]] — the
+    * gated-fold rebuild at == is the one permitted exception. */
   def compactThrough(s: SparkSession, storePath: String,
       groupCols: Seq[String], k: Int, through: Long): Unit =
-    Stores.compactSketchesThrough(s, storePath, through)(
+    Stores.compactThrough(s, storePath, through)(
       mergeSketches(_, groupCols, k))
 
   /** Read path: per-group merged sketches from the store — store-sized
@@ -99,8 +87,7 @@ object KmvStore {
       groupCols: Seq[String], k: Int,
       asOfBatch: Option[Long] = None): DataFrame =
     mergeSketches(
-      Tombstones.filterGated(
-        CardinalityStore.asOfRead(s, storePath, asOfBatch),
+      Tombstones.filterGated(Stores.readBatches(s, storePath, asOfBatch),
         storePath),
       groupCols, k)
 

@@ -51,31 +51,14 @@ object QuantileStore {
     *
     * Replay-horizon guard (KLL weights are ADDITIVE — a batch
     * replayed below the fold watermark resurrects a pruned partition
-    * and double-counts its weight in every quantile): refused at or
-    * below the watermark, with ONE exception — `batchId ==` the
-    * watermark while that id is GATED is the whole-fold REBUILD the
-    * rebuild-or-gate contract prescribes (re-sketch the fold's
-    * retained raw input minus deleted keys, then ungate), which must
-    * overwrite the fold partition in place. */
+    * and double-counts its weight in every quantile):
+    * [[Stores.requireIngestOrRebuild]] refuses at or below the
+    * watermark, except the gated whole-fold REBUILD at ==. */
   def applyBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
       storePath: String, batchId: Long, k: Int): Unit = {
-    val s = batch.sparkSession
-    // ONE marker read decides both the rebuild exception and the
-    // strictly-above refusal (the marker is a metadata RPC per ingest)
-    val wm = FoldWatermark.read(
-      new org.apache.hadoop.fs.Path(storePath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration),
-      storePath)
-    val gatedFoldRebuild = wm.contains(batchId) &&
-      Tombstones.gatedBatches(s, storePath).contains(batchId)
-    if (!gatedFoldRebuild)
-      FoldWatermark.requireIngestAbove(storePath, batchId, wm)
-    sketchBatch(batch, groupCols, valueCol, k)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
+    Stores.requireIngestOrRebuild(batch.sparkSession, storePath, batchId)
+    Stores.writeBatch(sketchBatch(batch, groupCols, valueCol, k),
+      storePath, batchId)
   }
 
   /** Merge a (groupCols..., sk) relation across batches: explode the
@@ -98,12 +81,11 @@ object QuantileStore {
     * re-insert at their native levels, so TOTAL WEIGHT is preserved
     * exactly — the row-count invariant — and estimates keep the
     * monolithic rank-error class; spec pins exact weight + the
-    * quantile tail). Shared choreography:
-    * [[Stores.compactSketchesThrough]] (gate refusal, fold watermark,
-    * idempotent prune). */
+    * quantile tail). The fold is [[Stores.compactThrough]] (gate
+    * refusal, fold watermark, idempotent prune). */
   def compactThrough(s: SparkSession, storePath: String,
       groupCols: Seq[String], k: Int, through: Long): Unit =
-    Stores.compactSketchesThrough(s, storePath, through)(
+    Stores.compactThrough(s, storePath, through)(
       mergeSketches(_, groupCols, k))
 
   /** Read path: merged per-group sketches from the store alone.
@@ -114,8 +96,7 @@ object QuantileStore {
       groupCols: Seq[String], k: Int,
       asOfBatch: Option[Long] = None): DataFrame =
     mergeSketches(
-      Tombstones.filterGated(
-        CardinalityStore.asOfRead(s, storePath, asOfBatch),
+      Tombstones.filterGated(Stores.readBatches(s, storePath, asOfBatch),
         storePath),
       groupCols, k)
 

@@ -3,13 +3,15 @@ package graft.rel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cross-cutting helpers for the engine's batch-partitioned store
-  * family (AggStore, Cms, CardinalityStore, KmvStore, QuantileStore,
-  * the counted gram store): every one of them persists per-ingest-batch
-  * partials under `batch_id=N` partitions with merge-at-read, which
-  * makes two capabilities fall out of the layout for free — snapshot
-  * (as-of) reads and batch-range reads. Nothing here rewrites data;
-  * these are read-path views.
+/** The engine's batch-partitioned store layout (AggStore, JoinView,
+  * Cms, CardinalityStore, KmvStore, QuantileStore, the graph, media
+  * and text stores): every one of them persists per-ingest-batch rows
+  * under `batch_id=N` partitions with merge-at-read. This object owns
+  * that layout — the one per-batch write ([[writeBatch]]), the one
+  * guarded read ([[readBatches]], [[readBatchRange]]), the one fold
+  * ([[compactThrough]]) and the one prune ([[pruneThrough]]) — plus the
+  * maintenance views over it ([[describe]], [[maintenancePlan]],
+  * [[autoMaintain]]).
   */
 object Stores {
 
@@ -22,32 +24,58 @@ object Stores {
       : org.apache.spark.sql.Column =
     floor(v * lit(100.0) + lit(0.5)).cast("long")
 
-  /** Snapshot read: only batches ≤ `maxBatchId` participate — the
-    * reproducible-training-data read. Pin the snapshot id when an
-    * experiment starts and every later ingest batch is invisible to
-    * it: the same snapshot id always merges the same partials, so the
-    * experiment's inputs are bit-replayable no matter how far the
-    * store has moved on. The `batch_id` comparison is a PARTITION
+  // ------------------------------------------------- the batch layout
+  // Every store-family member persists per-ingest-batch rows under
+  // `batch_id=N` partitions and merges at read time. The four halves
+  // of that layout — write, read, fold, prune — live here, once.
+
+  /** THE per-batch store write: `rows` land under their own
+    * `batch_id=N` partition by dynamic overwrite, so a redelivered
+    * batch rewrites exactly its own partition — a no-op on every answer
+    * AND on the store's size — and leaves every other batch untouched.
+    * singleFile (the default): the batch is group-count rows of a few
+    * scalars or KB sketches, and one file per batch keeps store files
+    * = batches, not batches × shuffle partitions. Callers whose batch
+    * is DATA-sized (edges, fingerprints, assignments, (dim key, attr)
+    * partials, grams, verdicts) pass false and keep the natural
+    * partitioning; maxRecordsPerFile caps the giant-file case either
+    * way. Replay guards (fold watermark, ledgers, log-swap recovery)
+    * stay with the callers: they differ per store. */
+  def writeBatch(rows: DataFrame, path: String, batchId: Long,
+      singleFile: Boolean = true): Unit = {
+    val batch = rows.withColumn("batch_id", lit(batchId))
+    (if (singleFile) batch.coalesce(1) else batch).write
+      .option("partitionOverwriteMode", "dynamic")
+      .option("maxRecordsPerFile", 10000000L)
+      .partitionBy("batch_id")
+      .mode("overwrite").parquet(path)
+  }
+
+  /** THE guarded store read every path-reading store routes through:
+    * the current batches (`asOfBatch` None) or an AS-OF snapshot —
+    * only batches ≤ k participate, the reproducible-training-data
+    * read. Pin the snapshot id when an experiment starts and every
+    * later ingest batch is invisible to it: the same id always merges
+    * the same partials. The `batch_id` comparison is a PARTITION
     * filter (spec-pinned): a snapshot read prunes to the covered
     * directories and costs no more than a current read.
     *
-    * Compose with the store's own merge:
-    * `mergePartials(Stores.readAsOf(s, path, n), groupCols)` etc.
     * Compaction folds history into one partition and so truncates the
-    * snapshot horizon — ENFORCED (r17): a snapshot below the
-    * persisted [[FoldWatermark]] fails loudly instead of silently
-    * merging an empty/partial view; pin snapshots only on stores
-    * whose compaction cadence respects the experiment's lifetime
-    * (the same trade-off every LSM/delta layout documents). */
-  def readAsOf(s: SparkSession, storePath: String,
-      maxBatchId: Long): DataFrame = {
-    // one marker probe: the as-of guard plus the r18 leftover fence
-    // (sub-watermark rows are a crashed compaction's pre-fold
-    // leftovers, already represented inside the fold partition)
-    val w = FoldWatermark.read(s, storePath)
-    FoldWatermark.requireAtOrAbove(storePath, maxBatchId, w)
-    FoldWatermark.excludeFoldedLeftovers(s.read.parquet(storePath), w)
-      .filter(col("batch_id").cast("long") <= maxBatchId)
+    * snapshot horizon — ENFORCED: an as-of below the persisted
+    * [[FoldWatermark]] fails loudly instead of silently merging the
+    * empty/partial view the filter would leave. Stores that never
+    * compacted carry no marker; the guard costs one existence probe.
+    * The same probe serves the leftover fence: sub-watermark rows are
+    * a crashed compaction's pre-fold leftovers, already inside the
+    * fold partition, so excluding them keeps even the un-recovered
+    * crash window answer-invisible. Compose with the store's own
+    * merge: `mergePartials(Stores.readBatches(s, path, Some(n)), …)`. */
+  def readBatches(s: SparkSession, path: String,
+      asOfBatch: Option[Long] = None): DataFrame = {
+    val w = FoldWatermark.read(s, path)
+    asOfBatch.foreach(k => FoldWatermark.requireAtOrAbove(path, k, w))
+    val store = FoldWatermark.excludeFoldedLeftovers(s.read.parquet(path), w)
+    asOfBatch.fold(store)(k => store.filter(col("batch_id") <= k))
   }
 
   /** Batch-range read: partials of batches in [fromId, toId] — the
@@ -64,15 +92,32 @@ object Stores {
       .filter(col("batch_id").cast("long").between(fromId, toId))
   }
 
-  /** Horizontal compaction for the SKETCH-store family (HLL / KMV /
-    * KLL / CMS — r17): fold batches ≤ `through` into ONE
-    * `batch_id=through` partition via the store's own MERGE
-    * (associative by each store's founding invariant, so every read
-    * is identical before and after) and prune the originals — the
-    * small-files answer [[AggStore.compactThrough]] gives the exact
-    * store, extended to the sketch members (a year of hourly ingest
-    * is ~8.7k KB-sized partitions; listing + footer reads start to
-    * dominate the merge-at-read scan).
+  /** The non-invertible sketch stores' ingest guard (HLL / KMV / KLL):
+    * idempotence covers a replay strictly BELOW the fold watermark, but
+    * a redelivery AT it would dynamic-overwrite the `batch_id=through`
+    * fold partition with one batch's sketch and drop all folded
+    * history. Refuse at or below the watermark, with ONE exception:
+    * `batchId ==` the watermark while that id is GATED is the
+    * whole-fold REBUILD the rebuild-or-gate contract prescribes
+    * (re-sketch the fold's retained raw input minus deleted keys, then
+    * ungate), which must overwrite the fold in place. One marker read
+    * decides both (it is a metadata RPC per ingest). */
+  def requireIngestOrRebuild(s: SparkSession, path: String,
+      batchId: Long): Unit = {
+    val wm = FoldWatermark.read(s, path)
+    if (!(wm.contains(batchId) &&
+        Tombstones.gatedBatches(s, path).contains(batchId)))
+      FoldWatermark.requireIngestAbove(path, batchId, wm)
+  }
+
+  /** THE horizontal compaction fold for the merge-at-read stores
+    * (AggStore and JoinView, HLL / KMV / KLL / CMS): fold batches ≤
+    * `through` into ONE `batch_id=through` partition via the store's
+    * own re-partial aggregate (associative by each store's founding
+    * invariant, so every read is identical before and after) and
+    * prune the originals — the small-files answer (a year of hourly
+    * ingest is ~8.7k KB-sized partitions; listing + footer reads
+    * start to dominate the merge-at-read scan).
     *
     * GATE interaction (the rebuild-or-gate deletion contract,
     * [[Tombstones.gateBatches]]): a gated batch awaits a clean
@@ -85,26 +130,26 @@ object Stores {
     * compaction remains legal and excludes the whole folded history
     * (conservative under-merge) until a whole-fold rebuild.
     *
-    * Crash discipline (the AggStore lineage, re-entrant since r18):
-    * fold materializes BEFORE any file moves, writes under dynamic
-    * overwrite, the fold-commit marker and [[FoldWatermark]] land
-    * (the as-of guards already ride every sketch store's read path),
+    * Crash discipline (re-entrant since r18): the fold materializes
+    * BEFORE any file moves, publishes atomically
+    * ([[FoldWatermark.publishFold]]), the [[FoldWatermark]] lands,
     * then the prune. Re-calling compactThrough after ANY crash point
     * is the recovery: entry reads the fold evidence
     * ([[FoldWatermark.resumeAfterFold]]) and skips straight to the
-    * prune when the fold already landed — the additive sketches (KLL
-    * weights, CMS cells) would otherwise double-count permanently. A
-    * re-run after success is a no-op, and compacting below the
-    * watermark refuses loudly. Compaction is a replay horizon for
-    * ids ≤ `through` (the family convention).
+    * prune when the fold already landed — the additive stores (agg
+    * sums, KLL weights, CMS cells) would otherwise double-count
+    * permanently. A re-run after success is a no-op, compacting below
+    * the watermark refuses loudly, a never-ingested store and an empty
+    * fold region are no-ops (no watermark is written for a fold that
+    * never happened). Compaction is a replay horizon for ids ≤
+    * `through` (the family convention).
     *
     * `fold` = the store's merge at ingest grain (output schema must
-    * equal the per-batch sketch schema — every store's merge already
-    * satisfies this by construction). coalesce(1): fold output is
-    * group-count rows of KB sketches, the stores' own one-file-per-
-    * batch convention. */
-  def compactSketchesThrough(s: SparkSession, storePath: String,
-      through: Long)(fold: DataFrame => DataFrame): Unit = {
+    * equal the per-batch schema). `singleFile` is [[writeBatch]]'s file
+    * policy: group-count folds take one file, JoinView's |dim|-grain
+    * fold keeps its natural partitioning. */
+  def compactThrough(s: SparkSession, storePath: String, through: Long,
+      singleFile: Boolean = true)(fold: DataFrame => DataFrame): Unit = {
     // the family's file-less-dir gate: a never-ingested store (or one
     // whose only batch was an EMPTY dynamic overwrite — _SUCCESS with
     // no batch_id= partition) holds nothing to fold, and a bare
@@ -116,17 +161,16 @@ object Stores {
     // a crashed ATOMIC fold publish recovers first (r19) — see
     // FoldWatermark.recoverFoldStages
     FoldWatermark.recoverFoldStages(fs, storePath)
-    // re-entry after a crash between fold and prune (r18): for the
-    // ADDITIVE sketches (KLL weights, CMS cells) re-running the fold
-    // over fold + surviving originals would permanently double-count —
-    // the retry IS the recovery: watermark (idempotent), prune, done.
-    // The gate check is fresh-fold-only: the landed fold already
-    // passed it, and prune bakes nothing. A watermark above `through`
-    // refuses loudly inside resumeAfterFold.
+    // re-entry after a crash between fold and prune (r18): re-running
+    // the fold over fold + surviving originals would double-count every
+    // additive partial — the retry IS the recovery: watermark
+    // (idempotent), prune, done. The gate check is fresh-fold-only: the
+    // landed fold already passed it, and prune bakes nothing. A
+    // watermark above `through` refuses loudly inside resumeAfterFold.
     val wm = FoldWatermark.read(fs, storePath)
     if (FoldWatermark.resumeAfterFold(fs, storePath, through, wm)) {
       FoldWatermark.write(fs, storePath, through)
-      AggStore.pruneThrough(s, storePath, through)
+      pruneThrough(fs, storePath, through)
       return
     }
     val gated = Tombstones.gatedBatches(s, storePath).filter(_ <= through)
@@ -145,6 +189,8 @@ object Stores {
       s.read.parquet(storePath), wm)
     val region = store.filter(col("batch_id").cast("long") <= through)
       .drop("batch_id")
+    // truncate pins the fold RESULT before the publish below replaces
+    // one of its input partitions (self-referential write)
     val folded = graft.Checkpointing.truncate(fold(region))
     // an empty region (no batches at or below `through`) is a no-op —
     // writing a watermark for a fold that never happened would
@@ -153,26 +199,38 @@ object Stores {
       // atomic publish (r19): stage + in-stage marker + one rename —
       // no window where the fold stands without its commit evidence
       FoldWatermark.publishFold(fs, storePath, through) { stage =>
-        folded.coalesce(1).write.mode("overwrite").parquet(stage)
+        (if (singleFile) folded.coalesce(1) else folded).write
+          .option("maxRecordsPerFile", 10000000L)
+          .mode("overwrite").parquet(stage)
       }
+      // watermark, then prune: every crash window resumes as fold-done
+      // on re-entry or refuses a still-derivable snapshot
+      // (conservative) — never serves a partial answer
       FoldWatermark.write(fs, storePath, through)
-      AggStore.pruneThrough(s, storePath, through)
+      pruneThrough(fs, storePath, through)
     }
   }
 
-  /** Store manifest — what the single maintenance owner looks at
-    * before compacting, snapshotting, or rebuilding: one row per
-    * batch partition (id, row count, file count, bytes) plus the
-    * adjacent mutation state (tombstoned key count / gated batch ids
-    * from the `_tombstones` log, when one exists). Negative batch ids
-    * are maintenance artifacts: compaction folds (reserved partitions)
-    * or out-of-band deletion batches, per the owning store's
-    * convention. Row counts come from parquet FOOTERS — metadata
-    * reads, no Spark job per partition (a store can hold thousands of
-    * batches; launching a count() job per batch would be a
-    * driver-side job loop — the manifest must stay a metadata
-    * operation no matter how many batches exist).
-    */
+  /** THE prune: delete the `batch_id < through` partitions — every
+    * compaction's second phase and its crash recovery (idempotent: a
+    * missing partition is a no-op). List-then-delete, never iterate
+    * candidate ids: ingest accepts ARBITRARY Long batch ids (epoch
+    * millis are a natural scheme), and a `(0L until through)` loop
+    * over a sparse id space would issue billions of no-op deletes.
+    * FileSystem-level, so the publish recovery
+    * ([[FoldWatermark.recoverFoldStages]]) runs it without a session. */
+  def pruneThrough(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      through: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("batch_id=") &&
+          scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
+            .exists(_ < through))
+        fs.delete(st.getPath, true)
+    }
+  }
+
   /** The maintenance DECISION view (r18) — everything the single
     * maintenance owner of a 100 TB store needs in ONE call, instead
     * of five store-specific APIs: batch extents + volume (parquet
@@ -370,6 +428,19 @@ object Stores {
     AutoMaintainReport(layout, compacted, needRecluster)
   }
 
+  /** Store manifest — what the single maintenance owner looks at
+    * before compacting, snapshotting, or rebuilding: one row per
+    * batch partition (id, row count, file count, bytes) plus the
+    * adjacent mutation state (tombstoned key count / gated batch ids
+    * from the `_tombstones` log, when one exists). Negative batch ids
+    * are maintenance artifacts: compaction folds (reserved partitions)
+    * or out-of-band deletion batches, per the owning store's
+    * convention. Row counts come from parquet FOOTERS — metadata
+    * reads, no Spark job per partition (a store can hold thousands of
+    * batches; launching a count() job per batch would be a
+    * driver-side job loop — the manifest must stay a metadata
+    * operation no matter how many batches exist).
+    */
   def describe(s: SparkSession, storePath: String): DataFrame = {
     import s.implicits._
     import org.apache.parquet.hadoop.ParquetFileReader

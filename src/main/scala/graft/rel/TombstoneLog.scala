@@ -91,7 +91,7 @@ private[graft] object TombstoneLog {
   * partition writes under dynamic overwrite, (2) the folded originals
   * prune, (3) the log swaps via staged write + delete + rename. A
   * crash between (1) and (2) double-counts — recovery is
-  * [[pruneThrough]] (idempotent), not a re-run; a crash around (3)
+  * [[Stores.pruneThrough]] (idempotent), not a re-run; a crash around (3)
   * leaves either the old log (harmless — anti-joining an already-
   * removed key is a no-op) or the staged replacement (readers fall
   * back; the next maintenance entry completes the rename). A re-run
@@ -162,7 +162,7 @@ private[graft] object KeyedCompaction {
     val wm = FoldWatermark.read(fs, dataPath)
     if (FoldWatermark.resumeAfterFold(fs, dataPath, through, wm)) {
       FoldWatermark.write(fs, dataPath, through)
-      pruneThrough(s, dataPath, through)
+      Stores.pruneThrough(fs, dataPath, through)
       if (!FoldWatermark.foldCommitted(fs, dataPath, through)) {
         val tgt = TombstoneLog.path(s"$dataPath/batch_id=$through")
         if (fs.exists(tgt)) fs.delete(tgt, true)
@@ -198,7 +198,7 @@ private[graft] object KeyedCompaction {
       // a still-derivable snapshot — conservative, never wrong; the
       // reverse order's crash window silently serves a partial one)
       FoldWatermark.write(fs, dataPath, through)
-      pruneThrough(s, dataPath, through)
+      Stores.pruneThrough(fs, dataPath, through)
       val tgt = TombstoneLog.path(s"$dataPath/batch_id=$through")
       if (fs.exists(tgt)) fs.delete(tgt, true)
       // if that was the LAST partition, a file-less dir would brick
@@ -217,7 +217,7 @@ private[graft] object KeyedCompaction {
           .mode("overwrite").parquet(stage)
       }
       FoldWatermark.write(fs, dataPath, through)
-      pruneThrough(s, dataPath, through)
+      Stores.pruneThrough(fs, dataPath, through)
     }
     if (hasTombs) TombstoneLog.swapIn(kept, fs, logPath, nextPath)
   }
@@ -239,22 +239,6 @@ private[graft] object KeyedCompaction {
     s.read.parquet(logPath)
       .join(broadcast(surviving), keyCond(keyCols, "__k_"), "left_semi")
   }
-
-  /** Delete the `batch_id < through` partitions — the prune phase and
-    * its idempotent crash recovery (lists what exists, so sparse /
-    * time-based batch ids never loop). */
-  def pruneThrough(s: SparkSession, dataPath: String,
-      through: Long): Unit = {
-    val p = TombstoneLog.path(dataPath)
-    val fs = fsOf(s, dataPath)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch_id=") &&
-          scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-            .exists(_ < through))
-        fs.delete(st.getPath, true)
-    }
-  }
 }
 
 /** The compaction FOLD WATERMARK — the retention contract, enforced.
@@ -267,10 +251,11 @@ private[graft] object KeyedCompaction {
   * from "before history began". The store family's rule is loud
   * failure or fallback, never a silent wrong answer, so both shared
   * compaction choreographies ([[KeyedCompaction.compactThrough]] and
-  * `AggStore.compactThrough`) persist the fold watermark as a
-  * `_fold_watermark` file INSIDE the data dir (underscore-prefixed:
-  * Spark's hidden-path filter keeps it out of every scan), and every
-  * as-of reader refuses an `asOf` below it, naming the retention trade
+  * [[Stores.compactThrough]], the merge-at-read stores' fold) persist
+  * the fold watermark as a `_fold_watermark` file INSIDE the data dir
+  * (underscore-prefixed: Spark's hidden-path filter keeps it out of
+  * every scan), and the one guarded read ([[Stores.readBatches]])
+  * refuses an `asOf` below it, naming the retention trade
   * ("pick compaction `through` = the oldest as-of still needed" — the
   * AggStore scaladoc's advice, now enforced).
   *
@@ -280,8 +265,9 @@ private[graft] object KeyedCompaction {
   * window — the [[TombstoneLog.readDir]] shape), and the marker lands
   * BEFORE the prune phase: each crash window either refuses a
   * still-derivable snapshot (harmless, conservative) or is the
-  * pre-existing double-count window whose recovery is pruneThrough.
-  * A fully-erased store's root deletion takes the marker with it —
+  * pre-existing double-count window whose recovery is
+  * [[Stores.pruneThrough]]. A fully-erased store's root deletion
+  * takes the marker with it —
   * correct, because an erased store's history is empty at every as-of
   * (erasure is not rewindable). */
 private[graft] object FoldWatermark {
@@ -508,15 +494,8 @@ private[graft] object FoldWatermark {
             require(fs.rename(st.getPath, tgt),
               s"cannot recover fold stage into place at $tgt")
             write(fs, dataPath, t)
-            // the prune tail, FS-only (shared by both choreographies'
-            // pruneThrough implementations — same listed deletes)
-            fs.listStatus(root).foreach { p =>
-              val n = p.getPath.getName
-              if (n.startsWith("batch_id=") &&
-                  scala.util.Try(n.stripPrefix("batch_id=").toLong)
-                    .toOption.exists(_ < t))
-                fs.delete(p.getPath, true)
-            }
+            // the prune tail — the one prune both choreographies use
+            Stores.pruneThrough(fs, dataPath, t)
           case _ => fs.delete(st.getPath, true)
         }
       }
@@ -583,9 +562,10 @@ private[graft] object FoldWatermark {
     requireIngestAbove(dataPath, batchId, read(fsFor(s, dataPath), dataPath))
 
   /** The same guard against an ALREADY-READ watermark — for ingest
-    * paths that need the value for their own decision too (the KLL
-    * gated-fold-rebuild probe) and must not pay a second marker read
-    * per batch. */
+    * paths that need the value for their own decision too (the
+    * sketch stores' gated-fold-rebuild probe,
+    * [[Stores.requireIngestOrRebuild]]) and must not pay a second
+    * marker read per batch. */
   def requireIngestAbove(dataPath: String, batchId: Long,
       watermark: Option[Long]): Unit =
     watermark.foreach(w => require(batchId > w,

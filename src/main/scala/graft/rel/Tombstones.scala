@@ -54,13 +54,8 @@ object Tombstones {
       new org.apache.hadoop.fs.Path(log).getFileSystem(
         keys.sparkSession.sparkContext.hadoopConfiguration),
       log, log + "_next")
-    keys.select(col(keyCol).as("key")).distinct()
-      .withColumn("kind", lit(kind))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(log)
+    Stores.writeBatch(keys.select(col(keyCol).as("key")).distinct()
+      .withColumn("kind", lit(kind)), log, batchId)
   }
 
   /** The log rows with `kind` normalized (null on pre-r19 rows) —

@@ -421,9 +421,7 @@ object MediaClusterStore {
       // leftover fence (r18): a crashed compaction's pre-fold rows
       // coexist with the fold until re-entry recovery prunes them —
       // an endpoint matching BOTH copies would collect two label rows
-      else graft.rel.FoldWatermark.excludeFoldedLeftovers(
-          s.read.parquet(aDir),
-          graft.rel.FoldWatermark.read(s, aDir))
+      else graft.rel.Stores.readBatches(s, aDir)
         .filter(col("batch_id") < batchId)
         .join(broadcast(endpoints.toSeq.toDF("e_m", "e_id")),
           col("modality") === col("e_m") &&
@@ -491,12 +489,9 @@ object MediaClusterStore {
     }
     if (newRemaps.nonEmpty)
       // coalesce(1): merge-event-sized by the scaladoc bound
-      newRemaps.toDF("modality", "old_label", "new_label")
-        .withColumn("batch_id", lit(batchId))
-        .coalesce(1).write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .mode("overwrite").parquet(remapDir(storePath))
+      graft.rel.Stores.writeBatch(
+        newRemaps.toDF("modality", "old_label", "new_label"),
+        remapDir(storePath), batchId)
 
     // new members' assignments: pair participants take their component
     // root (a pair-endpoint-sized broadcast map), everyone else is its
@@ -507,19 +502,15 @@ object MediaClusterStore {
     // erased keys never (re-)join: a batch re-delivering an erased
     // member must not write a fresh assignment row (the judge already
     // filters its pairs when the fingerprint store was erased too)
-    minusTombstones(s, storePath,
-        batchMembers.select(col("media_id"), col("modality")))
-      .join(broadcast(memberRoots.toSeq.toDF("r_m", "r_id", "root")),
-        col("modality") === col("r_m") && col("media_id") === col("r_id"),
-        "left")
-      .select(col("media_id"), col("modality"),
-        coalesce(col("root"), col("media_id")).as("label"))
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", 10000000L)
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(aDir)
+    graft.rel.Stores.writeBatch(
+      minusTombstones(s, storePath,
+          batchMembers.select(col("media_id"), col("modality")))
+        .join(broadcast(memberRoots.toSeq.toDF("r_m", "r_id", "root")),
+          col("modality") === col("r_m") && col("media_id") === col("r_id"),
+          "left")
+        .select(col("media_id"), col("modality"),
+          coalesce(col("root"), col("media_id")).as("label")),
+      aDir, batchId, singleFile = false)
   }
 
   /** Keyed erasure for cluster MEMBERSHIP: (media_id, modality)
@@ -540,12 +531,8 @@ object MediaClusterStore {
     val s = keys.sparkSession
     graft.rel.TombstoneLog.recoverSwap(fsOf(s, storePath),
       tombDir(storePath), tombNextDir(storePath))
-    keys.select(col("media_id"), col("modality"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(tombDir(storePath))
+    graft.rel.Stores.writeBatch(keys.select(col("media_id"), col("modality")),
+      tombDir(storePath), batchId)
   }
 
   /** Anti-join the broadcast cluster tombstone log (or its staged
@@ -584,7 +571,7 @@ object MediaClusterStore {
     // compaction watermark bounds how far back as-of stays derivable,
     // the store-family retention trade — ENFORCED: an as-of below the
     // fold watermark fails loudly instead of serving an empty history)
-    val data = graft.rel.CardinalityStore.asOfRead(s, aDir, asOfBatch)
+    val data = graft.rel.Stores.readBatches(s, aDir, asOfBatch)
     val base = data.select("media_id", "modality", "label")
     def resolveThrough(rel: DataFrame) = base.join(rel,
         col("modality") === col("r_m") && col("label") === col("old_label"),
@@ -686,7 +673,7 @@ object MediaClusterStore {
     * before any file moves; re-applying a baked remap at read is a
     * no-op (targets are never keys), so a crash between the fold
     * write and the remap prune is benign; the prunes are idempotent
-    * ([[graft.rel.KeyedCompaction.pruneThrough]]). Compaction is a
+    * ([[graft.rel.Stores.pruneThrough]]). Compaction is a
     * replay horizon for ids ≤ `through` — the store-family
     * convention. */
   def compactThrough(s: SparkSession, storePath: String,
@@ -715,7 +702,7 @@ object MediaClusterStore {
     // folded remap partitions (≤ through) are baked into the fold —
     // idempotent partition deletes, no swap needed; a fully-pruned log
     // deletes its root (the file-less-dir rule)
-    graft.rel.KeyedCompaction.pruneThrough(s, remapDir(storePath),
+    graft.rel.Stores.pruneThrough(fsOf(s, storePath), remapDir(storePath),
       through + 1)
     deleteIfPartitionless(s, remapDir(storePath))
   }
@@ -779,7 +766,7 @@ object MediaClusterStore {
         col("media_id").as("new_label")))
     // remap prune FIRST (see the crash-discipline scaladoc): the fold
     // below carries fresh labels, so the log is dead weight either way
-    graft.rel.KeyedCompaction.pruneThrough(s, remapDir(storePath),
+    graft.rel.Stores.pruneThrough(fsOf(s, storePath), remapDir(storePath),
       through + 1)
     deleteIfPartitionless(s, remapDir(storePath))
     graft.rel.KeyedCompaction.compactThrough(s, aDir,

@@ -72,13 +72,9 @@ object MediaDedupStore {
     // the replay-horizon guard: re-ingesting at or below the fold
     // watermark would resurrect a pruned partition
     requireIngestAllowed(fps.sparkSession, storePath, batchId)
-    fps.select(col("media_id"), col("modality"), col("h"))
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", 10000000L)
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(dataDir(storePath))
+    graft.rel.Stores.writeBatch(
+      fps.select(col("media_id"), col("modality"), col("h")),
+      dataDir(storePath), batchId, singleFile = false)
   }
 
   /** Keyed deletion: (media_id, modality) tombstones — modality is part
@@ -94,12 +90,8 @@ object MediaDedupStore {
       new org.apache.hadoop.fs.Path(storePath)
         .getFileSystem(s.sparkContext.hadoopConfiguration),
       tombDir(storePath), tombNextDir(storePath))
-    keys.select(col("media_id"), col("modality"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(tombDir(storePath))
+    graft.rel.Stores.writeBatch(keys.select(col("media_id"), col("modality")),
+      tombDir(storePath), batchId)
   }
 
   /** The standing fingerprint set: batches ≤ asOfBatch (all when None)
@@ -113,8 +105,7 @@ object MediaDedupStore {
     if (!hasFingerprints(s, storePath))
       return s.range(0).select(col("id").as("media_id"),
         lit("").as("modality"), col("id").as("h"))
-    val data = graft.rel.CardinalityStore.asOfRead(
-      s, dataDir(storePath), asOfBatch)
+    val data = graft.rel.Stores.readBatches(s, dataDir(storePath), asOfBatch)
     minusTombstones(s, storePath,
       data.select("media_id", "modality", "h"))
   }
@@ -163,9 +154,7 @@ object MediaDedupStore {
     // their fingerprints are already inside the fold partition, and
     // keeping both would judge each history row twice)
     val cleaned = minusTombstones(s, storePath,
-      graft.rel.FoldWatermark.excludeFoldedLeftovers(
-          s.read.parquet(dataDir(storePath)),
-          graft.rel.FoldWatermark.read(s, dataDir(storePath)))
+      graft.rel.Stores.readBatches(s, dataDir(storePath))
         .filter(col("batch_id") < beforeBatch)
         .select("media_id", "modality", "h"))
     val sb = ImageDedup.blockPairKeys(cleaned)
@@ -317,12 +306,8 @@ object MediaDedupStore {
     // batch keeps the verdict store's file count = batch count (the
     // q81/store convention); a pathologically cliqued corpus is the
     // documented output-bound regime, not a plan problem
-    judgeBatch(s, b, storePath, batchId, threshold)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(verdictsPath)
+    graft.rel.Stores.writeBatch(judgeBatch(s, b, storePath, batchId,
+      threshold), verdictsPath, batchId)
     applyFingerprintBatch(b, storePath, batchId)
   }
 

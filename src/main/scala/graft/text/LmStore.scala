@@ -28,22 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object LmStore {
 
-  private def writeCounts(counts: DataFrame, storePath: String,
-      batchId: Long): Unit =
-    counts
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(storePath)
-
-  /** Count one batch and write it under its own partition. Ingest
-    * batch ids are NON-NEGATIVE (the streaming checkpoint's space);
-    * deletions take the negative ids — shared-space collisions would
-    * let a redelivered trigger overwrite a deletion. Arrivals filter
-    * through the deletion ledger (delete-before-arrival + permanence:
-    * a deleted doc_id never re-enters — the counted-gram-store
-    * semantics). */
   /** The membership ledger beside the store: which doc ids actually
     * contributed counts (one id per ingested doc, per-batch fenced
     * partitions like everything else). A COUNT store cannot answer
@@ -54,7 +38,15 @@ object LmStore {
   private def ingestedPath(storePath: String): String =
     storePath.stripSuffix("/") + "_ingested"
 
-  /** DELETE-DURING-REPLAY CAVEAT (the clusterIngestStream convention,
+  /** Count one batch and write it under its own partition. Ingest
+    * batch ids are NON-NEGATIVE (the streaming checkpoint's space);
+    * deletions take the negative ids — shared-space collisions would
+    * let a redelivered trigger overwrite a deletion. Arrivals filter
+    * through the deletion ledger (delete-before-arrival + permanence:
+    * a deleted doc_id never re-enters — the counted-gram-store
+    * semantics).
+    *
+    * DELETE-DURING-REPLAY CAVEAT (the clusterIngestStream convention,
     * shared with [[graft.text.SubstrDedup.writeGramStoreCounted]]):
     * the ledger filter makes a REDELIVERED batch diverge from its
     * original write when a deletion landed in the crash window — the
@@ -76,14 +68,10 @@ object LmStore {
         prior.withColumnRenamed("key", idCol), Seq(idCol), "left_anti")
       case None => docs
     })
-    writeCounts(KneserNey.trigramCounts(clean, textCol), storePath,
-      batchId)
-    clean.select(col(idCol).as("key")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(ingestedPath(storePath))
+    graft.rel.Stores.writeBatch(KneserNey.trigramCounts(clean, textCol),
+      storePath, batchId)
+    graft.rel.Stores.writeBatch(clean.select(col(idCol).as("key")).distinct(),
+      ingestedPath(storePath), batchId)
   }
 
   /** GDPR-style keyed delete — the invertible-class pattern (counts
@@ -122,7 +110,7 @@ object LmStore {
         fresh.limit(0)
       else fresh.join(s.read.parquet(ingestedPath(storePath))
         .select(col("key").as(idCol)).distinct(), Seq(idCol))
-    writeCounts(
+    graft.rel.Stores.writeBatch(
       KneserNey.trigramCounts(contributed, textCol)
         .select(col("w1"), col("w2"), col("w3"),
           (-col("c3")).as("c3")),

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.rel.Stores
 
 /** The INCREMENTAL composed curation pipeline — [[Pipeline]]'s
   * end-to-end semantics served through the STANDING stores (VERDICT
@@ -108,13 +109,6 @@ object PipelineInc {
     Mixing.temperatureRates(calibration, "lang", Mixing.q74Alpha)
       .coalesce(1) // domain-cardinality rows (the rate-table bound)
       .write.mode("overwrite").parquet(ratesPath(root))
-
-  private def writeFenced(rows: DataFrame, path: String,
-      batchId: Long): Unit =
-    rows.withColumn("batch_id", lit(batchId))
-      .write.option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(path)
 
   /** Fenced store read — partition-gated (the file-less-dir rule),
     * restricted to batches strictly below the acting id so a crash
@@ -269,14 +263,16 @@ object PipelineInc {
       survivors.groupBy("lang", "shard")
         .agg(sum("n_tokens_kept").as("toks")))
 
-    writeFenced(rel, verdictsPath(root), batchId)
-    writeFenced(wmRows, packWmPath(root), batchId)
+    // every write is batch-sized data: natural partitioning
+    def write(rows: DataFrame, path: String): Unit =
+      Stores.writeBatch(rows, path, batchId, singleFile = false)
+    write(rel, verdictsPath(root))
+    write(wmRows, packWmPath(root))
     // ingest the batch into the judge stores (all pure functions of
     // the batch text — replay under the same id overwrites itself)
-    writeFenced(fps.select("fp").distinct(), fpsPath(root), batchId)
-    writeFenced(SubstrDedup.batchGrams(b), gramsPath(root), batchId)
-    writeFenced(NearDup.withStoreParams(sigN, 64, 4), sigsPath(root),
-      batchId)
+    write(fps.select("fp").distinct(), fpsPath(root))
+    write(SubstrDedup.batchGrams(b), gramsPath(root))
+    write(NearDup.withStoreParams(sigN, 64, 4), sigsPath(root))
     rel
   }
 

@@ -274,25 +274,6 @@ object SubstrDedup {
     gramsOf(toksOf(docs), w).select("doc_id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("c"))
 
-  private def writeCountedBatch(rows: DataFrame, path: String,
-      batchId: Long): Unit = {
-    require(batchId != Long.MinValue,
-      "batch id Long.MinValue is reserved for the compaction fold " +
-        "(a caller batch landing there would overwrite folded history)")
-    // the replay-horizon guard for INGEST ids (the counted algebra is
-    // additive: a folded batch redelivered after compaction would
-    // recreate a partition whose counts are already inside the fold —
-    // net refcounts inflate silently). Negative DELETION ids skip it:
-    // a replayed delete is ledger-fenced to an empty negation instead.
-    if (batchId >= 0)
-      graft.rel.FoldWatermark.requireIngestAbove(rows.sparkSession,
-        path, batchId)
-    rows.withColumn("batch_id", lit(batchId))
-      .write.option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(path)
-  }
-
   /** Ingest one batch of documents into the counted store. Docs on the
     * deletion ledger are EXCLUDED: a deleted doc id can never re-enter
     * the store (see [[deleteFromGramStoreCounted]] — deletes here are
@@ -327,16 +308,21 @@ object SubstrDedup {
         "left_anti")
       case None => corpus
     }) // grammed AND recorded below — compute once
-    writeCountedBatch(gramRefcounts(admitted, w), path, batchId)
+    // the replay-horizon guard (the counted algebra is additive: a
+    // folded batch redelivered after compaction would recreate a
+    // partition whose counts are already inside the fold — net
+    // refcounts inflate silently). Deletion ids skip it: a replayed
+    // delete is ledger-fenced to an empty negation instead.
+    graft.rel.FoldWatermark.requireIngestAbove(corpus.sparkSession, path,
+      batchId)
+    graft.rel.Stores.writeBatch(gramRefcounts(admitted, w), path, batchId,
+      singleFile = false)
     // membership ledger: the (h, c) aggregates cannot answer "did this
     // doc ever contribute?", and the delete path must not subtract
     // grams of a doc that never did (see deleteFromGramStoreCounted)
-    admitted.select(col("doc_id").as("key")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(ingestedLogPath(path))
+    graft.rel.Stores.writeBatch(
+      admitted.select(col("doc_id").as("key")).distinct(),
+      ingestedLogPath(path), batchId)
   }
 
   /** The membership ledger beside the counted store (which doc ids
@@ -376,6 +362,9 @@ object SubstrDedup {
         "redelivered trigger sharing a deletion's id would " +
         "dynamic-overwrite the negation partition and silently " +
         "resurrect the deleted docs' grams (the LmStore rule)")
+    require(batchId != Long.MinValue,
+      "batch id Long.MinValue is reserved for the compaction fold " +
+        "(a caller batch landing there would overwrite folded history)")
     val s = deleted.sparkSession
     val fresh = graft.Checkpointing.truncate(
         graft.rel.Tombstones.deletedKeys(s, path) match {
@@ -397,10 +386,10 @@ object SubstrDedup {
         fresh.limit(0)
       else fresh.join(s.read.parquet(ingestedLogPath(path))
         .select(col("key").as("doc_id")).distinct(), Seq("doc_id"))
-    writeCountedBatch(
+    graft.rel.Stores.writeBatch(
       gramRefcounts(contributed, w)
         .select(col("h"), (-col("c")).as("c")),
-      path, batchId)
+      path, batchId, singleFile = false)
     graft.rel.Tombstones.applyDelete(fresh.select("doc_id"), "doc_id",
       path, batchId)
   }
@@ -447,7 +436,7 @@ object SubstrDedup {
   }
 
   /** Fold the net counts into one positive relation under the RESERVED
-    * partition (writeCountedBatch rejects it from callers, so no later
+    * partition (ingest and delete reject it from callers, so no later
     * insert, delete, or streaming trigger can dynamic-overwrite folded
     * history). Read-before ≡ read-after (spec-pinned).
     *
@@ -464,7 +453,7 @@ object SubstrDedup {
     * REPLAY HORIZON, enforced: the fold records the largest folded
     * INGEST id as the [[graft.rel.FoldWatermark]] (written into the
     * tmp BEFORE the swap — no window without it), and
-    * writeCountedBatch refuses non-negative ids at or below it — a
+    * [[writeGramStoreCounted]] refuses ingest ids at or below it — a
     * redelivered folded batch would recreate counts already inside
     * the fold. Deletion ids stay unguarded (a replayed delete is
     * ledger-fenced to an empty negation). Run from the single
@@ -488,10 +477,8 @@ object SubstrDedup {
     val old = new org.apache.hadoop.fs.Path(gramCompactOld(path))
     fs.delete(tmp, true)
     fs.delete(old, true)
-    net.withColumn("batch_id", lit(Long.MinValue))
-      .write.option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .mode("overwrite").parquet(tmp.toString)
+    graft.rel.Stores.writeBatch(net, tmp.toString, Long.MinValue,
+      singleFile = false)
     // carry the streaming lineage fence across the swap
     val lineage = new org.apache.hadoop.fs.Path(store, "_lineage")
     if (fs.exists(lineage))

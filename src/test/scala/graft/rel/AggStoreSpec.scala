@@ -245,7 +245,8 @@ class AggStoreSpec extends SparkSpec {
       AggStore.compactThrough(spark, store, groupCols, 2L)
       assert(partitions === Set(2L, 3L, 4L) && full === fullBefore)
       // prune is idempotent: deleting already-deleted partitions no-ops
-      AggStore.pruneThrough(spark, store, 2L)
+      Stores.pruneThrough(new org.apache.hadoop.fs.Path(store)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration), store, 2L)
       assert(partitions === Set(2L, 3L, 4L) && full === fullBefore)
     } finally {
       import scala.jdk.CollectionConverters._

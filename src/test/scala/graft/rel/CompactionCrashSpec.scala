@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Compaction crash RE-ENTRY (r18, VERDICT r17 #1): for each of the
-  * three shared choreographies — [[AggStore.compactThrough]],
-  * [[Stores.compactSketchesThrough]] (via its additive KLL and CMS
-  * members, where a re-fold double-counts permanently), and
+  * two shared choreographies — [[Stores.compactThrough]] (via
+  * [[AggStore.compactThrough]] and its additive KLL and CMS members,
+  * where a re-fold double-counts permanently) and
   * [[KeyedCompaction.compactThrough]] (via GraphStore) — reconstruct
   * the exact on-disk state a crash between fold-write and prune
   * leaves, and pin that:

@@ -23,7 +23,8 @@ class StoresSpec extends SparkSpec {
       (0 until 3).foreach(b => AggStore.applyBatch(slice(b), groupCols,
         "l_extendedprice", store, b.toLong))
       def asOf(n: Long) = AggStore.mergePartials(
-          Stores.readAsOf(spark, store, n).drop("batch_id"), groupCols)
+          Stores.readBatches(spark, store, Some(n)).drop("batch_id"),
+          groupCols)
         .orderBy(groupCols.map(col): _*).collect().map(_.toSeq).toSeq
       val snap2 = asOf(2L)
       // the raw-survivors form: snapshot 2 = one GROUP BY over slices 0..2
@@ -65,7 +66,8 @@ class StoresSpec extends SparkSpec {
       (0 until 5).foreach(b => AggStore.applyBatch(slice(b), groupCols,
         "l_extendedprice", store, b.toLong))
       def asOf(n: Long) = AggStore.mergePartials(
-          Stores.readAsOf(spark, store, n).drop("batch_id"), groupCols)
+          Stores.readBatches(spark, store, Some(n)).drop("batch_id"),
+          groupCols)
         .orderBy(groupCols.map(col): _*).collect().map(_.toSeq).toSeq
       val snap2 = asOf(2L)
       AggStore.compactThrough(spark, store, groupCols, 2L)
@@ -102,7 +104,7 @@ class StoresSpec extends SparkSpec {
       (0 until 4).foreach(b => AggStore.applyBatch(
         li.filter(pmod($"l_orderkey", lit(4)) === b), groupCols,
         "l_extendedprice", store, b.toLong))
-      val df = Stores.readAsOf(spark, store, 1L)
+      val df = Stores.readBatches(spark, store, Some(1L))
       val scans = df.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
@@ -385,5 +387,101 @@ class StoresSpec extends SparkSpec {
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
     }
+  }
+
+  // ------------------------------------- AggStore through the one fold
+  private def withDir(prefix: String)(body: java.nio.file.Path => Unit)
+      : Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("AggStore compaction of a never-ingested path is a no-op") {
+    withDir("aggnever") { dir =>
+      val store = dir.resolve("store.parquet").toString
+      AggStore.compactThrough(spark, store, groupCols, 2L)
+      assert(!java.nio.file.Files.exists(dir.resolve("store.parquet")),
+        "compacting nothing must not create a store")
+    }
+  }
+
+  test("AggStore compaction refuses a gated batch at or below " +
+      "`through` with the family's message and leaves the store as is") {
+    withDir("agggated") { dir =>
+      val store = dir.resolve("store.parquet").toString
+      (0 until 3).foreach(b => AggStore.applyBatch(
+        li.filter(pmod($"l_orderkey", lit(3)) === b), groupCols,
+        "l_extendedprice", store, b.toLong))
+      Tombstones.gateBatches(spark, store, Seq(1L), mutationId = 0L)
+      val e = intercept[IllegalArgumentException](
+        AggStore.compactThrough(spark, store, groupCols, 2L))
+      assert(e.getMessage.contains("gated batch(es) 1 await a clean " +
+        "rebuild"), e.getMessage)
+      assert(FoldWatermark.read(spark, store).isEmpty)
+      assert(Stores.describe(spark, store).select("batch_id").as[Long]
+        .collect().toSet === Set(0L, 1L, 2L))
+    }
+  }
+
+  test("AggStore compaction of an empty fold region writes no " +
+      "watermark and moves no answer") {
+    withDir("aggempty") { dir =>
+      val store = dir.resolve("store.parquet").toString
+      (5 until 7).foreach(b => AggStore.applyBatch(
+        li.filter(pmod($"l_orderkey", lit(2)) === b - 5), groupCols,
+        "l_extendedprice", store, b.toLong))
+      def full = AggStore.aggFromStore(spark, store, groupCols)
+        .orderBy(groupCols.map(col): _*).collect().map(_.toSeq).toSeq
+      val before = full
+      AggStore.compactThrough(spark, store, groupCols, 2L)
+      assert(FoldWatermark.read(spark, store).isEmpty,
+        "no watermark for a fold that never happened")
+      assert(full === before)
+      assert(Stores.describe(spark, store).select("batch_id").as[Long]
+        .collect().toSet === Set(5L, 6L))
+    }
+  }
+
+  test("the batch layout lives in Stores: per-batch partitioned writes " +
+      "and the batch_id= prefix prune are written out once") {
+    import scala.jdk.CollectionConverters._
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory,
+      s"run from the repo root: ${main.getAbsolutePath}")
+    val sources = java.nio.file.Files.walk(main.toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      .toSeq
+    // Stores.writeBatch, plus the four rewrites of a relation that
+    // already carries batch_id: Tombstones.ungateBatch's static log
+    // rewrite, TombstoneLog.swapIn's kept-log stage, the recluster
+    // plan apply and the verdict scrub
+    val partitioned = sources
+      .map { case (f, src) => f -> scala.util.matching.Regex
+        .quote("partitionBy(\"batch_id\")").r.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+    assert(partitioned === Map("Stores.scala" -> 1,
+      "Tombstones.scala" -> 1, "TombstoneLog.scala" -> 1,
+      "MediaClusterStore.scala" -> 1, "MediaDedupStore.scala" -> 1))
+    // a prefix-delete loop: a def whose body keeps listed entries named
+    // batch_id=… and deletes them
+    val defStart = "(?m)^\\s*(?:(?:private|protected|override|final)" +
+      "(?:\\[\\w+\\])?\\s+)*def\\s+(\\w+)"
+    val pruners = sources.flatMap { case (f, src) =>
+      val starts = defStart.r.findAllMatchIn(src).toSeq
+      starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
+        case (m, end) if {
+          val body = src.substring(m.start, end)
+          body.contains("startsWith(\"batch_id=\")") &&
+            "\\.delete\\(\\w+\\.getPath".r.findFirstIn(body).isDefined
+        } => s"$f:${m.group(1)}"
+      }
+    }
+    assert(pruners === Seq("Stores.scala:pruneThrough"))
   }
 }
