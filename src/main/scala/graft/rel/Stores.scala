@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * guarded read ([[readBatches]], [[readBatchRange]]), the one fold
   * ([[compactThrough]]) and the one prune ([[pruneThrough]]) — plus the
   * maintenance views over it ([[describe]], [[maintenancePlan]],
-  * [[autoMaintain]]).
+  * [[autoMaintain]]) and the one crash-safe commit of a whole-root
+  * store rewrite ([[swapDir]], [[recoverSwap]]).
   */
 object Stores {
 
@@ -220,15 +221,128 @@ object Stores {
     * FileSystem-level, so the publish recovery
     * ([[FoldWatermark.recoverFoldStages]]) runs it without a session. */
   def pruneThrough(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      through: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch_id=") &&
-          scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-            .exists(_ < through))
-        fs.delete(st.getPath, true)
+      through: Long): Unit =
+    batchIds(fs, path).filter(_ < through).foreach(id =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, s"batch_id=$id"), true))
+
+  /** THE `batch_id=N` listing: the ids of the partitions standing under
+    * `dir` (empty when the dir is absent) — one existence probe and one
+    * listStatus, no Spark job. Names that do not parse as a Long id are
+    * not batches. */
+  def batchIds(fs: org.apache.hadoop.fs.FileSystem, dir: String)
+      : Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch_id="))
+      .flatMap(n => n.stripPrefix("batch_id=").toLongOption)
+  }
+
+  // -------------------------------------------------- the root swap
+  // Every WHOLE-ROOT rewrite of a store (signature-store compaction,
+  // the heavy-hitter merge, the gram-store fold, the IVF-PQ codes fold,
+  // the tombstone fold) commits through one rename swap and recovers
+  // through one probe of its two siblings, here.
+
+  /** Filesystem schemes whose `rename` is a non-atomic copy+delete (or
+    * can expose a partially-renamed directory): the store commit
+    * protocols would CORRUPT on them instead of failing — so any store
+    * entry point fails loudly up front. HDFS, POSIX-local, and viewfs
+    * renames are atomic; abfs (ADLS Gen2 with hierarchical namespace)
+    * is too. Object-store deployments get the same guarantees
+    * transactionally from a table format (Iceberg/Delta/Hudi) or point
+    * the store at HDFS — the standard practice the message names. */
+  private val NonAtomicRenameSchemes =
+    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift", "wasb", "wasbs")
+
+  /** Fail loudly when `fs` cannot give the rename-swap protocols their
+    * atomicity assumption — a silent copy+delete "rename" would corrupt
+    * the store on a crash mid-commit rather than leave a recoverable
+    * state. */
+  private[graft] def requireAtomicRename(
+      fs: org.apache.hadoop.fs.FileSystem, what: String): Unit = {
+    val scheme = Option(fs.getUri.getScheme).map(_.toLowerCase).getOrElse("")
+    if (NonAtomicRenameSchemes.contains(scheme))
+      throw new IllegalStateException(
+        s"$what relies on atomic FileSystem.rename for its crash-safe " +
+          s"commit protocol, but scheme '$scheme' renames by copy+delete " +
+          "— a crash mid-commit would corrupt the store instead of " +
+          "leaving a recoverable state. Point the store at HDFS (or " +
+          "another atomic-rename filesystem), or manage it through a " +
+          "transactional table format.")
+  }
+
+  /** The swap's two siblings of `root`: (tmp, old). */
+  private def siblings(root: org.apache.hadoop.fs.Path) = (
+    new org.apache.hadoop.fs.Path(root.getParent, root.getName + ".compacting"),
+    new org.apache.hadoop.fs.Path(root.getParent, root.getName + ".precompact"))
+
+  /** THE whole-root rewrite commit: `write(tmp)` fills the sibling
+    * `<root>.compacting` COMPLETELY (every read of the old root is done
+    * before anything moves), then rename(root → `<root>.precompact`),
+    * rename(tmp → root), delete(old). RENAMES only in the critical
+    * section, never a recursive delete of live data: a recursive delete
+    * is not atomic outside HDFS, and a crash midway through it would
+    * leave a partially-deleted store that is indistinguishable from an
+    * intact one. Every crash point leaves a complete copy whose place
+    * [[recoverSwap]] (run first here, and by every reader and writer of
+    * the store) decides from which paths exist. A root that does not
+    * exist yet (a store's first write) skips the aside rename. */
+  def swapDir(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path)(
+      write: org.apache.hadoop.fs.Path => Unit): Unit = {
+    recoverSwap(fs, root)
+    val (tmp, old) = siblings(root)
+    write(tmp)
+    if (fs.exists(root) && !fs.rename(root, old))
+      throw new java.io.IOException(
+        s"store swap failed: could not move $root aside to $old")
+    if (!fs.rename(tmp, root))
+      throw new java.io.IOException(
+        s"store swap failed: could not move $tmp into $root")
+    fs.delete(old, true)
+  }
+
+  /** Crash recovery for [[swapDir]]; idempotent, two existence probes
+    * in the steady state. Every restart state is decided from which
+    * paths exist:
+    *   - old and root: the commit finished (or a recovery died deleting
+    *     old) — old is superseded garbage; delete it.
+    *   - old and tmp, no root: crash between the two renames — tmp is
+    *     complete (it was written before the first rename); finish the
+    *     swap forward.
+    *   - old alone: defensive (not reachable under the protocol) —
+    *     restore old as the root.
+    *   - tmp and root: crash before the first rename — tmp is an
+    *     uncommitted (possibly partial) rewrite; discard it.
+    *   - tmp alone: either a crash inside a store's FIRST write (tmp is
+    *     partial) or a complete rewrite whose root was removed by an
+    *     older delete-then-rename swap. Spark's `_SUCCESS` job-commit
+    *     marker tells them apart: promote a tmp that holds it, discard
+    *     one without it. */
+  def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    requireAtomicRename(fs, s"store at $root")
+    val (tmp, old) = siblings(root)
+    val hasOld = fs.exists(old)
+    val hasTmp = fs.exists(tmp)
+    if ((hasOld || hasTmp) && !fs.exists(root)) {
+      val complete = hasTmp && (hasOld ||
+        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
+      val from = if (complete) Some(tmp) else if (hasOld) Some(old) else None
+      from.foreach(f => if (!fs.rename(f, root))
+        throw new java.io.IOException(
+          s"could not finish crashed store swap: $f -> $root"))
     }
+    if (hasOld) fs.delete(old, true)
+    if (hasTmp) fs.delete(tmp, true)
+  }
+
+  /** [[recoverSwap]] for a store path under the session's Hadoop
+    * configuration. */
+  private[graft] def recoverSwap(s: SparkSession, root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    recoverSwap(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
   }
 
   /** The maintenance DECISION view (r18) — everything the single
@@ -258,13 +372,7 @@ object Stores {
     val batchPath = if (isCluster) s"$storePath/assignments"
       else storePath
     val bp = new org.apache.hadoop.fs.Path(batchPath)
-    val ids: Seq[Long] =
-      if (!fs.exists(bp)) Seq.empty
-      else fs.listStatus(bp).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id="))
-        .flatMap(st => scala.util.Try(
-          st.getPath.getName.stripPrefix("batch_id=").toLong).toOption)
+    val ids = batchIds(fs, batchPath)
     val wmark = FoldWatermark.read(fs, batchPath)
     // layout sniff (r19 — VERDICT r18 "what's wrong" #3): a typo'd
     // path used to return a zero row indistinguishable from a clean
@@ -448,13 +556,13 @@ object Stores {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = root.getFileSystem(conf)
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_id="))
-    val rows = parts.map { st =>
-      val id = st.getPath.getName.stripPrefix("batch_id=").toLong
-      val files = fs.listStatus(st.getPath).filter(f => f.isFile &&
-        f.getPath.getName.endsWith(".parquet"))
+    // a mistyped path fails loudly instead of describing an empty store
+    if (!fs.exists(root))
+      throw new java.io.FileNotFoundException(s"no store at $storePath")
+    val rows = batchIds(fs, storePath).map { id =>
+      val files = fs.listStatus(
+          new org.apache.hadoop.fs.Path(root, s"batch_id=$id"))
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       val nRows = files.map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
         try r.getRecordCount finally r.close()

@@ -535,18 +535,7 @@ private[graft] object FoldWatermark {
         "one partition, so compacting below the fold is never " +
         "meaningful (pick through >= the watermark)"))
     (w.contains(through) || foldCommitted(fs, dataPath, through)) &&
-      hasPartitionsBelow(fs, dataPath, through)
-  }
-
-  private def hasPartitionsBelow(fs: org.apache.hadoop.fs.FileSystem,
-      dataPath: String, through: Long): Boolean = {
-    val p = TombstoneLog.path(dataPath)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith("batch_id=") &&
-        scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-          .exists(_ < through)
-    }
+      Stores.batchIds(fs, dataPath).exists(_ < through)
   }
 
   /** The INGEST-side replay-horizon guard: compaction is a replay

@@ -212,21 +212,18 @@ object Tombstones {
   }
 
   /** Fold the log into the store: rewrite the data minus tombstones
-    * and truncate the log. Read-before ≡ read-after (spec-pinned);
-    * bounds the standing anti-join. NOT atomic across the two deletes
-    * — run it from the single maintenance owner, like every store
-    * rewrite in the engine. */
+    * through the root swap ([[Stores.swapDir]] — a crash at any point
+    * leaves one complete store that [[Stores.recoverSwap]] finds), then
+    * truncate the log. Read-before ≡ read-after (spec-pinned); bounds
+    * the standing anti-join. Run it from the single maintenance owner,
+    * like every store rewrite in the engine. */
   def compact(s: SparkSession, storePath: String, keyCol: String): Unit = {
     deletedKeys(s, storePath).foreach { _ =>
-      val survivors = filterDeleted(s.read.parquet(storePath), keyCol,
-        storePath)
-      val tmp = storePath.stripSuffix("/") + "_compact_tmp"
-      survivors.write.mode("overwrite").parquet(tmp)
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(storePath).getFileSystem(conf)
-      fs.delete(new org.apache.hadoop.fs.Path(storePath), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(storePath))
+      val root = new org.apache.hadoop.fs.Path(storePath)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      Stores.swapDir(fs, root)(tmp => filterDeleted(
+        s.read.parquet(storePath), keyCol, storePath)
+        .write.parquet(tmp.toString))
       // the log AND any staged kept-set replacement: deleting only the
       // log inside a swap window would leave readers falling back to
       // the stale staged set (resurrecting already-netted tombstones)

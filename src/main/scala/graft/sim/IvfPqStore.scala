@@ -98,7 +98,7 @@ object IvfPqStore {
       oracleDumpName: Option[String] = None): DataFrame = {
     import s.implicits._
     val (cents, codebooks) = loadModel(s, path, kCells, m, k)
-    recoverCodesSwap(s, path)
+    graft.rel.Stores.recoverSwap(s, s"$path/codes.parquet")
     // explicit select: partitionBy surfaces `cell` as the LAST column
     // (and as the inferred partition type), while the tuple encoder
     // binds by position
@@ -128,7 +128,7 @@ object IvfPqStore {
       kCells: Int = 16, m: Int = 8, k: Int = 32): Unit = {
     import s.implicits._
     val (cents, codebooks) = loadModel(s, path, kCells, m, k)
-    recoverCodesSwap(s, path)
+    graft.rel.Stores.recoverSwap(s, s"$path/codes.parquet")
     val seen = s.read.parquet(s"$path/codes.parquet").select("vec_id")
     val fresh = graft.rel.Tombstones.filterDeleted(
         // delete-before-arrival: a vec_id tombstoned before its vector
@@ -175,74 +175,48 @@ object IvfPqStore {
     graft.rel.Tombstones.applyDelete(keys, "vec_id",
       s"$path/codes.parquet", batchId)
 
-  private def codesTmp(path: String) = s"$path/codes_compact_tmp"
-  private def codesOld(path: String) = s"$path/codes_compact_old"
-
-  /** Complete an interrupted [[compactIndex]] swap: the one window
-    * where the codes root is absent is between the two renames, and
-    * the fully-written old root is authoritative there. Called by the
-    * compaction and the read/ingest entries — two FS probes steady-
-    * state. */
-  private def recoverCodesSwap(s: SparkSession, path: String): Unit = {
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes.parquet")
-    val fs = codes.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(codesOld(path))
-    if (!fs.exists(codes) && fs.exists(old))
-      require(fs.rename(old, codes),
-        s"cannot recover interrupted codes compaction at $path")
-  }
-
   /** Fold the tombstone log into the codes relation, PRESERVING the
     * cell-partitioned layout (the generic [[graft.rel.Tombstones.compact]]
     * would flatten it and break searchCodes' partition pruning).
     * Read-before ≡ read-after; single maintenance owner, like every
     * store rewrite.
     *
-    * Crash discipline — DURABLE staging + rename swap, not the
-    * previous in-place static overwrite (which truncated the sole
+    * Crash discipline — the root swap ([[graft.rel.Stores.swapDir]]),
+    * not an in-place static overwrite (which would truncate the sole
     * copy of the corpus-sized codes relation before the rewrite job
-    * committed, from survivors that existed only as volatile
-    * localCheckpoint blocks — a crash there lost the index): the
-    * survivors write COMPLETELY to a tmp sibling, then codes→old,
-    * tmp→codes, delete old; [[recoverCodesSwap]] finishes an
-    * interrupted swap from any entry. A deletion covering EVERY
-    * stored vector stages an empty but SCHEMA-BEARING relation (the
-    * file-less-dir rule — a _SUCCESS-only root would crash every
-    * later read's schema inference; `cell` becomes a plain int
-    * column, which searchIndex's cast-select reads on either
-    * layout). */
+    * committed): the survivors write COMPLETELY to the swap's tmp
+    * sibling before the codes root moves, and
+    * [[graft.rel.Stores.recoverSwap]] finishes an interrupted swap
+    * from any entry. A deletion covering EVERY stored vector stages an
+    * empty but SCHEMA-BEARING relation (the file-less-dir rule — a
+    * _SUCCESS-only root would crash every later read's schema
+    * inference; `cell` becomes a plain int column, which searchIndex's
+    * cast-select reads on either layout). */
   def compactIndex(s: SparkSession, path: String): Unit = {
-    recoverCodesSwap(s, path)
     val codesPath = s"$path/codes.parquet"
+    val codes = new org.apache.hadoop.fs.Path(codesPath)
+    val fs = codes.getFileSystem(s.sparkContext.hadoopConfiguration)
+    graft.rel.Stores.recoverSwap(fs, codes)
     graft.rel.Tombstones.deletedKeys(s, codesPath).foreach { _ =>
-      val codes = new org.apache.hadoop.fs.Path(codesPath)
-      val fs = codes.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(codesTmp(path))
-      val old = new org.apache.hadoop.fs.Path(codesOld(path))
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      val full = s.read.parquet(codesPath)
-      // partition columns surface with inferred types — pin cell to a
-      // plain int for the empty rewrite's schema
-      val schema = org.apache.spark.sql.types.StructType(
-        full.schema.fields.map(f =>
-          if (f.name == "cell")
-            f.copy(dataType = org.apache.spark.sql.types.IntegerType)
-          else f))
-      // one computation: emptiness probe + write
-      val survivors = graft.Checkpointing.truncate(
-        graft.rel.Tombstones.filterDeleted(full, "vec_id", codesPath))
-      if (survivors.isEmpty)
-        s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          .coalesce(1).write.parquet(tmp.toString)
-      else survivors.repartition(col("cell"))
-        .write.partitionBy("cell").parquet(tmp.toString)
-      require(fs.rename(codes, old),
-        s"codes compaction swap failed: cannot move $codes aside")
-      require(fs.rename(tmp, codes),
-        s"codes compaction swap failed: cannot move $tmp into place")
-      fs.delete(old, true)
+      graft.rel.Stores.swapDir(fs, codes) { tmp =>
+        val full = s.read.parquet(codesPath)
+        // partition columns surface with inferred types — pin cell to
+        // a plain int for the empty rewrite's schema
+        val schema = org.apache.spark.sql.types.StructType(
+          full.schema.fields.map(f =>
+            if (f.name == "cell")
+              f.copy(dataType = org.apache.spark.sql.types.IntegerType)
+            else f))
+        // one computation: emptiness probe + write
+        val survivors = graft.Checkpointing.truncate(
+          graft.rel.Tombstones.filterDeleted(full, "vec_id", codesPath))
+        if (survivors.isEmpty)
+          s.createDataFrame(
+              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+            .coalesce(1).write.parquet(tmp.toString)
+        else survivors.repartition(col("cell"))
+          .write.partitionBy("cell").parquet(tmp.toString)
+      }
       fs.delete(new org.apache.hadoop.fs.Path(
         graft.rel.Tombstones.logPath(codesPath)), true)
     }

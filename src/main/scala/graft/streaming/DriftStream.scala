@@ -78,7 +78,7 @@ object DriftStream {
       valueCol: String, frozen: FrozenReference, metricsPath: String,
       lineage: String): Unit = {
     val s = batch.sparkSession
-    StreamingOps.requireAtomicRename(
+    graft.rel.Stores.requireAtomicRename(
       new org.apache.hadoop.fs.Path(metricsPath)
         .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"PSI drift metric store at $metricsPath")

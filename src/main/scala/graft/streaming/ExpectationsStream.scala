@@ -67,7 +67,7 @@ object ExpectationsStream {
       lineage: String): Unit = {
     requireAdditive(checks)
     val s = batch.sparkSession
-    StreamingOps.requireAtomicRename(
+    graft.rel.Stores.requireAtomicRename(
       new org.apache.hadoop.fs.Path(metricsPath)
         .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"expectations metric store at $metricsPath")

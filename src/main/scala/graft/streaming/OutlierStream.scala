@@ -98,7 +98,7 @@ object OutlierStream {
       valueCol: String, flaggedPath: String, threshold: Double = 3.5,
       lineage: String): Unit = {
     val s = batch.sparkSession
-    StreamingOps.requireAtomicRename(
+    graft.rel.Stores.requireAtomicRename(
       new org.apache.hadoop.fs.Path(flaggedPath)
         .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"outlier store at $flaggedPath")

@@ -393,7 +393,7 @@ object StreamingOps {
         // a crash inside a previous compaction's swap window must not
         // silently present an empty store (which would re-ingest every
         // doc and double-emit history) — finish or discard the swap first
-        recoverCompactionSwap(fs, store)
+        graft.rel.Stores.recoverSwap(fs, store)
         val sigC =
           if (fs.exists(store)) {
             // fails fast on a store written under different banding
@@ -472,73 +472,6 @@ object StreamingOps {
     fs.listStatus(dir).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
 
-  private def compactTmp(store: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + ".compacting")
-  private def compactOld(store: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + ".precompact")
-
-  /** Crash recovery for the compaction swap. The swap is
-    * write(tmp) → rename(store, old) → rename(tmp, store) → delete(old)
-    * — RENAMES only in the critical section, never a recursive delete of
-    * live data: a recursive delete is not atomic outside HDFS, and a
-    * crash midway through deleting the store would leave a
-    * partially-deleted store that is indistinguishable from an intact
-    * one (silent loss of dedup history). With the rename protocol every
-    * restart state is decidable from which paths exist:
-    *   - old present, store present: the commit finished (or a previous
-    *     recovery was interrupted deleting old) — old is superseded
-    *     garbage; DELETE old. Deleting old is the only recursive delete
-    *     in the protocol and is idempotent garbage collection.
-    *   - old present, store missing, tmp present: crash between the two
-    *     renames — tmp holds the complete compacted store; FINISH the
-    *     swap, then delete old.
-    *   - old present, store missing, tmp missing: defensive (not
-    *     reachable under the protocol) — restore old as the store.
-    *   - tmp present, store present, old absent: crash before the first
-    *     rename — tmp is an uncommitted (possibly partial) rewrite and
-    *     the store is intact; DISCARD tmp.
-    *
-    * `legacyPromote` governs the one ambiguous state {tmp present,
-    * store absent, old absent}: for the SIGNATURE store it means a
-    * complete rewrite stranded by the pre-rename (delete-based) swap
-    * code — promote it. For a store whose every write goes through
-    * this protocol from birth (the heavy-hitter store), that state is
-    * only reachable by crashing inside the FIRST-ever tmp write, so
-    * the tmp is an uncommitted partial and promoting it would poison
-    * the stream — pass legacyPromote = false to discard it instead.
-    */
-  /** Filesystem schemes whose `rename` is a non-atomic copy+delete (or
-    * can expose a partially-renamed directory): the store commit
-    * protocols below would CORRUPT on them instead of failing — so any
-    * store entry point fails loudly up front. HDFS, POSIX-local, and
-    * viewfs renames are atomic; abfs (ADLS Gen2 with hierarchical
-    * namespace) is too. Object-store deployments get the same
-    * guarantees transactionally from a table format (Iceberg/Delta/
-    * Hudi) or point the store at HDFS — the standard practice this
-    * message names.
-    */
-  private val NonAtomicRenameSchemes =
-    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift", "wasb", "wasbs")
-
-  /** Fail loudly when `fs` cannot give the rename-swap protocols their
-    * atomicity assumption — a silent copy+delete "rename" would corrupt
-    * the store on a crash mid-commit rather than leave a recoverable
-    * state. */
-  private[streaming] def requireAtomicRename(
-      fs: org.apache.hadoop.fs.FileSystem, what: String): Unit = {
-    val scheme = Option(fs.getUri.getScheme).map(_.toLowerCase).getOrElse("")
-    if (NonAtomicRenameSchemes.contains(scheme))
-      throw new IllegalStateException(
-        s"$what relies on atomic FileSystem.rename for its crash-safe " +
-          s"commit protocol, but scheme '$scheme' renames by copy+delete " +
-          "— a crash mid-commit would corrupt the store instead of " +
-          "leaving a recoverable state. Point the store at HDFS (or " +
-          "another atomic-rename filesystem), or manage it through a " +
-          "transactional table format.")
-  }
-
   /** Bind a store to its FIRST streaming lineage via a `_lineage`
     * marker inside the store root (an underscore file, invisible to
     * every parquet read), creating the root if needed, and fail loudly
@@ -599,49 +532,16 @@ object StreamingOps {
     }
   }
 
-  private[streaming] def recoverCompactionSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path,
-      legacyPromote: Boolean = true): Unit = {
-    requireAtomicRename(fs, s"store at $store")
-    val tmp = compactTmp(store)
-    val old = compactOld(store)
-    if (fs.exists(old)) {
-      if (fs.exists(store)) fs.delete(old, true)
-      else if (fs.exists(tmp)) {
-        if (!fs.rename(tmp, store))
-          throw new java.io.IOException(
-            s"could not finish crashed compaction swap: $tmp -> $store")
-        fs.delete(old, true)
-      } else if (!fs.rename(old, store))
-        throw new java.io.IOException(
-          s"could not restore store after crashed compaction: $old -> $store")
-    } else if (fs.exists(tmp)) {
-      if (!fs.exists(store)) {
-        if (legacyPromote) {
-          // legacy delete-based swap state: tmp is the complete rewrite
-          if (!fs.rename(tmp, store))
-            throw new java.io.IOException(
-              s"could not finish crashed compaction swap: $tmp -> $store")
-        } else fs.delete(tmp, true) // uncommitted first write
-      } else fs.delete(tmp, true)
-    }
-  }
-
   /** Rewrite the signature store as ~`targetBytes`-sized files — row
     * content identical (asserted pair-for-pair in IngestDedupSpec), file
-    * count bounded. The rewrite goes to a sibling tmp dir FIRST (fully
-    * materializing the read before anything is touched), then commits
-    * with two renames: store → old, tmp → store, then old is deleted.
-    * A crash at any point is recovered by `recoverCompactionSwap` (run
-    * before every trigger and up front here) — every intermediate state
-    * keeps a complete copy of the data under exactly one of the three
-    * paths, making compaction retry-safe end to end. (Rename atomicity
-    * holds on HDFS/posix and is ENFORCED — `requireAtomicRename` fails
-    * loudly on rename-as-copy schemes; an object-store deployment gets
-    * the same guarantee transactionally from a table format instead.)
-    */
-  /** `horizonMs > 0` additionally applies the dedup-horizon retention:
+    * count bounded — through the root swap
+    * ([[graft.rel.Stores.swapDir]]): the rewrite fully materializes in
+    * the tmp sibling before the store moves, and
+    * [[graft.rel.Stores.recoverSwap]] (run before every trigger and up
+    * front here) recovers a crash at any point, so compaction is
+    * retry-safe end to end.
+    *
+    * `horizonMs > 0` additionally applies the dedup-horizon retention:
     * rows whose `ts_ms` is more than the horizon behind the store's
     * NEWEST event time are dropped in the same rewrite — the "last N
     * days" dedup contract (the lazy, store-side mirror of the TTL
@@ -656,13 +556,11 @@ object StreamingOps {
       targetBytes: Long = 128L << 20, horizonMs: Long = 0L): Unit = {
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-    recoverCompactionSwap(fs, store)
+    graft.rel.Stores.recoverSwap(fs, store)
     val files = storeDataFiles(fs, store)
     if (files.isEmpty) return
     val nOut = math.max(1, math.min(files.size,
       math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt))
-    val tmp = compactTmp(store)
-    val old = compactOld(store)
     val all = s.read.parquet(storePath)
     val kept =
       if (horizonMs <= 0) all
@@ -684,15 +582,8 @@ object StreamingOps {
         else all.filter(col("ts_ms").isNull ||
           col("ts_ms") >= newestRow.getLong(0) - horizonMs)
       }
-    kept.repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(store, old))
-      throw new java.io.IOException(
-        s"compaction swap failed: could not rename $store to $old")
-    if (!fs.rename(tmp, store))
-      throw new java.io.IOException(
-        s"compaction swap failed: could not rename $tmp to $store")
-    fs.delete(old, true)
+    graft.rel.Stores.swapDir(fs, store)(tmp =>
+      kept.repartition(nOut).write.parquet(tmp.toString))
   }
 
   /** Streaming heavy hitters: a Misra–Gries summary of the corpus
@@ -724,10 +615,9 @@ object StreamingOps {
     * in the checkpoint metadata, unchanged across restarts): a fresh
     * checkpoint pointed at an existing store FAILS LOUDLY instead of
     * silently skipping its first batches — use a fresh storePath per
-    * query lineage. The ≤ k+1-row rewrite commits through the
-    * signature-store compaction's rename-swap protocol
-    * (recoverCompactionSwap, legacyPromote=false: this store's only
-    * {tmp, no store, no old} state is a crashed first write).
+    * query lineage. The ≤ k+1-row rewrite commits through the root
+    * swap ([[graft.rel.Stores.swapDir]]); a crash inside the FIRST
+    * write leaves a tmp without `_SUCCESS`, which recovery discards.
     */
   def heavyHittersStream(docs: DataFrame, storePath: String,
       k: Int = 256)
@@ -782,7 +672,7 @@ object StreamingOps {
     val s = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-    recoverCompactionSwap(fs, store, legacyPromote = false)
+    graft.rel.Stores.recoverSwap(fs, store)
     val prev = if (fs.exists(store)) s.read.parquet(storePath) else null
     val applied = // idempotent replay: skip an already-applied batch
       if (prev == null) -1L
@@ -847,16 +737,8 @@ object StreamingOps {
         .unionAll(sentinel)
         .withColumn("batch_id", lit(batchId))
         .withColumn("query_id", lit(lineage))
-      val tmp = compactTmp(store)
-      val old = compactOld(store)
-      next.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(store) && !fs.rename(store, old))
-        throw new java.io.IOException(
-          s"heavy-hitter swap failed: could not rename $store to $old")
-      if (!fs.rename(tmp, store))
-        throw new java.io.IOException(
-          s"heavy-hitter swap failed: could not rename $tmp to $store")
-      fs.delete(old, true)
+      graft.rel.Stores.swapDir(fs, store)(tmp =>
+        next.coalesce(1).write.parquet(tmp.toString))
     }
   }
 
@@ -881,9 +763,7 @@ object StreamingOps {
     // leaves no store at this path, and the stream that would have
     // recovered it on its next trigger is the thing that just died —
     // without this, every read throws until a write happens to run
-    val storeP = new org.apache.hadoop.fs.Path(storePath)
-    recoverCompactionSwap(
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration), storeP)
+    graft.rel.Stores.recoverSwap(s, storePath)
     val stored = graft.Checkpointing.truncate(s.read.parquet(storePath))
     // the MG floor is a property of the summary's BUILD k (persisted
     // on the sentinel row), not the caller's claim — a reader passing
@@ -981,7 +861,8 @@ object StreamingOps {
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
     // the lineage-marker commit and writeSingleFile's tmp-dir promote
     // both assume atomic rename — same contract as the compaction swap
-    requireAtomicRename(fs, s"substring-dedup gram store at $storePath")
+    graft.rel.Stores.requireAtomicRename(fs,
+      s"substring-dedup gram store at $storePath")
     // the batch-id file naming is only exactly-once WITHIN one streaming
     // checkpoint lineage: a FRESH checkpoint restarts ids at 0 and would
     // silently overwrite batch-0.parquet with different content (and
@@ -991,14 +872,11 @@ object StreamingOps {
     bindStoreLineage(s, storePath, s"substring-dedup store at $storePath",
       lineage)
     val own = s"batch-$batchId.parquet"
-    val storeFiles = fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
-      (st.getPath.getName.startsWith("batch-") ||
-        st.getPath.getName.startsWith("compact-")) &&
-      st.getPath.getName != own)
+    val storeFiles = batchFiles(fs, fsp).filterNot(_._1.contains(batchId))
     val storeH =
       if (storeFiles.isEmpty)
         s.range(0).select(col("id").as("h")) // empty bootstrap store
-      else s.read.parquet(storeFiles.map(_.getPath.toString): _*)
+      else s.read.parquet(storeFiles.map(_._2.getPath.toString): _*)
     // intra-batch redelivery; judged AND grammed below — compute once
     val b = graft.Checkpointing.truncate(batch.dropDuplicates("doc_id"))
     writeSingleFile(graft.text.SubstrDedup.judgeAgainst(b, storeH, w),
@@ -1006,22 +884,15 @@ object StreamingOps {
     writeSingleFile(graft.text.SubstrDedup.batchGrams(b, w),
       storePath, own)
     // compact STRICTLY older batch files (replay can only re-deliver
-    // the current id) together with prior compacts
-    val mergeable = fs.listStatus(fsp).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && ((n.startsWith("batch-") && n != own &&
-        n.stripPrefix("batch-").stripSuffix(".parquet")
-          .forall(_.isDigit) &&
-        n.stripPrefix("batch-").stripSuffix(".parquet").toLong < batchId)
-        || n.startsWith("compact-"))
-    }
-    if (mergeable.count(_.getPath.getName.startsWith("batch-")) >
-        compactEvery) {
-      val merged = s.read
-        .parquet(mergeable.map(_.getPath.toString): _*).distinct()
+    // the current id) together with prior compacts — the listing above
+    // still holds: this trigger added only its own file
+    val mergeable = storeFiles.filter(_._1.forall(_ < batchId))
+    if (mergeable.count(_._1.nonEmpty) > compactEvery) {
+      val paths = mergeable.map(_._2.getPath)
+      val merged = s.read.parquet(paths.map(_.toString): _*).distinct()
       writeSingleFile(merged, storePath, s"compact-at-$batchId.parquet")
-      mergeable.filterNot(_.getPath.getName == s"compact-at-$batchId.parquet")
-        .foreach(st => fs.delete(st.getPath, false))
+      paths.filterNot(_.getName == s"compact-at-$batchId.parquet")
+        .foreach(fs.delete(_, false))
     }
   }
 
@@ -1057,12 +928,11 @@ object StreamingOps {
     // BEFORE the lineage bind's mkdirs: an interrupted compaction
     // swap's recovery renames the old root back into place, which a
     // just-created empty root would corrupt (rename into an existing
-    // dir nests instead of replacing)
-    graft.text.SubstrDedup.recoverGramCompactSwap(s, storePath)
+    // dir nests instead of replacing). The recovery also enforces the
+    // atomic-rename gate.
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    requireAtomicRename(fs,
-      s"counted substring-dedup gram store at $storePath")
+    graft.rel.Stores.recoverSwap(fs, fsp)
     bindStoreLineage(s, storePath,
       s"counted substring-dedup gram store at $storePath", lineage)
     // a doc tombstoned BEFORE its content arrives must be neither
@@ -1092,12 +962,32 @@ object StreamingOps {
     graft.text.SubstrDedup.writeGramStoreCounted(b, storePath, batchId, w)
   }
 
+  /** The batch-FILE stores' one listing (substring grams, semantic
+    * assignments, audio features): every `batch-*` / `compact-*` data
+    * file directly under `dir` with the trigger id a numbered
+    * `batch-N.parquet` carries — None for a fold output
+    * (`batch-compacted-<gen>.parquet`, `compact-at-N.parquet`), which is
+    * no trigger's own file. Empty when the store does not exist. */
+  private def batchFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path)
+      : Seq[(Option[Long], org.apache.hadoop.fs.FileStatus)] = {
+    val num = "batch-(\\d+)\\.parquet".r
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(st => st.isFile && {
+      val n = st.getPath.getName
+      n.startsWith("batch-") || n.startsWith("compact-")
+    }).map(st => (st.getPath.getName match {
+      case num(i) => i.toLongOption
+      case _ => None
+    }, st))
+  }
+
   /** Write `df` as exactly ONE deterministically-named parquet file via
     * tmp-dir + rename — the idempotence primitive of the substring
     * ingest (replay overwrites the same name with identical content).
     * Assumes atomic rename (HDFS / POSIX — same contract as the
     * signature store's compaction swap), enforced up front by
-    * `requireAtomicRename` in `applySubstrIngestBatch`.
+    * `Stores.requireAtomicRename` in `applySubstrIngestBatch`.
     */
   private[streaming] def writeSingleFile(df: DataFrame, dir: String,
       name: String): Unit = {
@@ -1157,13 +1047,13 @@ object StreamingOps {
     val s = batch.sparkSession
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    requireAtomicRename(fs, s"semantic-dedup assignment store at $storePath")
+    graft.rel.Stores.requireAtomicRename(fs,
+      s"semantic-dedup assignment store at $storePath")
     bindStoreLineage(s, storePath,
       s"semantic-dedup assignment store at $storePath", lineage)
     val own = s"batch-$batchId.parquet"
-    val storeFiles = fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
-      st.getPath.getName.startsWith("batch-") &&
-      st.getPath.getName != own)
+    val storeFiles = batchFiles(fs, fsp)
+      .filterNot(_._1.contains(batchId)).map(_._2)
     val tree = graft.sim.SemDedup.readTree(s, treePath)
     // intra-batch redelivery; assigned AND judged below — compute once
     val b = graft.Checkpointing.truncate(batch.dropDuplicates("vec_id"))
@@ -1256,13 +1146,9 @@ object StreamingOps {
       // staged `_next` set exists — the read would abort the
       // choreography halfway until an unrelated applyDelete recovered
       graft.rel.TombstoneLog.recoverSwap(fs, logP, logP + "_next")
-      val files = fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
-        st.getPath.getName.startsWith("batch-"))
-      val num = "batch-(\\d+)\\.parquet".r
-      val ids = files.flatMap(st => st.getPath.getName match {
-        case num(i) => Some(i.toLong -> st); case _ => None
-      })
-      val newest = ids.sortBy(_._1).lastOption.map(_._2)
+      val listed = batchFiles(fs, fsp)
+      val files = listed.map(_._2)
+      val newest = listed.filter(_._1.nonEmpty).maxByOption(_._1).map(_._2)
       val foldSet = files.filterNot(newest.contains)
       val log = s.read.parquet(logP)
       val kt = log.schema("key").dataType
@@ -1338,7 +1224,7 @@ object StreamingOps {
       batchId: Long, storePath: String, nFft: Int, hop: Int,
       idCol: String = "clip_id", lineage: String): Unit = {
     val s = batch.sparkSession
-    requireAtomicRename(
+    graft.rel.Stores.requireAtomicRename(
       new org.apache.hadoop.fs.Path(storePath)
         .getFileSystem(s.sparkContext.hadoopConfiguration),
       s"audio feature store at $storePath")
@@ -1364,9 +1250,7 @@ object StreamingOps {
       idCol: String = "clip_id"): DataFrame = {
     val fsp = new org.apache.hadoop.fs.Path(storePath)
     val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = if (fs.exists(fsp))
-      fs.listStatus(fsp).toSeq.filter(st => st.isFile &&
-        st.getPath.getName.startsWith("batch-")) else Seq.empty
+    val files = batchFiles(fs, fsp).map(_._2)
     if (files.isEmpty)
       graft.audio.SpectralFeatures.withFeatures(
         graft.audio.SpectralFeatures.frameSpectra(

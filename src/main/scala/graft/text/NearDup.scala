@@ -404,10 +404,14 @@ object NearDup {
     * a doc whose signatures already landed even if it was tombstoned
     * since (a filtered fence would re-append a replayed batch's rows
     * and double-emit its candidate pairs). Judge-side reads keep the
-    * default: tombstoned docs never pair. */
+    * default: tombstoned docs never pair. A crash inside a root swap
+    * of the store ([[graft.rel.Stores.swapDir]]: the compaction, the
+    * tombstone fold) is recovered first, so no reader lands on an
+    * absent store. */
   private[graft] def readSignatureStore(s: SparkSession, storePath: String,
       nHashes: Int, rowsPerBand: Int, validate: Boolean = true,
       filterTombstones: Boolean = true): DataFrame = {
+    graft.rel.Stores.recoverSwap(s, storePath)
     val store = s.read.parquet(storePath)
     require(store.columns.contains("n_hashes") &&
       store.columns.contains("rows_per_band"),
@@ -438,7 +442,8 @@ object NearDup {
     * store read, batch or streaming, excludes them, so a removed doc
     * can never again appear in a candidate pair. Idempotent and
     * replay-fenced; `Tombstones.compact` folds the log into the store
-    * when the standing anti-join grows past taste. */
+    * through the root swap ([[graft.rel.Stores.swapDir]]) when the
+    * standing anti-join grows past taste. */
   def deleteFromSignatureStore(keys: org.apache.spark.sql.DataFrame,
       storePath: String, batchId: Long): Unit =
     graft.rel.Tombstones.applyDelete(keys, "doc_id", storePath, batchId)

@@ -118,16 +118,10 @@ object PipelineInc {
     if (!graft.rel.Tombstones.populated(s, path)) None
     else Some(s.read.parquet(path).filter(col("batch_id") < before))
 
-  private def maxBatchId(s: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .flatMap(n =>
-        scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption)
-      .reduceOption(_ max _)
-  }
+  private def maxBatchId(s: SparkSession, path: String): Option[Long] =
+    graft.rel.Stores.batchIds(new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(s.sparkContext.hadoopConfiguration), path)
+      .maxOption
 
   /** Judge ONE arriving batch against the standing stores, persist its
     * verdict/pack relation under `batch_id`, and ingest the batch's

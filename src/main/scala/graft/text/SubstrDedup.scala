@@ -401,7 +401,7 @@ object SubstrDedup {
     * compaction swap first (the store is authoritative wherever it
     * stands). */
   def liveGrams(s: SparkSession, path: String): DataFrame = {
-    recoverGramCompactSwap(s, path)
+    graft.rel.Stores.recoverSwap(s, path)
     if (!graft.rel.Tombstones.populated(s, path))
       s.range(0).select(col("id").as("h"))
     else s.read.parquet(path).groupBy("h").agg(sum(col("c")).as("c"))
@@ -414,41 +414,20 @@ object SubstrDedup {
     incrementalAgainst(batch,
       liveGrams(batch.sparkSession, storePath), w)
 
-  private def gramCompactTmp(path: String) =
-    path.stripSuffix("/") + "_compact_tmp"
-  private def gramCompactOld(path: String) =
-    path.stripSuffix("/") + "_compact_old"
-
-  /** Complete an interrupted [[compactGramStoreCounted]] swap: the one
-    * crash window where the store root is ABSENT is between the two
-    * renames, and the fully-written old root is authoritative then
-    * (the fold is recomputable; accumulated history is not). Called
-    * on entry by the compaction, the streaming trigger, and the
-    * readers — idempotent, two FS probes in the steady state. */
-  private[graft] def recoverGramCompactSwap(s: SparkSession,
-      path: String): Unit = {
-    val store = new org.apache.hadoop.fs.Path(path)
-    val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(gramCompactOld(path))
-    if (!fs.exists(store) && fs.exists(old))
-      require(fs.rename(old, store),
-        s"cannot recover interrupted gram-store compaction at $path")
-  }
-
   /** Fold the net counts into one positive relation under the RESERVED
     * partition (ingest and delete reject it from callers, so no later
     * insert, delete, or streaming trigger can dynamic-overwrite folded
     * history). Read-before ≡ read-after (spec-pinned).
     *
-    * Crash discipline — the signature-store RENAME-SWAP, not an
-    * in-place overwrite (Spark's whole-root overwrite deletes the
-    * existing data before the job commits: a crash mid-write would
+    * Crash discipline — the root swap ([[graft.rel.Stores.swapDir]]),
+    * not an in-place overwrite (Spark's whole-root overwrite deletes
+    * the existing data before the job commits: a crash mid-write would
     * present an EMPTY store and silently admit every duplicate): the
-    * fold writes COMPLETELY to a tmp sibling — carrying over the
-    * `_lineage` streaming fence marker, which a root swap would
-    * otherwise silently disarm — then store→old, tmp→store, delete
-    * old; every window leaves one complete root and
-    * [[recoverGramCompactSwap]] finishes an interrupted swap.
+    * fold writes COMPLETELY to the swap's tmp sibling — carrying over
+    * the `_lineage` streaming fence marker, which a root swap would
+    * otherwise silently disarm — before the root moves, and
+    * [[graft.rel.Stores.recoverSwap]] finishes an interrupted swap
+    * from any entry.
     *
     * REPLAY HORIZON, enforced: the fold records the largest folded
     * INGEST id as the [[graft.rel.FoldWatermark]] (written into the
@@ -461,45 +440,33 @@ object SubstrDedup {
   def compactGramStoreCounted(s: SparkSession, path: String): Unit = {
     val store = new org.apache.hadoop.fs.Path(path)
     val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-    recoverGramCompactSwap(s, path)
+    graft.rel.Stores.recoverSwap(fs, store)
     if (!graft.rel.Tombstones.populated(s, path)) return
-    val maxIngest = fs.listStatus(store).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix("batch_id=").toLong).toOption)
-      .filter(_ >= 0)
-      .reduceOption(_ max _)
+    val maxIngest = graft.rel.Stores.batchIds(fs, path).filter(_ >= 0)
+      .maxOption
     // materialize before any file moves
     val net = graft.Checkpointing.truncate(s.read.parquet(path)
       .groupBy("h").agg(sum(col("c")).as("c")).filter(col("c") > 0))
-    val tmp = new org.apache.hadoop.fs.Path(gramCompactTmp(path))
-    val old = new org.apache.hadoop.fs.Path(gramCompactOld(path))
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    graft.rel.Stores.writeBatch(net, tmp.toString, Long.MinValue,
-      singleFile = false)
-    // carry the streaming lineage fence across the swap
-    val lineage = new org.apache.hadoop.fs.Path(store, "_lineage")
-    if (fs.exists(lineage))
-      org.apache.hadoop.fs.FileUtil.copy(fs, lineage, fs,
-        new org.apache.hadoop.fs.Path(tmp, "_lineage"), false,
-        s.sparkContext.hadoopConfiguration)
-    // carry the OLD horizon across the swap too (like `_lineage`): a
-    // re-compaction with no surviving non-negative partitions — an
-    // idempotent re-run, or the prescribed compact-after-deletions
-    // pass (deletions write only negative ids) — has maxIngest = None,
-    // and writing nothing into tmp would let the root swap silently
-    // disarm the replay-horizon guard, re-admitting a redelivered
-    // pre-fold ingest batch to double-count its grams
-    (graft.rel.FoldWatermark.read(fs, path) ++ maxIngest)
-      .reduceOption(_ max _)
-      .foreach(m => graft.rel.FoldWatermark.write(fs, tmp.toString, m))
-    require(fs.rename(store, old),
-      s"gram-store compaction swap failed: cannot move $store aside")
-    require(fs.rename(tmp, store),
-      s"gram-store compaction swap failed: cannot move $tmp into place")
-    fs.delete(old, true)
+    graft.rel.Stores.swapDir(fs, store) { tmp =>
+      graft.rel.Stores.writeBatch(net, tmp.toString, Long.MinValue,
+        singleFile = false)
+      // carry the streaming lineage fence across the swap
+      val lineage = new org.apache.hadoop.fs.Path(store, "_lineage")
+      if (fs.exists(lineage))
+        org.apache.hadoop.fs.FileUtil.copy(fs, lineage, fs,
+          new org.apache.hadoop.fs.Path(tmp, "_lineage"), false,
+          s.sparkContext.hadoopConfiguration)
+      // carry the OLD horizon across the swap too (like `_lineage`): a
+      // re-compaction with no surviving non-negative partitions — an
+      // idempotent re-run, or the prescribed compact-after-deletions
+      // pass (deletions write only negative ids) — has maxIngest =
+      // None, and writing nothing into tmp would let the root swap
+      // silently disarm the replay-horizon guard, re-admitting a
+      // redelivered pre-fold ingest batch to double-count its grams
+      (graft.rel.FoldWatermark.read(fs, path) ++ maxIngest)
+        .reduceOption(_ max _)
+        .foreach(m => graft.rel.FoldWatermark.write(fs, tmp.toString, m))
+    }
   }
 
   /** One batch's distinct gram hashes — the unit the streaming ingest

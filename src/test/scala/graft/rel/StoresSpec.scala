@@ -57,8 +57,8 @@ class StoresSpec extends SparkSpec {
   }
 
   test("the generic snapshot/range views honor the fold watermark: " +
-      "readAsOf below it and readBatchRange opening at/below it fail " +
-      "loudly; at/above both read unchanged") {
+      "readBatches as-of below it and readBatchRange opening at/below it " +
+      "fail loudly; at/above both read unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("asof-wmark")
     try {
       val store = dir.resolve("store.parquet").toString
@@ -446,22 +446,40 @@ class StoresSpec extends SparkSpec {
     }
   }
 
-  test("the batch layout lives in Stores: per-batch partitioned writes " +
-      "and the batch_id= prefix prune are written out once") {
+  /** (file name, source) of every `src/main/scala` file. */
+  private lazy val mainSources: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val main = new java.io.File("src/main/scala")
     assert(main.isDirectory,
       s"run from the repo root: ${main.getAbsolutePath}")
-    val sources = java.nio.file.Files.walk(main.toPath).iterator().asScala
+    java.nio.file.Files.walk(main.toPath).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString ->
         new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
       .toSeq
+  }
+
+  /** `file:def` of every def in `src/main/scala` whose text (up to the
+    * next def) satisfies `p`. */
+  private def defsWhere(p: String => Boolean): Seq[String] = {
+    val defStart = "(?m)^\\s*(?:(?:private|protected|override|final)" +
+      "(?:\\[\\w+\\])?\\s+)*def\\s+(\\w+)"
+    mainSources.flatMap { case (f, src) =>
+      val starts = defStart.r.findAllMatchIn(src).toSeq
+      starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
+        case (m, end) if p(src.substring(m.start, end)) =>
+          s"$f:${m.group(1)}"
+      }
+    }
+  }
+
+  test("the batch layout lives in Stores: per-batch partitioned writes " +
+      "and the batch_id= prefix prune are written out once") {
     // Stores.writeBatch, plus the four rewrites of a relation that
     // already carries batch_id: Tombstones.ungateBatch's static log
     // rewrite, TombstoneLog.swapIn's kept-log stage, the recluster
     // plan apply and the verdict scrub
-    val partitioned = sources
+    val partitioned = mainSources
       .map { case (f, src) => f -> scala.util.matching.Regex
         .quote("partitionBy(\"batch_id\")").r.findAllMatchIn(src).size }
       .filter(_._2 > 0).toMap
@@ -469,19 +487,25 @@ class StoresSpec extends SparkSpec {
       "Tombstones.scala" -> 1, "TombstoneLog.scala" -> 1,
       "MediaClusterStore.scala" -> 1, "MediaDedupStore.scala" -> 1))
     // a prefix-delete loop: a def whose body keeps listed entries named
-    // batch_id=… and deletes them
-    val defStart = "(?m)^\\s*(?:(?:private|protected|override|final)" +
-      "(?:\\[\\w+\\])?\\s+)*def\\s+(\\w+)"
-    val pruners = sources.flatMap { case (f, src) =>
-      val starts = defStart.r.findAllMatchIn(src).toSeq
-      starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
-        case (m, end) if {
-          val body = src.substring(m.start, end)
-          body.contains("startsWith(\"batch_id=\")") &&
-            "\\.delete\\(\\w+\\.getPath".r.findFirstIn(body).isDefined
-        } => s"$f:${m.group(1)}"
-      }
+    // batch_id=… and deletes them, by hand or over Stores.batchIds
+    val pruners = defsWhere { body =>
+      (body.contains("startsWith(\"batch_id=\")") &&
+        "\\.delete\\(\\w+\\.getPath".r.findFirstIn(body).isDefined) ||
+        (body.contains("batchIds(") && body.contains(".delete("))
     }
     assert(pruners === Seq("Stores.scala:pruneThrough"))
+  }
+
+  test("one root swap and one batch_id= listing: no legacyPromote knob, " +
+      "the swap siblings are named only in Stores, and only " +
+      "Stores.batchIds parses a batch_id= name") {
+    def filesWith(token: String) =
+      mainSources.filter(_._2.contains(token)).map(_._1).toSet
+    assert(filesWith("legacyPromote").isEmpty)
+    Seq("_compact_old", "codes_compact_", ".precompact").foreach(t =>
+      assert(filesWith(t).subsetOf(Set("Stores.scala")),
+        s"$t is named outside Stores.scala: ${filesWith(t)}"))
+    assert(defsWhere(_.contains("stripPrefix(\"batch_id=\")")) ===
+      Seq("Stores.scala:batchIds"))
   }
 }

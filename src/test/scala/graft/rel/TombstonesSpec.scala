@@ -56,6 +56,43 @@ class TombstonesSpec extends SparkSpec {
     }
   }
 
+  test("signature store: a compact killed between its aside and in " +
+      "renames loses no row — the next store read finishes the swap") {
+    val docs = graft.Tables.documents(spark, sf0001)
+    val corpus = docs.filter($"doc_id" % 10 =!= 0)
+    val batch = docs.filter($"doc_id" % 10 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-tomb-crash")
+    val path = dir.resolve("signatures.parquet").toString
+    CrashRenameFs.register(spark.sparkContext.hadoopConfiguration)
+    try {
+      graft.text.NearDup.writeSignatureStore(corpus, path)
+      def storeIds = spark.read.parquet(path).select("doc_id").as[Long]
+        .collect().toSet
+      val all = storeIds
+      val victims = all.toSeq.sorted.take(5)
+      graft.text.NearDup.deleteFromSignatureStore(
+        victims.toDF("doc_id"), path, batchId = 0L)
+      def pairs = graft.text.NearDup
+        .minhashNeardupIncrementalStored(spark, path, batch)
+        .select("d1", "d2").as[(Long, Long)].collect().toSet
+      val before = pairs
+      // the process dies on the rename that moves the rewrite INTO the
+      // store root: the live root has already left its path
+      CrashRenameFs.killAt = Some(path)
+      intercept[java.io.IOException](
+        Tombstones.compact(spark, s"crashrename://$path", "doc_id"))
+      CrashRenameFs.killAt = None
+      assert(pairs === before, "the read after the crash must see the store")
+      assert(storeIds === all -- victims,
+        "every surviving row must stand in the recovered store")
+    } finally {
+      CrashRenameFs.killAt = None
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   test("gate log: the ungate fold survives a redelivered mutation; " +
       "negative mutation ids are rejected") {
     val dir = java.nio.file.Files.createTempDirectory("graft-gate")

@@ -257,7 +257,7 @@ class IvfPqStoreSpec extends SparkSpec {
       val fs = new org.apache.hadoop.fs.Path(codes)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       require(fs.rename(new org.apache.hadoop.fs.Path(codes),
-        new org.apache.hadoop.fs.Path(s"$dir/codes_compact_old")))
+        new org.apache.hadoop.fs.Path(s"$dir/codes.parquet.precompact")))
       IvfPqStore.compactIndex(spark, dir.toString) // recovers, no log → no-op
       assert(spark.read.parquet(codes).count() === 1L,
         "an interrupted swap must recover the old root")

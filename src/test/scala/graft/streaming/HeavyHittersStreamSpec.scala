@@ -95,6 +95,31 @@ class HeavyHittersStreamSpec extends SparkSpec {
     } finally delete(dir)
   }
 
+  test("a crashed first write (tmp without _SUCCESS) is discarded, not " +
+      "promoted: the read finds no store and redelivered batch 0 applies " +
+      "once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-hh-crash")
+    val storePath = dir.resolve("hh").toString
+    val cleanPath = dir.resolve("clean").toString
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
+    try {
+      val batch = Seq((0L, "x x x y z")).toDF("doc_id", "text")
+      StreamingOps.applyHeavyHitterBatch(batch, 0L, "L", cleanPath, 4)
+      // the kill state: batch 0's first write died inside its job — the
+      // swap's tmp holds part of the batch and no job-commit marker, and
+      // no store exists yet
+      val tmp = s"$storePath.compacting"
+      spark.read.parquet(cleanPath).filter(col("term") === "x")
+        .write.parquet(tmp)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(tmp, "_SUCCESS"))
+      intercept[org.apache.spark.sql.AnalysisException](
+        StreamingOps.heavyHittersFromStore(batch, storePath, 4, 0.3))
+      StreamingOps.applyHeavyHitterBatch(batch, 0L, "L", storePath, 4)
+      assert(rows(storePath) === rows(cleanPath),
+        "the redelivered batch must apply exactly once")
+    } finally delete(dir)
+  }
+
   test("high-water mark survives a rewrite the truncation left empty") {
     // k=1: batch 0 'h h h t' stores {h:2}; batch 1 'x x' merges to
     // {h:2, x:2}, d=2 → ZERO surviving counters. The sentinel row must

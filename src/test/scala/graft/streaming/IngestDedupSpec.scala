@@ -253,7 +253,7 @@ class IngestDedupSpec extends SparkSpec {
     val a = java.nio.file.Files.createTempDirectory("graft-swap-a")
     mkStore(a, "signatures.precompact", Seq(1L, 2L))
     mkStore(a, "signatures.compacting", Seq(1L, 2L)) // the rewrite
-    StreamingOps.recoverCompactionSwap(fs,
+    graft.rel.Stores.recoverSwap(fs,
       new org.apache.hadoop.fs.Path(a.resolve("signatures").toString))
     assert(storeIds(a.resolve("signatures").toString) === Set(1L, 2L))
     assert(!java.nio.file.Files.exists(a.resolve("signatures.precompact")))
@@ -266,7 +266,7 @@ class IngestDedupSpec extends SparkSpec {
     val b = java.nio.file.Files.createTempDirectory("graft-swap-b")
     mkStore(b, "signatures", Seq(1L, 2L, 3L))
     mkStore(b, "signatures.precompact", Seq(1L, 2L))
-    StreamingOps.recoverCompactionSwap(fs,
+    graft.rel.Stores.recoverSwap(fs,
       new org.apache.hadoop.fs.Path(b.resolve("signatures").toString))
     assert(storeIds(b.resolve("signatures").toString) === Set(1L, 2L, 3L))
     assert(!java.nio.file.Files.exists(b.resolve("signatures.precompact")))
@@ -274,7 +274,7 @@ class IngestDedupSpec extends SparkSpec {
     // state C (defensive): only old exists — restore it as the store
     val c = java.nio.file.Files.createTempDirectory("graft-swap-c")
     mkStore(c, "signatures.precompact", Seq(7L))
-    StreamingOps.recoverCompactionSwap(fs,
+    graft.rel.Stores.recoverSwap(fs,
       new org.apache.hadoop.fs.Path(c.resolve("signatures").toString))
     assert(storeIds(c.resolve("signatures").toString) === Set(7L))
 

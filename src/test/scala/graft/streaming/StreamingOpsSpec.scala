@@ -154,13 +154,13 @@ class StreamingOpsSpec extends SparkSpec {
     fakeS3a.initialize(java.net.URI.create("file:///"),
       spark.sparkContext.hadoopConfiguration)
     val e = intercept[IllegalStateException] {
-      StreamingOps.recoverCompactionSwap(fakeS3a,
+      graft.rel.Stores.recoverSwap(fakeS3a,
         new org.apache.hadoop.fs.Path("/tmp/any-store"))
     }
     assert(e.getMessage.contains("atomic"), e.getMessage)
     // and the atomic local scheme passes the same gate
     val local = new org.apache.hadoop.fs.Path("/tmp")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingOps.requireAtomicRename(local, "spec probe") // no throw
+    graft.rel.Stores.requireAtomicRename(local, "spec probe") // no throw
   }
 }

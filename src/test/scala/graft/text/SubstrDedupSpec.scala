@@ -314,7 +314,7 @@ class SubstrDedupSpec extends SparkSpec {
       assert(live() === afterDel)
       // interrupted swap: the one store-absent window (between the two
       // renames) recovers to the complete old root on ANY entry
-      val old = new org.apache.hadoop.fs.Path(s"${path}_compact_old")
+      val old = new org.apache.hadoop.fs.Path(s"${path}.precompact")
       require(fs.rename(fsP, old))
       assert(live() === afterDel,
         "a reader inside the swap window must recover the old root")
