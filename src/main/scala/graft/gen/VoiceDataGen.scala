@@ -1,7 +1,6 @@
 package graft.gen
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Seeded synthetic labeled-audio dataset generator — the Spark-native
@@ -20,9 +19,11 @@ import org.apache.spark.sql.functions._
   *  - B5 whole-second truncation: duration floored to whole seconds
   *    (`data_generator.py:20`).
   *  - B6/B7 concatenation + running cumulative end-seconds: kept as
-  *    per-phrase rows + a window cumsum — the scale-friendly form of the
-  *    reference's serial `mp3_data += segment; len(mp3_data)/1000`
-  *    accumulator (`data_generator.py:14-21`).
+  *    per-phrase rows whose interval comes from [[segments]], a driver
+  *    table built with the reference's serial `mp3_data += segment;
+  *    len(mp3_data)/1000` accumulator (`data_generator.py:14-21`) —
+  *    durations follow from the text alone, so no PCM is needed to place
+  *    a phrase, and the synthesis runs in parallel.
   *
   * Audio is carried as a **multimodal binary column** (16-bit PCM bytes)
   * plus typed metadata (sample_rate, n_samples) — the engine's generic
@@ -59,24 +60,29 @@ object VoiceDataGen {
     }.mkString(" ")
   }
 
+  private val SecPerChar = 0.07
+
+  /** A phrase's whole-second duration: floor(nChars × 0.07) (B5
+    * whole-second truncation). */
+  def durationSec(text: String): Int = math.floor(text.length * SecPerChar).toInt
+
   /** Deterministic waveform synth (the TTS stand-in, B2): harmonic comb
     * at the speaker's fundamental, per-character formant modulation.
     * Returns 16-bit little-endian PCM covering exactly
-    * floor(nChars * secPerChar) seconds (B5 whole-second truncation).
+    * [[durationSec]]`(text)` seconds.
     */
-  def synthPcm(text: String, male: Boolean, secPerChar: Double = 0.07): Array[Byte] = {
+  def synthPcm(text: String, male: Boolean): Array[Byte] = {
     val f0 = if (male) 120.0 else 225.0
     // distinct harmonic amplitude profiles per class
     val harmonics = if (male) Array(1.0, 0.7, 0.5, 0.35, 0.25)
                     else Array(1.0, 0.4, 0.8, 0.2, 0.45)
-    val durSec = math.floor(text.length * secPerChar).toInt
-    val n = durSec * SampleRate
+    val n = durationSec(text) * SampleRate
     val out = new Array[Byte](n * 2)
     var i = 0
     while (i < n) {
       val t = i.toDouble / SampleRate
       // formant-ish modulation driven by the character under the cursor
-      val charIdx = math.min(text.length - 1, (t / secPerChar).toInt)
+      val charIdx = math.min(text.length - 1, (t / SecPerChar).toInt)
       val c = text.charAt(charIdx)
       val mod = 1.0 + 0.02 * ((c % 17) - 8) // ±16% pitch wobble by char
       var acc = 0.0
@@ -95,41 +101,46 @@ object VoiceDataGen {
     out
   }
 
-  /** The generated dataset: one row per phrase with text, speaker,
-    * interval [start_sec, end_sec), cumulative end `seconds` (the
-    * reference transcript's column), and the PCM binary + metadata.
+  /** One phrase of the corpus, without its audio. */
+  case class Segment(phrase_id: Long, speaker: String, text: String,
+    n_samples: Int, dur_sec: Double, seconds: Double, start_sec: Double,
+    end_sec: Double)
+
+  /** The corpus metadata, on the driver: one [[Segment]] per phrase in
+    * `phrase_id` order. `seconds` is the running end (B7, the reference
+    * transcript's column), summed left to right from 0.0 like a ROWS
+    * window's running sum; each interval [start_sec, end_sec) starts at
+    * the previous phrase's end, so the segments tile the timeline and the
+    * half-open interval join labels every frame once.
+    */
+  def segments(nPhrases: Int, seed: Long): Seq[Segment] = {
+    var end = 0.0
+    (0 until nPhrases).map { i =>
+      val text = loremText(seed, i.toLong)
+      val dur = durationSec(text)
+      val start = end
+      end += dur
+      Segment(i.toLong, if (i % 2 == 0) "Male" else "Female", text,
+        dur * SampleRate, dur, end, start, end)
+    }
+  }
+
+  /** The generated dataset: the [[segments]] table plus the PCM binary
+    * and its sample rate. The synthesis UDF is the only per-row work;
+    * the table is an RDD (a local relation would let Catalyst fold the
+    * UDF on the driver at optimization time).
     */
   def generate(spark: SparkSession, nPhrases: Int, seed: Long = 42L): DataFrame = {
     import spark.implicits._
-    val base = spark.range(nPhrases.toLong).toDF("phrase_id")
-      .withColumn("speaker",
-        when(col("phrase_id") % 2 === 0, "Male").otherwise("Female"))
-    val synth = udf { (phraseId: Long, speaker: String) =>
+    val synth = udf { (text: String, speaker: String) =>
       synthCalls.incrementAndGet()
-      val text = loremText(seed, phraseId)
-      val pcm = synthPcm(text, speaker == "Male")
-      (text, pcm, pcm.length / 2)
+      synthPcm(text, speaker == "Male")
     }
-    val w = Window.orderBy("phrase_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base
-      .withColumn("gen", synth(col("phrase_id"), col("speaker")))
-      .select(col("phrase_id"), col("speaker"),
-        col("gen._1").as("text"), col("gen._2").as("pcm"),
-        col("gen._3").as("n_samples"),
-        lit(SampleRate).as("sample_rate"))
-      .withColumn("dur_sec",
-        col("n_samples").cast("double") / col("sample_rate"))
-      // B7: running cumulative end time == the transcript's `seconds`.
-      // start_sec is the PREVIOUS row's cumsum (lag), not seconds −
-      // dur_sec: fl(fl(S+d)−d) == S is not guaranteed in IEEE-754, and
-      // an ulp of overlap would let the half-open interval join label a
-      // boundary frame twice (with the wrong speaker). lag makes
-      // start_i ≡ end_{i−1} exactly, so segments tile the timeline.
-      .withColumn("seconds", sum("dur_sec").over(w))
-      .withColumn("start_sec", coalesce(
-        lag("seconds", 1).over(Window.orderBy("phrase_id")), lit(0.0)))
-      .withColumn("end_sec", col("seconds"))
+    spark.sparkContext.parallelize(segments(nPhrases, seed)).toDF()
+      .select(col("phrase_id"), col("speaker"), col("text"),
+        synth(col("text"), col("speaker")).as("pcm"), col("n_samples"),
+        lit(SampleRate).as("sample_rate"), col("dur_sec"), col("seconds"),
+        col("start_sec"), col("end_sec"))
   }
 
   /** The transcript view matching the reference CSV schema

@@ -27,9 +27,8 @@ import graft.gen.VoiceDataGen
   *  - I6: no Conv1D in MLlib — MLP [2, 50, 50, 2] over the same (Time, X)
   *    features (+ standardization standing in for BatchNorm); acceptance
   *    is held-out accuracy ≥ 0.80 (reference: 0.8731), per SURVEY §6.
-  *    The MLP is [[InTaskMlpClassifier]]: the training set is one
-  *    partition (generation's cumsum window is unpartitioned, and every
-  *    later stage is narrow), so the whole L-BFGS loop runs inside that
+  *    The MLP is [[InTaskMlpClassifier]]: [[split]] coalesces the
+  *    frames to one partition, so the whole L-BFGS loop runs inside that
   *    partition's task — one job per fit instead of one per cost
   *    evaluation, with weights bitwise equal to the stock fit. A layout
   *    that splits the training set falls back to the stock per-evaluation
@@ -47,22 +46,11 @@ object VoicePipeline {
     */
   private[graft] def pcaFramesAndSegments(spark: SparkSession,
       nPhrases: Int = NPhrases, seed: Long = Seed): (DataFrame, DataFrame) = {
-    // persisted across its two readers, the segment collect below and the
-    // mel job: both need the synthesized PCM, which would otherwise be
-    // synthesized once for each
-    val clips = VoiceDataGen.generate(spark, nPhrases, seed).persist()
-    // boundary table COLLECTED once (nPhrases rows of 3 scalars): its
-    // lineage includes the waveform-synth UDF (durations derive from the
-    // generated PCM length), so leaving it lazy would re-synthesize the
-    // whole corpus on every action that touches the join — MiSelector's
-    // two passes and the final cache materialization, each rebuilding
-    // megabytes of PCM to read 11 tiny rows
-    val segments = {
-      import spark.implicits._
-      clips.select(col("speaker"), col("start_sec"), col("end_sec"))
-        .as[(String, Double, Double)].collect().toSeq
-        .toDF("seg_speaker", "start_sec", "end_sec")
-    }
+    import spark.implicits._
+    val segments = VoiceDataGen.segments(nPhrases, seed)
+      .map(g => (g.speaker, g.start_sec, g.end_sec))
+      .toDF("seg_speaker", "start_sec", "end_sec")
+    val clips = VoiceDataGen.generate(spark, nPhrases, seed)
     // cache the synth+FFT+mel output: toDb's ref-max aggregate, PCA.fit,
     // MiSelector's two passes and the final materialization would each
     // re-run the waveform synthesis and FFT otherwise
@@ -72,10 +60,6 @@ object VoicePipeline {
     val withVec = frames
       .withColumn("mel_vec", array_to_vector(col("mel_db")))
     val pcaModel = pca.fit(withVec)
-    // PCA.fit scanned every frame, so the mel cache is loaded and no
-    // longer reads the clips; a loaded dependent cache survives this
-    // (CacheManager recompiles only dependents whose buffers are unbuilt)
-    clips.unpersist()
     val pcaFrames = pcaModel.transform(withVec)
       .withColumn("c", vector_to_array(col("pca")))
       .select(col("frame_time").as("Time"),
@@ -133,9 +117,12 @@ object VoicePipeline {
   case class Result(predictions: DataFrame, confusion: DataFrame,
     accuracy: Double, logLoss: Double)
 
-  /** Stage 6: the seeded 80/20 holdout split. */
+  /** Stage 6: the seeded 80/20 holdout split, over one partition:
+    * randomSplit seeds each partition by its index, so one partition
+    * makes the split the same under any upstream layout, and it is the
+    * layout [[InTaskMlpClassifier]] fits in one task. */
   private[graft] def split(ts: DataFrame): (DataFrame, DataFrame) = {
-    val Array(train, test) = ts.randomSplit(Array(0.8, 0.2), seed = 42)
+    val Array(train, test) = ts.coalesce(1).randomSplit(Array(0.8, 0.2), seed = 42)
     (train, test)
   }
 

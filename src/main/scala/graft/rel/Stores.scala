@@ -285,13 +285,14 @@ object Stores {
     * is not atomic outside HDFS, and a crash midway through it would
     * leave a partially-deleted store that is indistinguishable from an
     * intact one. Every crash point leaves a complete copy whose place
-    * [[recoverSwap]] (run first here, and by every reader and writer of
-    * the store) decides from which paths exist. A root that does not
-    * exist yet (a store's first write) skips the aside rename. */
+    * [[recoverSwap]] decides from which paths exist; the caller runs it
+    * on entry, before it reads the root (as every reader and writer of
+    * the store does). A root that does not exist yet (a store's first
+    * write) skips the aside rename. */
   def swapDir(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path)(
       write: org.apache.hadoop.fs.Path => Unit): Unit = {
-    recoverSwap(fs, root)
+    requireAtomicRename(fs, s"store at $root")
     val (tmp, old) = siblings(root)
     write(tmp)
     if (fs.exists(root) && !fs.rename(root, old))

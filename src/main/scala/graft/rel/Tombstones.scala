@@ -218,6 +218,7 @@ object Tombstones {
     * the standing anti-join. Run it from the single maintenance owner,
     * like every store rewrite in the engine. */
   def compact(s: SparkSession, storePath: String, keyCol: String): Unit = {
+    Stores.recoverSwap(s, storePath)
     deletedKeys(s, storePath).foreach { _ =>
       val root = new org.apache.hadoop.fs.Path(storePath)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)

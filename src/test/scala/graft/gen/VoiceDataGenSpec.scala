@@ -26,14 +26,33 @@ class VoiceDataGenSpec extends SparkSpec {
 
   test("durations are whole seconds (reference B5) and cumsum is end_sec (B7)") {
     val rows = gen.orderBy("phrase_id")
-      .select("dur_sec", "end_sec", "start_sec").collect()
-    var running = 0.0
+      .select("dur_sec", "end_sec", "start_sec", "n_samples", "pcm").collect()
+    var prevEnd = 0.0
     rows.foreach { r =>
       val (dur, end, start) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
       assert(dur == math.floor(dur) && dur >= 1.0, s"dur $dur not whole-second")
-      assert(math.abs(start - running) < 1e-9)
-      running += dur
-      assert(math.abs(end - running) < 1e-9)
+      assert(r.getInt(3) == dur * VoiceDataGen.SampleRate &&
+        r.getAs[Array[Byte]](4).length == 2 * r.getInt(3),
+        "the synthesized PCM must last dur_sec")
+      // bitwise: an ulp of overlap or gap would let the half-open
+      // interval join label a boundary frame twice or not at all
+      assert(java.lang.Double.doubleToRawLongBits(start) ==
+        java.lang.Double.doubleToRawLongBits(prevEnd), s"start $start != $prevEnd")
+      prevEnd += dur
+      assert(java.lang.Double.doubleToRawLongBits(end) ==
+        java.lang.Double.doubleToRawLongBits(prevEnd), s"end $end != $prevEnd")
+    }
+  }
+
+  test("seconds is bitwise the ROWS running sum of dur_sec by phrase_id (B7)") {
+    val rows = gen.select(col("seconds"), col("end_sec"), expr(
+        "sum(dur_sec) OVER (ORDER BY phrase_id ROWS UNBOUNDED PRECEDING)"))
+      .as[(Double, Double, Double)].collect()
+    assert(rows.length == 6)
+    rows.foreach { case (seconds, end, ref) =>
+      assert(java.lang.Double.doubleToRawLongBits(seconds) ==
+        java.lang.Double.doubleToRawLongBits(ref), s"$seconds != $ref")
+      assert(seconds == end)
     }
   }
 

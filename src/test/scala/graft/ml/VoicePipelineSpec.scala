@@ -27,13 +27,27 @@ class VoicePipelineSpec extends SparkSpec {
   }
 
   test("voice training set is one partition and its fit launches at most 5 jobs") {
-    // the in-task MLP fit needs the one-partition layout; a layout change
-    // that brings back one L-BFGS job per cost evaluation (~100 per fit)
-    // fails here instead of silently costing seconds
-    val (train, _) = VoicePipeline.split(VoicePipeline.timeSeries(spark, nPhrases = 7))
+    // split coalesces to the one partition the in-task MLP fit needs, and
+    // the frames before it are spread over several; a split that stops
+    // doing so brings back one L-BFGS job per cost evaluation (~100 per
+    // fit) and fails here instead of silently costing seconds
+    val ts = VoicePipeline.timeSeries(spark, nPhrases = 7)
+    assert(ts.rdd.getNumPartitions > 1)
+    val (train, _) = VoicePipeline.split(ts)
     assert(train.rdd.getNumPartitions == 1)
     val (_, jobs) = countJobs(VoicePipeline.fit(train))
     assert(jobs <= 5, s"voice pipeline fit launched $jobs jobs")
+  }
+
+  test("the holdout split gives the same rows under any upstream layout") {
+    val ts = VoicePipeline.timeSeries(spark, nPhrases = 7)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("Time").collect().toSeq
+    val (train, test) = VoicePipeline.split(ts)
+    val (train3, test3) = VoicePipeline.split(ts.repartition(3))
+    assert(rows(train).nonEmpty && rows(test).nonEmpty)
+    assert(rows(train3) === rows(train))
+    assert(rows(test3) === rows(test))
   }
 
   test("the voice corpus is synthesized once per pipeline") {

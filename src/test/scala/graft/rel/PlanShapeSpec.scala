@@ -378,4 +378,36 @@ class PlanShapeSpec extends SparkSpec {
         s"$q plans an unpartitioned window:\n$unpartitioned")
     }
   }
+
+  test("the voice corpus and its time series plan no Window") {
+    // the analyzed plan, re-optimized: a cached DataFrame's own optimized
+    // plan is an InMemoryRelation that hides the lineage behind it
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    for ((name, df) <- Seq(
+        "generate" -> graft.gen.VoiceDataGen.generate(spark, 3),
+        "timeSeries" -> graft.ml.VoicePipeline.timeSeries(spark, nPhrases = 3))) {
+      val plan = spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+      // non-vacuity, and the table stays an RDD: over a local relation
+      // Catalyst would fold the synthesis UDF on the driver
+      assert(plan.collectLeaves().exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.ExternalRDD[_]]),
+        s"$name: expected the generated table in the lineage:\n$plan")
+      val windows = plan.collect { case w: LWindow => w }
+      assert(windows.isEmpty, s"$name plans a Window:\n$windows")
+    }
+  }
+
+  test("an unpartitioned Window.orderBy( in src/main is only q109's QuantileNorm") {
+    // a window with no partition key runs its whole input in one task;
+    // QuantileNorm's exact q109 form is the one kept, beside its approx twin
+    import scala.jdk.CollectionConverters._
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, s"run from the repo root: ${main.getAbsolutePath}")
+    val files = java.nio.file.Files.walk(main.toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("Window.orderBy("))
+      .map(_.getFileName.toString).toSet
+    assert(files == Set("QuantileNorm.scala"))
+  }
 }

@@ -93,6 +93,42 @@ class TombstonesSpec extends SparkSpec {
     }
   }
 
+  test("signature store: compact recovers a pending swap on entry — " +
+      "{precompact, complete compacting, no root} loses no row") {
+    val docs = graft.Tables.documents(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-tomb-pending")
+    val path = dir.resolve("signatures.parquet").toString
+    try {
+      graft.text.NearDup.writeSignatureStore(docs, path)
+      def storeIds = spark.read.parquet(path).select("doc_id").as[Long]
+        .collect().toSet
+      val all = storeIds
+      val victims = all.toSeq.sorted.take(5)
+      graft.text.NearDup.deleteFromSignatureStore(
+        victims.toDF("doc_id"), path, batchId = 0L)
+      // the state a compact leaves when it dies between its two renames:
+      // the complete rewrite waits in .compacting, the old root is aside
+      spark.read.parquet(path).filter(!$"doc_id".isin(victims: _*))
+        .write.parquet(s"$path.compacting")
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(path),
+        new org.apache.hadoop.fs.Path(s"$path.precompact")))
+      Tombstones.compact(spark, path, "doc_id")
+      assert(storeIds === all -- victims,
+        "every surviving row must stand in the compacted store")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path.compacting")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path.precompact")))
+      assert(!fs.exists(
+        new org.apache.hadoop.fs.Path(Tombstones.logPath(path))),
+        "compact must truncate the tombstone log")
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
   test("gate log: the ungate fold survives a redelivered mutation; " +
       "negative mutation ids are rejected") {
     val dir = java.nio.file.Files.createTempDirectory("graft-gate")
