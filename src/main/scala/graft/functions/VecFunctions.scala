@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -100,30 +102,18 @@ case class FloatVecDot(left: Expression, right: Expression)
 
 object VecFunctions {
 
-  /** Arity-checked builder for the two-argument functions: the bare
-    * `exprs(0)/exprs(1)` indexing would surface a caller's
-    * `vec_dot(embedding)` as a raw IndexOutOfBoundsException during
-    * resolution; checkInputDataTypes (the friendly message) is only
-    * reached once two args exist.
+  /** Arity-checked builder: bare `exprs(i)` indexing would surface a
+    * caller's `vec_dot(embedding)` as a raw IndexOutOfBoundsException
+    * during resolution; checkInputDataTypes (the friendly message) is
+    * only reached once the `n` arguments exist.
     */
-  private[graft] def binary(name: String,
-      f: (Expression, Expression) => Expression): Seq[Expression] => Expression =
+  private[graft] def arity(name: String, n: Int)(
+      f: Seq[Expression] => Expression): Seq[Expression] => Expression =
     exprs => {
-      if (exprs.length != 2)
+      if (exprs.length != n)
         throw new IllegalArgumentException(
-          s"$name expects exactly 2 arguments, got ${exprs.length}")
-      f(exprs(0), exprs(1))
-    }
-
-  /** Same arity guard for the three-argument functions. */
-  private[graft] def ternary(name: String,
-      f: (Expression, Expression, Expression) => Expression)
-      : Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != 3)
-        throw new IllegalArgumentException(
-          s"$name expects exactly 3 arguments, got ${exprs.length}")
-      f(exprs(0), exprs(1), exprs(2))
+          s"$name expects exactly $n argument(s), got ${exprs.length}")
+      f(exprs)
     }
 
   /** Idempotent per-session registration; afterwards `expr("vec_dot(a,b)")`
@@ -142,18 +132,27 @@ object VecFunctions {
     * time): (name, implementing class, arity-checked builder). */
   private[graft] val registry
       : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("vec_dot", classOf[FloatVecDot], binary("vec_dot", FloatVecDot)),
+    ("vec_dot", classOf[FloatVecDot],
+      arity("vec_dot", 2)(e => FloatVecDot(e(0), e(1)))),
     ("sorted_intersect_count", classOf[SortedIntersectCount],
-      binary("sorted_intersect_count", SortedIntersectCount)),
+      arity("sorted_intersect_count", 2)(e =>
+        SortedIntersectCount(e(0), e(1)))),
     // raw AggregateFunction: the analyzer wraps it in
     // AggregateExpression, same as Spark's built-in aggs
     ("top_k", classOf[BoundedTopK],
-      binary("top_k", (c, k) => BoundedTopK(c, k))),
+      arity("top_k", 2)(e => BoundedTopK(e(0), e(1)))),
     ("kmv_sketch", classOf[KmvSketch],
-      binary("kmv_sketch", (c, k) => KmvSketch(c, k))),
+      arity("kmv_sketch", 2)(e => KmvSketch(e(0), e(1)))),
     ("kll_sketch", classOf[KllSketch],
-      ternary("kll_sketch", (v, w, k) => KllSketch(v, w, k))),
-    ("sq8_dot", classOf[Sq8Dot], binary("sq8_dot", Sq8Dot)))
+      arity("kll_sketch", 3)(e => KllSketch(e(0), e(1), e(2)))),
+    ("sq8_dot", classOf[Sq8Dot], arity("sq8_dot", 2)(e => Sq8Dot(e(0), e(1)))),
+    // Spark's runtime-filter pair (the shape InjectRuntimeFilter emits):
+    // the one-argument aggregate reads its size from the session's
+    // spark.sql.optimizer.runtime.bloomFilter.* settings at analysis
+    ("bloom_filter_agg", classOf[BloomFilterAggregate],
+      arity("bloom_filter_agg", 1)(e => new BloomFilterAggregate(e(0)))),
+    ("might_contain", classOf[BloomFilterMightContain],
+      arity("might_contain", 2)(e => BloomFilterMightContain(e(0), e(1)))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

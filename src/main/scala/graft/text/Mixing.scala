@@ -50,63 +50,47 @@ object Mixing {
     verdicts(benchmark, NearDup.hashedShinglesOf(benchmark),
       NearDup.hashedShinglesOf(corpus).select("h").distinct(), flagAt)
 
-  /** `contamination` with a broadcast Bloom prefilter on the corpus side
-    * — the 100 TB execution shape. The exact form shuffles EVERY distinct
-    * corpus shingle hash (linear in the corpus) into the semi-join even
-    * though only hashes that also occur in the tiny benchmark can ever
-    * match. Here the benchmark's distinct hashes (small by definition)
-    * build a Bloom filter (distributed treeAggregate, constant driver
-    * state), which is broadcast and applied as a narrow filter AT SCAN
-    * SPEED on the corpus shingles — the corpus-sized shuffle shrinks to
-    * (true overlap + fpp·corpus) rows. Bloom filters have no false
-    * negatives and the exact join downstream removes the false
+  /** `contamination` with a Bloom prefilter on the corpus side — the
+    * 100 TB execution shape, as ONE lazy plan. The exact form shuffles
+    * EVERY distinct corpus shingle hash (linear in the corpus) into the
+    * semi-join even though only hashes that also occur in the tiny
+    * benchmark can ever match. Here a scalar subquery aggregates the
+    * benchmark's shingle hashes into a Bloom filter (Catalyst's
+    * `BloomFilterAggregate`, partial filters OR-merged across
+    * partitions), and a codegen `BloomFilterMightContain` applies it as a
+    * narrow filter AT SCAN SPEED on the corpus shingles — the shape
+    * Spark's own `InjectRuntimeFilter` emits. The corpus-sized shuffle
+    * shrinks to (true overlap + fpp·corpus) rows. Bloom filters have no
+    * false negatives and the exact join downstream removes the false
     * positives, so the output is IDENTICAL to `contamination` (same
-    * oracle SQL; pinned in MixingSpec).
+    * oracle SQL; pinned in MixingSpec). An empty benchmark side yields a
+    * null filter, which admits no corpus row; every bench doc still gets
+    * its (null-overlap) verdict.
     *
-    * Measured (`Scratch contam 50`, tools/Scratch.scala at commit
-    * 15fbb0b; 225k docs): candidate shingle rows
-    * admitted to the aggregation drop 11.7M → 262k (2.2%); actual
-    * shuffle records written drop 1.39M → 65k (21× — the exact form's
-    * partial aggregate already combines repeated shingles within
-    * partitions, so the exchange shrinks by less than the raw
-    * candidate ratio). Wall time at local[32] TIES the exact form —
-    * with page-cached input both are scan-dominated, and a small hash
-    * shuffle is free on one box. The prefilter is for the cluster
-    * regime, where the corpus-side shuffle is network-bound TBs and a
-    * 21× record reduction is the difference between a
-    * network-saturating stage and a footnote.
+    * Sizing: Spark's runtime-filter defaults, 1,000,000 expected items in
+    * 8,388,608 bits (a 1 MiB filter, 6 hashes): ~1.8% fpp at 1M distinct
+    * benchmark shingles, far less below. Past that the false-positive
+    * rate rises — the prefilter admits more of the corpus, the output
+    * stays exact. Deployments size the filter through Spark's
+    * `spark.sql.optimizer.runtime.bloomFilter.*` settings (expectedNumItems
+    * and numBits, capped by maxNumItems and maxNumBits), read when the
+    * query is analyzed.
     *
-    * An exact broadcast hash-set would also work but costs ~8 bytes per
-    * benchmark shingle; the Bloom at fpp=0.01 costs ~1.2 bytes — the
-    * difference between an 80 MB and a 12 MB broadcast at a 10M-shingle
-    * benchmark suite. The membership probe is a Scala UDF (not a codegen
-    * expression) deliberately: the filter object lives in a broadcast
-    * variable, which a Catalyst literal can't carry without embedding
-    * megabytes into the plan string.
+    * Measured at 225k docs on the earlier broadcast form of the same
+    * prefilter (README): 21× fewer corpus-side shuffle records, wall time
+    * tied with the exact form on one box. The prefilter is for the
+    * cluster regime, where that shuffle is network-bound TBs.
     */
   def contaminationBloom(corpus: DataFrame, benchmark: DataFrame,
-      flagAt: Double = 0.8, fpp: Double = 0.01): DataFrame = {
-    val s = corpus.sparkSession
+      flagAt: Double = 0.8): DataFrame = {
+    graft.functions.VecFunctions.register(corpus.sparkSession)
     val benchSh = NearDup.hashedShinglesOf(benchmark)
-    val benchH = benchSh.select("h").distinct()
-    // two tiny jobs on the benchmark side: cardinality, then the filter
-    // build (treeAggregate of fixed-size bit arrays)
-    val n = math.max(benchH.count(), 1L)
-    val bloom = benchH.stat.bloomFilter("h", n, fpp)
-    val bc = s.sparkContext.broadcast(bloom)
-    try {
-      val mightMatch = udf((h: Long) => bc.value.mightContainLong(h))
-      // truncate is EAGER: the corpus scan (the only consumer of
-      // the broadcast) runs here, materializing just the prefiltered
-      // distinct hashes (~overlap + fpp·corpus rows) — so the filter's
-      // executor copies can be dropped immediately below instead of
-      // lingering until the ContextCleaner happens to GC the UDF, which
-      // in a long-lived driver accumulates broadcast blocks per call
-      val corpusSh = graft.Checkpointing.truncate(
-        NearDup.hashedShinglesOf(corpus)
-          .filter(mightMatch(col("h"))).select("h").distinct())
-      verdicts(benchmark, benchSh, corpusSh, flagAt)
-    } finally bc.unpersist() // not destroy(): refetchable if ever replayed
+    val bloom = benchSh.agg(call_function("bloom_filter_agg", col("h")))
+      .scalar()
+    val corpusSh = NearDup.hashedShinglesOf(corpus)
+      .filter(call_function("might_contain", bloom, col("h")))
+      .select("h").distinct()
+    verdicts(benchmark, benchSh, corpusSh, flagAt)
   }
 
   /** Temperature-flattened domain mixing — the multilingual-LM sampling

@@ -1,9 +1,13 @@
 package graft.text
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
+  ScalaUDF}
+import org.apache.spark.sql.execution.ExecSubqueryExpression
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class MixingSpec extends SparkSpec {
+class MixingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("domain mix: hash-threshold sampling hits target fractions, layout-independent") {
@@ -111,21 +115,86 @@ class MixingSpec extends SparkSpec {
     assert(cold.size < warm.size, "flattening must actually drop rows")
   }
 
+  /** `body` under the session settings `kv`, each restored (or unset)
+    * afterwards. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
+    try {
+      kv.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("bloom-prefiltered contamination is row-identical to the exact form") {
     // no false negatives (Bloom) + exact downstream join (kills false
     // positives) => identical verdicts; this is the claim that lets the
     // bloom variant share the exact form's oracle SQL
-    val exact = Mixing.contaminationQuery(spark, sf0001)
-      .collect().map(_.toSeq).toSet
-    val bloom = Mixing.contaminationBloomQuery(spark, sf0001)
-      .collect().map(_.toSeq).toSet
-    assert(bloom === exact)
-    // and at a deliberately awful fpp the exact join still saves it
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    val exact = rows(Mixing.contaminationQuery(spark, sf0001))
+    assert(rows(Mixing.contaminationBloomQuery(spark, sf0001)) === exact)
     val docs = graft.Tables.documents(spark, sf0001)
-    val loose = Mixing.contaminationBloom(
-      docs.filter($"doc_id" % 10 =!= 0), docs.filter($"doc_id" % 10 === 0),
-      fpp = 0.5).collect().map(_.toSeq).toSet
+    val corpus = docs.filter($"doc_id" % 10 =!= 0)
+    val bench = docs.filter($"doc_id" % 10 === 0)
+    // a hostile layout: 37 partial filters OR-merged into one, every
+    // exchange at 37 partitions with none coalesced away
+    val hostile = withConf("spark.sql.shuffle.partitions" -> "37",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      rows(Mixing.contaminationBloom(corpus.repartition(37),
+        bench.repartition(37)))
+    }
+    assert(hostile === exact)
+    // a deliberately awful filter: 64 bits (one hash) are saturated by the
+    // benchmark shingles, so nearly every corpus hash passes the probe and
+    // the exact join alone must drop the false positives
+    val loose = withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.numBits" -> "64") {
+      val df = Mixing.contaminationBloom(corpus, bench)
+      val bits = df.queryExecution.analyzed.collectWithSubqueries {
+        case p => p.expressions.flatMap(_.collect {
+          case b: org.apache.spark.sql.catalyst.expressions.aggregate
+              .BloomFilterAggregate => b.numBitsExpression.eval()
+        })
+      }.flatten
+      assert(bits === Seq(64L), "the one-argument aggregate reads numBits")
+      rows(df)
+    }
     assert(loose === exact)
+    // an empty build side: no bench doc has 3 tokens, so the filter is
+    // null and admits nothing, yet every bench doc keeps its verdict row
+    val short = Seq((1L, "one"), (2L, "two words"), (3L, ""))
+      .toDF("doc_id", "text")
+    val emptyBuild = rows(Mixing.contaminationBloom(corpus, short))
+    assert(emptyBuild === rows(Mixing.contamination(corpus, short)))
+    assert(emptyBuild.map(_.head) === Set(1L, 2L, 3L))
+    assert(emptyBuild.forall(r => r(3) == null),
+      s"overlap must be null: $emptyBuild")
+  }
+
+  test("bloom contamination builds as one lazy plan: no eager job, " +
+      "a subquery-fed codegen probe, no Scala UDF") {
+    val (df, jobs) = countJobs(Mixing.contaminationBloomQuery(spark, sf0001))
+    assert(jobs === 0, "building the query must launch no Spark job")
+    val plan = df.queryExecution.executedPlan
+    val exprs = collectWithSubqueries(plan) { case p => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+    assert(exprs.exists {
+      case m: BloomFilterMightContain =>
+        m.bloomFilterExpression.isInstanceOf[ExecSubqueryExpression]
+      case _ => false
+    }, s"expected might_contain fed by a subquery in:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), s"Scala UDF in:\n$plan")
+    // source guard: the driver-side filter, its broadcast and the UDF
+    // probe stay gone
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/text/Mixing.scala")),
+      "UTF-8")
+    Seq("stat.bloomFilter(", "mightContainLong", "sparkContext.broadcast(")
+      .foreach(t => assert(!src.contains(t), s"Mixing.scala contains $t"))
   }
 
   test("contamination: planted cross-split near-dups are flagged, clean docs are not") {
